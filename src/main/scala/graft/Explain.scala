@@ -16,7 +16,8 @@ object Explain {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val spark = GraftSession.local(cpus, "graft-explain")
     // dev pseudo-queries (Probe's A/B twins) explainable by their
-    // underscore names — currently just the r15 modularity twin
+    // underscore names: the windowed Jaccard prefix, the self-join
+    // co-purchase pairs, and the unshared modularity twin
     val extras: Map[String, (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame] = Map(
       "_jp_window" -> ((s, d) =>
@@ -35,7 +36,7 @@ object Explain {
       }))
     names.split(",").foreach { q =>
       println(s"==== $q ====")
-      val df = SparkEntry.queries.getOrElse(q.trim, extras(q.trim))(spark, dir)
+      val df = SparkEntry.query(q.trim, extras)(spark, dir)
       if (exec) {
         // drive THIS QueryExecution (df.count() builds its own, leaving
         // the printed plan unexecuted — isFinalPlan stays false and the

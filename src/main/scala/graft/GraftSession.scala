@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** One-call session entry point for the library: a `SparkSession` with the
   * graft extensions (native expressions as SQL functions, the as-of join
-  * strategy, the cosine fusion rule) and the engine's recommended confs
+  * strategy, the cosine fusion rule, compiled-code reuse across queries
+  * that differ only in constants) and the engine's recommended confs
   * applied. A user of the reference engine starts here:
   *
   * {{{

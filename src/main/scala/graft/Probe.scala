@@ -252,7 +252,7 @@ object Probe {
       spark.stop(); return
     }
     names.split(',').foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name, extras(name))
+      val fn = SparkEntry.query(name, extras)
       var rows = -1L
       val times = (0 until reps).map { _ =>
         // release only the rep's OWN leftovers (snapshot/delta, same

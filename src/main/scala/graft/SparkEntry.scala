@@ -111,6 +111,16 @@ object SparkEntry {
       else df.createOrReplaceTempView(name)
     }
 
+  /** The declared query `name`, else the dev pseudo-query of that name in
+    * `extras`. An unknown name fails loudly, listing the valid ones. */
+  def query(name: String,
+      extras: Map[String, (SparkSession, String) => DataFrame] = Map.empty)
+      : (SparkSession, String) => DataFrame = {
+    val all = queries ++ extras
+    all.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown query $name; valid names: ${all.keys.toSeq.sorted.mkString(", ")}"))
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- reference-fidelity core (SURVEY §2.1 O2-O6 + §2.2 window ops) ---

@@ -471,7 +471,9 @@ object FuseCosine extends org.apache.spark.sql.catalyst.rules.Rule[
 }
 
 /** SparkSessionExtensions registration — makes `graft_dot` callable from
-  * SQL: `SELECT graft_dot(a, b)`. Wire with
+  * SQL: `SELECT graft_dot(a, b)`, and adds the planner strategy, the
+  * optimizer rules and the physical rule that keeps per-query constants
+  * out of generated code ([[graft.plans.StableCodegen]]). Wire with
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or config
   * `spark.sql.extensions=graft.functions.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -499,5 +501,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     e.injectOptimizerRule(_ => FuseCosine)
     e.injectOptimizerRule(_ => graft.plans.RollupRewrite)
+    e.injectColumnar(_ => graft.plans.StableCodegen)
   }
 }

@@ -1,19 +1,33 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** GraftSession wires the whole extension surface into a fresh session:
-  * SQL functions, the cosine fusion rule, and the as-of planner strategy. */
+  * SQL functions, the cosine fusion rule, the as-of planner strategy, and
+  * the physical rule that keeps per-query constants out of generated code. */
 class GraftSessionSpec extends AnyFunSuite with SparkSpec {
 
-  test("GraftSession.local: functions, optimizer rule, and strategy are wired") {
+  /** Run `body` on a fresh [[GraftSession.local]] session, restoring the
+    * shared test session afterwards. */
+  private def withGraftSession(body: SparkSession => Unit): Unit = {
     val prev = spark // the shared test session (no extensions)
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
       val s = GraftSession.local(4, "graft-ext-test")
       assert(s ne prev)
+      body(s)
+    } finally {
+      SparkSession.setDefaultSession(prev)
+      SparkSession.setActiveSession(prev)
+    }
+  }
+
+  test("GraftSession.local: functions, optimizer rule, and strategy are wired") {
+    withGraftSession { s =>
       // injected SQL functions
       val c = s.sql(
         "SELECT graft_cosine(array(1.0d, 2.0d), array(1.0d, 2.0d)) AS c")
@@ -39,9 +53,22 @@ class GraftSessionSpec extends AnyFunSuite with SparkSpec {
       // recommended confs applied
       assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
       assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
-    } finally {
-      SparkSession.setDefaultSession(prev)
-      SparkSession.setActiveSession(prev)
+    }
+  }
+
+  test("GraftSession.local: the stable-codegen rule is wired and keeps codegen") {
+    withGraftSession { s =>
+      assert(s.sessionState.columnarRules.contains(graft.plans.StableCodegen))
+      // the rule runs on every executed plan: a literal bound moves into a
+      // ReferencedLiteral, which stays inside whole-stage codegen
+      val df = s.range(100).filter(col("id") > 41L)
+      assert(df.collect().length == 58)
+      val plan = df.queryExecution.executedPlan
+      assert(plan.toString.contains("*("), s"lost whole-stage codegen:\n$plan")
+      assert(plan.exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.plans.ReferencedLiteral]))), plan.toString)
+      assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[CodegenFallback]))))
+      OperatorInvariantsSpec.assertWholeStageCodegen(s, sf0001)
     }
   }
 }

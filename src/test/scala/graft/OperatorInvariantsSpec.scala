@@ -1269,18 +1269,19 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
       "arithmetic ranking must equal the window formulation")
   }
 
+  test("an unknown query name fails loudly, listing the valid names") {
+    val e = intercept[IllegalArgumentException](SparkEntry.query("q_nope"))
+    assert(e.getMessage.startsWith("unknown query q_nope; valid names: "))
+    assert(e.getMessage.contains("q_range_scan"))
+    val extra: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+      (s, _) => s.range(1).toDF()
+    assert(SparkEntry.query("_x", Map("_x" -> extra)) eq extra)
+    assert(intercept[IllegalArgumentException](SparkEntry.query("_y", Map("_x" -> extra)))
+      .getMessage.contains("_x"))
+  }
+
   test("hot scan queries stay inside WholeStageCodegen (regression net)") {
-    // the per-row hot paths must be compiled, not interpreted — a custom
-    // expression losing doGenCode or a UDF sneaking in breaks this
-    Seq("q_range_scan", "q_similarity_topk", "q_simhash", "q_quality_score",
-      "q_cumsum", "q_ohlc").foreach { q =>
-      // codegen stages print as "*(n) Node" — but only in the FINAL
-      // adaptive plan, so execute first
-      val df = SparkEntry.queries(q)(spark, sf0001)
-      df.collect()
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("*("), s"$q lost whole-stage codegen:\n$plan")
-    }
+    OperatorInvariantsSpec.assertWholeStageCodegen(spark, sf0001)
   }
 
   test("triangle closing-edge probe stays a shuffled-hash semi join " +
@@ -1325,4 +1326,19 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
   }
+}
+
+object OperatorInvariantsSpec {
+  /** The per-row hot paths must be compiled, not interpreted — a custom
+    * expression losing doGenCode or a UDF sneaking in breaks this. */
+  def assertWholeStageCodegen(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
+    Seq("q_range_scan", "q_similarity_topk", "q_simhash", "q_quality_score",
+      "q_cumsum", "q_ohlc").foreach { q =>
+      // codegen stages print as "*(n) Node" — but only in the FINAL
+      // adaptive plan, so execute first
+      val df = SparkEntry.queries(q)(spark, dir)
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("*("), s"$q lost whole-stage codegen:\n$plan")
+    }
 }
