@@ -15,28 +15,9 @@ object Explain {
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val spark = GraftSession.local(cpus, "graft-explain")
-    // dev pseudo-queries (Probe's A/B twins) explainable by their
-    // underscore names: the windowed Jaccard prefix, the self-join
-    // co-purchase pairs, and the unshared modularity twin
-    val extras: Map[String, (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame] = Map(
-      "_jp_window" -> ((s, d) =>
-        graft.operators.Dedup.prefixJaccardPairsWindowed(
-          graft.sources.Tables.documents(s, d), 3, 3, 10)),
-      "_degree_dist_joined" -> ((s, d) =>
-        graft.operators.Graph.degreeDistribution(
-          graft.operators.Graph.partCoPurchasePairsJoined(
-            graft.sources.Tables.lineitem(s, d)))),
-      "_modularity_unshared" -> ((s, d) => {
-        val pairs = graft.operators.Graph.partCoPurchasePairs(
-          graft.sources.Tables.lineitem(s, d))
-        graft.operators.Graph.modularity(pairs,
-          graft.operators.Graph.labelPropagation(
-            graft.operators.Graph.symmetricEdges(pairs), rounds = 2))
-      }))
     names.split(",").foreach { q =>
       println(s"==== $q ====")
-      val df = SparkEntry.query(q.trim, extras)(spark, dir)
+      val df = SparkEntry.query(q.trim)(spark, dir)
       if (exec) {
         // drive THIS QueryExecution (df.count() builds its own, leaving
         // the printed plan unexecuted — isFinalPlan stays false and the

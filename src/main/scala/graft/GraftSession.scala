@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One-call session entry point for the library: a `SparkSession` with the
-  * graft extensions (native expressions as SQL functions, the as-of join
-  * strategy, the cosine fusion rule, compiled-code reuse across queries
+/** The one place a `SparkSession` is built: the graft extensions (native
+  * expressions as SQL functions, the as-of join strategy, the cosine
+  * fusion and rollup navigator rules, compiled-code reuse across queries
   * that differ only in constants) and the engine's recommended confs
-  * applied. A user of the reference engine starts here:
+  * applied. Every main, dev tool and the test session build through
+  * here; a harness that needs its own confs adds them to
+  * [[localBuilder]]. A user of the reference engine starts here:
   *
   * {{{
   *   val spark = GraftSession.local(cpus = 32)
@@ -33,9 +35,9 @@ object GraftSession {
       // without this, AQE REFUSES to split a skewed join partition
       // whenever a downstream operator reuses the join's partitioning —
       // and aggregate-on-the-join-key, the single most common analytics
-      // shape, is exactly that case. Measured (SkewJoinProbe, 10 M rows
-      // 99 % on one key): refused 7.4 s vs forced 1.4 s INCLUDING the
-      // extra re-shuffle the force accepts. The full hot-share sweep
+      // shape, is exactly that case. Measured (PLANS.md round 10, 10 M
+      // rows 99 % on one key): refused 7.4 s vs forced 1.4 s INCLUDING
+      // the extra re-shuffle the force accepts. The full hot-share sweep
       // (synth:0.1-0.99, r11) shows no regression region anywhere: the
       // force only fires when a partition exceeds BOTH the byte
       // threshold AND 5× the median (skewedPartitionFactor), so in the
@@ -46,13 +48,18 @@ object GraftSession {
       // partition onto one task is never the better trade.
       .config("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
 
-  /** Local session at `local[cpus]` with the extensions applied. */
-  def local(cpus: Int, appName: String = "graft"): SparkSession = {
-    val s = configure(SparkSession.builder(), cpus)
+  /** Builder for a local session at `local[cpus]` with the extensions
+    * applied — for a harness that adds its own confs (a scheduler mode,
+    * an AQE knob) before `getOrCreate()`. */
+  def localBuilder(cpus: Int, appName: String): SparkSession.Builder =
+    configure(SparkSession.builder(), cpus)
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+
+  /** Local session at `local[cpus]` with the extensions applied. */
+  def local(cpus: Int, appName: String = "graft"): SparkSession = {
+    val s = localBuilder(cpus, appName).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -3,7 +3,6 @@ package graft
 import java.sql.DriverManager
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.hive.thriftserver.HiveThriftServer2
 
 /** Dev-only concurrent-serving probe: boots the documented Thrift JDBC
@@ -22,12 +21,8 @@ object ServingConcurrencyProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val perClient = args.lift(1).map(_.toInt).getOrElse(20)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.localBuilder(cpus, "serving-concurrency-probe")
       .config("spark.scheduler.mode", "FAIR")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

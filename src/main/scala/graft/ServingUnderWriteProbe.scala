@@ -3,7 +3,6 @@ package graft
 import java.sql.DriverManager
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.hive.thriftserver.HiveThriftServer2
 
@@ -42,12 +41,8 @@ object ServingUnderWriteProbe {
     val perClient = num.headOption.map(_.toInt).getOrElse(30)
     val writerBatches = num.lift(1).map(_.toInt).getOrElse(20)
     val clients = 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.localBuilder(cpus, "serving-under-write-probe")
       .config("spark.scheduler.mode", "FAIR")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 
 import graft.operators.Snapshot
 
@@ -54,11 +53,7 @@ object SnapshotScaleProbe {
     val baseFiles = args(0).toInt
     val nCommits = args(1).toInt
     val perCommit = if (args.length > 2) args(2).toInt else 4
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("snapshot-scale-probe")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4, "snapshot-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
     val hconf = spark.sessionState.newHadoopConf()
 
@@ -140,12 +135,7 @@ object SnapshotScaleProbe {
   private def ingestMain(args: Array[String]): Unit = {
     val counts = args.headOption.getOrElse("1000,10000,100000")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("snapshot-ingest-probe")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
+    val spark = GraftSession.local(4, "snapshot-ingest-probe")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val reps = 5
@@ -182,12 +172,7 @@ object SnapshotScaleProbe {
     val counts = args.headOption.getOrElse("1000,10000,50000,100000")
       .split(",").map(_.trim.toInt).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("snapshot-plan-probe")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .getOrCreate()
+    val spark = GraftSession.local(cpus, "snapshot-plan-probe")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // donor: one real tiny parquet file, nio-copied N times
@@ -252,13 +237,7 @@ object SnapshotScaleProbe {
     val counts = args.headOption.getOrElse("120,480,2880")
       .split(",").map(_.trim.toInt).toSeq
     val rowsPerFile = 1000
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("snapshot-zmap-probe")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession.local(8, "snapshot-zmap-probe")
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.functions._
     val hourBase = 1700000000000L - (1700000000000L % 3600000L)

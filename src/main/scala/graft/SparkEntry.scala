@@ -111,12 +111,10 @@ object SparkEntry {
       else df.createOrReplaceTempView(name)
     }
 
-  /** The declared query `name`, else the dev pseudo-query of that name in
-    * `extras`. An unknown name fails loudly, listing the valid ones. */
-  def query(name: String,
-      extras: Map[String, (SparkSession, String) => DataFrame] = Map.empty)
-      : (SparkSession, String) => DataFrame = {
-    val all = queries ++ extras
+  /** The declared query `name`. An unknown name fails loudly, listing the
+    * valid ones. */
+  def query(name: String): (SparkSession, String) => DataFrame = {
+    val all = queries
     all.getOrElse(name, throw new IllegalArgumentException(
       s"unknown query $name; valid names: ${all.keys.toSeq.sorted.mkString(", ")}"))
   }

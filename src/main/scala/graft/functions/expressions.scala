@@ -471,11 +471,15 @@ object FuseCosine extends org.apache.spark.sql.catalyst.rules.Rule[
 }
 
 /** SparkSessionExtensions registration — makes `graft_dot` callable from
-  * SQL: `SELECT graft_dot(a, b)`, and adds the planner strategy, the
-  * optimizer rules and the physical rule that keeps per-query constants
-  * out of generated code ([[graft.plans.StableCodegen]]). Wire with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or config
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. */
+  * SQL: `SELECT graft_dot(a, b)`, and adds the as-of planner strategy,
+  * the optimizer rules and the physical rule that keeps per-query
+  * constants out of generated code ([[graft.plans.StableCodegen]]).
+  * [[graft.plans.AsOfJoinNative.asOf]] also registers the strategy on a
+  * session without these extensions; the injected copy is what plans an
+  * as-of view read from a sibling session (`newSession()`, one per
+  * Thrift JDBC connection), whose planner starts without it. Wire with
+  * [[graft.GraftSession.configure]] (or [[graft.GraftSession.local]]) or
+  * config `spark.sql.extensions=graft.functions.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction((

@@ -63,7 +63,7 @@ object Dedup {
 
   /** Exploded (doc_id, shingle-hash) rows: tokens materialized, shingles
     * exploded, then hashed in a codegen'd projection. */
-  private def shingleEx(docs: DataFrame, n: Int): DataFrame =
+  private[graft] def shingleEx(docs: DataFrame, n: Int): DataFrame =
     docs
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"), explode(shinglesOf(col("toks"), n)).as("g"))
@@ -205,10 +205,10 @@ object Dedup {
   }
 
   /** Candidate expansion + exact verification shared by
-    * [[prefixJaccardPairs]] and its dev A/B twin: PPJoin positional +
-    * length filters over the prefix postings, then candidates-only
-    * re-shingle and exact Jaccard. */
-  private def prefixVerify(docs: DataFrame, n: Int, minJ: Double,
+    * [[prefixJaccardPairs]] and its window-ranked reference form in the
+    * specs: PPJoin positional + length filters over the prefix postings,
+    * then candidates-only re-shingle and exact Jaccard. */
+  private[graft] def prefixVerify(docs: DataFrame, n: Int, minJ: Double,
       tNum: Int, tDen: Int, den: Int, prefix: DataFrame): DataFrame = {
     // candidate expansion carries (rank, size) so the PPJoin positional
     // and length filters prune BEFORE the verify join — both lossless:
@@ -265,29 +265,6 @@ object Dedup {
         col("n_common").cast("double") / (col("n1") + col("n2") - col("n_common")))
       .filter(col("jaccard") >= minJ)
       .select(col("doc_id_1"), col("doc_id_2"), col("n_common"), col("jaccard"))
-  }
-
-  /** Dev-only A/B twin (r15): [[prefixJaccardPairs]] with the PRE-r15
-    * WINDOW-ranked prefix derivation (row_number + count over a
-    * doc_id window — a full shuffle-SORT of the occurrence-sized
-    * shingle table). Kept private for the probe A/B and the
-    * branch-equality spec; identical output by construction. */
-  private[graft] def prefixJaccardPairsWindowed(docs: DataFrame, n: Int,
-      tNum: Int, tDen: Int): DataFrame = {
-    require(tNum > 0 && tNum <= tDen, s"need 0 < $tNum/$tDen <= 1")
-    val minJ = tNum.toDouble / tDen
-    val ex = shingleEx(docs, n)
-    val dfs = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    val byDoc = Window.partitionBy(col("doc_id"))
-    val ranked = ex.join(dfs, Seq("h"))
-      .withColumn("rk", row_number().over(byDoc.orderBy(col("df"), col("h"))))
-      .withColumn("sz", count(lit(1)).over(byDoc))
-    val den = tNum + tDen
-    val prefix = ranked
-      .filter(col("rk") <=
-        expr(s"sz - (($tNum * sz + ${den - 1}) div $den) + 1"))
-      .select(col("doc_id"), col("h"), col("rk"), col("sz"))
-    prefixVerify(docs, n, minJ, tNum, tDen, den, prefix)
   }
 
   /** MinHash parameters: k universal hash functions (a_i·h + b_i) mod P over

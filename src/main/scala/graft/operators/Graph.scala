@@ -403,16 +403,6 @@ object Graph {
       .select(col("u"), explode(expr("slice(ps, i + 2, size(ps))")).as("v"))
       .distinct()
 
-  /** Dev-only A/B twin: the pre-r15 self-join form of
-    * [[partCoPurchasePairs]] (kept for the probe A/B and the equality
-    * spec). */
-  private[graft] def partCoPurchasePairsJoined(lineitem: DataFrame): DataFrame = {
-    val a = lineitem.select(col("l_orderkey").as("k"), col("l_partkey").as("u"))
-    val b = lineitem.select(col("l_orderkey").as("k"), col("l_partkey").as("v"))
-    a.join(b, Seq("k")).filter(col("u") < col("v"))
-      .select(col("u"), col("v")).distinct()
-  }
-
   /** Both directed copies of an undirected (u < v) pair set — the two
     * halves are disjoint by the u < v invariant, so no dedup. */
   def symmetricEdges(pairs: DataFrame): DataFrame =
@@ -441,17 +431,6 @@ object Graph {
       .groupBy(col("u"), col("v")).agg(count(lit(1)).as("cnt"))
       .select(col("u"), col("v"),
         graft.model.floorDivCol(lit(1000000000000L), col("cnt")).as("w"))
-
-  /** Dev-only A/B twin: the pre-r15 self-join form of
-    * [[coPurchaseWeights]]. */
-  private[graft] def coPurchaseWeightsJoined(lineitem: DataFrame): DataFrame = {
-    val a = lineitem.select(col("l_orderkey").as("k"), col("l_partkey").as("u"))
-    val b = lineitem.select(col("l_orderkey").as("k"), col("l_partkey").as("v"))
-    a.join(b, Seq("k")).filter(col("u") < col("v"))
-      .groupBy(col("u"), col("v")).agg(count(lit(1)).as("cnt"))
-      .select(col("u"), col("v"),
-        graft.model.floorDivCol(lit(1000000000000L), col("cnt")).as("w"))
-  }
 
   /** Hop-limited single-source(-set) shortest paths: `rounds` Bellman-
     * Ford relaxations of min-plus over exact integer weights — the

@@ -904,7 +904,7 @@ object TimeSeries {
     * hottest-key rows in its DENSEST HOUR) — the r13 three-signal
     * dispatch probe, still ONE sampled job. The third signal is the
     * DENSITY axis: TIME blocks are the cheapest skew fix (no rank
-    * pass — SeriesSkewProbe measured them 2.4–4.2× over plain at 99 %
+    * pass — PLANS.md rounds 12–13 measured them 2.4–4.2× over plain at 99 %
     * skew, vs 1.0–1.2× for count blocks whose distributedRank
     * materialization eats most of the win), but their max task is the
     * hot key's densest block, so they only apply when the densest hour
@@ -1298,7 +1298,7 @@ object TimeSeries {
     *     hot series is ~20 k rows): plain.
     *  3. DENSITY — when the hot key's DENSEST HOUR fits in one block,
     *     TIME blocks bound the max task at ~blockRows without the
-    *     count family's rank pass (SeriesSkewProbe: time blocks 2.4–
+    *     count family's rank pass (PLANS.md rounds 12–13: time blocks 2.4–
     *     4.2× over plain at 99 % spread skew, count blocks only
     *     1.0–1.2× there — distributedRank's materialization eats the
     *     win); past it — the burst shape that re-serializes time

@@ -51,11 +51,13 @@ object GraftColumnBridge {
   def stopStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
 
-  /** Idempotently register an extra planner strategy on a live session. */
+  /** Register an extra planner strategy on a live session unless its
+    * planner already holds it (injected by an extension, or added
+    * before). */
   def addStrategy(spark: SparkSession,
       strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
     val cs = spark.asInstanceOf[classic.SparkSession]
-    if (!cs.experimental.extraStrategies.contains(strategy))
+    if (!cs.sessionState.planner.strategies.contains(strategy))
       cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ strategy
   }
 }

@@ -95,9 +95,9 @@ class DedupScaleSpec extends AnyFunSuite with SparkSpec {
       .sortBy(t => (t._1, t._2)).toSeq
     val docs = Tables.documents(spark, sf0001)
     assert(canon(Dedup.prefixJaccardPairs(docs, 3, 3, 10)) ==
-      canon(Dedup.prefixJaccardPairsWindowed(docs, 3, 3, 10)))
+      canon(ReferenceForms.prefixJaccardPairsWindowed(docs, 3, 3, 10)))
     assert(canon(Dedup.prefixJaccardPairs(hotShingleCorpus, 3, 3, 10)) ==
-      canon(Dedup.prefixJaccardPairsWindowed(hotShingleCorpus, 3, 3, 10)))
+      canon(ReferenceForms.prefixJaccardPairsWindowed(hotShingleCorpus, 3, 3, 10)))
   }
 
   test("minhashEstimatorEval: one row per LSH candidate, estimator in " +

@@ -38,36 +38,41 @@ class DotProductExpressionSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("fused cosine equals the composed dot/sqrt form bit-for-bit") {
-    val e2 = Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val q = e2.filter(col("vec_id") === 7L).select(col("v").as("qv"))
-    val both = e2.crossJoin(q).select(
-      GraftFunctions.cosine_similarity(col("v"), col("qv")).as("fused"),
-      (GraftFunctions.dot_product(col("v"), col("qv")) /
-        (sqrt(GraftFunctions.dot_product(col("v"), col("v"))) *
-          sqrt(GraftFunctions.dot_product(col("qv"), col("qv"))))).as("composed"))
-    assert(both.filter(col("fused") =!= col("composed")).count() == 0)
-    assert(both.count() > 0)
+    // the shipped session would fuse the composed column too; exclude the
+    // rule so the composed form really runs as dot/sqrt
+    spark.conf.set("spark.sql.optimizer.excludedRules",
+      graft.functions.FuseCosine.ruleName)
+    try {
+      val e2 = Tables.embeddings(spark, sf0001)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val q = e2.filter(col("vec_id") === 7L).select(col("v").as("qv"))
+      val both = e2.crossJoin(q).select(
+        GraftFunctions.cosine_similarity(col("v"), col("qv")).as("fused"),
+        (GraftFunctions.dot_product(col("v"), col("qv")) /
+          (sqrt(GraftFunctions.dot_product(col("v"), col("v"))) *
+            sqrt(GraftFunctions.dot_product(col("qv"), col("qv"))))).as("composed"))
+      val cosines = both.queryExecution.optimizedPlan.flatMap(_.expressions
+        .flatMap(_.collect { case c: graft.functions.CosineSimilarity => c }))
+      assert(cosines.size == 1, "the composed column was fused")
+      assert(both.filter(col("fused") =!= col("composed")).count() == 0)
+      assert(both.count() > 0)
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   test("FuseCosine optimizer rule rewrites the composed pattern to graft_cosine") {
-    spark.experimental.extraOptimizations =
-      Seq(graft.functions.FuseCosine)
-    try {
-      val df = emb.select(
-        (GraftFunctions.dot_product(col("v"), col("v")) /
-          (sqrt(GraftFunctions.dot_product(col("v"), col("v"))) *
-            sqrt(GraftFunctions.dot_product(col("v"), col("v"))))).as("c"))
-      val fused = df.queryExecution.optimizedPlan.expressions.exists(_.collect {
-        case _: graft.functions.CosineSimilarity => true
-      }.nonEmpty)
-      assert(fused, df.queryExecution.optimizedPlan.toString)
-      // and the rewrite does not change values (cos(v,v) for all rows)
-      val composed = (GraftFunctions.dot_product(col("v"), col("v")) /
+    val df = emb.select(
+      (GraftFunctions.dot_product(col("v"), col("v")) /
         (sqrt(GraftFunctions.dot_product(col("v"), col("v"))) *
-          sqrt(GraftFunctions.dot_product(col("v"), col("v"))))).as("c")
-      assert(df.exceptAll(emb.select(composed)).count() == 0)
-    } finally spark.experimental.extraOptimizations = Nil
+          sqrt(GraftFunctions.dot_product(col("v"), col("v"))))).as("c"))
+    val fused = df.queryExecution.optimizedPlan.expressions.exists(_.collect {
+      case _: graft.functions.CosineSimilarity => true
+    }.nonEmpty)
+    assert(fused, df.queryExecution.optimizedPlan.toString)
+    // and the rewrite does not change values (cos(v,v) for all rows)
+    val composed = (GraftFunctions.dot_product(col("v"), col("v")) /
+      (sqrt(GraftFunctions.dot_product(col("v"), col("v"))) *
+        sqrt(GraftFunctions.dot_product(col("v"), col("v"))))).as("c")
+    assert(df.exceptAll(emb.select(composed)).count() == 0)
   }
 
   test("literal-literal dots constant-fold out of the per-row plan") {

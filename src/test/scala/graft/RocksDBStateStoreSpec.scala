@@ -69,7 +69,7 @@ class RocksDBStateStoreSpec extends AnyFunSuite with SparkSpec {
       "(the pre-exit step that prevents the native-thread shutdown crash)") {
     // Spark never closes cached RocksDB providers on query/session stop;
     // at a 10 M-key run the orphaned native compaction threads segfault
-    // JVM teardown (StreamProbe, PLANS.md round 8). The bridge call is
+    // JVM teardown (PLANS.md round 8). The bridge call is
     // the fix — after it, no state-store maintenance may be running and
     // a fresh stateful query must still work (providers re-initialize on
     // demand).

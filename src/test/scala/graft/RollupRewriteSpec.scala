@@ -15,17 +15,11 @@ import graft.plans.RollupRewrite
 class RollupRewriteSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  // the shared test session is built without GraftExtensions — activate
-  // the navigator the public-API way (same technique as the FuseCosine
-  // spec); registration state is cleared per test
-  private def withNavigator[A](body: => A): A = {
-    spark.experimental.extraOptimizations = Seq(RollupRewrite)
+  // the shared test session carries the navigator (GraftExtensions);
+  // registration state is cleared per test
+  private def withNavigator[A](body: => A): A =
     try body
-    finally {
-      spark.experimental.extraOptimizations = Nil
-      RollupRewrite.clear()
-    }
-  }
+    finally RollupRewrite.clear()
 
   private def mkStore(): String = {
     val store = Files.createTempDirectory("graft_navigator_").toString

@@ -46,8 +46,8 @@ class StableCodegenSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAl
     shipped.createDataset((from until until).map(i => DataPoint(t0 + i * 1000L, value(i))))(
       Encoders.product[DataPoint])
 
-  /** A session built with [[GraftSession.local]], and one built with no
-    * extensions — the answers the rule must reproduce. */
+  /** The shared test session, built with [[GraftSession.local]], and one
+    * built with no extensions — the answers the rule must reproduce. */
   private var shipped: SparkSession = _
   private var plain: SparkSession = _
   private var root: String = _
@@ -63,20 +63,8 @@ class StableCodegenSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAl
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    val shared = spark
-    def fresh(build: => SparkSession): SparkSession = {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      build
-    }
-    try {
-      shipped = fresh(GraftSession.local(4, "graft-stable-codegen"))
-      plain = fresh(SparkSession.builder()
-        .config("spark.sql.session.timeZone", "UTC").getOrCreate())
-    } finally {
-      SparkSession.setDefaultSession(shared)
-      SparkSession.setActiveSession(shared)
-    }
+    shipped = spark
+    plain = SparkSpec.bareSession()
     assert(shipped.sessionState.columnarRules.contains(StableCodegen))
     assert(!plain.sessionState.columnarRules.contains(StableCodegen))
     root = Files.createTempDirectory("stable-codegen").toString + "/store"
