@@ -185,51 +185,19 @@ object ServingUnderWriteProbe {
         new operators.Snapshot.LockLeaseGuard())
     @volatile var writerDone = false
     val committedGens = new ConcurrentLinkedQueue[Long]()
-    // Staged append for CONCURRENT writers: two Spark jobs writing the
-    // same output path race Hadoop's shared `_temporary/0` staging dir
-    // (job A's commit sweeps it while job B's tasks still write —
-    // measured TASK_WRITE_FAILED here, not a manifest race at all). A
-    // real multi-writer deployment therefore stages each batch in a
-    // writer-private directory and moves the finished files in; the
-    // MANIFEST commit is then the only shared step — exactly the window
-    // the LockLeaseGuard serializes. Single-writer deployments keep the
-    // direct ingest path.
+    // Dual-writer append: every ingest already writes into a private
+    // staging directory (two jobs sharing one output path would race
+    // Hadoop's `_temporary/0` tree), so the MANIFEST commit is the only
+    // shared step — exactly the window the LockLeaseGuard serializes.
+    // Retries are sized to SUSTAINED dual contention: the default 2
+    // covers the single-writer + one-maintenance interleaving; two
+    // committers in a tight loop can lose the (loud, guard-serialized)
+    // generation race 3+ times in a row — each retry refreshes to the
+    // new head, so the bound is about patience, not correctness.
     def stagedIngest(cm: operators.Snapshot.Committer,
-        pts: org.apache.spark.sql.Dataset[graft.model.DataPoint]): Long = {
-      // write under a fresh SUBPATH — createTempDirectory pre-creates
-      // its dir and the parquet writer refuses an existing output path
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_dualstage_").toString + "/out"
-      pts.toDF()
-        .withColumn("shard_hour",
-          graft.model.shardHourCol(col("timestamp")))
-        .sortWithinPartitions(col("shard_hour"), col("timestamp"))
-        .write.option("compression", "zstd")
-        .option("parquet.writer.version", "v2")
-        .partitionBy("shard_hour").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val rels = fs.listStatus(new org.apache.hadoop.fs.Path(tmp)).toSeq
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("shard_hour="))
-        .flatMap { d =>
-          fs.listStatus(d.getPath).toSeq
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            .map { f =>
-              val rel = s"${d.getPath.getName}/stage-${java.util.UUID.randomUUID()}.parquet"
-              val target = new org.apache.hadoop.fs.Path(store, rel)
-              fs.mkdirs(target.getParent)
-              require(fs.rename(f.getPath, target), s"move ${f.getPath} failed")
-              rel
-            }
-        }
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      // retries sized to SUSTAINED dual contention: the default 2 covers
-      // the single-writer + one-maintenance interleaving; two committers
-      // in a tight loop can lose the (loud, guard-serialized) generation
-      // race 3+ times in a row — each retry refreshes to the new head,
-      // so the bound is about patience, not correctness
-      cm.commitAdded(rels, retries = 10)
-    }
+        pts: org.apache.spark.sql.Dataset[graft.model.DataPoint]): Long =
+      cm.commitAdded(operators.Snapshot.stageBatch(pts, store).map(_._1),
+        retries = 10)
     def writerThread(hourBase: Int, maintenance: Boolean): Thread =
       new Thread(() => {
         val cm = operators.Snapshot.committer(spark, store)

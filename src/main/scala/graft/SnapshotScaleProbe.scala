@@ -32,8 +32,8 @@ import graft.operators.Snapshot
   *
   * One-shot append axis (r12): [[Snapshot.ingestCommitted]] used to diff
   * the WHOLE table's directory listing around its write — two O(table)
-  * listings per append (r11 judge). The diff is now scoped to the shard
-  * hours the batch touches, so the append wall must stay FLAT across
+  * listings per append (r11 judge). It now lists only the batch's own
+  * staging directory, so the append wall must stay FLAT across
   * base-file counts (the log read — one checkpoint — is the only
   * table-sized term left, and it is bytes, not RPCs).
   *

@@ -39,7 +39,10 @@ object StreamingIngest {
     * manifest — the Delta-style idempotence token: a re-delivered batch
     * id at-or-below the committed high-water is a no-op, and an attempt
     * that wrote files but died pre-commit leaves only quarantined
-    * orphans (the batch-scoped diff commits each attempt's own files).
+    * orphans (each attempt writes into its own staging directory and
+    * commits exactly the files it moved from there). Each applied
+    * micro-batch is ONE Spark job: the write; listing, moving and the
+    * commit are driver-side filesystem calls.
     * One streaming writer per `appId` per store — the committer's
     * single-writer contract, per app. */
   def snapshotSinkStream(points: Dataset[graft.model.DataPoint],

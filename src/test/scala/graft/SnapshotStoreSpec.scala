@@ -457,6 +457,36 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     assert(Snapshot.read(spark, store).count() == 100)
   }
 
+  test("vacuum deletes staging directories older than the lease TTL; a " +
+      "fresh (possibly in-flight) one stays; rows are unchanged") {
+    val store = Files.createTempDirectory("graft_snapstage_").toString
+    val cm = Snapshot.committer(spark, store)
+    cm.ingest(points(100, 0, "a"))
+    val hourDir = new java.io.File(s"$store/shard_hour=${baseMs / hourMs}")
+    val donor = hourDir.listFiles().filter(_.getName.endsWith(".parquet")).head
+    // what a writer killed between its write and its move leaves: an
+    // ingest's staging directory and a compaction's, each holding data
+    def staged(name: String): java.io.File = {
+      val dir = new java.io.File(store, name)
+      val part = new java.io.File(dir, s"shard_hour=${baseMs / hourMs}")
+      assert(part.mkdirs())
+      java.nio.file.Files.copy(donor.toPath,
+        new java.io.File(part, "part-staged.parquet").toPath)
+      dir
+    }
+    val agedIngest = staged(s"${Snapshot.IngestStaging}dead-writer")
+    val agedCompact = staged(".compact_snap_0_dead-writer")
+    val fresh = staged(s"${Snapshot.IngestStaging}in-flight")
+    val old = System.currentTimeMillis() - 7200000L
+    assert(agedIngest.setLastModified(old) && agedCompact.setLastModified(old))
+    Snapshot.vacuum(spark, store, graceMs = 0L, leaseTtlMs = 3600000L)
+    assert(!agedIngest.exists(), "aged ingest staging directory not swept")
+    assert(!agedCompact.exists(), "aged compaction staging directory not swept")
+    assert(fresh.exists(), "in-flight staging directory must not be taken")
+    assert(Snapshot.read(spark, store).count() == 100)
+    assert(Ingest.readPoints(spark, store).count() == 100)
+  }
+
   test("two sustained streaming writers (distinct appIds) interleave " +
       "safely: every stale-cache commit recovers via one retry, nothing " +
       "is lost, and both high-waters advance independently") {
@@ -498,6 +528,25 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     cm.ingest(points(300, 0, "mem"))
     assert(Snapshot.read(spark, store).count() == 700)
     assert(Ingest.readPoints(spark, store).count() == 700)
+    // a crashed attempt's leftover staging directory (its write finished,
+    // the writer died before the move) is never adopted: not by a later
+    // ingest, not by an ingestOnce retry of the same batch, and not by
+    // the adopt-everything commit()
+    val stage = new java.io.File(store,
+      s"${Snapshot.IngestStaging}crashed/shard_hour=${baseMs / hourMs}")
+    assert(stage.mkdirs())
+    java.nio.file.Files.copy(donor.toPath,
+      new java.io.File(stage, "part-staged-orphan.parquet").toPath)
+    cm.ingest(points(100, 1, "late"))
+    assert(Snapshot.read(spark, store).count() == 800)
+    cm.ingestOnce(points(50, 2, "retry"), "appS", 0L)
+    assert(Snapshot.read(spark, store).count() == 850)
+    Snapshot.commit(spark, store)
+    // commit() takes the hour directory's torn orphan, never the staged one
+    val orphanRows = spark.read.parquet(orphan.getPath).count()
+    assert(Snapshot.read(spark, store).count() == 850 + orphanRows)
+    assert(Snapshot.latest(spark, store)._2.forall(_.startsWith("shard_hour=")))
+    assert(new java.io.File(stage, "part-staged-orphan.parquet").exists())
   }
 
   test("a NON-DETERMINISTIC batch is pinned to one evaluation: the hour " +
@@ -505,10 +554,10 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
       "(r12 ADVICE medium)") {
     val store = Files.createTempDirectory("graft_snapnd_").toString
     // every evaluation pass advances a shared counter; a SECOND pass
-    // over this dataset lands in hour 1 instead of hour 0, so without
-    // the evaluation pin touchedHours (pass 1: hour 0) and ingestBatch
-    // (pass 2: hour 1) would disagree and the commit would quarantine
-    // the whole batch as orphans
+    // over this dataset lands in hour 1 instead of hour 0. The staged
+    // write is the batch's only evaluation and the commit takes exactly
+    // the files it wrote, so no second pass (e.g. an hour probe) can
+    // disagree with it and quarantine the batch as orphans
     SnapshotEvalShift.n.set(0L)
     val base = baseMs
     val hr = hourMs
@@ -529,8 +578,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     }
     Snapshot.committer(spark, store).ingest(nd2)
     assert(Snapshot.read(spark, store).count() == 200)
-    // a dataset the CALLER persisted is left persisted (the pin only
-    // manages its own cache)
+    // a dataset the CALLER persisted is left persisted
     val pre = points(10, 4, "pre").persist()
     Snapshot.committer(spark, store).ingest(pre)
     assert(pre.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
@@ -544,6 +592,8 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     val store = Files.createTempDirectory("graft_snaphint_").toString
     val h0 = baseMs / hourMs
     val cm = Snapshot.committer(spark, store)
+    // the hours are ignored (the staged write finds them); the
+    // deprecated overloads must still commit exactly their own batch
     cm.ingest(points(200, 0, "cpu"), Seq(h0))
     assert(Snapshot.read(spark, store).count() == 200)
     // superset hint: extra hours (one empty, one existing-untouched) are
@@ -560,8 +610,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     assert(Snapshot.read(spark, store).count() == 375)
   }
 
-  test("the hours hint saves the per-batch probe job (counted via " +
-      "SparkListener): hinted ingest runs strictly fewer jobs") {
+  test("every ingest entry point starts exactly one Spark job, hinted or not") {
     val counter = new org.apache.spark.scheduler.SparkListener {
       val n = new java.util.concurrent.atomic.AtomicInteger(0)
       override def onJobStart(
@@ -580,13 +629,22 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
         body
         Thread.sleep(1500); counter.n.get
       }
-      val unhinted = countJobs { cm.ingest(points(100, 1, "x")); () }
-      val hinted = countJobs {
-        cm.ingest(points(100, 2, "y"), Seq(baseMs / hourMs + 2)); ()
-      }
-      assert(hinted < unhinted,
-        s"hint saved no job: unhinted=$unhinted hinted=$hinted")
-      assert(Snapshot.read(spark, store).count() == 300)
+      val h0 = baseMs / hourMs
+      val jobs = Seq(
+        "Committer.ingest" -> countJobs { cm.ingest(points(100, 1, "x")); () },
+        "Committer.ingest(hours)" -> countJobs {
+          cm.ingest(points(100, 2, "y"), Seq(h0 + 2)); () },
+        "Committer.ingestOnce" -> countJobs {
+          cm.ingestOnce(points(100, 3, "z"), "appJ", 0L); () },
+        "Committer.ingestOnce(hours)" -> countJobs {
+          cm.ingestOnce(points(100, 4, "z"), "appJ", 1L, Seq(h0 + 4)); () },
+        // one-shot commits last: they leave the committer's cache stale
+        "Snapshot.ingestCommitted" -> countJobs {
+          Snapshot.ingestCommitted(points(100, 5, "v"), store); () },
+        "Snapshot.ingestCommitted(hours)" -> countJobs {
+          Snapshot.ingestCommitted(points(100, 6, "v"), store, Seq(h0 + 6)); () })
+      jobs.foreach { case (call, n) => assert(n == 1, s"$call started $n jobs") }
+      assert(Snapshot.read(spark, store).count() == 700)
     } finally spark.sparkContext.removeSparkListener(counter)
   }
 
