@@ -472,8 +472,10 @@ object FuseCosine extends org.apache.spark.sql.catalyst.rules.Rule[
 
 /** SparkSessionExtensions registration — makes `graft_dot` callable from
   * SQL: `SELECT graft_dot(a, b)`, and adds the as-of planner strategy,
-  * the optimizer rules and the physical rule that keeps per-query
-  * constants out of generated code ([[graft.plans.StableCodegen]]).
+  * the optimizer rules, the physical rule that keeps per-query
+  * constants out of generated code ([[graft.plans.StableCodegen]]) and
+  * the one that collects small manifest reads on the driver with no job
+  * ([[graft.plans.LocalCollect]]).
   * [[graft.plans.AsOfJoinNative.asOf]] also registers the strategy on a
   * session without these extensions; the injected copy is what plans an
   * as-of view read from a sibling session (`newSession()`, one per
@@ -506,5 +508,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => FuseCosine)
     e.injectOptimizerRule(_ => graft.plans.RollupRewrite)
     e.injectColumnar(_ => graft.plans.StableCodegen)
+    e.injectColumnar(_ => graft.plans.LocalCollect)
   }
 }

@@ -840,17 +840,23 @@ object Snapshot {
   private def planState(spark: SparkSession, root: String,
       st: LogState): DataFrame =
     if (st.gen < 0) spark.read.parquet(root)
-    else if (st.live.isEmpty) spark.read.parquet(root).limit(0)
-    else if (st.live.forall(f => st.sizes.getOrElse(f, -1L) >= 0))
+    else planLive(spark, root, st.live, st.sizes, st.zmaps)
+
+  /** A read of exactly the files `live`. An empty live set plans from
+    * the log too: the store schema over no files, where a directory read
+    * would have to infer a schema from files that are not there. */
+  private def planLive(spark: SparkSession, root: String, live: Seq[String],
+      sizes: Map[String, Long], zmaps: Map[String, FileZoneStats]): DataFrame =
+    if (live.forall(f => sizes.getOrElse(f, -1L) >= 0))
       // every live file has a recorded size: plan straight from the log,
       // ZERO filesystem calls (graft.sources.ManifestFileIndex — the
       // explicit-file-list read below statuses every path on the driver,
       // measured ~20 s at 100 k files / 100 k HEADs on an object store).
       // The log's zone maps ride along: a pushed timestamp predicate
       // prunes FILES within an hour before any footer is opened.
-      planFromLog(spark, root, st.live.map(f => (f, st.sizes(f))), st.zmaps)
+      planFromLog(spark, root, live.map(f => (f, sizes(f))), zmaps)
     else spark.read.option("basePath", root)
-      .parquet(st.live.map(f => s"$root/$f"): _*)
+      .parquet(live.map(f => s"$root/$f"): _*)
 
   private def planFromLog(spark: SparkSession, root: String,
       files: Seq[(String, Long)],
@@ -899,31 +905,66 @@ object Snapshot {
     * (n_points BIGINT, min_value DOUBLE, max_value DOUBLE). */
   def rangeStats(spark: SparkSession, root: String,
       startMs: Long = Long.MinValue, endMs: Long = Long.MaxValue): DataFrame = {
+    val st = loadState(fsFor(spark, root), root)
+    if (st.gen < 0) scanStats(spark.read.parquet(root), startMs, endMs)
+    else liveStats(spark, root, st.live, st.sizes, st.zmaps, startMs, endMs)
+  }
+
+  /** [[rangeStats]] over a frame opened by [[read]] / [[readWithGen]]:
+    * answered from the files and zone maps of the frame's own
+    * [[graft.sources.ManifestFileIndex]], so a repeat call on an opened
+    * store reads no log. Any other frame — a manifest-free or
+    * legacy-sized store's read, or a frame already filtered or
+    * projected — is aggregated by a scan of the frame. */
+  def rangeStats(points: DataFrame, startMs: Long, endMs: Long): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    points.queryExecution.analyzed match {
+      case LogicalRelation(HadoopFsRelation(
+          index: graft.sources.ManifestFileIndex, _, _, _, _, _), _, _, _, _) =>
+        liveStats(points.sparkSession, index.rootPaths.head.toString,
+          index.files.map(_._1), index.files.toMap, index.stats, startMs, endMs)
+      case _ => scanStats(points, startMs, endMs)
+    }
+  }
+
+  /** count/min/max(value) over `[startMs, endMs]` by a scan of `df`, a
+    * store read; `oneTask` first coalesces the pruned rows to one
+    * partition, so the aggregate needs no exchange. */
+  private def scanStats(df: DataFrame, startMs: Long, endMs: Long,
+      oneTask: Boolean = false): DataFrame = {
     import graft.model.shardHourOf
-    def scanAgg(df: DataFrame): DataFrame =
-      df.filter(col("shard_hour").between(shardHourOf(startMs), shardHourOf(endMs)))
-        .filter(col("timestamp").between(startMs, endMs))
-        .agg(count(lit(1)).as("n_points"),
-          min(col("value")).as("min_value"),
-          max(col("value")).as("max_value"))
-    val fs = fsFor(spark, root)
-    val st = loadState(fs, root)
-    if (st.gen < 0) return scanAgg(spark.read.parquet(root))
-    val (metaFiles, rest) = st.live.partition { f =>
-      st.zmaps.get(f).exists(z =>
+    val pruned = df
+      .filter(col("shard_hour").between(shardHourOf(startMs), shardHourOf(endMs)))
+      .filter(col("timestamp").between(startMs, endMs))
+    (if (oneTask) pruned.coalesce(1) else pruned)
+      .agg(count(lit(1)).as("n_points"),
+        min(col("value")).as("min_value"),
+        max(col("value")).as("max_value"))
+  }
+
+  /** [[rangeStats]] over the live set `live` with its sizes and zone
+    * maps. A scan side within [[graft.plans.CollectLocally.fits]] is
+    * aggregated in one partition: its plan is then a single stage that
+    * collects on the driver with no job. A larger one keeps the parallel
+    * partial/final aggregate over an exchange. */
+  private def liveStats(spark: SparkSession, root: String, live: Seq[String],
+      sizes: Map[String, Long], zmaps: Map[String, FileZoneStats],
+      startMs: Long, endMs: Long): DataFrame = {
+    val (metaFiles, rest) = live.partition { f =>
+      zmaps.get(f).exists(z =>
         z.tsMin >= startMs && z.tsMax <= endMs && z.rows.isDefined &&
           z.value.exists { case (mn, mx) => mn != 0.0 && mx != 0.0 })
     }
     // stat-less files are never skipped; stat-carrying ones drop out when
     // their recorded range provably misses the query range (conservative,
     // same rule as ManifestFileIndex)
-    val scanFiles = rest.filter(f => st.zmaps.get(f)
+    val scanFiles = rest.filter(f => zmaps.get(f)
       .forall(z => z.tsMax >= startMs && z.tsMin <= endMs))
-    val nMeta = metaFiles.map(f => st.zmaps(f).rows.get).sum
+    val nMeta = metaFiles.map(f => zmaps(f).rows.get).sum
     val vMeta: Option[(Double, Double)] =
       if (metaFiles.isEmpty) None
-      else Some((metaFiles.map(f => st.zmaps(f).value.get._1).min,
-        metaFiles.map(f => st.zmaps(f).value.get._2).max))
+      else Some((metaFiles.map(f => zmaps(f).value.get._1).min,
+        metaFiles.map(f => zmaps(f).value.get._2).max))
     if (scanFiles.isEmpty) {
       // metadata-only answer: a LocalRelation — NO file scan in the plan
       import org.apache.spark.sql.Row
@@ -938,9 +979,11 @@ object Snapshot {
       spark.createDataFrame(
         java.util.Collections.singletonList(row), schema)
     } else {
-      val scanDf = planState(spark, root,
-        st.copy(live = scanFiles.toVector))
-      val s = scanAgg(scanDf)
+      val scanSizes = scanFiles.map(sizes.getOrElse(_, -1L))
+      val oneTask = !scanSizes.contains(-1L) && graft.plans.CollectLocally.fits(
+        scanFiles.size, scanSizes.sum, spark.sessionState.conf)
+      val s = scanStats(planLive(spark, root, scanFiles, sizes, zmaps),
+        startMs, endMs, oneTask)
       vMeta match {
         case None => s
         case Some((mn, mx)) => s.select(

@@ -1332,16 +1332,24 @@ object TimeSeries {
     * only mis-DISPATCH, never mis-ANSWER: every branch is bit-identical
     * (spec-pinned), so a stale entry costs performance, not correctness —
     * the same contract plan-stats-driven optimizers (CBO, AQE estimates)
-    * already accept. Bounded at [[ProbeMemoMax]] entries (clear-all on
-    * overflow: plans hash to ints, entries are 3 doubles — the bound is
-    * defensive, not load-bearing). */
-  private val ProbeMemoMax = 512
-  private val probeStatsMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (Int, String, String, Double, Long), (Double, Double, Double)]()
+    * already accept. Bounded at [[ProbeMemoMax]] entries: an overflow
+    * evicts the one least recently used entry, so a frame that keeps
+    * being dispatched stays memoized however many others pass through
+    * (entries are 3 doubles — the bound is defensive, not load-bearing). */
+  private[graft] val ProbeMemoMax = 512
+  /** Access-ordered, so the eldest entry is the least recently used;
+    * every access holds its lock (lookups and inserts only — never a
+    * probe job). */
+  private[graft] val probeStatsMemo =
+    new java.util.LinkedHashMap[(Int, String, String, Double, Long), (Double, Double, Double)](
+      16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[
+          (Int, String, String, Double, Long), (Double, Double, Double)]): Boolean =
+        size > ProbeMemoMax
+    }
 
-  private[graft] def memoProbeSize: Int = probeStatsMemo.size
-  private[graft] def memoProbeClear(): Unit = probeStatsMemo.clear()
+  private[graft] def memoProbeSize: Int = probeStatsMemo.synchronized(probeStatsMemo.size)
+  private[graft] def memoProbeClear(): Unit = probeStatsMemo.synchronized(probeStatsMemo.clear())
 
   private[graft] def memoizedKeyDensityStats(df: DataFrame, key: String,
       fraction: Double, seed: Long = 42L): (Double, Double, Double) = {
@@ -1350,21 +1358,17 @@ object TimeSeries {
     // distinct plans (perf-only harm, but cheap to harden against)
     val memoKey = (plan.semanticHash(), plan.schema.catalogString,
       key, fraction, seed)
-    // ADVICE r14: never run the ~0.25 s probe JOB while holding a map
-    // lock — computeIfAbsent pins the key's bin for the job's duration,
-    // serializing unrelated dispatches that hash to the same bin. Plain
-    // get → run outside any lock → putIfAbsent: two racing dispatches of
-    // the SAME frame may both run the probe (stats are deterministic for
-    // a (plan, fraction, seed) key, so both compute the same triple and
-    // the first-put wins harmlessly), but no dispatch ever blocks behind
-    // another's Spark job. The size bound stays check-then-act (racy by
-    // design — it is defensive, entries are 3 doubles; a momentary
-    // overshoot is harmless and clear() keeps the map bounded).
-    val cached = probeStatsMemo.get(memoKey)
+    // ADVICE r14: never run the ~0.25 s probe JOB while holding the memo
+    // lock — that would serialize unrelated dispatches behind it. Locked
+    // get → run outside any lock → locked putIfAbsent: two racing
+    // dispatches of the SAME frame may both run the probe (stats are
+    // deterministic for a (plan, fraction, seed) key, so both compute the
+    // same triple and the first-put wins harmlessly), but no dispatch
+    // ever blocks behind another's Spark job.
+    val cached = probeStatsMemo.synchronized(probeStatsMemo.get(memoKey))
     if (cached != null) return cached
     val stats = sampledKeyDensityStats(df, key, fraction, seed)
-    if (probeStatsMemo.size > ProbeMemoMax) probeStatsMemo.clear()
-    probeStatsMemo.putIfAbsent(memoKey, stats)
+    probeStatsMemo.synchronized(probeStatsMemo.putIfAbsent(memoKey, stats))
     stats
   }
 

@@ -59,9 +59,9 @@ final case class FileZoneStats(tsMin: Long, tsMax: Long,
   */
 final class ManifestFileIndex(
     root: Path,
-    files: Seq[(String, Long)], // (relpath `shard_hour=H/x.parquet`, bytes)
+    private[graft] val files: Seq[(String, Long)], // (relpath `shard_hour=H/x.parquet`, bytes)
     override val partitionSchema: StructType,
-    stats: Map[String, FileZoneStats] = Map.empty) extends FileIndex {
+    private[graft] val stats: Map[String, FileZoneStats] = Map.empty) extends FileIndex {
 
   override def rootPaths: Seq[Path] = Seq(root)
 

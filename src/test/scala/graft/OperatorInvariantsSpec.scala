@@ -375,6 +375,21 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
       assert(dBal == TimeSeries.DispatchPlain && jobsBal >= 1,
         s"distinct frame must probe fresh ($dBal, $jobsBal jobs)")
       assert(TimeSeries.memoProbeSize >= 2)
+      // overflow evicts one entry, never the whole memo: a frame that
+      // keeps being dispatched stays a hit while the memo fills past
+      // its bound twice over
+      val memo = TimeSeries.probeStatsMemo
+      (0 until 2 * TimeSeries.ProbeMemoMax).foreach { i =>
+        memo.synchronized(memo.put((i, "filler", "k", 0.0, 0L), (0.0, 0.0, 0.0)))
+        if (i % 256 == 0) {
+          val (d, n) = countJobs(TimeSeries.blockDispatch(skewed, "user_id", 2L, 1.0, 0.2))
+          assert(d == d1 && n == 0, s"hot frame missed the memo after $i fillers")
+        }
+      }
+      assert(TimeSeries.memoProbeSize == TimeSeries.ProbeMemoMax)
+      val (dHot, jobsHot) = countJobs(
+        TimeSeries.blockDispatch(skewed, "user_id", 2L, 1.0, 0.2))
+      assert(dHot == d1 && jobsHot == 0, s"hot frame evicted ($jobsHot jobs)")
     } finally {
       spark.sparkContext.removeSparkListener(counter)
       TimeSeries.memoProbeClear()

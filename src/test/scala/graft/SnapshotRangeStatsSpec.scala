@@ -180,4 +180,55 @@ class SnapshotRangeStatsSpec extends AnyFunSuite with SparkSpec {
     assert(scanNodes(df.queryExecution.executedPlan).isEmpty,
       "compaction refreshes zmap3 stats, so metadata still answers")
   }
+
+  test("rangeStats over an opened frame is bit-equal to rangeStats over " +
+      "the root, reads no log, and falls back to a scan for other frames") {
+    def raw(r: org.apache.spark.sql.Row): Seq[Any] = r.toSeq.map {
+      case d: Double => ("double", java.lang.Double.doubleToRawLongBits(d))
+      case v => v
+    }
+    val store = Files.createTempDirectory("graft_rs8_").toString
+    Snapshot.ingestCommitted(slice(0L, 899999L, vOff = 1.0), store)
+    Snapshot.ingestCommitted(slice(900000L, 1799999L, vOff = 2.0), store)
+    // a ±0.0-bounded file, a NaN file and a −0.0/+0.0 pair in one file
+    Snapshot.ingestCommitted(spark.range(10).select(
+      (lit(baseMs + 1800000L) + col("id") * 1000L).cast("long").as("timestamp"),
+      lit(-0.0).as("value"), lit("cpu").as("metric")).as[DataPoint].repartition(1), store)
+    Snapshot.ingestCommitted(spark.range(10).select(
+      (lit(baseMs + 1900000L) + col("id") * 1000L).cast("long").as("timestamp"),
+      when(col("id") === 5, lit(Double.NaN)).otherwise(col("id").cast("double"))
+        .as("value"), lit("cpu").as("metric")).as[DataPoint].repartition(1), store)
+    Snapshot.ingestCommitted(spark.range(4).select(
+      (lit(baseMs + 2000000L) + col("id") * 1000L).cast("long").as("timestamp"),
+      when(col("id") % 2 === 0, lit(-0.0)).otherwise(lit(0.0)).as("value"),
+      lit("cpu").as("metric")).as[DataPoint].repartition(1), store)
+    val opened = Snapshot.read(spark, store)
+    val ranges = Seq((Long.MinValue, Long.MaxValue), (baseMs, baseMs + hourMs),
+      (baseMs, baseMs + 1200000L), (baseMs + 500000L, baseMs + 1850000L),
+      (baseMs + 1800000L, baseMs + 2001000L), (baseMs + 1905000L, baseMs + 1905000L),
+      (baseMs + 2000000L, baseMs + 2003000L), (baseMs + 3000000L, baseMs + 3100000L))
+    val byRoot = ranges.map { case (lo, hi) =>
+      raw(Snapshot.rangeStats(spark, store, lo, hi).collect()(0)) }
+    ranges.zip(byRoot).foreach { case ((lo, hi), want) =>
+      assert(raw(Snapshot.rangeStats(opened, lo, hi).collect()(0)) == want, s"[$lo, $hi]")
+    }
+    // no log read: the answers hold with the manifest gone
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(store, Snapshot.ManifestDir))
+    ranges.zip(byRoot).foreach { case ((lo, hi), want) =>
+      assert(raw(Snapshot.rangeStats(opened, lo, hi).collect()(0)) == want, s"[$lo, $hi]")
+    }
+    // a filtered frame and a manifest-free read aggregate what they hold
+    val (lo, hi) = (baseMs, baseMs + hourMs)
+    val kept = opened.filter(col("value") > 1.5)
+    val filtered = Snapshot.rangeStats(kept, lo, hi)
+    assert(filesScanned(filtered) > 0L)
+    assert(raw(filtered.collect()(0)) == raw(kept.filter(col("timestamp").between(lo, hi))
+      .agg(count(lit(1)), min(col("value")), max(col("value"))).collect()(0)))
+    val plain = Files.createTempDirectory("graft_rs9_").toString
+    Ingest.ingestBatch(slice(0L, 899999L, vOff = 2.5), plain)
+    val plainStats = Snapshot.rangeStats(Ingest.readPoints(spark, plain), lo, hi).collect()(0)
+    assert(raw(plainStats) ==
+      raw(Snapshot.rangeStats(spark, plain, lo, hi).collect()(0)))
+  }
 }

@@ -648,6 +648,34 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     } finally spark.sparkContext.removeSparkListener(counter)
   }
 
+  test("a store whose committed live set is empty reads as zero rows: " +
+      "after ingestCommitted, commit and Committer.ingest of no points") {
+    val empty = spark.emptyDataset[DataPoint]
+    def fresh(tag: String) =
+      Files.createTempDirectory(s"graft_empty_${tag}_").toString + "/store"
+    val s1 = fresh("ingestCommitted")
+    assert(Snapshot.ingestCommitted(empty, s1) == 0L)
+    val s2 = fresh("commit")
+    Files.createDirectories(java.nio.file.Paths.get(s2))
+    assert(Snapshot.commit(spark, s2) == 0L)
+    val s3 = fresh("committer")
+    assert(Snapshot.committer(spark, s3).ingest(empty) == 0L)
+    Seq(s1, s2, s3).foreach { store =>
+      val (gen, live, _) = Snapshot.latest(spark, store)
+      assert(gen == 0L && live.isEmpty, store)
+      val df = Snapshot.read(spark, store)
+      assert(df.columns.toSeq == Seq("timestamp", "value", "metric", "shard_hour"))
+      assert(df.count() == 0L, store)
+      assert(Ingest.queryRange(spark, store, baseMs, baseMs + hourMs).collect().isEmpty)
+      val stats = Snapshot.rangeStats(spark, store, baseMs, baseMs + hourMs).collect()
+      assert(stats.length == 1 && stats(0).getLong(0) == 0L &&
+        stats(0).isNullAt(1) && stats(0).isNullAt(2), stats.mkString)
+      // the first points into an empty store read back
+      Snapshot.ingestCommitted(points(10, 0, "cpu"), store)
+      assert(Snapshot.read(spark, store).count() == 10L)
+    }
+  }
+
   test("S3-class lost rename race: the mock racy FS silently overwrites " +
       "a same-generation commit without a guard; with LockLeaseGuard " +
       "the race is LOUD and the retry recovers BOTH commits; a stale " +
