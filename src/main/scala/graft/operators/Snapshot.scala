@@ -9,10 +9,10 @@ import graft.sources.FileZoneStats
 
 /** Snapshot isolation for the hour-partitioned store — the minimal
   * manifest log that makes SERVE-WHILE-COMPACT safe on a plain
-  * filesystem (r10; the ServingUnderWriteProbe demonstrated concurrent
-  * readers dying with FILE_NOT_EXIST the instant the rename-swap
-  * compaction ran under them — the documented maintenance-window
-  * caveat, now measured instead of declared).
+  * filesystem (r10; before it, concurrent readers died with
+  * FILE_NOT_EXIST the instant the rename-swap compaction ran under
+  * them). SnapshotStoreSpec's "two racing committers" case reads the
+  * store while two guarded writers append and one compacts and vacuums.
   *
   * Design (a Delta/Iceberg log scoped to exactly what the store needs):
   *  - `_graft_manifest/m<gen>` files, one per commit, written via
@@ -241,8 +241,8 @@ object Snapshot {
     * stat set, recorded once at commit time (one parquet footer read per
     * NEW file, O(batch)). They let the planner prune files WITHIN an
     * hour on pushed timestamp AND value predicates without touching any
-    * footer at read time. Files without recorded stats (legacy commits,
-    * stats disabled) are simply never pruned — skipping is always
+    * footer at read time. Files without recorded stats (pre-r13 commits,
+    * a failed footer read) are simply never pruned — skipping is always
     * conservative, and legacy `zmap` lines replay as ts-only stats. */
   private[graft] final case class LogState(gen: Long, live: Vector[String],
       dead: Vector[Tombstone], txns: Map[String, Long],
@@ -422,26 +422,6 @@ object Snapshot {
     * checkpoint + at most this many (small) increments. */
   val CheckpointEvery = 64
 
-  /** Commit-time stat collection toggle (`spark.graft.commitStats` sys
-    * prop / `SPARK_GRAFT_COMMIT_STATS` env, default on). Off trades the
-    * per-new-file footer read at COMMIT time for no file skipping at
-    * READ time — a latency-critical micro-batch sink can disable it and
-    * let the next compaction's commit restore the stats. Read per call
-    * so tests (and a live sink) can flip it. */
-  private def statsEnabled: Boolean =
-    sys.props.get("spark.graft.commitStats")
-      .orElse(sys.env.get("SPARK_GRAFT_COMMIT_STATS"))
-      .forall { v =>
-        // tolerant parse (ADVICE r13): String.toBoolean throws on "0"/
-        // "off"/typos, failing every COMMIT just to disable stats. Only
-        // recognizable negatives disable; anything else stays on (warned).
-        val off = Set("false", "0", "off", "no").contains(v.trim.toLowerCase)
-        if (!off && !v.trim.equalsIgnoreCase("true"))
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"unrecognized commitStats toggle '$v' — treating as enabled")
-        !off
-      }
-
   /** Zone-map stats of one store file, from its parquet FOOTER — the
     * write-time row-group stats parquet already maintains, hoisted into
     * the manifest so readers never pay the footer IO. The timestamp
@@ -500,15 +480,15 @@ object Snapshot {
     }
 
   /** Zone maps for this commit's NEW files — one footer read each,
-    * O(batch), skipped entirely when stats are disabled. Footer reads go
-    * through a bounded thread pool (ADVICE r13): serial reads cost ~8 ms
-    * each, so adopting a large pre-existing store (100k files) paid
-    * O(table) sequential round-trips — exactly the RPC bill the manifest
-    * exists to avoid. 16 concurrent readers bound the memory while
-    * overlapping the latency (local disk AND object-store RPCs). */
+    * O(batch). Footer reads go through a bounded thread pool (ADVICE
+    * r13): serial reads cost ~8 ms each, so adopting a large
+    * pre-existing store (100k files) paid O(table) sequential
+    * round-trips — exactly the RPC bill the manifest exists to avoid.
+    * 16 concurrent readers bound the memory while overlapping the
+    * latency (local disk AND object-store RPCs). */
   private def zmapsFor(fs: FileSystem, root: String,
       files: Seq[String]): Map[String, FileZoneStats] =
-    if (!statsEnabled || files.isEmpty) Map.empty
+    if (files.isEmpty) Map.empty
     else if (files.lengthCompare(2) < 0)
       files.flatMap(f => statsOf(fs, root, f).map(f -> _)).toMap
     else {
@@ -547,9 +527,9 @@ object Snapshot {
   /** Adopt-everything commit: fold ANY unknown directory file into the
     * live set and commit gen+1. Right for bringing a pre-existing plain
     * store under management (the directory IS the truth); for ongoing
-    * appends prefer [[ingestCommitted]]/[[commit(spark,root,added)*]],
-    * which never adopt a torn write's orphan files. Returns the
-    * committed generation. */
+    * appends prefer [[ingestCommitted]] or [[Committer]], which never
+    * adopt a torn write's orphan files. Returns the committed
+    * generation. */
   def commit(spark: SparkSession, root: String): Long = {
     val fs = fsFor(spark, root)
     val st = loadState(fs, root)
@@ -559,35 +539,6 @@ object Snapshot {
     val next = st.gen + 1
     commitDelta(fs, root, next, sizedLive ++ added, st.dead, added, Seq.empty,
       st.txns, zmaps = st.zmaps ++ zmapsFor(fs, root, added.map(_._1)))
-    next
-  }
-
-  /** Exact-file-list commit: adds precisely `added` (store-relative
-    * `shard_hour=N/file.parquet` paths, which must exist) to the live
-    * set. Unknown directory files — e.g. a previous writer's torn
-    * output — stay quarantined outside the table. */
-  def commit(spark: SparkSession, root: String, added: Seq[String]): Long =
-    commitSizedOneShot(fsFor(spark, root), root, added.map(f => (f, -1L)))
-
-  /** One-shot exact-file commit with sizes already in hand (−1 = fetch).
-    * Re-reads the log (one checkpoint + increments) — right for one-shot
-    * callers; sustained writers use [[Committer]]. */
-  private def commitSizedOneShot(fs: FileSystem, root: String,
-      added: Seq[(String, Long)]): Long = {
-    val st = loadState(fs, root)
-    val known = st.live.toSet ++ st.dead.map(_.path).toSet
-    val fresh = added.filterNot(f => known(f._1)).map {
-      case (f, sz) if sz >= 0 => (f, sz)
-      case (f, _) =>
-        // the existence check doubles as the size fetch (one RPC either way)
-        try (f, fs.getFileStatus(new Path(root, f)).getLen)
-        catch { case _: java.io.FileNotFoundException =>
-          throw new IllegalArgumentException(s"commit of missing file $f") }
-    }
-    val sizedLive = st.live.map(f => (f, st.sizes.getOrElse(f, -1L)))
-    val next = st.gen + 1
-    commitDelta(fs, root, next, sizedLive ++ fresh, st.dead, fresh, Seq.empty,
-      st.txns, zmaps = st.zmaps ++ zmapsFor(fs, root, fresh.map(_._1)))
     next
   }
 
@@ -651,26 +602,27 @@ object Snapshot {
     * adds precisely the moved files. Nothing in the hour directories is
     * listed, so a torn earlier write's orphans are never adopted and the
     * append cost scales with the batch, not the store. On S3A each file
-    * costs one extra copy (the rename), as it does for [[compactShard]]. */
-  def ingestCommitted(points: Dataset[DataPoint], root: String): Long =
-    commitSizedOneShot(fsFor(points.sparkSession, root), root,
-      stageBatch(points, root))
-
-  /** [[ingestCommitted]]; `hours` is ignored — the batch's own write
-    * finds its hours. */
-  @deprecated("the write finds the batch's hours; use ingestCommitted(points, root)",
-    "0.1.0")
-  def ingestCommitted(points: Dataset[DataPoint], root: String,
-      hours: Seq[Long]): Long =
-    ingestCommitted(points, root)
+    * costs one extra copy (the rename), as it does for [[compactShard]].
+    * Re-reads the log (one checkpoint + increments) per call — right for
+    * one-shot callers; sustained writers use [[Committer]]. */
+  def ingestCommitted(points: Dataset[DataPoint], root: String): Long = {
+    val fs = fsFor(points.sparkSession, root)
+    val added = stageBatch(points, root)
+    val st = loadState(fs, root)
+    val sizedLive = st.live.map(f => (f, st.sizes.getOrElse(f, -1L)))
+    val next = st.gen + 1
+    commitDelta(fs, root, next, sizedLive ++ added, st.dead, added, Seq.empty,
+      st.txns, zmaps = st.zmaps ++ zmapsFor(fs, root, added.map(_._1)))
+    next
+  }
 
   /** Open a [[Committer]] — the cached single-committer handle whose
     * sustained commits are O(delta): no full manifest read, write, or
-    * whole-table listing per commit. The one-shot [[commit]] /
-    * [[ingestCommitted]] stay correct but re-read the log every call
-    * (and [[commit]] re-lists the table) — at 100 TB (~10⁵-10⁶ live
-    * files) that is the difference between a ~ms append commit and a
-    * multi-second one. */
+    * whole-table listing per commit. The one-shot [[ingestCommitted]]
+    * stays correct but re-reads the log every call (and the
+    * adopt-everything [[commit]] also re-lists the table) — at 100 TB
+    * (~10⁵-10⁶ live files) that is the difference between a ~ms append
+    * commit and a multi-second one. */
   def committer(spark: SparkSession, root: String): Committer =
     new Committer(spark, root)
 
@@ -742,8 +694,7 @@ object Snapshot {
           catch { case _: java.io.FileNotFoundException =>
             throw new IllegalArgumentException(s"commit of missing file $f") }
         }
-      // one footer read per NEW file (skipped when stats are disabled);
-      // the rare collision-retry path re-reads them — O(batch), not worth
+      // one footer read per NEW file; the rare collision-retry path re-reads them — O(batch), not worth
       // a second code path
       val freshZ = zmapsFor(fs, root, fresh.map(_._1))
       val next = genV + 1
@@ -808,14 +759,6 @@ object Snapshot {
             "LOST and batch ids restarted, this skip drops new data.")
         genV
       } else ingestTagged(points, Some((appId, version)))
-
-    /** [[ingestOnce]]; `hours` is ignored — the batch's own write finds
-      * its hours. */
-    @deprecated("the write finds the batch's hours; use ingestOnce(points, appId, version)",
-      "0.1.0")
-    def ingestOnce(points: Dataset[DataPoint], appId: String,
-        version: Long, hours: Seq[Long]): Long =
-      ingestOnce(points, appId, version)
 
     private def ingestTagged(points: Dataset[DataPoint],
         txn: Option[(String, Long)]): Long =

@@ -587,29 +587,6 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     assert(Snapshot.read(spark, store).count() == 210)
   }
 
-  test("caller-supplied touched hours skip the probe job: exact commit, " +
-      "superset hints safe, ingestOnce txn semantics intact") {
-    val store = Files.createTempDirectory("graft_snaphint_").toString
-    val h0 = baseMs / hourMs
-    val cm = Snapshot.committer(spark, store)
-    // the hours are ignored (the staged write finds them); the
-    // deprecated overloads must still commit exactly their own batch
-    cm.ingest(points(200, 0, "cpu"), Seq(h0))
-    assert(Snapshot.read(spark, store).count() == 200)
-    // superset hint: extra hours (one empty, one existing-untouched) are
-    // harmless — only this batch's files are committed
-    cm.ingest(points(100, 1, "mem"), Seq(h0, h0 + 1, h0 + 7))
-    assert(Snapshot.read(spark, store).count() == 300)
-    // the streaming fast path: hint + re-delivered batch still skips
-    cm.ingestOnce(points(50, 2, "c"), "appH", 0L, Seq(h0 + 2))
-    assert(Snapshot.read(spark, store).count() == 350)
-    cm.ingestOnce(points(50, 2, "c"), "appH", 0L, Seq(h0 + 2))
-    assert(Snapshot.read(spark, store).count() == 350)
-    // one-shot overload
-    Snapshot.ingestCommitted(points(25, 3, "d"), store, Seq(h0 + 3))
-    assert(Snapshot.read(spark, store).count() == 375)
-  }
-
   test("every ingest entry point starts exactly one Spark job, hinted or not") {
     val counter = new org.apache.spark.scheduler.SparkListener {
       val n = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -636,16 +613,132 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
           cm.ingest(points(100, 2, "y"), Seq(h0 + 2)); () },
         "Committer.ingestOnce" -> countJobs {
           cm.ingestOnce(points(100, 3, "z"), "appJ", 0L); () },
-        "Committer.ingestOnce(hours)" -> countJobs {
-          cm.ingestOnce(points(100, 4, "z"), "appJ", 1L, Seq(h0 + 4)); () },
-        // one-shot commits last: they leave the committer's cache stale
+        // one-shot commit last: it leaves the committer's cache stale
         "Snapshot.ingestCommitted" -> countJobs {
-          Snapshot.ingestCommitted(points(100, 5, "v"), store); () },
-        "Snapshot.ingestCommitted(hours)" -> countJobs {
-          Snapshot.ingestCommitted(points(100, 6, "v"), store, Seq(h0 + 6)); () })
+          Snapshot.ingestCommitted(points(100, 5, "v"), store); () })
       jobs.foreach { case (call, n) => assert(n == 1, s"$call started $n jobs") }
-      assert(Snapshot.read(spark, store).count() == 700)
+      assert(Snapshot.read(spark, store).count() == 500)
     } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("two racing committers under LockLeaseGuard, a compaction and a " +
+      "grace vacuum: readers see one count per generation, never falling") {
+    import scala.jdk.CollectionConverters._
+    val store = Files.createTempDirectory("graft_snapdual_").toString
+    // hour 0 holds 8 append files, so the mid-run compaction has work
+    (0 until 8).foreach(i => Ingest.ingestBatch(points(100, 0, s"m$i"), store))
+    Ingest.ingestBatch(points(300, 1, "cpu"), store)
+    Snapshot.commit(spark, store)
+    val seeded = 1100L
+    val hour0 = baseMs / hourMs
+    val batches = 6
+    Snapshot.setCommitGuard(store, new Snapshot.LockLeaseGuard())
+    try {
+      val observed = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val gens = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      val graceDeleted = new java.util.concurrent.atomic.AtomicLong(-1L)
+      val writing = new java.util.concurrent.atomic.AtomicBoolean(true)
+      val readersUp = new java.util.concurrent.CountDownLatch(2)
+      def read(): Unit = {
+        val (g, df) = Snapshot.readWithGen(spark, store)
+        observed.add((g, df.count()))
+      }
+      val readers = (0 until 2).map(_ => new Thread(() =>
+        try {
+          read(); readersUp.countDown()
+          while (writing.get) read()
+          read()
+        } catch { case t: Throwable => failures.add(t); readersUp.countDown() }))
+      // compaction and vacuum are one-shot committers: a lost generation
+      // race is loud under the guard, and a retry re-reads the log
+      def retrying[A](n: Int)(body: => A): A =
+        try body catch {
+          case _: IllegalStateException if n > 0 =>
+            Thread.sleep(50L); retrying(n - 1)(body)
+        }
+      def writer(firstHour: Int, maintain: Boolean) = new Thread(() =>
+        try {
+          val cm = Snapshot.committer(spark, store)
+          (0 until batches).foreach { i =>
+            val staged = Snapshot.stageBatch(points(100, firstHour + i, "w"), store)
+            gens.add(cm.commitAdded(staged.map(_._1), retries = 10))
+            if (maintain && i == batches / 2) {
+              gens.add(retrying(10)(Snapshot.compactShard(spark, store, hour0, 2)))
+              graceDeleted.set(retrying(10)(
+                Snapshot.vacuum(spark, store, graceMs = 3600000L)))
+            }
+          }
+        } catch { case t: Throwable => failures.add(t) })
+      readers.foreach(_.start())
+      readersUp.await()
+      val writers = Seq(writer(10, maintain = true), writer(300, maintain = false))
+      writers.foreach(_.start())
+      writers.foreach(_.join())
+      writing.set(false)
+      readers.foreach(_.join())
+      assert(failures.isEmpty, failures.asScala.mkString("; "))
+      val byGen = observed.asScala.toSeq.groupBy(_._1).toSeq.sortBy(_._1)
+        .map { case (g, obs) => (g, obs.map(_._2).distinct) }
+      assert(byGen.forall(_._2.size == 1), s"a generation served two counts: $byGen")
+      val counts = byGen.map(_._2.head)
+      assert(counts == counts.sorted, s"a count fell as the generation rose: $byGen")
+      assert(byGen.size >= 2, s"readers saw one generation: $byGen")
+      val committed = gens.asScala.toSeq
+      assert(committed.distinct.size == committed.size && committed.size == 2 * batches + 1,
+        s"lost or duplicated commits: $committed")
+      assert(graceDeleted.get == 0L, "the grace vacuum deleted under live readers")
+      val total = seeded + 2L * batches * 100L
+      assert(counts.last == total)
+      assert(Snapshot.read(spark, store).count() == total)
+      Snapshot.vacuum(spark, store, graceMs = 0L)
+      assert(Ingest.queryRange(spark, store, baseMs, baseMs + hourMs - 1).count() == 800L,
+        "the compacted hour double-counted or lost rows")
+    } finally Snapshot.clearCommitGuard(store)
+  }
+
+  test("log v2 commits are O(delta): five cached commits write the same " +
+      "increments on a 10-file and a 2,000-file store, and no checkpoint") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.config.Configurator
+    // zero-byte files: this checks the log, not parquet IO; their footer
+    // reads fail, and each failure logs a warning
+    val logger = Snapshot.getClass.getName
+    val level = LogManager.getLogger(logger).getLevel
+    Configurator.setLevel(logger, Level.ERROR)
+    def touch(root: String, rel: String): String = {
+      val p = java.nio.file.Paths.get(root, rel)
+      Files.createDirectories(p.getParent)
+      Files.createFile(p)
+      rel
+    }
+    def increments(baseFiles: Int): Seq[(String, Seq[Byte])] = {
+      val root = Files.createTempDirectory(s"graft_snapdelta_${baseFiles}_").toString
+      (0 until baseFiles).foreach(i =>
+        touch(root, f"shard_hour=${i / 1000}/base-$i%06d.parquet"))
+      assert(Snapshot.commit(spark, root) == 0L)
+      val cm = Snapshot.committer(spark, root)
+      (1 to 5).foreach { c =>
+        val files = (0 until 2).map(j =>
+          touch(root, f"shard_hour=${1000000 + c}/app-$c%02d-$j.parquet"))
+        assert(cm.commitAdded(files) == c.toLong)
+      }
+      assert(Snapshot.latest(spark, root)._2.size == baseFiles + 10)
+      val mdir = java.nio.file.Paths.get(root, Snapshot.ManifestDir)
+      Files.list(mdir).iterator().asScala.map(_.getFileName.toString)
+        .filter(_.matches("[mi][0-9]+")).toSeq.sorted
+        .map(n => n -> Files.readAllBytes(mdir.resolve(n)).toSeq)
+    }
+    try {
+      val small = increments(10)
+      val large = increments(2000)
+      val names = Seq("i1", "i2", "i3", "i4", "i5", "m0")
+      assert(small.map(_._1) == names && large.map(_._1) == names,
+        s"expected m0 then five increments: ${small.map(_._1)} ${large.map(_._1)}")
+      assert(small.init == large.init,
+        "an increment's bytes depend on the table's size")
+    } finally Configurator.setLevel(logger, level)
   }
 
   test("a store whose committed live set is empty reads as zero rows: " +

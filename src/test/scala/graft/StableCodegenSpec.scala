@@ -70,7 +70,7 @@ class StableCodegenSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAl
     root = Files.createTempDirectory("stable-codegen").toString + "/store"
     committer = Snapshot.committer(shipped, root)
     // two history hours in one commit, compacted per hour and vacuumed
-    committer.ingest(ds(0, 2 * 3600), Seq(t0 / hourMs, t0 / hourMs + 1))
+    committer.ingest(ds(0, 2 * 3600))
     visible = 2 * 3600
     Seq(0L, 1L).foreach(h => Snapshot.compactShard(shipped, root, t0 / hourMs + h))
     Snapshot.vacuum(shipped, root)
