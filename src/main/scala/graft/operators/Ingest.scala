@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 
 import graft.model.{shardHourCol, DataPoint, ShardDurationMs}
 
-/** Ingest/storage lifecycle — SURVEY.md §2.1 O1 (point ingest) + O2 (shard
-  * routing), re-expressed as hour-partitioned Parquet.
+/** Ingest — SURVEY.md §2.1 O1 (point ingest) + O2 (shard routing),
+  * re-expressed as hour-partitioned Parquet.
   *
-  * Reference semantics being reproduced (see /root/reference):
+  * Reference semantics being reproduced:
   *  - every point belongs to the hour shard `ts_ms / 3_600_000`
   *    (engine/insight.cpp:6,9-14) → here a `shard_hour` partition column,
   *    so Catalyst partition-prunes range queries to the touched hours
@@ -22,6 +22,10 @@ import graft.model.{shardHourCol, DataPoint, ShardDurationMs}
   * its own hour files; no shuffle unless the caller asks for file
   * consolidation. Reads prune partitions first, then parquet row-group
   * stats prune within the hour.
+  *
+  * The store's lifecycle — retention, compaction, point upsert, range
+  * delete and the store report — lives in [[Snapshot]]: each op is one
+  * manifest commit, so readers never see a half-changed hour.
   */
 object Ingest {
 
@@ -51,16 +55,6 @@ object Ingest {
   def readPoints(spark: SparkSession, path: String): DataFrame =
     Snapshot.read(spark, path) // falls back to a plain read when no manifest
 
-  /** Destructive plain-path lifecycle ops bypass the manifest log — on a
-    * snapshot store they would strand live manifest entries pointing at
-    * renamed/deleted files (every later read fails) or resurrect
-    * tombstoned data. Fail loudly instead of corrupting. */
-  private def requirePlainStore(spark: SparkSession, path: String, op: String): Unit =
-    require(!Snapshot.hasManifest(spark, path),
-      s"$op bypasses the snapshot manifest at $path — use the Snapshot.* " +
-        "equivalents (compactShard via Snapshot.compactShard; expiry/delete " +
-        "need a manifest-aware rewrite) on a manifest-managed store")
-
   /** Bucketed write (hash-bucket co-location): both sides of a recurring
     * fact-fact join written with the SAME bucket count on the join key join
     * WITHOUT a shuffle — each task reads matching bucket files from both
@@ -75,221 +69,6 @@ object Ingest {
       .bucketBy(buckets, bucketCol).sortBy(bucketCol)
       .saveAsTable(table)
 
-  /** Retention: drop every hour shard strictly older than `cutoffHour` —
-    * a partition-DIRECTORY delete through the Hadoop FileSystem API
-    * (HDFS/S3A/local alike): O(#expired shards) metadata operations, zero
-    * data read or rewritten. This is the payoff of keeping the reference's
-    * file-per-hour layout as the partition key. Returns the number of
-    * shards dropped. */
-  def expireShards(spark: SparkSession, path: String, cutoffHour: Long): Long = {
-    import org.apache.hadoop.fs.Path
-    requirePlainStore(spark, path, "expireShards")
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return 0L
-    val expired = listShardHours(fs, path).filter(_._1 < cutoffHour)
-    // count only deletes that actually succeeded — a false return (lease
-    // held, permissions) must not be reported as dropped
-    expired.count { case (_, p) => fs.delete(p, true) }.toLong
-  }
-
-  /** Heal crash debris, then enumerate (hour, dir) for every shard — the
-    * ONE place the partition layout is parsed, shared by retention,
-    * range delete, and the health report (all of which must see a
-    * crashed-rewrite hour, not silently skip it). */
-  private def listShardHours(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    healDebris(fs, path)
-    fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .filter(_.isDirectory).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("shard_hour="))
-          scala.util.Try(n.stripPrefix("shard_hour=").toLong).toOption
-            .map(_ -> st.getPath)
-        else None
-      }
-  }
-
-  /** Compaction: rewrite ONE hour shard's accumulated small append files
-    * into `targetFiles` sorted files. Append-per-micro-batch ingest is the
-    * right write path (no codec-state replay) but leaves many small files —
-    * footer overhead and task fragmentation at scale; periodic per-shard
-    * compaction is the standard cure. The shard is rewritten into a temp
-    * directory and swapped in with a filesystem rename, so only the one
-    * compacted hour is ever touched (readers of other shards are
-    * unaffected; the swap itself is delete+rename — pause writers to the
-    * SAME hour during compaction, which matches the closed-shard lifecycle:
-    * only hours past the ingest watermark get compacted). */
-  def compactShard(spark: SparkSession, path: String, shardHour: Long,
-      targetFiles: Int = 1): Unit =
-    rewriteShard(spark, path, shardHour) { df =>
-      df.repartition(targetFiles).sortWithinPartitions(col("timestamp"))
-    }
-
-  /** Point upsert: for every hour shard touched by `updates`, rewrite that
-    * shard with update rows REPLACING existing rows at the same
-    * (timestamp, metric) — per-series replacement, so a store holding
-    * several metrics only swaps the series the update names (among
-    * duplicate update keys the larger value wins — deterministic). Only
-    * touched shards are rewritten (the driver iterates
-    * the affected hours — bounded by the update span, not the store size);
-    * each rewrite goes through the same crash-safe aside/rename swap as
-    * compaction. Brand-new hours append as ordinary ingest. */
-  def upsertPoints(spark: SparkSession, path: String,
-      updates: Dataset[DataPoint]): Unit = {
-    import org.apache.hadoop.fs.Path
-    requirePlainStore(spark, path, "upsertPoints")
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    val upd = updates.toDF()
-      .withColumn("shard_hour", shardHourCol(col("timestamp")))
-    val hours = upd.select(col("shard_hour")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    hours.foreach { h =>
-      val hourUpd = upd.filter(col("shard_hour") === h).drop("shard_hour")
-        // one survivor per (timestamp, metric) among the updates themselves
-        .groupBy(col("timestamp"), col("metric"))
-        .agg(max(col("value")).as("value"))
-        .select(col("timestamp"), col("value"), col("metric"))
-      if (fs.exists(new Path(path, s"shard_hour=$h")) ||
-          fs.exists(new Path(path, s".compact_old_$h"))) {
-        rewriteShard(spark, path, h) { existing =>
-          // updates win at equal (timestamp, metric): anti-join the old
-          // rows on the full series key so other metrics' points survive
-          existing.join(hourUpd.select("timestamp", "metric"),
-              Seq("timestamp", "metric"), "left_anti")
-            .unionByName(hourUpd)
-            .sortWithinPartitions(col("timestamp"))
-        }
-      } else {
-        // brand-new hour: plain partitioned append
-        Ingest.ingestBatch(
-          hourUpd.select(col("timestamp"), col("value"), col("metric"))
-            .as[DataPoint](org.apache.spark.sql.Encoders.product[DataPoint]),
-          path)
-      }
-    }
-  }
-
-  /** Range delete: remove every point with `timestamp ∈ [startMs, endMs]`
-    * (inclusive, the reference's range convention). Hour shards FULLY
-    * covered by the range are dropped as whole directories (metadata-only,
-    * same as retention); the at-most-two partially-covered edge shards are
-    * rewritten through the crash-safe swap. Cost is O(covered shards)
-    * metadata + two shard rewrites, independent of store size. */
-  def deleteRange(spark: SparkSession, path: String,
-      startMs: Long, endMs: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    requirePlainStore(spark, path, "deleteRange")
-    require(startMs <= endMs, s"empty range [$startMs, $endMs]")
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    val root = new Path(path)
-    if (!fs.exists(root)) return
-    listShardHours(fs, path).map(_._1).foreach { h =>
-      val shardLo = h * ShardDurationMs
-      val shardHi = shardLo + ShardDurationMs - 1
-      if (shardHi >= startMs && shardLo <= endMs) {
-        if (shardLo >= startMs && shardHi <= endMs)
-          fs.delete(new Path(path, s"shard_hour=$h"), true) // fully covered
-        else
-          rewriteShard(spark, path, h)(
-            _.filter(!col("timestamp").between(startMs, endMs)))
-      }
-    }
-  }
-
-  /** Store-wide crash-debris sweep: every `.compact_old_N` whose partition
-    * dir is missing is the hour's ONLY durable copy (the rewrite died
-    * between its two swap renames) — restore it; one whose partition dir
-    * exists is leftover from a COMPLETED swap — drop it. `.compact_tmp_N`
-    * is never a sole copy (the original still exists as the partition dir
-    * or the aside at every instant the tmp does) — always drop it.
-    * Idempotent; called by retention and range-delete so they operate on
-    * the healed store instead of silently skipping a crashed hour (whose
-    * data a later rewrite retry would otherwise RESURRECT post-delete). */
-  private def healDebris(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    fs.listStatus(new Path(path)).filter(_.isDirectory).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith(".compact_old_")) {
-        val hour = n.stripPrefix(".compact_old_")
-        val partDir = new Path(path, s"shard_hour=$hour")
-        if (!fs.exists(partDir))
-          require(fs.rename(st.getPath, partDir), s"could not restore ${st.getPath}")
-        else fs.delete(st.getPath, true)
-      } else if (n.startsWith(".compact_tmp_")) {
-        fs.delete(st.getPath, true)
-      }
-    }
-  }
-
-  /** Crash-safe shard rewrite: materialize `transform(existing shard)` into
-    * a temp dir, then swap it in via aside/rename. The shard's bytes exist
-    * under a durable directory at every instant; a failed rename aborts
-    * loudly (with rollback); a crash between the renames is healed on retry
-    * by the recovery block. Readers racing the swap itself can observe the
-    * hour briefly absent (plain filesystems have no atomic directory swap)
-    * — rewrite closed shards in maintenance windows, same as the
-    * pause-writers rule. */
-  private def rewriteShard(spark: SparkSession, path: String, shardHour: Long)(
-      transform: DataFrame => DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    requirePlainStore(spark, path, "shard rewrite")
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    val partDir = new Path(path, s"shard_hour=$shardHour")
-    val tmp = new Path(path, s".compact_tmp_$shardHour")
-    val old = new Path(path, s".compact_old_$shardHour")
-    // crash recovery: a previous attempt that died between its two renames
-    // leaves the shard's only copy under `.compact_old_N` — restore it
-    // before doing anything else, so a plain retry heals the store
-    if (!fs.exists(partDir) && fs.exists(old))
-      require(fs.rename(old, partDir), s"could not restore $old after a failed rewrite")
-    require(fs.exists(partDir), s"no shard directory $partDir")
-    transform(spark.read.parquet(partDir.toString))
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .option("parquet.writer.version", "v2")
-      .parquet(tmp.toString)
-    fs.delete(old, true) // clear debris from a prior COMPLETED attempt
-    require(fs.rename(partDir, old), s"could not move $partDir aside")
-    if (!fs.rename(tmp, partDir)) {
-      fs.rename(old, partDir) // roll back to the un-rewritten shard
-      throw new IllegalStateException(s"rename $tmp -> $partDir failed; rolled back")
-    }
-    fs.delete(old, true)
-  }
-
-  /** Operational store report: one row per hour shard with its file
-    * count, byte size (pure FileSystem metadata — zero data read), and
-    * row count (one grouped count over the partition column — parquet
-    * reads row-group headers, not value pages). The health check behind
-    * compaction policy: shards with many small files are compaction
-    * candidates, byte sizes drive retention budgeting. */
-  def describeStore(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val meta: Seq[(Long, Long, Long)] =
-      if (!fs.exists(root)) Seq.empty
-      else listShardHours(fs, path).map { case (h, dir) =>
-        // listShardHours heals crash debris first: an hour whose only
-        // copy sat under `.compact_old_N` must appear in the health
-        // report, not silently vanish from it
-        val files = fs.listStatus(dir)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        (h, files.length.toLong, files.map(_.getLen).sum)
-      }
-    val metaDf = spark.createDataFrame(meta)
-      .toDF("shard_hour", "n_files", "bytes")
-    val rows =
-      if (meta.isEmpty) metaDf.select(col("shard_hour"), lit(0L).as("n_rows"))
-      else readPoints(spark, path)
-        .groupBy(col("shard_hour").cast("long").as("shard_hour"))
-        .agg(count(lit(1)).as("n_rows"))
-    metaDf.join(rows, Seq("shard_hour"), "left")
-      .na.fill(0L, Seq("n_rows"))
-      .orderBy(col("shard_hour"))
-  }
-
   /** The reference's core read path (O3-O6): inclusive range scan with an
     * ordered cap. The shard_hour predicate triggers partition pruning (the
     * shard loop); the timestamp predicate is pushed to row-group stats;
@@ -298,16 +77,6 @@ object Ingest {
   def queryRange(spark: SparkSession, path: String,
       startMs: Long, endMs: Long, cap: Int = 10000): DataFrame =
     queryRange(readPoints(spark, path), startMs, endMs, cap)
-
-  /** Range aggregate over the store: count/min/max of `value` in the
-    * inclusive range — MANIFEST-ANSWERED on a snapshot store wherever
-    * the committed zmap3 stats cover the range ([[Snapshot.rangeStats]];
-    * a fully-covered range plans ZERO file scans), a plain pruned scan
-    * otherwise. Same answer either way — the stats path is exact by
-    * construction, with per-file fallback to scanning. */
-  def queryRangeStats(spark: SparkSession, path: String,
-      startMs: Long, endMs: Long): DataFrame =
-    Snapshot.rangeStats(spark, path, startMs, endMs)
 
   /** Overload over an already-opened store: the DataFrame carries its file
     * index, so repeated (hot) queries skip re-listing the store — the moral

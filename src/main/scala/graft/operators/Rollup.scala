@@ -100,8 +100,8 @@ object Rollup {
     * The merge rewrites the whole rollup table per batch — safe because
     * the rollup is tiny BY CONSTRUCTION (|types| × |buckets| rows — a
     * year of hours × 1000 types is ~10M rows, trivial per batch even at
-    * 100 TB of base data); swap via the same aside/rename pattern as
-    * shard rewrites (heal-on-entry makes a crashed swap self-repair). */
+    * 100 TB of base data); swap via an aside/rename pair (heal-on-entry
+    * makes a crashed swap self-repair). */
   /** Unconditional merge (no replay guard) — for batch callers that
     * manage their own delivery semantics. The streaming sink passes the
     * micro-batch id instead. */

@@ -66,8 +66,15 @@ import graft.sources.FileZoneStats
   *    the cost [[compactShard]] already pays. The adopt-everything
   *    [[commit]] stays available for initial adoption of a pre-existing
   *    plain store, where directory contents ARE the truth by definition.
-  * Single concurrent committer assumed (the store's existing
-  * pause-writers contract); readers are unlimited. */
+  *  - the lifecycle ops — [[compactShard]], [[expireShards]],
+  *    [[deleteRange]], [[upsertPoints]] — are committers too: each is
+  *    one commit that adds the files it wrote and tombstones the files
+  *    it replaced or dropped, so a reader keeps its generation's rows
+  *    until [[vacuum]]. Every commit, vacuum's included, goes through
+  *    [[commitLog]]. A store with no manifest is refused: it has no log
+  *    to commit to ([[commit]] adopts it first).
+  * Writers follow the single-mid-commit contract above (or register a
+  * [[CommitGuard]]); readers are unlimited. */
 object Snapshot {
   val ManifestDir = "_graft_manifest"
 
@@ -177,8 +184,7 @@ object Snapshot {
   private def fsFor(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** True when `root` is manifest-managed — the plain-path guards and
-    * [[graft.operators.Ingest.readPoints]] dispatch on this. */
+  /** True when `root` is manifest-managed (has a `_graft_manifest/`). */
   def hasManifest(spark: SparkSession, root: String): Boolean =
     fsFor(spark, root).exists(new Path(new Path(root), ManifestDir))
 
@@ -243,10 +249,15 @@ object Snapshot {
     * hour on pushed timestamp AND value predicates without touching any
     * footer at read time. Files without recorded stats (pre-r13 commits,
     * a failed footer read) are simply never pruned — skipping is always
-    * conservative, and legacy `zmap` lines replay as ts-only stats. */
+    * conservative, and legacy `zmap` lines replay as ts-only stats.
+    * `dead` is keyed by path and `sizes` holds exactly the live paths, so
+    * membership checks are keyed lookups. `sinceCkpt` counts the
+    * increments after the newest checkpoint: it decides when the next
+    * commit writes a checkpoint. */
   private[graft] final case class LogState(gen: Long, live: Vector[String],
-      dead: Vector[Tombstone], txns: Map[String, Long],
-      sizes: Map[String, Long], zmaps: Map[String, FileZoneStats])
+      dead: Map[String, Tombstone], txns: Map[String, Long],
+      sizes: Map[String, Long], zmaps: Map[String, FileZoneStats],
+      sinceCkpt: Int)
 
   /** `<size> <relpath>` or legacy `<relpath>` (size −1). Relpaths always
     * start with `shard_hour=`, never a bare integer, so the split is
@@ -266,8 +277,8 @@ object Snapshot {
   private[graft] def loadState(fs: FileSystem, root: String): LogState = {
     val gens = manifestGens(fs, root)
     if (gens.isEmpty)
-      return LogState(-1L, Vector.empty, Vector.empty, Map.empty, Map.empty,
-        Map.empty)
+      return LogState(-1L, Vector.empty, Map.empty, Map.empty, Map.empty,
+        Map.empty, 0)
     // replay chain: newest checkpoint ≤ max gen, then every increment after
     val fromIdx = gens.lastIndexWhere(_._3)
     require(fromIdx >= 0,
@@ -307,14 +318,23 @@ object Snapshot {
         }
       }
     }
-    LogState(gens.last._1, live.keysIterator.toVector, dead.values.toVector,
-      txns.toMap, live.toMap, zmaps.toMap)
+    LogState(gens.last._1, live.keysIterator.toVector, dead.toMap,
+      txns.toMap, live.toMap, zmaps.toMap, gens.length - 1 - fromIdx)
   }
 
   /** (gen, live, dead) of the latest committed state; gen −1 when none. */
   def latest(spark: SparkSession, root: String): (Long, Seq[String], Seq[Tombstone]) = {
     val s = loadState(fsFor(spark, root), root)
-    (s.gen, s.live, s.dead)
+    (s.gen, s.live, s.dead.values.toSeq)
+  }
+
+  /** The state of a manifest-managed store, for an op that changes it;
+    * a plain store has no log to commit to, so `op` refuses it. */
+  private def managedState(fs: FileSystem, root: String, op: String): LogState = {
+    val st = loadState(fs, root)
+    require(st.gen >= 0,
+      s"$op: no manifest at $root — adopt the store with Snapshot.commit first")
+    st
   }
 
   private def listDataFiles(fs: FileSystem, root: String): Seq[(String, Long)] = {
@@ -351,18 +371,24 @@ object Snapshot {
     // HDFS/ABFS rename additionally fails atomically on an existing
     // target; on S3A/local this check is a racy backstop and the
     // single-mid-commit contract (object docs) is the real guard.
-    val gen = name.drop(1)
+    // A generation above 0 also needs its predecessor on disk: a commit
+    // built on a state that vacuum's trim has since deleted would
+    // otherwise land in an empty slot BELOW the head, where no reader
+    // (they replay the max generation) ever sees it. Generations are
+    // contiguous and the trim removes a prefix, so "predecessor present,
+    // own slot free" means exactly "commit at head + 1".
+    val gen = name.drop(1).toLong
+    def onDisk(g: Long) =
+      fs.exists(new Path(dir, s"i$g")) || fs.exists(new Path(dir, s"m$g"))
     // the check+rename window runs under the store's registered
     // CommitGuard (r13): default ContractGuard is a no-op; an S3-class
     // deployment's lock/conditional-put guard serializes the window so
     // a lost race is always LOUD here instead of a silent overwrite
-    try guardFor(root).withExclusion(fs, dir,
-        gen.toLongOption.getOrElse(-1L)) {
-      if (fs.exists(new Path(dir, s"m$gen")) ||
-          fs.exists(new Path(dir, s"i$gen")) ||
+    try guardFor(root).withExclusion(fs, dir, gen) {
+      if (onDisk(gen) || (gen > 0 && !onDisk(gen - 1)) ||
           !fs.rename(tmp, target)) {
-        throw new IllegalStateException(
-          s"manifest commit lost the race for generation $gen (concurrent committer?)")
+        throw new IllegalStateException(s"manifest commit at generation " +
+          s"$gen is not at the head (concurrent committer or trimmed log?)")
       }
     } catch { case e: Throwable => fs.delete(tmp, false); throw e }
   }
@@ -387,18 +413,16 @@ object Snapshot {
         case FileZoneStats(a, b, _, _) => s"zmap $a $b $p"
       })
 
-  /** Full-snapshot checkpoint `m<gen>`: the complete live + dead state,
-    * plus every app's streaming-txn high-water (idempotence must survive
-    * chain trims) and every live file's timestamp zone map. */
-  private def writeManifest(fs: FileSystem, root: String, gen: Long,
-      live: Seq[(String, Long)], dead: Seq[Tombstone],
-      txns: Map[String, Long] = Map.empty,
-      zmaps: Map[String, FileZoneStats] = Map.empty): Unit =
-    writeLog(fs, root, s"m$gen",
-      (live.sortBy(_._1).map(f => "live " + sizedBody(f)) ++
-        zmapLines(live.map(_._1), zmaps) ++
-        dead.sortBy(_.path).map(t => s"dead ${t.gen} ${t.tombstonedAtMs} ${t.path}") ++
-        txns.toSeq.sortBy(_._1).map { case (app, v) => s"txn $app $v" })
+  /** Full-snapshot checkpoint `m<gen>` of `st`: the complete live + dead
+    * state, plus every app's streaming-txn high-water (idempotence must
+    * survive chain trims) and every live file's timestamp zone map. */
+  private def writeManifest(fs: FileSystem, root: String, st: LogState): Unit =
+    writeLog(fs, root, s"m${st.gen}",
+      (st.live.sorted.map(f => "live " + sizedBody((f, st.sizes(f)))) ++
+        zmapLines(st.live, st.zmaps) ++
+        st.dead.values.toSeq.sortBy(_.path)
+          .map(t => s"dead ${t.gen} ${t.tombstonedAtMs} ${t.path}") ++
+        st.txns.toSeq.sortBy(_._1).map { case (app, v) => s"txn $app $v" })
         .mkString("", "\n", "\n"))
 
   /** Incremental commit `i<gen>` (log v2): only this commit's delta —
@@ -408,8 +432,8 @@ object Snapshot {
     * range. O(delta) bytes instead of O(table files). */
   private def writeIncrement(fs: FileSystem, root: String, gen: Long,
       adds: Seq[(String, Long)], tombs: Seq[Tombstone],
-      txn: Option[(String, Long)] = None,
-      zmaps: Map[String, FileZoneStats] = Map.empty): Unit =
+      txn: Option[(String, Long)],
+      zmaps: Map[String, FileZoneStats]): Unit =
     writeLog(fs, root, s"i$gen",
       (adds.sortBy(_._1).map(f => "add " + sizedBody(f)) ++
         zmapLines(adds.map(_._1), zmaps) ++
@@ -505,23 +529,37 @@ object Snapshot {
       } finally pool.shutdown()
     }
 
-  /** Write gen as an increment, or as a full checkpoint when the replay
-    * chain is due for one (every `checkpointEvery` commits, and always
-    * for the first commit of a store). `live`/`dead` must be the
-    * POST-commit state; `adds`/`tombs` the delta that produced it. */
-  private def commitDelta(fs: FileSystem, root: String, gen: Long,
-      live: Seq[(String, Long)], dead: Seq[Tombstone],
-      adds: Seq[(String, Long)], tombs: Seq[Tombstone],
-      txns: Map[String, Long] = Map.empty,
+  /** The one way the log changes: commit generation `st.gen + 1` on top
+    * of `st` — `adds` (store-relative path, bytes) join the live set with
+    * their zone maps (one footer read per added file), the live files
+    * `tombs` are tombstoned, `txn` advances a streaming-txn high-water —
+    * and return the post-commit state. The commit is an increment `i<gen>`
+    * of just this delta, or a full checkpoint `m<gen>` for the first
+    * commit of a store and whenever the replay chain reaches
+    * `checkpointEvery` (1 forces one). With no tombstones the state update
+    * is O(delta), so a cached [[Committer]]'s append never touches the
+    * rest of the table. A lost generation race throws
+    * `IllegalStateException` (see [[writeLog]]) and commits nothing. */
+  private def commitLog(fs: FileSystem, root: String, st: LogState,
+      adds: Seq[(String, Long)], tombs: Seq[String] = Seq.empty,
       txn: Option[(String, Long)] = None,
-      checkpointEvery: Int = CheckpointEvery,
-      zmaps: Map[String, FileZoneStats] = Map.empty): Unit = {
-    val gens = manifestGens(fs, root)
-    val idx = gens.lastIndexWhere(_._3)
-    val sinceCkpt = if (idx < 0) 0 else gens.length - 1 - idx
-    if (gens.isEmpty || sinceCkpt + 1 >= checkpointEvery)
-      writeManifest(fs, root, gen, live, dead, txns ++ txn, zmaps)
-    else writeIncrement(fs, root, gen, adds, tombs, txn, zmaps)
+      checkpointEvery: Int = CheckpointEvery): LogState = {
+    val gen = st.gen + 1
+    val now = System.currentTimeMillis()
+    val killed = tombs.map(Tombstone(gen, now, _))
+    val addZ = zmapsFor(fs, root, adds.map(_._1))
+    val gone = tombs.toSet
+    val post = LogState(gen,
+      (if (gone.isEmpty) st.live else st.live.filterNot(gone)) ++ adds.map(_._1),
+      st.dead ++ killed.map(t => t.path -> t), st.txns ++ txn,
+      st.sizes -- tombs ++ adds, st.zmaps -- tombs ++ addZ, 0)
+    if (st.gen < 0 || st.sinceCkpt + 1 >= checkpointEvery) {
+      writeManifest(fs, root, post)
+      post
+    } else {
+      writeIncrement(fs, root, gen, adds, killed, txn, addZ)
+      post.copy(sinceCkpt = st.sinceCkpt + 1)
+    }
   }
 
   /** Adopt-everything commit: fold ANY unknown directory file into the
@@ -533,13 +571,9 @@ object Snapshot {
   def commit(spark: SparkSession, root: String): Long = {
     val fs = fsFor(spark, root)
     val st = loadState(fs, root)
-    val known = st.live.toSet ++ st.dead.map(_.path).toSet
-    val added = listDataFiles(fs, root).filterNot(f => known(f._1))
-    val sizedLive = st.live.map(f => (f, st.sizes.getOrElse(f, -1L)))
-    val next = st.gen + 1
-    commitDelta(fs, root, next, sizedLive ++ added, st.dead, added, Seq.empty,
-      st.txns, zmaps = st.zmaps ++ zmapsFor(fs, root, added.map(_._1)))
-    next
+    val added = listDataFiles(fs, root)
+      .filterNot(f => st.sizes.contains(f._1) || st.dead.contains(f._1))
+    commitLog(fs, root, st, added).gen
   }
 
   /** Root-level staging directory prefixes: one directory per ingest
@@ -608,12 +642,7 @@ object Snapshot {
   def ingestCommitted(points: Dataset[DataPoint], root: String): Long = {
     val fs = fsFor(points.sparkSession, root)
     val added = stageBatch(points, root)
-    val st = loadState(fs, root)
-    val sizedLive = st.live.map(f => (f, st.sizes.getOrElse(f, -1L)))
-    val next = st.gen + 1
-    commitDelta(fs, root, next, sizedLive ++ added, st.dead, added, Seq.empty,
-      st.txns, zmaps = st.zmaps ++ zmapsFor(fs, root, added.map(_._1)))
-    next
+    commitLog(fs, root, loadState(fs, root), added).gen
   }
 
   /** Open a [[Committer]] — the cached single-committer handle whose
@@ -635,33 +664,16 @@ object Snapshot {
     * (a concurrent [[compactShard]]/[[vacuum]] run), call [[refresh]]. */
   final class Committer private[Snapshot] (spark: SparkSession, root: String) {
     private val fs = fsFor(spark, root)
-    private var genV: Long = -1L
-    private val liveV = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    private val deadV = scala.collection.mutable.LinkedHashMap.empty[String, Tombstone]
-    private val txnsV = scala.collection.mutable.Map.empty[String, Long]
-    private val zmapsV = scala.collection.mutable.Map.empty[String, FileZoneStats]
-    private var sinceCkpt = 0
-    refresh()
+    private var state = loadState(fs, root)
 
-    def gen: Long = genV
+    def gen: Long = state.gen
 
     /** Committed streaming-txn high-water for `appId`; Long.MinValue when
       * the app has never committed. */
-    def txnVersion(appId: String): Long = txnsV.getOrElse(appId, Long.MinValue)
+    def txnVersion(appId: String): Long = state.txns.getOrElse(appId, Long.MinValue)
 
     /** Re-read the log (one checkpoint + increments since). */
-    def refresh(): Unit = {
-      val st = loadState(fs, root)
-      genV = st.gen
-      liveV.clear()
-      st.live.foreach(f => liveV(f) = st.sizes.getOrElse(f, -1L))
-      deadV.clear(); st.dead.foreach(t => deadV(t.path) = t)
-      txnsV.clear(); txnsV ++= st.txns
-      zmapsV.clear(); zmapsV ++= st.zmaps
-      val gens = manifestGens(fs, root)
-      val idx = gens.lastIndexWhere(_._3)
-      sinceCkpt = if (idx < 0) 0 else gens.length - 1 - idx
-    }
+    def refresh(): Unit = state = loadState(fs, root)
 
     /** Commit exactly `added` (store-relative paths, must exist).
       * O(delta) except every `checkpointEvery`-th commit, which writes a
@@ -685,7 +697,7 @@ object Snapshot {
         checkpointEvery: Int, retries: Int,
         txn: Option[(String, Long)]): Long = {
       val fresh = added
-        .filterNot { case (f, _) => liveV.contains(f) || deadV.contains(f) }
+        .filterNot { case (f, _) => state.sizes.contains(f) || state.dead.contains(f) }
         .map { case (f, sz) =>
           // the existence check doubles as the size fetch when the caller
           // didn't already have it from a directory listing
@@ -694,33 +706,18 @@ object Snapshot {
           catch { case _: java.io.FileNotFoundException =>
             throw new IllegalArgumentException(s"commit of missing file $f") }
         }
-      // one footer read per NEW file; the rare collision-retry path re-reads them — O(batch), not worth
-      // a second code path
-      val freshZ = zmapsFor(fs, root, fresh.map(_._1))
-      val next = genV + 1
-      try {
-        if (genV < 0 || sinceCkpt + 1 >= checkpointEvery) {
-          writeManifest(fs, root, next, liveV.toVector ++ fresh,
-            deadV.values.toVector, txnsV.toMap ++ txn, zmapsV.toMap ++ freshZ)
-          sinceCkpt = 0
-        } else {
-          writeIncrement(fs, root, next, fresh, Seq.empty, txn, freshZ)
-          sinceCkpt += 1
-        }
-      } catch {
+      try state = commitLog(fs, root, state, fresh, txn = txn,
+        checkpointEvery = checkpointEvery)
+      catch {
         case _: IllegalStateException if retries > 0 =>
           refresh() // another commit advanced the head; re-commit on top
           return commitSized(fresh, checkpointEvery, retries - 1, txn)
         case e: IllegalStateException =>
           throw new IllegalStateException(
-            s"$root: generation $next collided repeatedly — concurrent " +
-              "committer violating the single-committer contract?", e)
+            s"$root: generation ${state.gen + 1} collided repeatedly — " +
+              "concurrent committer violating the single-committer contract?", e)
       }
-      liveV ++= fresh
-      zmapsV ++= freshZ
-      txn.foreach { case (app, v) => txnsV(app) = v }
-      genV = next
-      next
+      state.gen
     }
 
     /** Append `points` and commit exactly the files the append produced
@@ -757,7 +754,7 @@ object Snapshot {
             s"committed high-water is ${txnVersion(appId)}. Expected for " +
             "at-least-once re-delivery; if the streaming checkpoint was " +
             "LOST and batch ids restarted, this skip drops new data.")
-        genV
+        gen
       } else ingestTagged(points, Some((appId, version)))
 
     private def ingestTagged(points: Dataset[DataPoint],
@@ -966,48 +963,139 @@ object Snapshot {
       }
   }
 
-  /** Snapshot-safe shard compaction: write the hour's compacted files
-    * ALONGSIDE the old ones (no rename swap), then commit a manifest
-    * that swaps the hour's live set and tombstones the replaced files.
-    * Readers planned before the commit keep reading the old files,
-    * which stay on disk until [[vacuum]]. */
+  private def hourOf(rel: String): Long =
+    rel.stripPrefix("shard_hour=").takeWhile(_ != '/').toLong
+
+  private def liveIn(st: LogState, hour: Long): Vector[String] =
+    st.live.filter(_.startsWith(s"shard_hour=$hour/"))
+
+  /** Rewrite each hour of `hours`: `transform(hour, rows)` over the
+    * hour's live rows (without the partition column) is written as
+    * `targetFiles` timestamp-sorted files into one staging directory,
+    * and the files move into their hours ALONGSIDE the old ones. Returns
+    * (moved files, replaced files) for the caller's one commit, which
+    * tombstones the replaced files: readers planned before it keep
+    * reading them until [[vacuum]]. One Spark write per hour. */
+  private def rewriteHours(spark: SparkSession, fs: FileSystem, root: String,
+      st: LogState, hours: Seq[Long], targetFiles: Int = 1)(
+      transform: (Long, DataFrame) => DataFrame): (Seq[(String, Long)], Seq[String]) = {
+    val staging = new Path(root, s"$CompactStaging${java.util.UUID.randomUUID()}")
+    val replaced = hours.map { h =>
+      val old = liveIn(st, h)
+      require(old.nonEmpty, s"no live files for shard_hour=$h")
+      transform(h, spark.read.option("basePath", root)
+          .parquet(old.map(f => s"$root/$f"): _*).drop("shard_hour"))
+        .select(col("timestamp"), col("value"), col("metric"))
+        // range-partition on timestamp (ADVICE r13): each rewritten file
+        // owns a disjoint contiguous timestamp slice, sorted within, so
+        // its refreshed zone map still prunes WITHIN the hour
+        .repartitionByRange(targetFiles, col("timestamp"))
+        .sortWithinPartitions(col("timestamp"))
+        .write.mode(SaveMode.Overwrite)
+        .option("compression", "zstd")
+        .option("parquet.writer.version", "v2")
+        .parquet(new Path(staging, s"shard_hour=$h").toString)
+      old
+    }
+    val moved = moveStaged(fs, root, staging,
+      hours.map(h => (new Path(staging, s"shard_hour=$h"), h)),
+      (h, _) => s"compact-$h-${java.util.UUID.randomUUID()}.parquet")
+    (moved, replaced.flatten)
+  }
+
+  /** Snapshot-safe shard compaction: rewrite the hour's live files into
+    * `targetFiles` files and commit them in place of the old ones, which
+    * stay on disk (tombstoned) until [[vacuum]]. Returns the committed
+    * generation. */
   def compactShard(spark: SparkSession, root: String, shardHour: Long,
       targetFiles: Int = 1): Long = {
     val fs = fsFor(spark, root)
-    val LogState(gen, live, dead, txns, sizes, zmaps) = loadState(fs, root)
-    require(gen >= 0, s"no manifest at $root — commit() before compacting")
-    val prefix = s"shard_hour=$shardHour/"
-    val hourOld = live.filter(_.startsWith(prefix))
-    require(hourOld.nonEmpty, s"no live files for shard_hour=$shardHour")
-    val tmp = new Path(root, s"$CompactStaging${shardHour}_${java.util.UUID.randomUUID()}")
-    spark.read.option("basePath", root)
-      .parquet(hourOld.map(f => s"$root/$f"): _*)
-      .drop("shard_hour")
-      // range-partition on timestamp (ADVICE r13): hash repartition spread
-      // every compacted file across the whole hour, so the refreshed zone
-      // maps were correct but could never prune WITHIN the hour — range
-      // partitioning gives each compacted file a disjoint contiguous
-      // timestamp slice, so intra-hour skipping survives compaction
-      .repartitionByRange(targetFiles, col("timestamp"))
-      .sortWithinPartitions(col("timestamp"))
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .option("parquet.writer.version", "v2")
-      .parquet(tmp.toString)
-    val moved = moveStaged(fs, root, tmp, Seq((tmp, shardHour)),
-      (h, _) => s"compact-$h-${java.util.UUID.randomUUID()}.parquet")
-    val next = gen + 1
-    val now = System.currentTimeMillis()
-    val tombs = hourOld.map(Tombstone(next, now, _))
-    val keptSized = live.filterNot(_.startsWith(prefix))
-      .map(f => (f, sizes.getOrElse(f, -1L)))
-    // compacted files own disjoint contiguous timestamp slices (range
-    // partitioning above) and are sorted within each, so their refreshed
-    // zone maps partition the hour — short ranges keep pruning to ~1 file
-    commitDelta(fs, root, next, keptSized ++ moved,
-      dead ++ tombs, moved, tombs, txns,
-      zmaps = (zmaps -- hourOld) ++ zmapsFor(fs, root, moved.map(_._1)))
-    next
+    val st = managedState(fs, root, "compactShard")
+    val (moved, replaced) =
+      rewriteHours(spark, fs, root, st, Seq(shardHour), targetFiles)((_, df) => df)
+    commitLog(fs, root, st, moved, replaced).gen
+  }
+
+  /** Retention: tombstone every live file of each hour strictly older
+    * than `cutoffHour` — one commit, no data read or written; [[vacuum]]
+    * deletes the files later. Returns the number of hours dropped. */
+  def expireShards(spark: SparkSession, root: String, cutoffHour: Long): Long = {
+    val fs = fsFor(spark, root)
+    val st = managedState(fs, root, "expireShards")
+    val expired = st.live.filter(hourOf(_) < cutoffHour)
+    commitLog(fs, root, st, Seq.empty, expired)
+    expired.map(hourOf).distinct.size.toLong
+  }
+
+  /** Range delete: remove every point with `timestamp ∈ [startMs, endMs]`
+    * (inclusive, the reference's range convention) in one commit. Hours
+    * FULLY covered are tombstoned whole, as retention does; the at most
+    * two partially covered edge hours are rewritten without the range.
+    * Returns the committed generation. */
+  def deleteRange(spark: SparkSession, root: String,
+      startMs: Long, endMs: Long): Long = {
+    require(startMs <= endMs, s"empty range [$startMs, $endMs]")
+    val fs = fsFor(spark, root)
+    val st = managedState(fs, root, "deleteRange")
+    def lo(h: Long) = h * graft.model.ShardDurationMs
+    def hi(h: Long) = lo(h) + graft.model.ShardDurationMs - 1
+    val (covered, edges) = st.live.map(hourOf).distinct
+      .filter(h => hi(h) >= startMs && lo(h) <= endMs)
+      .partition(h => lo(h) >= startMs && hi(h) <= endMs)
+    val (moved, replaced) = rewriteHours(spark, fs, root, st, edges)(
+      (_, df) => df.filter(!col("timestamp").between(startMs, endMs)))
+    commitLog(fs, root, st, moved, covered.flatMap(liveIn(st, _)) ++ replaced).gen
+  }
+
+  /** Point upsert in one commit: update rows REPLACE stored rows at the
+    * same (timestamp, metric) — per-series replacement, so other metrics
+    * at that timestamp survive; among duplicate update keys the larger
+    * value wins (deterministic). Hours the store already holds are
+    * rewritten; updates into new hours are staged like an append
+    * ([[stageBatch]]). Returns the committed generation. */
+  def upsertPoints(spark: SparkSession, root: String,
+      updates: Dataset[DataPoint]): Long = {
+    val fs = fsFor(spark, root)
+    val st = managedState(fs, root, "upsertPoints")
+    val upd = updates.toDF()
+      .groupBy(col("timestamp"), col("metric"))
+      .agg(max(col("value")).as("value"))
+      .withColumn("shard_hour", graft.model.shardHourCol(col("timestamp")))
+    val stored = st.live.map(hourOf).toSet
+    val (existing, fresh) = upd.select(col("shard_hour")).distinct()
+      .collect().map(_.getLong(0)).toSeq.partition(stored)
+    val (moved, replaced) = rewriteHours(spark, fs, root, st, existing) { (h, df) =>
+      val u = upd.filter(col("shard_hour") === h).drop("shard_hour")
+      df.join(u.select("timestamp", "metric"), Seq("timestamp", "metric"), "left_anti")
+        .unionByName(u)
+    }
+    val appended = if (fresh.isEmpty) Seq.empty else stageBatch(
+      upd.filter(col("shard_hour").isin(fresh: _*))
+        .select(col("timestamp"), col("value"), col("metric"))
+        .as[DataPoint](org.apache.spark.sql.Encoders.product[DataPoint]), root)
+    commitLog(fs, root, st, moved ++ appended, replaced).gen
+  }
+
+  /** Store report: one row per hour of the committed live set with its
+    * file count and bytes (from the log — no listing) and its row count
+    * (one grouped count over the snapshot read). Hours with many small
+    * files are compaction candidates; bytes drive retention budgeting. */
+  def describeStore(spark: SparkSession, root: String): DataFrame = {
+    val fs = fsFor(spark, root)
+    val st = managedState(fs, root, "describeStore")
+    def bytes(f: String) = st.sizes(f) match {
+      case n if n >= 0 => n
+      case _ => fs.getFileStatus(new Path(root, f)).getLen // legacy sizeless line
+    }
+    val meta = st.live.groupBy(hourOf).toSeq
+      .map { case (h, files) => (h, files.size.toLong, files.map(bytes).sum) }
+    val rows = planState(spark, root, st)
+      .groupBy(col("shard_hour").cast("long").as("shard_hour"))
+      .agg(count(lit(1)).as("n_rows"))
+    spark.createDataFrame(meta).toDF("shard_hour", "n_files", "bytes")
+      .join(rows, Seq("shard_hour"), "left")
+      .na.fill(0L, Seq("n_rows"))
+      .orderBy(col("shard_hour"))
   }
 
   /** Physically delete tombstoned files and trim old manifests (keeping
@@ -1029,15 +1117,14 @@ object Snapshot {
   def vacuum(spark: SparkSession, root: String, graceMs: Long = 0L,
       keepManifests: Int = 3, leaseTtlMs: Long = 24L * 3600000L): Long = {
     val fs = fsFor(spark, root)
-    val LogState(gen, live, dead, txns, sizes, zmaps) = loadState(fs, root)
-    require(gen >= 0, s"no manifest at $root")
+    val st = managedState(fs, root, "vacuum")
     val now = System.currentTimeMillis()
     val activeLeases = leases(fs, root).filter { case (_, p, mtime) =>
       if (now - mtime > leaseTtlMs) { fs.delete(p, false); false } else true
     }
     val minPinned = activeLeases.map(_._1).minOption.getOrElse(Long.MaxValue)
     var deleted = 0L
-    val remaining = dead.filter { t =>
+    val remaining = st.dead.filter { case (_, t) =>
       val p = new Path(root, t.path)
       if (!fs.exists(p)) false // already gone: drop the tombstone
       // deletable: grace elapsed since the KILLING commit, and no lease
@@ -1050,8 +1137,7 @@ object Snapshot {
     // vacuum always writes a CHECKPOINT: purging tombstones is a
     // full-state rewrite, and it resets the replay chain for free.
     // Streaming-txn high-waters ride along — idempotence survives trims.
-    writeManifest(fs, root, gen + 1,
-      live.map(f => (f, sizes.getOrElse(f, -1L))), remaining, txns, zmaps)
+    commitLog(fs, root, st.copy(dead = remaining), Seq.empty, checkpointEvery = 1)
     // Trim rule (log v2): a kept chain must START at a checkpoint, or
     // replay is impossible. Keep the newest `keepManifests` checkpoints
     // and every increment newer than the oldest kept checkpoint; delete

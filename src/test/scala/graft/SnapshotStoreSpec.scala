@@ -116,28 +116,26 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     assert(Ingest.readPoints(spark, store).count() == total)
   }
 
-  test("destructive plain-path lifecycle ops refuse to run on a " +
-      "manifest-managed store") {
+  test("lifecycle ops commit on a manifest store, refuse a plain one") {
     val store = Files.createTempDirectory("graft_snap5_").toString
     Ingest.ingestBatch(points(100, 0, "cpu"), store)
-    // manifest-free: plain compaction is fine
-    Ingest.compactShard(spark, store, baseMs / hourMs)
+    val h0 = baseMs / hourMs
+    val ops = Seq[(String, () => Any)](
+      "compactShard" -> (() => Snapshot.compactShard(spark, store, h0)),
+      "expireShards" -> (() => Snapshot.expireShards(spark, store, h0 - 1)),
+      "deleteRange" -> (() => Snapshot.deleteRange(spark, store, baseMs, baseMs + 10)),
+      "upsertPoints" -> (() => Snapshot.upsertPoints(spark, store, points(1, 0, "cpu"))),
+      "describeStore" -> (() => Snapshot.describeStore(spark, store)))
+    ops.foreach { case (op, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains(op) && e.getMessage.contains("Snapshot.commit"),
+        e.getMessage)
+    }
+    assert(spark.read.parquet(store).count() == 100, "a refused op changed the store")
     Snapshot.commit(spark, store)
-    intercept[IllegalArgumentException] {
-      Ingest.compactShard(spark, store, baseMs / hourMs)
-    }
-    intercept[IllegalArgumentException] {
-      Ingest.expireShards(spark, store, baseMs / hourMs + 100)
-    }
-    intercept[IllegalArgumentException] {
-      Ingest.deleteRange(spark, store, baseMs, baseMs + 10)
-    }
-    intercept[IllegalArgumentException] {
-      Ingest.upsertPoints(spark, store, points(1, 0, "cpu"))
-    }
-    // the snapshot equivalents still work
-    Snapshot.compactShard(spark, store, baseMs / hourMs)
-    assert(Ingest.readPoints(spark, store).count() == 100)
+    ops.foreach { case (_, run) => run() }
+    // the delete took ids 0..10; the upsert put id 0 back
+    assert(Ingest.readPoints(spark, store).count() == 100 - 11 + 1)
   }
 
   test("vacuum grace runs from TOMBSTONE time, not file mtime: " +
@@ -410,6 +408,22 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     assert(Snapshot.read(spark, store).count() == 300)
     val (g, _, _) = Snapshot.latest(spark, store)
     assert(g == 3, s"expected the retried commit at gen 3, got $g")
+  }
+
+  test("a committer whose generation vacuum trimmed away commits at the " +
+      "head, not into the empty slot below it") {
+    val store = Files.createTempDirectory("graft_snapstale_").toString
+    val cm = Snapshot.committer(spark, store)
+    val g = cm.ingest(points(100, 0, "a"))
+    // keepManifests = 3: the fourth vacuum checkpoint trims slot g + 1
+    val vacuumed = (1 to 4).map { _ =>
+      Snapshot.vacuum(spark, store); Snapshot.latest(spark, store)._1 }
+    assert(!new java.io.File(s"$store/${Snapshot.ManifestDir}/m${g + 1}").exists())
+    val g2 = cm.ingest(points(100, 1, "b"))
+    assert((g +: vacuumed).forall(_ < g2), s"commit landed at $g2 below $vacuumed")
+    val (head, live, _) = Snapshot.latest(spark, store)
+    assert(head == g2 && live.exists(_.startsWith(s"shard_hour=${baseMs / hourMs + 1}/")))
+    assert(Snapshot.read(spark, store).count() == 200)
   }
 
   test("equal-generation tie (a lost race on a non-atomic filesystem) " +

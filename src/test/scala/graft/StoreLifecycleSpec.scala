@@ -6,40 +6,48 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.DataPoint
-import graft.operators.Ingest
+import graft.operators.{Ingest, Snapshot}
 
-/** Storage lifecycle: retention drops whole hour shards as metadata-only
-  * deletes; compaction collapses append-accumulated small files without
-  * touching other shards; reads stay correct throughout. */
+/** Storage lifecycle on the manifest store: retention drops whole hour
+  * shards without reading data; range delete and upsert rewrite only the
+  * hours they touch; each op is one commit, so a frame opened before it
+  * keeps its rows until vacuum. */
 class StoreLifecycleSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   private def hourPts(hour: Long, n: Int): Seq[DataPoint] =
     (0 until n).map(i => DataPoint(hour * 3600000L + i * 1000L, i * 1.0))
 
+  /** A manifest store adopting one append per batch. */
+  private def store(tag: String, batches: Seq[DataPoint]*): String = {
+    val root = Files.createTempDirectory(s"graft_${tag}_").toString
+    batches.foreach(b => Ingest.ingestBatch(b.toDS(), root))
+    Snapshot.commit(spark, root)
+    root
+  }
+
+  private def live(root: String): Seq[String] = Snapshot.latest(spark, root)._2
+
   test("expireShards drops exactly the shards older than the cutoff") {
-    val store = Files.createTempDirectory("graft_retention_").toString
-    Seq(0L, 1L, 2L).foreach(h => Ingest.ingestBatch(hourPts(h, 50).toDS(), store))
-    assert(spark.read.parquet(store).count() == 150)
-    val dropped = Ingest.expireShards(spark, store, cutoffHour = 2L)
-    assert(dropped == 2L)
-    val left = spark.read.parquet(store)
+    val root = store("retention", Seq(0L, 1L, 2L).map(hourPts(_, 50)): _*)
+    assert(Snapshot.read(spark, root).count() == 150)
+    assert(Snapshot.expireShards(spark, root, cutoffHour = 2L) == 2L)
+    val left = Snapshot.read(spark, root)
     assert(left.count() == 50)
-    assert(left.select("shard_hour").distinct().collect().map(_.getInt(0)).toSeq == Seq(2))
+    assert(left.select("shard_hour").distinct().collect().map(_.getLong(0)).toSeq == Seq(2L))
     // idempotent: nothing left to expire below the cutoff
-    assert(Ingest.expireShards(spark, store, cutoffHour = 2L) == 0L)
+    assert(Snapshot.expireShards(spark, root, cutoffHour = 2L) == 0L)
   }
 
   test("upsertPoints replaces at equal timestamps, preserves the rest, appends new hours") {
-    val store = Files.createTempDirectory("graft_upsert_").toString
-    Ingest.ingestBatch(hourPts(1L, 10).toDS(), store) // ts 3600000 + i*1000
+    val root = store("upsert", hourPts(1L, 10)) // ts 3600000 + i*1000
     val updates = Seq(
       DataPoint(3600000L + 3000L, 999.0),  // replaces existing ts
       DataPoint(3600000L + 3000L, 111.0),  // duplicate update ts: max wins
       DataPoint(3600000L + 500L, 55.0),    // new ts inside the existing hour
       DataPoint(5 * 3600000L + 1L, 77.0))  // brand-new hour
-    Ingest.upsertPoints(spark, store, updates.toDS())
-    val got = spark.read.parquet(store)
+    Snapshot.upsertPoints(spark, root, updates.toDS())
+    val got = Snapshot.read(spark, root)
       .select("timestamp", "value").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got.size == 12) // 10 original + 1 new-in-hour + 1 new-hour
@@ -48,39 +56,39 @@ class StoreLifecycleSpec extends AnyFunSuite with SparkSpec {
     assert(got(5 * 3600000L + 1L) == 77.0)
     assert(got(3600000L + 4000L) == hourPts(1L, 10)(4).value, "untouched row changed")
     // idempotent: applying the same updates again changes nothing
-    Ingest.upsertPoints(spark, store, updates.toDS())
-    assert(spark.read.parquet(store).count() == 12)
+    Snapshot.upsertPoints(spark, root, updates.toDS())
+    assert(Snapshot.read(spark, root).count() == 12)
   }
 
   test("deleteRange drops covered shards whole and rewrites only edge shards") {
-    val store = Files.createTempDirectory("graft_delete_").toString
-    Seq(1L, 2L, 3L).foreach(h => Ingest.ingestBatch(hourPts(h, 50).toDS(), store))
+    val root = store("delete", Seq(1L, 2L, 3L).map(hourPts(_, 50)): _*)
+    val hour3 = live(root).filter(_.startsWith("shard_hour=3/"))
     // range covers all of hour 2 and the tail of hour 1 (from +30s onward)
-    Ingest.deleteRange(spark, store, 1L * 3600000L + 30000L, 3L * 3600000L - 1L)
-    val left = spark.read.parquet(store)
+    Snapshot.deleteRange(spark, root, 1L * 3600000L + 30000L, 3L * 3600000L - 1L)
+    val left = Snapshot.read(spark, root)
     // hour 1 keeps ts offsets 0..29s (30 points), hour 2 gone, hour 3 intact
-    assert(!new java.io.File(s"$store/shard_hour=2").exists())
+    assert(!live(root).exists(_.startsWith("shard_hour=2/")))
+    assert(live(root).filter(_.startsWith("shard_hour=3/")) == hour3, "hour 3 rewritten")
     assert(left.count() == 30 + 50)
     assert(left.filter(col("timestamp").between(
       1L * 3600000L + 30000L, 3L * 3600000L - 1L)).count() == 0)
     // inclusive bounds: the exact boundary timestamps are gone too
     assert(left.filter(col("timestamp") === 1L * 3600000L + 30000L).count() == 0)
     // idempotent
-    Ingest.deleteRange(spark, store, 1L * 3600000L + 30000L, 3L * 3600000L - 1L)
-    assert(spark.read.parquet(store).count() == 80)
+    Snapshot.deleteRange(spark, root, 1L * 3600000L + 30000L, 3L * 3600000L - 1L)
+    assert(Snapshot.read(spark, root).count() == 80)
   }
 
   test("upsertPoints replaces per (timestamp, metric), leaving other metrics' points intact") {
-    val store = Files.createTempDirectory("graft_upsert_metric_").toString
     val ts = 3600000L + 1000L
-    Ingest.ingestBatch(Seq(
+    val root = store("upsert_metric", Seq(
       DataPoint(ts, 1.0, "cpu"),
       DataPoint(ts, 2.0, "mem"),
-      DataPoint(ts + 1000L, 3.0, "cpu")).toDS(), store)
+      DataPoint(ts + 1000L, 3.0, "cpu")))
     // update only the cpu series at ts — mem's point at the SAME timestamp
     // must survive (the replacement key is the full series key)
-    Ingest.upsertPoints(spark, store, Seq(DataPoint(ts, 100.0, "cpu")).toDS())
-    val got = spark.read.parquet(store)
+    Snapshot.upsertPoints(spark, root, Seq(DataPoint(ts, 100.0, "cpu")).toDS())
+    val got = Snapshot.read(spark, root)
       .select("timestamp", "metric", "value").collect()
       .map(r => (r.getLong(0), r.getString(1)) -> r.getDouble(2)).toMap
     assert(got.size == 3)
@@ -89,108 +97,45 @@ class StoreLifecycleSpec extends AnyFunSuite with SparkSpec {
     assert(got((ts + 1000L, "cpu")) == 3.0)
   }
 
-  test("expireShards and deleteRange heal crashed-rewrite debris instead of skipping it") {
-    val store = Files.createTempDirectory("graft_heal_expire_").toString
-    Seq(1L, 2L, 3L).foreach(h => Ingest.ingestBatch(hourPts(h, 20).toDS(), store))
-    // simulate a rewrite of hour 1 that died between its two swap renames:
-    // the hour's only copy sits under the aside dir, no partition dir
-    val part1 = new java.io.File(s"$store/shard_hour=1")
-    assert(part1.renameTo(new java.io.File(s"$store/.compact_old_1")))
-    // retention with cutoff 2 must count AND drop the crashed hour — before
-    // the heal sweep it skipped the aside, and a later rewriteShard retry
-    // would have resurrected the "expired" data
-    assert(Ingest.expireShards(spark, store, cutoffHour = 2L) == 1L)
-    assert(!part1.exists() && !new java.io.File(s"$store/.compact_old_1").exists())
-    assert(spark.read.parquet(store).count() == 40)
-
-    // same for range delete: crash hour 2 aside, then delete a range fully
-    // covering hour 2 — the healed shard must be dropped, not left behind
-    val part2 = new java.io.File(s"$store/shard_hour=2")
-    assert(part2.renameTo(new java.io.File(s"$store/.compact_old_2")))
-    Ingest.deleteRange(spark, store, 2L * 3600000L, 3L * 3600000L - 1L)
-    assert(!part2.exists() && !new java.io.File(s"$store/.compact_old_2").exists())
-    val left = spark.read.parquet(store)
-    assert(left.count() == 20)
-    assert(left.select("shard_hour").distinct().collect().map(_.getInt(0)).toSeq == Seq(3))
-  }
-
-  test("healing drops completed-swap debris and stale tmp dirs without touching live data") {
-    val store = Files.createTempDirectory("graft_heal_debris_").toString
-    Seq(1L, 2L).foreach(h => Ingest.ingestBatch(hourPts(h, 20).toDS(), store))
-    // completed-swap debris: partition dir EXISTS, aside is a stale copy
-    val oldDir = new java.io.File(s"$store/.compact_old_2")
-    assert(oldDir.mkdir())
-    // stale tmp from a crash mid-write
-    val tmpDir = new java.io.File(s"$store/.compact_tmp_1")
-    assert(tmpDir.mkdir())
-    assert(Ingest.expireShards(spark, store, cutoffHour = 0L) == 0L)
-    assert(!oldDir.exists(), "completed-swap aside must be cleared")
-    assert(!tmpDir.exists(), "stale tmp must be cleared")
-    assert(spark.read.parquet(store).count() == 40)
-  }
-
   test("describeStore reports per-shard files, bytes, and rows from metadata") {
-    val store = Files.createTempDirectory("graft_describe_").toString
-    Ingest.ingestBatch(hourPts(1L, 30).toDS(), store)
-    Ingest.ingestBatch(hourPts(1L, 20).toDS(), store) // second file, same hour
-    Ingest.ingestBatch(hourPts(2L, 40).toDS(), store)
-    val got = Ingest.describeStore(spark, store).collect()
+    // two appends to hour 1: a second file, same hour
+    val root = store("describe", hourPts(1L, 30), hourPts(1L, 20), hourPts(2L, 40))
+    def report() = Snapshot.describeStore(spark, root).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    val got = report()
     assert(got.keySet == Set(1L, 2L))
     assert(got(1L)._1 >= 2L, "two appends must leave at least two files")
     assert(got(1L)._3 == 50L && got(2L)._3 == 40L)
     assert(got.values.forall(_._2 > 0L), "byte sizes must be positive")
     // after compaction the report reflects the collapsed layout
-    Ingest.compactShard(spark, store, 1L)
-    val after = Ingest.describeStore(spark, store).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(3))).toMap
-    assert(after(1L) == ((1L, 50L)))
-    // a crashed-rewrite hour (only copy under the aside dir) must appear
-    // in the health report, not silently vanish from it
-    assert(new java.io.File(s"$store/shard_hour=2")
-      .renameTo(new java.io.File(s"$store/.compact_old_2")))
-    val healed = Ingest.describeStore(spark, store).collect()
-      .map(r => r.getLong(0) -> r.getLong(3)).toMap
-    assert(healed(2L) == 40L, s"crashed hour missing from report: $healed")
+    Snapshot.compactShard(spark, root, 1L)
+    val after = report()
+    assert((after(1L)._1, after(1L)._3) == ((1L, 50L)))
   }
 
-  test("compactShard retry heals a crash between the two swap renames") {
-    val store = Files.createTempDirectory("graft_heal_").toString
-    Ingest.ingestBatch(hourPts(1L, 60).toDS(), store)
-    // simulate the crash state: the live dir was moved aside, the process
-    // died before the compacted data was renamed in
-    val part = new java.io.File(s"$store/shard_hour=1")
-    val aside = new java.io.File(s"$store/.compact_old_1")
-    assert(part.renameTo(aside))
-    assert(!part.exists()) // readers would skip the dot-dir: shard invisible
-    Ingest.compactShard(spark, store, shardHour = 1L) // retry must recover
-    assert(spark.read.parquet(store).count() == 60)
-    assert(!aside.exists())
-  }
-
-  test("compactShard collapses append files to one, preserving rows and order") {
-    val store = Files.createTempDirectory("graft_compact_").toString
-    // three separate appends to the SAME hour -> at least 3 parquet files
-    (0 until 3).foreach { b =>
-      Ingest.ingestBatch(
-        (0 until 40).map(i => DataPoint(3600000L + (b * 40 + i) * 1000L, i * 1.0)).toDS(),
-        store)
+  test("each lifecycle op is one commit: a frame opened before it keeps " +
+      "its rows until vacuum") {
+    val root = store("isolation", (0L to 4L).map(hourPts(_, 40)): _*)
+    val ops = Seq[(String, () => Any)](
+      "expireShards" -> (() => Snapshot.expireShards(spark, root, cutoffHour = 1L)),
+      // edge hours 1 and 3, hour 2 covered
+      "deleteRange" -> (() =>
+        Snapshot.deleteRange(spark, root, 3600000L + 10000L, 3L * 3600000L + 5000L)),
+      // existing hour 4 rewritten, new hour 6 appended
+      "upsertPoints" -> (() => Snapshot.upsertPoints(spark, root,
+        Seq(DataPoint(4L * 3600000L, -1.0), DataPoint(6L * 3600000L, -2.0)).toDS())),
+      "compactShard" -> (() => Snapshot.compactShard(spark, root, 4L)))
+    ops.foreach { case (op, run) =>
+      val (gen, frame) = Snapshot.readWithGen(spark, root)
+      val rows = frame.collect().toSet
+      run()
+      assert(Snapshot.latest(spark, root)._1 == gen + 1, s"$op is not one commit")
+      assert(frame.collect().toSet == rows, s"$op changed a frame opened before it")
     }
-    def shardFiles(): Seq[String] = {
-      val d = new java.io.File(s"$store/shard_hour=1")
-      d.listFiles().toSeq.map(_.getName).filter(_.endsWith(".parquet"))
-    }
-    assert(shardFiles().size >= 3, s"expected multiple append files, got ${shardFiles()}")
-    val before = spark.read.parquet(store).orderBy("timestamp")
-      .collect().map(r => (r.getAs[Long]("timestamp"), r.getAs[Double]("value")))
-
-    Ingest.compactShard(spark, store, shardHour = 1L)
-
-    assert(shardFiles().size == 1, s"expected one compacted file, got ${shardFiles()}")
-    val after = spark.read.parquet(store).orderBy("timestamp")
-      .collect().map(r => (r.getAs[Long]("timestamp"), r.getAs[Double]("value")))
-    assert(after.toSeq == before.toSeq, "compaction must not change the data")
-    // the range read path still works and prunes to the compacted shard
-    assert(Ingest.queryRange(spark, store, 3600000L, 7199999L, 10000).count() == 120)
+    // hours 1 (0..9 s) and 3 (6..39 s) keep their edges, hour 4 its 40
+    // rows (one replaced), hour 6 gains one
+    assert(Snapshot.read(spark, root).count() == 10 + 34 + 40 + 1)
+    assert(Snapshot.vacuum(spark, root, graceMs = 0L) > 0L)
+    assert(Snapshot.read(spark, root).count() == 85)
   }
 }
