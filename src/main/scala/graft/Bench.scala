@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.model.DataPoint
-import graft.operators.Ingest
+import graft.operators.{Ingest, Materialize}
 
 /** Benchmark main — prints ONE JSON line with the per-query wall clocks at
   * SPARK_GRAFT_SF_DIR plus the BASELINE.md-comparable metrics:
@@ -113,27 +113,21 @@ object Bench {
     // r11 on are therefore NOT comparable with <=r10 for the
     // bare-Project text family (growth ratios remain comparable).
     //
-    // Persisted-RDD hygiene: snapshot the ids BEFORE the query, release
-    // only the DELTA after — drops each query's leftover
-    // localCheckpoints (at sf1+ the accumulated pins from 200+ queries
-    // eat the heap) without touching blocks persisted outside this
-    // query; a blanket unpersist would make any intentionally shared
-    // cache silently recompute.
-    def runOnce(name: String): Option[(Double, Double)] = {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val load = osBean.getSystemLoadAverage
-      val t0 = System.nanoTime()
-      val ok =
-        try {
-          SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-          true
-        } catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs
-        .foreach { case (id, rdd) =>
-          if (!before.contains(id)) rdd.unpersist(blocking = false) }
-      if (ok) Some((dt, load)) else None
-    }
+    // Materialization hygiene: each query's leftover cuts are released
+    // after it (at sf1+ the accumulated pins from 200+ queries eat the
+    // heap), and nothing persisted outside the query is touched.
+    def runOnce(name: String): Option[(Double, Double)] =
+      Materialize.releasingNew(spark) {
+        val load = osBean.getSystemLoadAverage
+        val t0 = System.nanoTime()
+        val ok =
+          try {
+            SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
+            true
+          } catch { case _: Throwable => false }
+        val dt = (System.nanoTime() - t0) / 1e9
+        if (ok) Some((dt, load)) else None
+      }
 
     // r14 CANARY (r13 verdict #5): loadavg-invisible host throttling — a
     // uniformly ~1.4x slower window with normal load — poisoned 2/3 of

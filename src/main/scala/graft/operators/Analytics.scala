@@ -35,12 +35,12 @@ object Analytics {
     * (guarded), never NaN. The per-type stats frame is tiny — Catalyst
     * broadcasts it back onto the hourly frame. */
   def anomalyZScore(events: DataFrame, threshold: Double = 3.0): DataFrame = {
-    // materialize the BOUNDED hourly frame once (localCheckpoint, same
-    // caveat as dedup clusters: recompute-on-executor-loss is lost) —
+    // materialize the BOUNDED hourly frame once (a [[Materialize]] cut:
+    // local unless a Spark checkpoint directory is set) —
     // referencing the aggregation subtree from both the stats and the
     // flagging branch still re-scanned the raw table 3x (measured; plan
     // exchange reuse only dedupes one branch pair)
-    val hourly = hourlySums(events).localCheckpoint()
+    val hourly = Materialize(hourlySums(events))
     hourly.join(statsOf(hourly), "event_type")
       .withColumn("z", zScore(col("s")))
       .filter(abs(col("z")) > threshold)
@@ -61,11 +61,10 @@ object Analytics {
     * one division, one IEEE sqrt; engine-identical. The hourly frame is
     * bucket-bounded; per-type baselines broadcast back. */
   def anomalyPoisson(events: DataFrame, threshold: Double = 3.0): DataFrame = {
-    val hourly = events
+    val hourly = Materialize(events
       .groupBy(col("event_type"),
         tsUs(date_trunc("hour", col("ts"))).as("bucket_us"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("n")))
     val base = hourly.groupBy(col("event_type"))
       .agg(sum(col("n")).as("total"), count(lit(1)).as("n_hours"))
       .select(col("event_type"),
@@ -162,7 +161,7 @@ object Analytics {
   def anomalyMad(events: DataFrame, threshold: Double = 3.0): DataFrame = {
     // hourly referenced by three branches (median, deviations, flagging
     // join) — materialize once so the raw stream is scanned once
-    val hourly = hourlySums(events).localCheckpoint()
+    val hourly = Materialize(hourlySums(events))
     def medianOf(df: DataFrame, valueCol: String, outCol: String): DataFrame = {
       val w = Window.partitionBy("event_type")
       df.withColumn("rn",
@@ -238,7 +237,7 @@ object Analytics {
     * shift. Emits every bucket; the caller reduces to argmax or
     * thresholds. One ranking window over the bounded hourly frame. */
   def cusum(events: DataFrame): DataFrame = {
-    val hourly = hourlySums(events).localCheckpoint()
+    val hourly = Materialize(hourlySums(events))
     val totals = hourly.groupBy(col("event_type"))
       .agg(sum(col("s")).cast("decimal(28,6)").as("tot"),
         count(lit(1)).as("n"))
@@ -516,7 +515,7 @@ object Analytics {
     * deployment ever nears the bound (cf. [[userLift]]'s decimal(38,0)
     * widening for the same reason). */
   def corrMatrix(events: DataFrame): DataFrame = {
-    val hourly = hourlySums(events).localCheckpoint()
+    val hourly = Materialize(hourlySums(events))
     val a = hourly.select(col("event_type").as("type_a"), col("bucket_us"),
       col("s").as("x"))
     val b = hourly.select(col("event_type").as("type_b"), col("bucket_us"),
@@ -547,8 +546,8 @@ object Analytics {
     * at 100 TB user counts. */
   def userLift(events: DataFrame): DataFrame = {
     val d38 = "decimal(38,0)"
-    val ut = events.select(col("user_id"), col("event_type"))
-      .distinct().localCheckpoint()
+    val ut = Materialize(events.select(col("user_id"), col("event_type"))
+      .distinct())
     val totals = ut.groupBy(col("event_type")).agg(count(lit(1)).as("cnt"))
     val nUsers = ut.select(col("user_id")).distinct().count() // bounded scalar
     val a = ut.select(col("user_id"), col("event_type").as("type_a"))
@@ -832,7 +831,7 @@ object Analytics {
     * buffers a whole partition key, unlike a bare `Window.orderBy`;
     * the result is identical because range partitioning preserves the
     * lexicographic (part, order) order across ascending partition ids.
-    * `localCheckpoint` PINS the pid assignment: both the ranked branch
+    * The [[Materialize]] cut PINS the pid assignment: both the ranked branch
     * and the offsets branch descend from the same materialized exchange
     * (`spark_partition_id` is documented non-deterministic otherwise).
     * Shared by [[paretoCurve]], [[funnelLatency]], [[giniConcentration]]
@@ -840,10 +839,9 @@ object Analytics {
   private[graft] def distributedRank(df: DataFrame, partCols: Seq[String],
       orderCols: Seq[Column]): DataFrame = {
     val keyed = partCols :+ "pid"
-    val parted = df
+    val parted = Materialize(df
       .repartitionByRange(partCols.map(col) ++ orderCols: _*)
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
+      .withColumn("pid", spark_partition_id()))
     val local = parted.withColumn("rn_local", row_number().over(
       Window.partitionBy(keyed.map(col): _*).orderBy(orderCols: _*)))
     val offs = local.groupBy(keyed.map(col): _*).agg(count(lit(1)).as("cnt"))

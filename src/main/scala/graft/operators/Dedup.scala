@@ -430,8 +430,8 @@ object Dedup {
     * result is deterministic and matches the oracle's recursive-CTE
     * formulation exactly. Rounds ≈ component diameter (near-dup clusters
     * are shallow); each round is one shuffled join + aggregate; lineage is
-    * truncated per round (`localCheckpoint` — on a durable cluster,
-    * `checkpoint` to reliable storage instead). */
+    * cut per round through [[Materialize]] (FAILURE STORY there: local by
+    * default, reliable once a Spark checkpoint directory is set). */
   /** Edge-count threshold below which [[dedupClusters]] solves the
     * components on the driver (union-find over the collected pair list)
     * instead of the iterative join loop: a few million 16-byte edges are
@@ -446,7 +446,7 @@ object Dedup {
     // symmetric union — otherwise the upstream near-dup pipeline runs twice
     // (once per union branch), and again every loop round. cache + count is
     // ONE job that both materializes the pairs and sizes the branch choice
-    // (an eager localCheckpoint followed by count() paid a second job here)
+    // (an eager cut followed by count() paid a second job here)
     val p0 = pairs.select(col("doc_id_1").as("a"), col("doc_id_2").as("b"))
       .cache()
     val nEdges = p0.count()
@@ -455,17 +455,13 @@ object Dedup {
     if (nEdges * 2 <= driverMaxEdges)
       try return driverSideCc(p0) finally p0.unpersist(false)
     // big-graph path: NOW truncate lineage (the loop replans each round,
-    // and a cache-evicted block would otherwise replay the whole upstream)
-    // serialized storage for the edge-sized checkpoint — same rationale
-    // as Graph.ckptEdges: the deserialized default re-expands evicted
-    // blocks into object arrays on read-back, which OOMs at big |E|
-    val p = p0.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // and a cache-evicted block would otherwise replay the whole upstream);
+    // edge-sized, so serialized storage (see Materialize.edges)
+    val p = Materialize.edges(p0)
     p0.unpersist(false)
     val edges = p.unionByName(p.select(col("b").as("a"), col("a").as("b")))
-    var labels = edges.select(col("a").as("doc_id")).distinct()
-      .withColumn("lab", col("doc_id"))
-      .localCheckpoint(true)
+    var labels = Materialize(edges.select(col("a").as("doc_id")).distinct()
+      .withColumn("lab", col("doc_id")))
     var changed = 1L
     while (changed > 0) {
       val neigh = edges
@@ -476,19 +472,19 @@ object Dedup {
       // pointer jumping: also adopt the label OF my label — contracts label
       // chains so convergence is O(log diameter) rounds, not O(diameter)
       val parent = labels.select(col("doc_id").as("lab"), col("lab").as("plab"))
-      val stepped = labels
+      val stepped = Materialize(labels
         .join(neigh, Seq("doc_id"), "left")
         .join(parent, Seq("lab"), "left")
         .select(col("doc_id"), col("lab"),
           least(col("lab"),
             coalesce(col("min_neigh"), col("lab")),
-            coalesce(col("plab"), col("lab"))).as("lab2"))
-        .localCheckpoint(true)
+            coalesce(col("plab"), col("lab"))).as("lab2")))
       changed = stepped.filter(col("lab2") < col("lab")).count()
       // stepped is materialized: the prior round's label blocks are dead
-      org.apache.spark.sql.GraftColumnBridge.releaseLocalCheckpoint(labels)
+      Materialize.release(labels)
       labels = stepped.select(col("doc_id"), col("lab2").as("lab"))
     }
+    Materialize.release(p) // labels is its own cut: the pair frame is dead
     labels.select(col("doc_id"), col("lab").as("cluster_id"))
   }
 
@@ -562,7 +558,7 @@ object Dedup {
     * candidate pairs (estimator-blind: the candidate side's size is
     * unknowable statically, and unlike the MinHash verifier there was no
     * semi-join prefilter for AQE to rescue). Now the candidate frame is
-    * materialized once (localCheckpoint — small by design, pigeonhole
+    * materialized once ([[Materialize]] — small by design, pigeonhole
     * candidates only) which makes its count EXACT; under the gate the
     * attach path broadcasts the id-only frames so the corpus is never
     * shuffled: texts arrive via a broadcast semi-join (candidate texts
@@ -581,36 +577,18 @@ object Dedup {
     * bound coincide while the frame stays id-only; anyone widening the
     * candidate schema must re-derive the gate (r14 verdict watch item).
     *
-    * FAILURE STORY (r14 verdict #6): `localCheckpoint` truncates
-    * lineage — on a durable cluster an executor loss after the
-    * checkpoint fails the query instead of recomputing. Set
-    * `spark.graft.reliableCheckpoint=<dir>` (sys prop, or the
-    * `SPARK_GRAFT_RELIABLE_CHECKPOINT` env) to route this gate's
-    * checkpoint through RELIABLE storage (`Dataset.checkpoint` into
-    * that directory): same rows, executor-loss-safe, at the cost of one
-    * write+read of the (small) candidate frame. Local/default runs keep
-    * localCheckpoint — the right trade on a single machine. */
+    * FAILURE STORY: the candidate cut goes through [[Materialize]]. With
+    * no Spark checkpoint directory, an executor loss after the cut fails
+    * the query loudly instead of recomputing; with one set, the cut is a
+    * reliable checkpoint — same rows, executor-loss-safe, at the cost of
+    * one write+read of the (small) candidate frame. */
   def editDistancePairs(docs: DataFrame, maxHamming: Int,
       maxDist: Int): DataFrame =
     editDistancePairsGated(docs, maxHamming, maxDist, EditAttachBroadcastGate)
 
-  /** Checkpoint for a SMALL gate-decision frame: reliable when the
-    * deployment configured a checkpoint dir (see [[editDistancePairs]]'
-    * failure-story note), local otherwise. Both are eager, so the
-    * caller's count() reads materialized blocks either way. */
-  private def ckptGateFrame(df: DataFrame): DataFrame =
-    sys.props.get("spark.graft.reliableCheckpoint")
-      .orElse(sys.env.get("SPARK_GRAFT_RELIABLE_CHECKPOINT")) match {
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-        df.checkpoint()
-      case None => df.localCheckpoint()
-    }
-
   private[graft] def editDistancePairsGated(docs: DataFrame, maxHamming: Int,
       maxDist: Int, gate: Long): DataFrame = {
-    val cand = ckptGateFrame(simhashNearDupPairs(docs, maxHamming))
+    val cand = Materialize(simhashNearDupPairs(docs, maxHamming))
     val verified =
       if (cand.count() <= gate) {
         val candDocs = cand.select(col("doc_id_1").as("doc_id"))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.GraftColumnBridge.{releaseLocalCheckpoint => release}
 
 /** Iterative graph analytics over relational edge sets — the second graph
   * operator family next to [[Dedup.dedupClusters]]' connected components:
@@ -35,26 +34,14 @@ import org.apache.spark.sql.GraftColumnBridge.{releaseLocalCheckpoint => release
   * make all of that apparatus unnecessary). Only node-sized frames move
   * between iterations; lineage grows linearly and is checkpointed every
   * 4th step purely to bound plan depth. Iteration count is fixed (an
-  * offline-analytics setting), not convergence-driven. */
+  * offline-analytics setting), not convergence-driven.
+  *
+  * Failure story: every cut here goes through [[Materialize]]
+  * (`Materialize.edges` for edge-sized frames). With no Spark checkpoint
+  * directory a lost block or executor fails the query loudly; with one
+  * set, every cut is a reliable checkpoint and the loops survive the
+  * loss with the same answer. */
 object Graph {
-  import org.apache.spark.storage.StorageLevel
-
-  /** Eager local checkpoint with SERIALIZED storage, for EDGE-sized (or
-    * bigger) frames. The `localCheckpoint()` default MEMORY_AND_DISK
-    * stores deserialized row objects (~3-5x the serialized bytes) and —
-    * the real hazard at scale — re-expands any block evicted to disk
-    * back into a deserialized array on its next read
-    * (BlockManager.maybeCacheDiskValuesInMemory): at 540 M edges that
-    * single re-expansion OOMed a 64 g probe JVM even though the
-    * serialized bytes fit comfortably. Serialized blocks cost one
-    * deserialization pass per read (every loop here reads its edge
-    * checkpoint 1-3 times per round) and stay byte-sized in both memory
-    * and the disk read-back path. NODE-sized per-round frames keep the
-    * deserialized default: they are orders of magnitude smaller and
-    * re-read constantly. */
-  private def ckptEdges(df: DataFrame): DataFrame =
-    df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-
   /** Width for an edge checkpoint that per-iteration scans + map-side
     * aggregations will read (r13): the configured shuffle-partition
     * default is a per-CORE convention, so it FIXES per-task row volume
@@ -81,8 +68,8 @@ object Graph {
     val wide = edgeParts(spark, m)
     if (wide <= spark.sessionState.conf.numShufflePartitions) (e, m)
     else {
-      val w = ckptEdges(e.repartition(wide, key))
-      release(e)
+      val w = Materialize.edges(e.repartition(wide, key))
+      Materialize.release(e)
       (w, m)
     }
   }
@@ -143,15 +130,14 @@ object Graph {
     // e2 and partial-aggs at ITS width, so a default-width checkpoint
     // spills per iteration once per-task volume outgrows memory.
     val (e2, _) = widenEdges(
-      ckptEdges(eRaw.repartition(col("src"))), col("src"))
-    val outdeg = e2.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint()
+      Materialize.edges(eRaw.repartition(col("src"))), col("src"))
+    val outdeg = Materialize(e2.groupBy(col("src")).agg(count(lit(1)).as("outdeg")))
     // symmetric: src alone spans V, and it's exactly outdeg's key set —
     // no 2|E| union, no extra dedup
     val nodesDf =
       if (symmetric) outdeg.select(col("src").as("node"))
-      else e2.select(col("src").as("node"))
-        .unionByName(e2.select(col("dst").as("node"))).distinct().localCheckpoint()
+      else Materialize(e2.select(col("src").as("node"))
+        .unionByName(e2.select(col("dst").as("node"))).distinct())
     val n = nodesDf.count() // driver scalar: |V| is bounded metadata
     if (n == 0) // empty edge set: no nodes, not a division by zero
       return nodesDf.select(col("node"), lit(0d).as("pr")).limit(0)
@@ -196,8 +182,8 @@ object Graph {
       // costs more than it saves — checkpoint only every 4th step to
       // bound plan depth / compile time for high iteration counts
       if (i % 4 == 3 && i != iters - 1) {
-        sums = sums.localCheckpoint()
-        if (sumsCk != null) release(sumsCk) // the prior periodic
+        sums = Materialize(sums)
+        if (sumsCk != null) Materialize.release(sumsCk) // the prior periodic
         sumsCk = sums // checkpoint is 4 rounds stale: drop its blocks
       }
     }
@@ -233,11 +219,10 @@ object Graph {
     val eRaw = edges.select(col("src"), col("dst"))
     // count-gated width, as in [[pageRank]] (r13)
     val (e2, _) = widenEdges(
-      ckptEdges(eRaw.repartition(col("src"))), col("src"))
-    val outdeg = e2.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint()
-    val nodesDf = e2.select(col("src").as("node"))
-      .unionByName(e2.select(col("dst").as("node"))).distinct().localCheckpoint()
+      Materialize.edges(eRaw.repartition(col("src"))), col("src"))
+    val outdeg = Materialize(e2.groupBy(col("src")).agg(count(lit(1)).as("outdeg")))
+    val nodesDf = Materialize(e2.select(col("src").as("node"))
+      .unionByName(e2.select(col("dst").as("node"))).distinct())
     val dNum = math.round(damping * DampDen)
     val baseFx = (BigInt(DampDen - dNum) * OneFx / (BigInt(DampDen) * s.size)).toLong
     val seedFx = OneFx / s.size
@@ -267,8 +252,8 @@ object Graph {
       sums = e2.join(crate, Seq("src"))
         .groupBy(col("dst")).agg(sum(col("crate")).as("msum"))
       if (i % 4 == 3 && i != iters - 1) {
-        sums = sums.localCheckpoint()
-        if (sumsCk != null) release(sumsCk) // the prior periodic
+        sums = Materialize(sums)
+        if (sumsCk != null) Materialize.release(sumsCk) // the prior periodic
         sumsCk = sums // checkpoint is 4 rounds stale: drop its blocks
       }
     }
@@ -292,28 +277,28 @@ object Graph {
     require(sources.nonEmpty, "BFS needs a seed set")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e2 = ckptEdges(edges.select(col("src"), col("dst"))
+    val e2 = Materialize.edges(edges.select(col("src"), col("dst"))
       .repartition(col("src")))
-    var visited = sources.distinct.toDF("node")
-      .select(col("node"), lit(0L).as("hops")).localCheckpoint()
+    var visited = Materialize(sources.distinct.toDF("node")
+      .select(col("node"), lit(0L).as("hops")))
     var frontier = visited.select(col("node"))
     var h = 1
     var done = false
     while (h <= maxHops && !done) {
-      val next = e2.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .select(col("node"), lit(h.toLong).as("hops"))
-        .localCheckpoint()
-      if (next.isEmpty) { done = true; release(next) }
+      val next = Materialize(
+        e2.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
+          .select(col("dst").as("node")).distinct()
+          .join(visited, Seq("node"), "left_anti")
+          .select(col("node"), lit(h.toLong).as("hops")))
+      if (next.isEmpty) { done = true; Materialize.release(next) }
       else {
         val prevVisited = visited
-        visited = visited.unionByName(next).localCheckpoint()
-        release(prevVisited) // folded into the new checkpoint above
+        visited = Materialize(visited.unionByName(next))
+        Materialize.release(prevVisited) // folded into the new checkpoint above
         // a frontier backed by a prior round's `next` is superseded;
         // round 1's frontier is a view on the initial visited, whose
-        // blocks release(prevVisited) just handled
-        if (h > 1) release(frontier)
+        // blocks were released with prevVisited just above
+        if (h > 1) Materialize.release(frontier)
         frontier = next.select(col("node"))
         h += 1
       }
@@ -321,7 +306,8 @@ object Graph {
     // the last `next`-backed frontier backs nothing the caller sees —
     // visited is its own checkpoint (h == 1 means frontier still views
     // the LIVE initial visited: leave it)
-    if (h > 1) release(frontier)
+    if (h > 1) Materialize.release(frontier)
+    Materialize.release(e2) // visited is its own cut: the edges are dead
     visited
   }
 
@@ -347,21 +333,19 @@ object Graph {
       "60/d is integer-exact only for d ≤ 6 (60 = lcm of 1..6)")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e2 = ckptEdges(edges.select(col("src"), col("dst"))
+    val e2 = Materialize.edges(edges.select(col("src"), col("dst"))
       .repartition(col("src")))
-    var dist = seeds.distinct.toDF("seed")
-      .select(col("seed"), col("seed").as("node"), lit(0L).as("dist"))
-      .localCheckpoint()
+    var dist = Materialize(seeds.distinct.toDF("seed")
+      .select(col("seed"), col("seed").as("node"), lit(0L).as("dist")))
     for (h <- 1 to maxHops) {
       val frontier = dist.filter(col("dist") === lit((h - 1).toLong))
         .withColumnRenamed("node", "src").select(col("seed"), col("src"))
       val cand = e2.join(frontier, Seq("src"))
         .select(col("seed"), col("dst").as("node"), lit(h.toLong).as("dist"))
       val prev = dist
-      dist = dist.unionByName(cand)
-        .groupBy(col("seed"), col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-      release(prev) // eager checkpoint above: prev round's blocks are dead
+      dist = Materialize(dist.unionByName(cand)
+        .groupBy(col("seed"), col("node")).agg(min(col("dist")).as("dist")))
+      Materialize.release(prev) // eager checkpoint above: prev round's blocks are dead
     }
     dist.filter(col("dist") > 0)
       .groupBy(col("node"))
@@ -449,18 +433,17 @@ object Graph {
     * Inputs: edges (src, dst, w: long), seeds (node). Output: (node,
     * dist) with dist in the weight's fixed-point units. */
   def sssp(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
-    val e2 = ckptEdges(edges.select(col("src"), col("dst"), col("w"))
+    val e2 = Materialize.edges(edges.select(col("src"), col("dst"), col("w"))
       .repartition(col("src")))
-    var dist = seeds.select(col("node")).distinct()
-      .select(col("node"), lit(0L).as("dist")).localCheckpoint()
+    var dist = Materialize(seeds.select(col("node")).distinct()
+      .select(col("node"), lit(0L).as("dist")))
     for (_ <- 1 to rounds) {
       val cand = e2.join(dist.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
       val prev = dist
-      dist = dist.unionByName(cand)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-      release(prev) // eager checkpoint above: prev round's blocks are dead
+      dist = Materialize(dist.unionByName(cand)
+        .groupBy(col("node")).agg(min(col("dist")).as("dist")))
+      Materialize.release(prev) // eager checkpoint above: prev round's blocks are dead
     }
     dist
   }
@@ -476,7 +459,7 @@ object Graph {
     * exits early, which is exact — peeling is monotone, so a fixed
     * point stays fixed and the capped unrolling replays it. */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
-    val e0 = ckptEdges(edges.select(col("src"), col("dst"))
+    val e0 = Materialize.edges(edges.select(col("src"), col("dst"))
       .repartition(col("src")))
     // survivor sets shrink MONOTONICALLY (a node outside S has no edges
     // in e(S), so it can never re-qualify), so the round-r edge set is
@@ -510,17 +493,13 @@ object Graph {
     var r = 0
     while (r < maxRounds && lastDeg == null) {
       val e = if (kept == null) e0 else restrict(kept, prevN)
-      val degF = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
+      val degF = Materialize(e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
       val next = degF.filter(col("deg") >= k).select(col("src"))
       val n = next.count()
-      if (n == prevN) { // nothing peeled: fixed point — degF is the answer
-        if (kept != null) release(kept) // prior round's checkpoint superseded
-        lastDeg = degF
-      } else {
-        if (kept != null) release(kept) // next is materialized (via degF):
-        kept = next; prevN = n          // the old round's blocks are superseded
-      }
+      // degF is materialized: the prior round's cut is superseded
+      if (kept != null) Materialize.release(kept)
+      if (n == prevN) lastDeg = degF // nothing peeled: degF is the answer
+      else { kept = next; prevN = n }
       r += 1
     }
     val result =
@@ -570,10 +549,10 @@ object Graph {
     * and the sizing pass is skipped entirely (zero extra jobs). */
   private[graft] def wedgeCensus(pairsIn: DataFrame,
       maxFanout: Long = Long.MaxValue): WedgeCensus = {
-    val pairs = ckptEdges(pairsIn.select(col("u"), col("v")))
-    val deg = pairs.select(col("u").as("node"))
+    val pairs = Materialize.edges(pairsIn.select(col("u"), col("v")))
+    val deg = Materialize(pairs.select(col("u").as("node"))
       .unionByName(pairs.select(col("v").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg")).localCheckpoint()
+      .groupBy(col("node")).agg(count(lit(1)).as("deg")))
     // count-gated broadcast for the orientation's two degree attaches
     // (r13): |V| is exact off the checkpointed deg frame, and the 10 MB
     // estimator default flips these joins to sort-merge — two SORTS of
@@ -589,7 +568,7 @@ object Graph {
       (col("du") === col("dv") && col("u") < col("v"))
     // oriented edge set is reused three times (both wedge legs + the
     // closing-edge probe): materialize it once
-    val oriented = ckptEdges(
+    val oriented = Materialize.edges(
       pairs.join(du, Seq("u")).join(dv, Seq("v")).select(
         when(firstU, col("u")).otherwise(col("v")).as("src"),
         when(firstU, col("v")).otherwise(col("u")).as("dst"),
@@ -598,8 +577,8 @@ object Graph {
       if (maxFanout == Long.MaxValue) (oriented, 0L)
       else {
         // one node-sized sizing job, only when a budget is set
-        val outdeg = oriented.groupBy(col("src"))
-          .agg(count(lit(1)).as("outdeg")).localCheckpoint()
+        val outdeg = Materialize(oriented.groupBy(col("src"))
+          .agg(count(lit(1)).as("outdeg")))
         val nDropped = outdeg.filter(col("outdeg") > maxFanout).count()
         val kept = oriented.join(
           outdeg.filter(col("outdeg") <= maxFanout).select(col("src")),
@@ -674,7 +653,7 @@ object Graph {
     val edgeBudget =
       if (maxBloomEdges >= 0L) maxBloomEdges
       else bloomEdgeBudget(cen.oriented.sparkSession)
-    val nEdges = cen.oriented.count() // one cheap job: localCheckpointed
+    val nEdges = cen.oriented.count() // one cheap job: materialized
     // wedge-volume upper bound: one node-sized agg off the checkpointed
     // degree frame (the ORIENTED volume is smaller still, so skipping
     // under this bound never skips a case that needed the bloom)
@@ -795,10 +774,10 @@ object Graph {
     * is associative, so no per-node label list ever materializes.
     * Node-sized frames between rounds, checkpointed. */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
-    val e2 = ckptEdges(edges.select(col("src"), col("dst"))
+    val e2 = Materialize.edges(edges.select(col("src"), col("dst"))
       .repartition(col("src")))
-    val nodes = e2.select(col("src").as("node"))
-      .unionByName(e2.select(col("dst").as("node"))).distinct().localCheckpoint()
+    val nodes = Materialize(e2.select(col("src").as("node"))
+      .unionByName(e2.select(col("dst").as("node"))).distinct())
     // |V| is exact off the checkpointed node frame: broadcast the
     // node-sized label frame into the edge join under the count-gated
     // budget (the 10 MB estimator default flips this to a per-round
@@ -817,14 +796,14 @@ object Graph {
         .agg(max(struct(col("cnt"), (-col("lab")).as("nl"))).as("b"))
         .select(col("dst").as("node"), (-col("b.nl")).as("newlab"))
       val prev = labels
-      labels = labels.join(best, Seq("node"), "left")
-        .select(col("node"), coalesce(col("newlab"), col("lab")).as("lab"))
-        .localCheckpoint()
+      labels = Materialize(labels.join(best, Seq("node"), "left")
+        .select(col("node"), coalesce(col("newlab"), col("lab")).as("lab")))
       // round 1's prev is a Project over `nodes`, so this DOES release
       // the nodes checkpoint — intentional: nodes is dead once the first
       // eager labels checkpoint exists (don't reuse `nodes` after this)
-      release(prev)
+      Materialize.release(prev)
     }
+    Materialize.release(e2) // labels is a cut (or views `nodes`): edges are dead
     labels
   }
 
@@ -846,10 +825,10 @@ object Graph {
     * while it fits, sort-merge beyond; the moment reduction is one
     * map-side-partial aggregate. Nothing quadratic, nothing sorted. */
   def degreeAssortativity(pairsIn: DataFrame): DataFrame = {
-    val pairs = ckptEdges(pairsIn.select(col("u"), col("v")))
-    val deg = pairs.select(col("u").as("node"))
+    val pairs = Materialize.edges(pairsIn.select(col("u"), col("v")))
+    val deg = Materialize(pairs.select(col("u").as("node"))
       .unionByName(pairs.select(col("v").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg")).localCheckpoint()
+      .groupBy(col("node")).agg(count(lit(1)).as("deg")))
     // count-gated broadcast (r13): with both degree attaches broadcast,
     // the whole moment pass is one scan of the symmetric edge frame into
     // a map-side partial agg — no |E| exchange, no |E| sort. The 10 MB
@@ -934,7 +913,7 @@ object Graph {
     * (ra_fx, item_a, item_b) total order.
     *
     * CONSTRUCTION-TIME ACTIONS (r12 ADVICE): this function runs two
-    * eager jobs before the returned plan ever executes — `ckptEdges`
+    * eager jobs before the returned plan ever executes — `Materialize.edges`
     * materializes the deduped adjacency, and the pair-volume gate
     * below runs one tiny aggregate over the degree frame. The second
     * cannot be deferred: the fan-out exchange's partition count is a
@@ -945,7 +924,7 @@ object Graph {
   def resourceAllocation(interactions: DataFrame, maxDegree: Int,
       topK: Int): DataFrame = {
     val spark = interactions.sparkSession
-    val adj = ckptEdges(interactions.select(col("z"), col("s")).distinct()
+    val adj = Materialize.edges(interactions.select(col("z"), col("s")).distinct()
       .repartition(col("z")))
     val deg = adj.groupBy(col("z")).agg(count(lit(1)).as("deg"))
     val capped = deg.filter(col("deg") <= maxDegree)
@@ -992,14 +971,9 @@ object Graph {
     * The hint bypasses every Spark size safeguard, so the budget is NOT
     * a fixed constant: at most 8 M keys (≈ 300 MB hashed) AND at most
     * what ~4 % of this JVM's max heap can hash at ~40 B/key — a 1 g
-    * driver gets ~1 M keys, a 64 g bench host the full 8 M. Pin it with
-    * conf `spark.graft.broadcastNodeBudget` (keys). */
-  val BroadcastNodeBudget: Long = {
-    val conf = sys.props.get("spark.graft.broadcastNodeBudget")
-      .orElse(sys.env.get("SPARK_GRAFT_BROADCAST_NODE_BUDGET"))
-    conf.map(_.toLong).getOrElse(
-      math.min(8000000L, Runtime.getRuntime.maxMemory / 25 / 40))
-  }
+    * driver gets ~1 M keys, a 64 g bench host the full 8 M. */
+  val BroadcastNodeBudget: Long =
+    math.min(8000000L, Runtime.getRuntime.maxMemory / 25 / 40)
 
   /** Edge count past which [[closedWedges]] stops FORCING shuffle_hash
     * on its closing-probe semi-join and lets the planner choose (SMJ,
@@ -1008,22 +982,14 @@ object Graph {
     * build to ~8 M rows/task over zstd-compressed long pairs no matter
     * the configured partition count — measured OOM at 1 B edges under
     * both 256 and 1024 partitions. 200 M edges keeps worst-case builds
-    * ~cache-adjacent on any sane layout; pin with
-    * `spark.graft.shuffleHashEdgeCap` (sys prop / env). */
-  val ShuffleHashEdgeCap: Long =
-    sys.props.get("spark.graft.shuffleHashEdgeCap")
-      .orElse(sys.env.get("SPARK_GRAFT_SHUFFLE_HASH_EDGE_CAP"))
-      .map(_.toLong).getOrElse(200000000L)
+    * ~cache-adjacent on any sane layout. */
+  val ShuffleHashEdgeCap: Long = 200000000L
 
   /** Minimum wedge-bound / edge ratio at which [[closedWedges]] arms its
     * bloom prefilter — below it the edge-shaped filter build costs more
     * than the wedge-shaped saving (measured at the 1 B-edge circulant:
-    * bloom 406 s vs plain 248 s at bound-ratio 7). Pin with
-    * `spark.graft.bloom.wedgeEdgeRatio`. */
-  val WedgeEdgeRatioGate: Long =
-    sys.props.get("spark.graft.bloom.wedgeEdgeRatio")
-      .orElse(sys.env.get("SPARK_GRAFT_BLOOM_WEDGE_EDGE_RATIO"))
-      .map(_.toLong).getOrElse(12L)
+    * bloom 406 s vs plain 248 s at bound-ratio 7). */
+  val WedgeEdgeRatioGate: Long = 12L
 
   /** Edge budget for [[closedWedges]]' broadcast bloom prefilter, sized
     * from the DRIVER heap: the filter is built distributed, but its one
@@ -1068,7 +1034,7 @@ object Graph {
     * pair list (node-sized label frame, one co-keyed shuffle each);
     * everything else is node- or community-sized. */
   def modularity(pairsIn: DataFrame, labels: DataFrame): DataFrame =
-    modularityPinned(ckptEdges(pairsIn.select(col("u"), col("v"))), labels)
+    modularityPinned(Materialize.edges(pairsIn.select(col("u"), col("v"))), labels)
 
   /** [[modularity]] of the `rounds`-step [[labelPropagation]] communities
     * over the SAME pair set, sharing one checkpointed pair frame between
@@ -1083,7 +1049,7 @@ object Graph {
     * (LPA's argmax and modularity's aggregates are partitioning-
     * independent), pinned by the unchanged oracle. */
   def modularityOfLabelProp(pairsIn: DataFrame, rounds: Int): DataFrame = {
-    val pairs = ckptEdges(pairsIn.select(col("u"), col("v")))
+    val pairs = Materialize.edges(pairsIn.select(col("u"), col("v")))
     modularityPinned(pairs, labelPropagation(symmetricEdges(pairs), rounds))
   }
 

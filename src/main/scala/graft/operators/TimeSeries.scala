@@ -231,7 +231,7 @@ object TimeSeries {
       .agg(sum(col("value").cast("decimal(18,2)")).as("s"))
     // hourly-sized; reuse across pairs without rescanning the facts
     val perType =
-      if (pairs.sizeIs > 1) perType0.localCheckpoint() else perType0
+      if (pairs.sizeIs > 1) Materialize(perType0) else perType0
     val zero = lit(0).cast("decimal(28,2)") // = sum(decimal(18,2)) type
     val perPair = pairs.map { case (tx, ty) =>
       // the pair key rides the DATA (event_type through the join, the
@@ -498,11 +498,10 @@ object TimeSeries {
     * whole ACF costs one scan of the facts plus `maxLag` joins of
     * node-sized frames. */
   def acf(events: DataFrame, eventType: String, maxLag: Int): DataFrame = {
-    val hourly = events
+    val hourly = Materialize(events
       .filter(col("event_type") === lit(eventType))
       .groupBy(tsUs(date_trunc("hour", col("ts"))).as("bucket_us"))
-      .agg(sum(col("value").cast("decimal(18,2)")).cast("decimal(18,2)").as("s"))
-      .localCheckpoint()
+      .agg(sum(col("value").cast("decimal(18,2)")).cast("decimal(18,2)").as("s")))
     val perLag = (1 to maxLag).map { k =>
       val a = hourly.select(col("bucket_us"), col("s").as("x"))
       val b = hourly.select(

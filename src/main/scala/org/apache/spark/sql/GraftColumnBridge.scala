@@ -14,29 +14,6 @@ object GraftColumnBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Release the cached blocks behind a `localCheckpoint()`ed frame.
-    * `Dataset.unpersist` only clears CacheManager entries (`.persist`/
-    * `.cache`); a local checkpoint persists the UNDERLYING RDD directly,
-    * so iterative operators that re-checkpoint per round would otherwise
-    * pin every superseded round's blocks for the life of the session —
-    * a real leak on a long-running cluster job. No-op on frames that
-    * aren't checkpoint-backed.
-    *
-    * SEMANTICS: walks the WHOLE analyzed plan and unpersists EVERY
-    * `LogicalRDD` it finds — not just "the checkpoint behind" the frame.
-    * Local-checkpoint blocks are unrecoverable after unpersist (lineage
-    * is truncated), so passing a frame whose plan references a checkpoint
-    * that is still live elsewhere (e.g. a join of two checkpointed
-    * frames, only one of which is superseded) hard-fails LATER with
-    * "checkpoint block not found", not a recompute. Only call this on
-    * single-checkpoint views whose every reachable checkpoint is dead. */
-  def releaseLocalCheckpoint(ds: Dataset[_]): Unit =
-    ds.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Close every loaded state-store provider and stop the maintenance
     * task. REQUIRED before JVM exit in any process that ran a stateful
     * stream on `RocksDBStateStoreProvider`: Spark caches providers for

@@ -899,9 +899,9 @@ class AnalyticsSpec extends AnyFunSuite with SparkSpec {
       (4L, 1L, 1.0 / 3.0), (1L, 0L, 0.0)), lcc.toSeq.toString)
   }
 
-  test("releaseLocalCheckpoint frees the blocks behind a checkpointed " +
+  test("Materialize.release frees the blocks behind a checkpointed " +
       "frame and is a no-op on plain frames") {
-    import org.apache.spark.sql.GraftColumnBridge
+    import graft.operators.Materialize
     val sc = spark.sparkContext
     // Track the SPECIFIC rdd id the checkpoint registers, never absolute
     // registry sizes: the ContextCleaner asynchronously drops GC'd
@@ -914,7 +914,7 @@ class AnalyticsSpec extends AnyFunSuite with SparkSpec {
     val ck = Seq(1L, 2L, 3L).toDF("x").localCheckpoint()
     val added1 = addedBy(before1)
     assert(added1.size == 1, s"expected one new persistent RDD: $added1")
-    GraftColumnBridge.releaseLocalCheckpoint(ck)
+    Materialize.release(ck)
     // the registry entry is dropped synchronously (only block deletion
     // is async under blocking = false)
     assert(addedBy(before1).isEmpty, "checkpoint entry not released")
@@ -924,10 +924,10 @@ class AnalyticsSpec extends AnyFunSuite with SparkSpec {
     val ck2 = Seq(4L).toDF("x").localCheckpoint()
     val added2 = addedBy(before2)
     assert(added2.size == 1, s"expected one new persistent RDD: $added2")
-    GraftColumnBridge.releaseLocalCheckpoint(ck2.select(col("x") + 1))
+    Materialize.release(ck2.select(col("x") + 1))
     assert(addedBy(before2).isEmpty, "derived-frame release missed")
     // plain (never-persisted) frames: no-op, no throw
-    GraftColumnBridge.releaseLocalCheckpoint(Seq(5L).toDF("x"))
+    Materialize.release(Seq(5L).toDF("x"))
   }
 
   test("closedWedges bloom prefilter: bit-identical to the unfiltered " +

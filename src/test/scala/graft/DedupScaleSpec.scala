@@ -169,16 +169,14 @@ class DedupScaleSpec extends AnyFunSuite with SparkSpec {
       s"expected broadcast semi + broadcast attach, got ${bhj.size}")
   }
 
-  test("r15 reliable-checkpoint gate (spark.graft.reliableCheckpoint) " +
+  test("edit-distance gate under a Spark checkpoint directory " +
       "emits the same rows as the localCheckpoint default") {
     val docs = graft.sources.Tables.documents(spark, sf0001)
     val local = Dedup.editDistancePairs(docs, 8, 6).collect().toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_rck_").toString
-    sys.props("spark.graft.reliableCheckpoint") = dir
-    try {
+    org.apache.spark.CheckpointDirProbe.withDir(spark.sparkContext) { _ =>
       val reliable = Dedup.editDistancePairs(docs, 8, 6).collect().toSet
       assert(reliable == local, "reliable and local checkpoint paths diverged")
-    } finally sys.props.remove("spark.graft.reliableCheckpoint")
+    }
   }
 
   test("bloomContaminatedDocs: identical answer to the exact semi-join, " +
