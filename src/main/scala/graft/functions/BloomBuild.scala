@@ -61,16 +61,13 @@ final class ShardedBloom(val shards: Array[BloomFilter]) extends Serializable {
   *     `spark.driver.maxResultSize` still bounds the TOTAL filter size
   *     (see `Graph.bloomEdgeBudget`, which folds that ceiling into the
   *     edge budget).
-  *  3. `collect` of the p shards (conf `spark.graft.bloom.shards` pins
-  *     p; default min(64, max(8, defaultParallelism))).
+  *  3. `collect` of the p = min(64, max(8, defaultParallelism)) shards.
   */
 object BloomBuild {
   def overLongColumn(hashes: DataFrame, column: String,
       expectedItems: Long, fpp: Double): ShardedBloom = {
     val spark = hashes.sparkSession
-    val p = spark.conf.getOption("spark.graft.bloom.shards").map(_.toInt)
-      .getOrElse(math.min(64,
-        math.max(8, spark.sparkContext.defaultParallelism)))
+    val p = math.min(64, math.max(8, spark.sparkContext.defaultParallelism))
     val perShard = math.max(1L, expectedItems / p)
     val rdd = hashes.select(column).rdd.map { r =>
       val h = r.getLong(0)

@@ -347,6 +347,7 @@ object Graph {
         .groupBy(col("seed"), col("node")).agg(min(col("dist")).as("dist")))
       Materialize.release(prev) // eager checkpoint above: prev round's blocks are dead
     }
+    Materialize.release(e2) // dist is its own cut: the edges are dead
     dist.filter(col("dist") > 0)
       .groupBy(col("node"))
       .agg(sum(expr("60 div dist")).as("harmonic_x60"),
@@ -445,6 +446,7 @@ object Graph {
         .groupBy(col("node")).agg(min(col("dist")).as("dist")))
       Materialize.release(prev) // eager checkpoint above: prev round's blocks are dead
     }
+    Materialize.release(e2) // dist is its own cut: the edges are dead
     dist
   }
 
@@ -503,8 +505,10 @@ object Graph {
       r += 1
     }
     val result =
-      if (lastDeg != null) lastDeg // fixed-point exit: zero extra passes
-      else { // round cap hit before convergence: one final restriction
+      if (lastDeg != null) { // fixed-point exit: zero extra passes
+        Materialize.release(e0) // lastDeg is its own cut: the edges are dead
+        lastDeg
+      } else { // round cap hit before convergence: one final restriction
         val eFinal = if (kept == null) e0 else restrict(kept, prevN)
         eFinal.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       }
@@ -632,9 +636,9 @@ object Graph {
     * task binary. That converts the old fixed 500 M-edge driver
     * ceiling into a HEAP-PROPORTIONAL budget ([[bloomEdgeBudget]]:
     * ~1.2 B/edge at 1 % fpp, ≤ 10 % of driver max heap and of
-    * `spark.driver.maxResultSize`, conf `spark.graft.bloom.maxEdges`
-    * to pin it). Above the budget the filter DEGRADES before it gives
-    * up: the same budgeted bits are spread over the larger edge set
+    * `spark.driver.maxResultSize`; `maxBloomEdges` pins it). Above
+    * the budget the filter DEGRADES before it gives up: the same
+    * budgeted bits are spread over the larger edge set
     * and the fpp rises (optimal sizing p = exp(−(bits/|E|)·ln²2) —
     * 1 % at the budget, 10 % at 2× it, 50 % at ~13.8×). Every probe
     * is exactness-preserving (the semi-join kills false positives),
@@ -997,23 +1001,20 @@ object Graph {
     * on the driver. ~9.6 bits/edge at 1 % fpp ≈ 1.2 B/edge, allowed
     * ≤ 10 % of max heap — AND ≤ `spark.driver.maxResultSize` (default
     * 1 g), because the merged filter reaches the driver as one task
-    * result of [[graft.functions.BloomBuild]]'s single-reducer merge.
-    * Conf `spark.graft.bloom.maxEdges` pins it. */
-  private[graft] def bloomEdgeBudget(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.bloom.maxEdges").map(_.toLong)
-      .getOrElse {
-        val heapEdges = (Runtime.getRuntime.maxMemory / 10 / 1.2).toLong
-        val maxResult = spark.sparkContext.getConf
-          .getSizeAsBytes("spark.driver.maxResultSize", "1g")
-        // maxResultSize = 0 means unlimited. 10 % margin over the raw
-        // 1.2 B/edge: the collected shards carry serialization framing —
-        // measured at the 1 B-edge census, an exactly-at-budget filter
-        // arrived as 1045.7 MiB against the 1024 MiB limit
-        val resultEdges =
-          if (maxResult <= 0L) Long.MaxValue
-          else (maxResult / 1.2 / 1.1).toLong
-        math.min(heapEdges, resultEdges)
-      }
+    * result of [[graft.functions.BloomBuild]]'s single-reducer merge. */
+  private[graft] def bloomEdgeBudget(spark: SparkSession): Long = {
+    val heapEdges = (Runtime.getRuntime.maxMemory / 10 / 1.2).toLong
+    val maxResult = spark.sparkContext.getConf
+      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    // maxResultSize = 0 means unlimited. 10 % margin over the raw
+    // 1.2 B/edge: the collected shards carry serialization framing —
+    // measured at the 1 B-edge census, an exactly-at-budget filter
+    // arrived as 1045.7 MiB against the 1024 MiB limit
+    val resultEdges =
+      if (maxResult <= 0L) Long.MaxValue
+      else (maxResult / 1.2 / 1.1).toLong
+    math.min(heapEdges, resultEdges)
+  }
 
   /** Fixed-point unit: 1.0 of rank mass = 10¹⁸ (so BIGINT holds the
     * whole graph's mass with 9× headroom under Long.MaxValue). */

@@ -32,17 +32,21 @@ object Ingest {
   /** Batch ingest: append a typed set of points into the hour-partitioned
     * store (the reference's proposed batch API, README.md:102). */
   def ingestBatch(points: Dataset[DataPoint], path: String): Unit =
-    points.toDF()
+    storeWriter(points.toDF()
       .withColumn("shard_hour", shardHourCol(col("timestamp")))
       // sort within partitions so parquet min/max stats are tight per file
-      .sortWithinPartitions(col("shard_hour"), col("timestamp"))
-      // parquet v2 pages (DELTA_BINARY_PACKED on the 1s-spaced timestamps)
-      // + zstd BEATS the reference's Gorilla codec: measured 7.8 B/pt vs
-      // its ~8.2 (README.md:99) on the same 1M-point workload
-      .write.mode(SaveMode.Append)
+      .sortWithinPartitions(col("shard_hour"), col("timestamp")), SaveMode.Append)
+      .partitionBy("shard_hour").parquet(path)
+
+  /** `df`'s writer in the store's file format, for every writer of store
+    * files (ingest and [[Snapshot]]'s rewrites): parquet v2 pages
+    * (DELTA_BINARY_PACKED on the 1s-spaced timestamps) + zstd BEATS the
+    * reference's Gorilla codec: measured 7.8 B/pt vs its ~8.2
+    * (README.md:99) on the same 1M-point workload. */
+  private[operators] def storeWriter(df: DataFrame, mode: SaveMode) =
+    df.write.mode(mode)
       .option("compression", "zstd")
       .option("parquet.writer.version", "v2")
-      .partitionBy("shard_hour").parquet(path)
 
   /** Full-store scan (schema: timestamp, value, metric, shard_hour).
     * MANIFEST-AWARE: on a snapshot-managed store (a `_graft_manifest/`

@@ -17,9 +17,9 @@ import graft.sources.FileZoneStats
   * Design (a Delta/Iceberg log scoped to exactly what the store needs):
   *  - `_graft_manifest/m<gen>` files, one per commit, written via
   *    temp + rename-to-fresh-name. Readers list the dir, take the
-  *    max gen, and plan over exactly that file list (`basePath` keeps
-  *    the `shard_hour` partition column). A reader never observes a
-  *    half-commit: it sees gen N or gen N+1, never in between.
+  *    max gen, and plan over exactly that file list ([[logFrame]]). A
+  *    reader never observes a half-commit: it sees gen N or gen N+1,
+  *    never in between.
   *    ATOMICITY SCOPE (r11 judge finding): rename-to-fresh-name is
   *    atomic AND fails on an existing target on HDFS and ABFS, so a
   *    generation race between two committers is loud there. On
@@ -37,7 +37,7 @@ import graft.sources.FileZoneStats
   *    check+rename window so the race becomes loud there too. Readers
   *    are always safe — a torn race can at worst lose one commit's
   *    manifest, never corrupt one.
-  *  - a manifest line is `live <relpath>` or
+  *  - a manifest line is `live <size> <relpath>` or
   *    `dead <gen> <tombstonedAtMs> <relpath>`: compaction REPLACES an
   *    hour's live set with the compacted files and TOMBSTONES the old
   *    ones instead of deleting — in-flight queries planned against gen N
@@ -236,9 +236,9 @@ object Snapshot {
     * marks (`txn <appId> <version>` lines — the Delta-style idempotence
     * token): a committed version per writer app, carried through every
     * checkpoint so restarts can recognize an already-committed batch.
-    * `sizes` maps each live path to its recorded byte size (−1 when a
-    * legacy manifest line carried none) — what lets a reader PLAN from
-    * the log alone, zero filesystem calls (see [[ManifestFileIndex]]).
+    * `sizes` maps each live path to its byte size — what lets a reader
+    * PLAN from the log alone, zero filesystem calls (see
+    * [[ManifestFileIndex]]).
     * `zmaps` are per-file ZONE MAPS: timestamp range (`zmap <tsMin>
     * <tsMax> <relpath>` lines, epoch-ms, r13) extended in r14 with the
     * VALUE range and row count (`zmap3 <tsMin> <tsMax> <vMinBits>
@@ -259,9 +259,9 @@ object Snapshot {
       sizes: Map[String, Long], zmaps: Map[String, FileZoneStats],
       sinceCkpt: Int)
 
-  /** `<size> <relpath>` or legacy `<relpath>` (size −1). Relpaths always
-    * start with `shard_hour=`, never a bare integer, so the split is
-    * unambiguous. */
+  /** `<size> <relpath>` or legacy `<relpath>` (size −1 until [[loadState]]
+    * resolves it). Relpaths always start with `shard_hour=`, never a bare
+    * integer, so the split is unambiguous. */
   private def parseSized(rest: String): (String, Long) =
     rest.split(" ", 2) match {
       case Array(sz, path) if sz.nonEmpty && sz.forall(_.isDigit) =>
@@ -273,7 +273,9 @@ object Snapshot {
     * snapshot) through the increments (`i<gen>`: `add`/`tomb`/`txn`
     * lines) after it — the read cost is one checkpoint + the increments
     * since, never the whole commit history. A v1 store (checkpoints
-    * only) replays zero increments and reads exactly as before. */
+    * only) replays zero increments and reads exactly as before. A live
+    * file whose legacy line carried no size costs one `getFileStatus`;
+    * the next checkpoint (every [[vacuum]] writes one) records it. */
   private[graft] def loadState(fs: FileSystem, root: String): LogState = {
     val gens = manifestGens(fs, root)
     if (gens.isEmpty)
@@ -318,6 +320,8 @@ object Snapshot {
         }
       }
     }
+    live.mapValuesInPlace((f, sz) =>
+      if (sz >= 0) sz else fs.getFileStatus(new Path(root, f)).getLen)
     LogState(gens.last._1, live.keysIterator.toVector, dead.toMap,
       txns.toMap, live.toMap, zmaps.toMap, gens.length - 1 - fromIdx)
   }
@@ -393,10 +397,8 @@ object Snapshot {
     } catch { case e: Throwable => fs.delete(tmp, false); throw e }
   }
 
-  /** `live`/`add` line body: `<size> <relpath>`, or the legacy sizeless
-    * form when the size is unknown (−1) — readers of either parse both. */
-  private def sizedBody(f: (String, Long)): String =
-    if (f._2 >= 0) s"${f._2} ${f._1}" else f._1
+  /** `live`/`add` line body: `<size> <relpath>`. */
+  private def sizedBody(f: (String, Long)): String = s"${f._2} ${f._1}"
 
   /** Zone-map lines for the files in `paths` that have recorded stats:
     * `zmap3 <tsMin> <tsMax> <vMinBits> <vMaxBits> <rows> <relpath>` when
@@ -780,25 +782,17 @@ object Snapshot {
   private def planState(spark: SparkSession, root: String,
       st: LogState): DataFrame =
     if (st.gen < 0) spark.read.parquet(root)
-    else planLive(spark, root, st.live, st.sizes, st.zmaps)
+    else logFrame(spark, root, st.live.map(f => (f, st.sizes(f))), st.zmaps)
 
-  /** A read of exactly the files `live`. An empty live set plans from
-    * the log too: the store schema over no files, where a directory read
-    * would have to infer a schema from files that are not there. */
-  private def planLive(spark: SparkSession, root: String, live: Seq[String],
-      sizes: Map[String, Long], zmaps: Map[String, FileZoneStats]): DataFrame =
-    if (live.forall(f => sizes.getOrElse(f, -1L) >= 0))
-      // every live file has a recorded size: plan straight from the log,
-      // ZERO filesystem calls (graft.sources.ManifestFileIndex — the
-      // explicit-file-list read below statuses every path on the driver,
-      // measured ~20 s at 100 k files / 100 k HEADs on an object store).
-      // The log's zone maps ride along: a pushed timestamp predicate
-      // prunes FILES within an hour before any footer is opened.
-      planFromLog(spark, root, live.map(f => (f, sizes(f))), zmaps)
-    else spark.read.option("basePath", root)
-      .parquet(live.map(f => s"$root/$f"): _*)
-
-  private def planFromLog(spark: SparkSession, root: String,
+  /** Every read of a manifest store: exactly `files` (store-relative
+    * path, bytes) through a [[graft.sources.ManifestFileIndex]] — zero
+    * filesystem calls and no Spark job at plan time, where an
+    * explicit-file-list read statuses every path on the driver (~20 s at
+    * 100 k files on an object store) and infers the schema with a job.
+    * The zone maps ride along, so a pushed timestamp or value predicate
+    * prunes files within an hour before any footer is opened. An empty
+    * file set plans too: the store schema over no files. */
+  private def logFrame(spark: SparkSession, root: String,
       files: Seq[(String, Long)],
       zmaps: Map[String, FileZoneStats]): DataFrame = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -809,7 +803,7 @@ object Snapshot {
     val index = new graft.sources.ManifestFileIndex(
       new Path(root), files, partitionSchema, zmaps)
     // store files hold exactly the DataPoint columns (ingestBatch writes
-    // them; compactShard drops the partition column before writing)
+    // them; rewriteHours drops the partition column before writing)
     val rel = HadoopFsRelation(index, partitionSchema,
       graft.model.dataPointSchema, None, new ParquetFileFormat,
       Map.empty[String, String])(spark)
@@ -818,9 +812,17 @@ object Snapshot {
 
   /** Manifest-stats range aggregate (r14 verdict #1 — the Iceberg/Delta
     * metadata-only aggregate): `count(*) / min(value) / max(value)` over
-    * the INCLUSIVE timestamp range `[startMs, endMs]`, answered from the
-    * manifest's per-file `zmap3` stats wherever possible and scanning
-    * ONLY the files the stats cannot answer. A live file is
+    * the INCLUSIVE timestamp range `[startMs, endMs]` of the latest
+    * committed generation: the frame overload over [[read]]. Output: one row
+    * (n_points BIGINT, min_value DOUBLE, max_value DOUBLE). */
+  def rangeStats(spark: SparkSession, root: String,
+      startMs: Long = Long.MinValue, endMs: Long = Long.MaxValue): DataFrame =
+    rangeStats(read(spark, root), startMs, endMs)
+
+  /** [[rangeStats]] over a frame opened by [[read]] / [[readWithGen]],
+    * answered from the manifest's per-file `zmap3` stats of the frame's
+    * own [[graft.sources.ManifestFileIndex]] wherever possible, scanning
+    * ONLY the files the stats cannot answer — no log read. A live file is
     * metadata-answerable when ALL of:
     *  - its recorded ts range lies FULLY inside the query range (a
     *    boundary file needs row-level filtering);
@@ -840,29 +842,15 @@ object Snapshot {
     * aggregate pass). Otherwise the scan side aggregates just the
     * boundary/legacy files and the two partials combine exactly
     * (count is a sum; min/max are associative; `least`/`greatest` skip
-    * the empty-scan NULL). Falls back to a plain directory scan on a
-    * manifest-free store. Output: one row
-    * (n_points BIGINT, min_value DOUBLE, max_value DOUBLE). */
-  def rangeStats(spark: SparkSession, root: String,
-      startMs: Long = Long.MinValue, endMs: Long = Long.MaxValue): DataFrame = {
-    val st = loadState(fsFor(spark, root), root)
-    if (st.gen < 0) scanStats(spark.read.parquet(root), startMs, endMs)
-    else liveStats(spark, root, st.live, st.sizes, st.zmaps, startMs, endMs)
-  }
-
-  /** [[rangeStats]] over a frame opened by [[read]] / [[readWithGen]]:
-    * answered from the files and zone maps of the frame's own
-    * [[graft.sources.ManifestFileIndex]], so a repeat call on an opened
-    * store reads no log. Any other frame — a manifest-free or
-    * legacy-sized store's read, or a frame already filtered or
-    * projected — is aggregated by a scan of the frame. */
+    * the empty-scan NULL). Any other frame — a manifest-free store's
+    * read, or a frame already filtered or projected — is aggregated by a
+    * scan of the frame. */
   def rangeStats(points: DataFrame, startMs: Long, endMs: Long): DataFrame = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     points.queryExecution.analyzed match {
       case LogicalRelation(HadoopFsRelation(
           index: graft.sources.ManifestFileIndex, _, _, _, _, _), _, _, _, _) =>
-        liveStats(points.sparkSession, index.rootPaths.head.toString,
-          index.files.map(_._1), index.files.toMap, index.stats, startMs, endMs)
+        liveStats(points.sparkSession, index, startMs, endMs)
       case _ => scanStats(points, startMs, endMs)
     }
   }
@@ -882,15 +870,16 @@ object Snapshot {
         max(col("value")).as("max_value"))
   }
 
-  /** [[rangeStats]] over the live set `live` with its sizes and zone
-    * maps. A scan side within [[graft.plans.CollectLocally.fits]] is
-    * aggregated in one partition: its plan is then a single stage that
-    * collects on the driver with no job. A larger one keeps the parallel
-    * partial/final aggregate over an exchange. */
-  private def liveStats(spark: SparkSession, root: String, live: Seq[String],
-      sizes: Map[String, Long], zmaps: Map[String, FileZoneStats],
+  /** [[rangeStats]] over the files and zone maps of `index`. A scan side
+    * within [[graft.plans.CollectLocally.fits]] is aggregated in one
+    * partition: its plan is then a single stage that collects on the
+    * driver with no job. A larger one keeps the parallel partial/final
+    * aggregate over an exchange. */
+  private def liveStats(spark: SparkSession,
+      index: graft.sources.ManifestFileIndex,
       startMs: Long, endMs: Long): DataFrame = {
-    val (metaFiles, rest) = live.partition { f =>
+    val zmaps = index.stats
+    val (metaFiles, rest) = index.files.partition { case (f, _) =>
       zmaps.get(f).exists(z =>
         z.tsMin >= startMs && z.tsMax <= endMs && z.rows.isDefined &&
           z.value.exists { case (mn, mx) => mn != 0.0 && mx != 0.0 })
@@ -898,13 +887,13 @@ object Snapshot {
     // stat-less files are never skipped; stat-carrying ones drop out when
     // their recorded range provably misses the query range (conservative,
     // same rule as ManifestFileIndex)
-    val scanFiles = rest.filter(f => zmaps.get(f)
-      .forall(z => z.tsMax >= startMs && z.tsMin <= endMs))
-    val nMeta = metaFiles.map(f => zmaps(f).rows.get).sum
+    val scanFiles = rest.filter { case (f, _) => zmaps.get(f)
+      .forall(z => z.tsMax >= startMs && z.tsMin <= endMs) }
+    val nMeta = metaFiles.map(f => zmaps(f._1).rows.get).sum
     val vMeta: Option[(Double, Double)] =
       if (metaFiles.isEmpty) None
-      else Some((metaFiles.map(f => zmaps(f).value.get._1).min,
-        metaFiles.map(f => zmaps(f).value.get._2).max))
+      else Some((metaFiles.map(f => zmaps(f._1).value.get._1).min,
+        metaFiles.map(f => zmaps(f._1).value.get._2).max))
     if (scanFiles.isEmpty) {
       // metadata-only answer: a LocalRelation — NO file scan in the plan
       import org.apache.spark.sql.Row
@@ -919,11 +908,10 @@ object Snapshot {
       spark.createDataFrame(
         java.util.Collections.singletonList(row), schema)
     } else {
-      val scanSizes = scanFiles.map(sizes.getOrElse(_, -1L))
-      val oneTask = !scanSizes.contains(-1L) && graft.plans.CollectLocally.fits(
-        scanFiles.size, scanSizes.sum, spark.sessionState.conf)
-      val s = scanStats(planLive(spark, root, scanFiles, sizes, zmaps),
-        startMs, endMs, oneTask)
+      val oneTask = graft.plans.CollectLocally.fits(
+        scanFiles.size, scanFiles.map(_._2).sum, spark.sessionState.conf)
+      val s = scanStats(logFrame(spark, index.rootPaths.head.toString,
+        scanFiles, zmaps), startMs, endMs, oneTask)
       vMeta match {
         case None => s
         case Some((mn, mx)) => s.select(
@@ -970,12 +958,14 @@ object Snapshot {
     st.live.filter(_.startsWith(s"shard_hour=$hour/"))
 
   /** Rewrite each hour of `hours`: `transform(hour, rows)` over the
-    * hour's live rows (without the partition column) is written as
-    * `targetFiles` timestamp-sorted files into one staging directory,
-    * and the files move into their hours ALONGSIDE the old ones. Returns
+    * hour's live rows ([[logFrame]], without the partition column) is
+    * written as `targetFiles` timestamp-sorted files into one staging
+    * directory, and the files move into their hours ALONGSIDE the old
+    * ones. Returns
     * (moved files, replaced files) for the caller's one commit, which
     * tombstones the replaced files: readers planned before it keep
-    * reading them until [[vacuum]]. One Spark write per hour. */
+    * reading them until [[vacuum]]. One Spark write per hour, and no
+    * other job: the read needs no schema inference or file listing. */
   private def rewriteHours(spark: SparkSession, fs: FileSystem, root: String,
       st: LogState, hours: Seq[Long], targetFiles: Int = 1)(
       transform: (Long, DataFrame) => DataFrame): (Seq[(String, Long)], Seq[String]) = {
@@ -983,17 +973,15 @@ object Snapshot {
     val replaced = hours.map { h =>
       val old = liveIn(st, h)
       require(old.nonEmpty, s"no live files for shard_hour=$h")
-      transform(h, spark.read.option("basePath", root)
-          .parquet(old.map(f => s"$root/$f"): _*).drop("shard_hour"))
+      Ingest.storeWriter(transform(h,
+          logFrame(spark, root, old.map(f => (f, st.sizes(f))), st.zmaps)
+            .drop("shard_hour"))
         .select(col("timestamp"), col("value"), col("metric"))
         // range-partition on timestamp (ADVICE r13): each rewritten file
         // owns a disjoint contiguous timestamp slice, sorted within, so
         // its refreshed zone map still prunes WITHIN the hour
         .repartitionByRange(targetFiles, col("timestamp"))
-        .sortWithinPartitions(col("timestamp"))
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd")
-        .option("parquet.writer.version", "v2")
+        .sortWithinPartitions(col("timestamp")), SaveMode.Overwrite)
         .parquet(new Path(staging, s"shard_hour=$h").toString)
       old
     }
@@ -1083,12 +1071,8 @@ object Snapshot {
   def describeStore(spark: SparkSession, root: String): DataFrame = {
     val fs = fsFor(spark, root)
     val st = managedState(fs, root, "describeStore")
-    def bytes(f: String) = st.sizes(f) match {
-      case n if n >= 0 => n
-      case _ => fs.getFileStatus(new Path(root, f)).getLen // legacy sizeless line
-    }
     val meta = st.live.groupBy(hourOf).toSeq
-      .map { case (h, files) => (h, files.size.toLong, files.map(bytes).sum) }
+      .map { case (h, files) => (h, files.size.toLong, files.map(st.sizes).sum) }
     val rows = planState(spark, root, st)
       .groupBy(col("shard_hour").cast("long").as("shard_hour"))
       .agg(count(lit(1)).as("n_rows"))

@@ -991,7 +991,7 @@ class AnalyticsSpec extends AnyFunSuite with SparkSpec {
     assert(!droppedPlan.contains("graft_bloom_might_contain"))
   }
 
-  test("bloomEdgeBudget: heap-proportional by default, pinned by conf") {
+  test("bloomEdgeBudget: heap-proportional, capped by maxResultSize") {
     import graft.operators.Graph
     val derived = Graph.bloomEdgeBudget(spark)
     // min of (~1.2 B/edge at ≤ 10% of max heap) and the driver's
@@ -1006,9 +1006,6 @@ class AnalyticsSpec extends AnyFunSuite with SparkSpec {
       if (maxResult <= 0L) Long.MaxValue
       else (maxResult / 1.2 / 1.1).toLong
     assert(derived == math.min(heapEdges, resultEdges))
-    spark.conf.set("spark.graft.bloom.maxEdges", "12345")
-    try assert(Graph.bloomEdgeBudget(spark) == 12345L)
-    finally spark.conf.unset("spark.graft.bloom.maxEdges")
   }
 
   test("closedWedges closing probe: shuffle_hash under the edge cap, " +

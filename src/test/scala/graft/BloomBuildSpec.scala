@@ -46,17 +46,15 @@ class BloomBuildSpec extends AnyFunSuite with SparkSpec {
     assert(!bf.mightContainLong(42L))
   }
 
-  test("shards conf pins the sub-filter count; negative hashes route correctly") {
-    spark.conf.set("spark.graft.bloom.shards", "3")
-    try {
-      // mix of negative and positive longs exercises the pmod routing on
-      // both build and probe sides
-      val df = spark.range(100000)
-        .select((col("id") * -7919 + 13).as("h"))
-      val bf = BloomBuild.overLongColumn(df, "h", 100000, 0.01)
-      assert(bf.shards.length == 3)
-      (0L until 100000L by 777).foreach(v =>
-        assert(bf.mightContainLong(v * -7919 + 13)))
-    } finally spark.conf.unset("spark.graft.bloom.shards")
+  test("negative hashes route correctly at the default shard count") {
+    // mix of negative and positive longs exercises the pmod routing on
+    // both build and probe sides
+    val df = spark.range(100000)
+      .select((col("id") * -7919 + 13).as("h"))
+    val bf = BloomBuild.overLongColumn(df, "h", 100000, 0.01)
+    assert(bf.shards.length ==
+      math.min(64, math.max(8, spark.sparkContext.defaultParallelism)))
+    (0L until 100000L by 777).foreach(v =>
+      assert(bf.mightContainLong(v * -7919 + 13)))
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Analytics, Dedup, Graph}
+import graft.operators.{Analytics, Dedup, Graph, Materialize}
 
 /** Block loss in the middle of an iterative query: every checkpoint the
   * returned frame's plan reaches is unpersisted, then the frame is
@@ -85,6 +85,32 @@ class MaterializeSpec extends AnyFunSuite with SparkSpec {
         assert(rows(loseBlocks(df)) == expected)
       }
     }
+  }
+
+  test("sssp, harmonicCentrality and kCore leave no dead cut persisted") {
+    val s = spark
+    import s.implicits._
+    val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L))
+    val sym = Graph.symmetricEdges(pairs.toDF("u", "v"))
+    val ops = Seq[(String, () => DataFrame)](
+      "sssp" -> (() => Graph.sssp(
+        pairs.map { case (u, v) => (u, v, 1L) }.toDF("src", "dst", "w"),
+        Seq(1L).toDF("node"), rounds = 3)),
+      "harmonicCentrality" -> (() =>
+        Graph.harmonicCentrality(sym, Seq(1L, 4L), maxHops = 3, topK = 3)),
+      // a triangle plus a tail: the 2-core is reached well inside the cap
+      "kCore" -> (() => Graph.kCore(sym, k = 2, maxRounds = 10)))
+    val dead = ops.map { case (name, op) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val df = op()
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      val live = reached(df).map(_.id).toSet
+      assert(live.nonEmpty, s"$name: the returned plan reaches no cut")
+      df.collect()
+      Materialize.release(df)
+      name -> (left -- live)
+    }.filter(_._2.nonEmpty)
+    assert(dead.isEmpty, s"cuts no returned plan reaches: ${dead.mkString(", ")}")
   }
 
   test("localCheckpoint( and .checkpoint( appear in src/main code only " +

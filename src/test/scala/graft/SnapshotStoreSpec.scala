@@ -33,7 +33,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     assert(Snapshot.read(spark, store).count() == 1000)
     val g1 = Snapshot.commit(spark, store)
     assert(g1 == 1 && Snapshot.read(spark, store).count() == 1500)
-    // partition column survives the explicit-file-list read
+    // partition column survives the log-planned read
     assert(Snapshot.read(spark, store)
       .filter(col("shard_hour") === baseMs / hourMs).count() == 1000)
   }
@@ -303,9 +303,9 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     assert(Snapshot.read(spark, store).count() == 350)
   }
 
-  test("manifest-planned reads: zero-FS-call plan equals the listed " +
-      "store, prunes shard_hour partitions, and sizeless legacy " +
-      "manifests fall back to the explicit-list read") {
+  // zero-FS-call plan equals the listed store, prunes shard_hour
+  // partitions, and a size-less legacy manifest plans from the log too
+  test("manifest-planned reads, legacy size-less logs included") {
     val store = Files.createTempDirectory("graft_snapidx_").toString
     (0 until 3).foreach(h => Ingest.ingestBatch(points(200, h, s"m$h"), store))
     Snapshot.commit(spark, store)
@@ -329,7 +329,8 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     assert(df.columns.toSet ==
       Set("timestamp", "value", "metric", "shard_hour"))
     // legacy (pre-size) manifest: rewrite the checkpoint without sizes —
-    // the reader must fall back to the explicit-file-list plan, same rows
+    // the log replay statuses each live file once, so the read still
+    // plans through ManifestFileIndex, with the same rows
     val mdir = new java.io.File(s"$store/${Snapshot.ManifestDir}")
     val ckpt = mdir.listFiles().filter(_.getName.startsWith("m"))
       .maxBy(_.getName.stripPrefix("m").toLong)
@@ -342,10 +343,21 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     // above (simulating an old writer's file) must not trip it
     new java.io.File(mdir, s".${ckpt.getName}.crc").delete()
     val legacy = Snapshot.read(spark, store)
-    assert(!legacy.queryExecution.analyzed.toString.contains("ManifestFileIndex") &&
-      !legacy.queryExecution.executedPlan.toString.contains("ManifestFileIndex"))
+    assert(legacy.queryExecution.executedPlan.toString.contains("ManifestFileIndex"))
     assert(legacy.count() == 600 &&
       legacy.exceptAll(plain).count() == 0)
+    // vacuum's checkpoint records the sizes the replay resolved
+    Snapshot.vacuum(spark, store)
+    val vacuumed = mdir.listFiles().filter(_.getName.startsWith("m"))
+      .maxBy(_.getName.stripPrefix("m").toLong)
+    val liveLines = scala.io.Source.fromFile(vacuumed).getLines()
+      .filter(_.startsWith("live ")).toList
+    assert(liveLines.nonEmpty && liveLines.forall(l =>
+      l.split(" ") match {
+        case Array(_, sz, path) => sz.toLong == new java.io.File(store, path).length
+        case _ => false
+      }), liveLines.mkString("\n"))
+    assert(Snapshot.read(spark, store).exceptAll(plain).count() == 0)
   }
 
   test("log v2 txn: ingestOnce skips re-delivered batches, and the " +
@@ -633,6 +645,36 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
       jobs.foreach { case (call, n) => assert(n == 1, s"$call started $n jobs") }
       assert(Snapshot.read(spark, store).count() == 500)
     } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("compactShard starts the same jobs on a 4-file and a 40-file hour") {
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    val store = Files.createTempDirectory("graft_snapcompactjobs_").toString
+    val cm = Snapshot.committer(spark, store)
+    // one file per input partition per hour: 4 files in hour 0, 40 in hour 1
+    cm.ingest(points(400, 0, "a").repartition(4))
+    (0 until 10).foreach(i => cm.ingest(points(400, 1, s"b$i").repartition(4)))
+    def filesIn(h: Int) = Snapshot.latest(spark, store)._2
+      .count(_.startsWith(s"shard_hour=${baseMs / hourMs + h}/"))
+    assert(filesIn(0) == 4 && filesIn(1) == 40)
+    spark.sparkContext.addSparkListener(counter)
+    val jobs = try (0 to 1).map { h =>
+      // drain stragglers from the previous block, then count
+      Thread.sleep(1500); counter.n.set(0)
+      Snapshot.compactShard(spark, store, baseMs / hourMs + h)
+      Thread.sleep(1500); counter.n.get
+    } finally spark.sparkContext.removeSparkListener(counter)
+    // the read plans from the log: no schema-inference job, no parallel
+    // listing job past the discovery threshold — only the write's jobs
+    assert(jobs(0) == jobs(1) && jobs(0) <= 2, s"jobs per compaction: $jobs")
+    assert(filesIn(0) == 1 && filesIn(1) == 1)
+    assert(Snapshot.read(spark, store).count() == 4400)
   }
 
   test("two racing committers under LockLeaseGuard, a compaction and a " +
