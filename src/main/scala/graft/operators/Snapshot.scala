@@ -71,8 +71,10 @@ import graft.sources.FileZoneStats
   *    one commit that adds the files it wrote and tombstones the files
   *    it replaced or dropped, so a reader keeps its generation's rows
   *    until [[vacuum]]. Every commit, vacuum's included, goes through
-  *    [[commitLog]]. A store with no manifest is refused: it has no log
-  *    to commit to ([[commit]] adopts it first).
+  *    [[commitLog]].
+  *  - a directory with no manifest is not a store: every read
+  *    ([[read]], [[readWithGen]], [[pin]], [[rangeStats]]) and every
+  *    lifecycle op refuses it and names [[commit]], which adopts it.
   * Writers follow the single-mid-commit contract above (or register a
   * [[CommitGuard]]); readers are unlimited. */
 object Snapshot {
@@ -332,8 +334,9 @@ object Snapshot {
     (s.gen, s.live, s.dead.values.toSeq)
   }
 
-  /** The state of a manifest-managed store, for an op that changes it;
-    * a plain store has no log to commit to, so `op` refuses it. */
+  /** The state of a manifest-managed store, for a read or an op that
+    * changes it; a plain directory has no log to plan from or commit
+    * to, so `op` refuses it. */
   private def managedState(fs: FileSystem, root: String, op: String): LogState = {
     val st = loadState(fs, root)
     require(st.gen >= 0,
@@ -764,25 +767,21 @@ object Snapshot {
       commitSized(stageBatch(points, root), CheckpointEvery, retries = 2, txn)
   }
 
-  /** Snapshot read of the latest committed generation (falls back to a
-    * plain directory read when the store has no manifest). */
+  /** Snapshot read of the latest committed generation. A directory with
+    * no manifest is refused: it has no log to plan from ([[commit]]
+    * adopts it first). */
   def read(spark: SparkSession, root: String): DataFrame =
     readWithGen(spark, root)._2
 
   /** Like [[read]] but also returns the generation the plan is pinned
-    * to (−1 for a manifest-free store), from the SAME manifest lookup —
-    * serving tiers label results with it so snapshot isolation is
-    * checkable per generation (r10 advisor: completion order across
-    * concurrent clients is not commit order). */
+    * to, from the SAME manifest lookup — serving tiers label results
+    * with it so snapshot isolation is checkable per generation (r10
+    * advisor: completion order across concurrent clients is not commit
+    * order). */
   def readWithGen(spark: SparkSession, root: String): (Long, DataFrame) = {
-    val st = loadState(fsFor(spark, root), root)
-    (st.gen, planState(spark, root, st))
+    val st = managedState(fsFor(spark, root), root, "read")
+    (st.gen, logFrame(spark, root, st.live.map(f => (f, st.sizes(f))), st.zmaps))
   }
-
-  private def planState(spark: SparkSession, root: String,
-      st: LogState): DataFrame =
-    if (st.gen < 0) spark.read.parquet(root)
-    else logFrame(spark, root, st.live.map(f => (f, st.sizes(f))), st.zmaps)
 
   /** Every read of a manifest store: exactly `files` (store-relative
     * path, bytes) through a [[graft.sources.ManifestFileIndex]] — zero
@@ -842,9 +841,8 @@ object Snapshot {
     * aggregate pass). Otherwise the scan side aggregates just the
     * boundary/legacy files and the two partials combine exactly
     * (count is a sum; min/max are associative; `least`/`greatest` skip
-    * the empty-scan NULL). Any other frame — a manifest-free store's
-    * read, or a frame already filtered or projected — is aggregated by a
-    * scan of the frame. */
+    * the empty-scan NULL). Any other frame — one already filtered or
+    * projected — is aggregated by a scan of the frame. */
   def rangeStats(points: DataFrame, startMs: Long, endMs: Long): DataFrame = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     points.queryExecution.analyzed match {
@@ -928,13 +926,11 @@ object Snapshot {
     * any fixed grace window. */
   def pin(spark: SparkSession, root: String): (DataFrame, Lease) = {
     val fs = fsFor(spark, root)
-    val st = loadState(fs, root)
-    require(st.gen >= 0, s"no manifest at $root — nothing to pin")
-    val dir = new Path(root, ManifestDir)
-    val f = new Path(dir, s"lease-${java.util.UUID.randomUUID()}")
+    val (gen, df) = readWithGen(spark, root)
+    val f = new Path(new Path(root, ManifestDir), s"lease-${java.util.UUID.randomUUID()}")
     val outS = fs.create(f, false)
-    try outS.write(st.gen.toString.getBytes("UTF-8")) finally outS.close()
-    (planState(spark, root, st), new Lease(st.gen, fs, f))
+    try outS.write(gen.toString.getBytes("UTF-8")) finally outS.close()
+    (df, new Lease(gen, fs, f))
   }
 
   /** Active leases as (gen, leaseFile, mtime). */
@@ -1073,7 +1069,7 @@ object Snapshot {
     val st = managedState(fs, root, "describeStore")
     val meta = st.live.groupBy(hourOf).toSeq
       .map { case (h, files) => (h, files.size.toLong, files.map(st.sizes).sum) }
-    val rows = planState(spark, root, st)
+    val rows = logFrame(spark, root, st.live.map(f => (f, st.sizes(f))), st.zmaps)
       .groupBy(col("shard_hour").cast("long").as("shard_hour"))
       .agg(count(lit(1)).as("n_rows"))
     spark.createDataFrame(meta).toDF("shard_hour", "n_files", "bytes")

@@ -1,40 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
-
-import graft.model.{shardHourCol, ShardDurationMs}
 
 /** Structured-Streaming ingest — the durable write path the reference's
   * README *claims* (WAL + memtable, README.md:17-23) but never implements
-  * (SURVEY.md §1.3): checkpointed exactly-once file-sink ingestion plays the
-  * WAL role; watermarked tumbling windows reproduce the hour-shard
+  * (SURVEY.md §1.3): the exactly-once snapshot sink plays the WAL role
+  * (the streaming checkpoint holds progress, each manifest commit carries
+  * its batch id); watermarked tumbling windows reproduce the hour-shard
   * aggregation semantics on late/out-of-order data with a *defined* policy
   * (the reference silently appends out-of-order points, SURVEY.md §1.4).
   */
 object StreamingIngest {
 
-  /** Continuous ingest: stream a source directory of point files into the
-    * hour-partitioned store with checkpointed (WAL) progress. */
-  def ingestStream(spark: SparkSession, sourceDir: String, schema: StructType,
-      storePath: String, checkpoint: String): StreamingQuery =
-    spark.readStream.schema(schema).parquet(sourceDir)
-      .withColumn("shard_hour", shardHourCol(col("timestamp")))
-      .writeStream
-      .partitionBy("shard_hour")
-      .format("parquet")
-      .option("path", storePath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
   /** Exactly-once streaming ingest into a SNAPSHOT-MANIFEST store (log
-    * v2, r11). The plain [[ingestStream]] file sink is exactly-once only
-    * for readers of ITS `_spark_metadata`; a snapshot store's truth is
-    * the manifest, and `foreachBatch` is AT-LEAST-ONCE on restart (the
-    * batch in flight when the query died is re-delivered). Each commit
+    * v2, r11). A snapshot store's truth is the manifest, and
+    * `foreachBatch` is AT-LEAST-ONCE on restart (the batch in flight
+    * when the query died is re-delivered). Each commit
     * therefore carries a `txn <appId> <batchId>` high-water in the
     * manifest — the Delta-style idempotence token: a re-delivered batch
     * id at-or-below the committed high-water is a no-op, and an attempt

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.DataPoint
-import graft.operators.Ingest
+import graft.operators.{Ingest, Snapshot}
 import graft.sources.gorilla.GorillaShardSource
 
 /** The switch-over story end-to-end: a user of the reference engine points
@@ -30,11 +30,11 @@ class MigrationSpec extends AnyFunSuite with SparkSpec {
     graft.sources.gorilla.GorillaShardWriter.writeShards(pts.toDS(), binStore)
 
     // ONE statement migrates: DSv2 read of the .bin shards -> typed points
-    // -> hour-partitioned parquet ingest
+    // -> one committed ingest into the hour-partitioned snapshot store
     val binPoints = spark.read.format(fmt).load(binStore)
       .select(col("timestamp"), col("value"), lit("default").as("metric"))
       .as[DataPoint]
-    Ingest.ingestBatch(binPoints, pqStore)
+    Snapshot.ingestCommitted(binPoints, pqStore)
 
     // the same inclusive range queries answer identically from both stores
     val ranges = Seq((0L, 20000000L), (1000L, 1000L), (3600000L, 7200000L),
@@ -49,7 +49,7 @@ class MigrationSpec extends AnyFunSuite with SparkSpec {
     }
     // total row parity
     assert(spark.read.format(fmt).load(binStore).count() ==
-      spark.read.parquet(pqStore).count())
+      Snapshot.read(spark, pqStore).count())
   }
 
   test("oversized shard (1M points, one hour) streams through without " +
@@ -86,8 +86,8 @@ class MigrationSpec extends AnyFunSuite with SparkSpec {
   test("round trip parquet -> bin -> parquet preserves every point") {
     val pqStore = Files.createTempDirectory("graft_rt_pq_").toString
     val binStore = Files.createTempDirectory("graft_rt_bin_").toString
-    Ingest.ingestBatch(pts.toDS(), pqStore)
-    val back = Ingest.readPoints(spark, pqStore)
+    Snapshot.ingestCommitted(pts.toDS(), pqStore)
+    val back = Snapshot.read(spark, pqStore)
       .select(col("timestamp"), col("value"), col("metric")).as[DataPoint]
     graft.sources.gorilla.GorillaShardWriter.writeShards(back, binStore)
     val got = spark.read.format(fmt).load(binStore)

@@ -7,7 +7,7 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.DataPoint
-import graft.operators.Ingest
+import graft.operators.{Ingest, Snapshot}
 
 /** The reference's core invariant (insight.cpp:42): a range query returns
   * exactly the stored points with start <= ts <= end — property-checked over
@@ -33,7 +33,7 @@ class RangeScanPropertySpec extends AnyFunSuite with SparkSpec {
       val b = sample(boundGen, i * 1000L + 2)
       val (start, end) = (math.min(a, b), math.max(a, b))
       val dir = Files.createTempDirectory("graft_prop_").toString
-      Ingest.ingestBatch(pts.toDS(), dir)
+      Snapshot.ingestCommitted(pts.toDS(), dir)
       val got = Ingest.queryRange(spark, dir, start, end, cap = Int.MaxValue)
         .select("timestamp", "value").as[(Long, Double)].collect().toSeq
       val want = pts.filter(p => p.timestamp >= start && p.timestamp <= end)

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.DataPoint
-import graft.operators.Ingest
+import graft.operators.{Ingest, Snapshot}
 
 /** Mirrors the reference's own test datasets (FIXTURES.md §A):
   * A1 = engine/test_engine.cpp:28-66 (5 points across 3 hour-shards, four
@@ -17,7 +17,7 @@ class ReferenceFidelitySpec extends AnyFunSuite with SparkSpec {
 
   private def freshStore(points: Seq[DataPoint]): String = {
     val dir = Files.createTempDirectory("graft_store_").toString
-    Ingest.ingestBatch(points.toDS(), dir)
+    Snapshot.ingestCommitted(points.toDS(), dir)
     dir
   }
 
@@ -64,7 +64,7 @@ class ReferenceFidelitySpec extends AnyFunSuite with SparkSpec {
 
   test("append after initial write is readable (no codec-state replay needed)") {
     val store = freshStore(a1)
-    Ingest.ingestBatch(Seq(DataPoint(2500L, 25.0)).toDS(), store)
+    Snapshot.ingestCommitted(Seq(DataPoint(2500L, 25.0)).toDS(), store)
     val got = Ingest.queryRange(spark, store, 0L, 3000L).select("timestamp").as[Long].collect()
     assert(got.toSeq == Seq(1000L, 2000L, 2500L))
   }

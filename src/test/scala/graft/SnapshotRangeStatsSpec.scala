@@ -20,7 +20,8 @@ import graft.operators.{Ingest, Snapshot}
   *  - a boundary range scans only the boundary files;
   *  - NaN-carrying and ±0.0-bounded files fall back to the scan side
   *    (footer stats cannot answer them exactly — see rangeStats docs);
-  *  - manifest-free stores fall back to a plain scan.
+  *  - a directory with no manifest is refused until `Snapshot.commit`
+  *    adopts it.
   */
 class SnapshotRangeStatsSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -157,16 +158,15 @@ class SnapshotRangeStatsSpec extends AnyFunSuite with SparkSpec {
       "the zero-bounded file (and only it) must be scanned")
   }
 
-  test("manifest-free store falls back to a plain scan with the same answer") {
+  test("a manifest-free store is refused; once adopted, stats match the scan") {
     val store = Files.createTempDirectory("graft_rs6_").toString
     Ingest.ingestBatch(slice(0L, 899999L, vOff = 2.5), store)
-    val got = Snapshot.rangeStats(spark, store, baseMs, baseMs + hourMs)
-      .collect()(0)
-    val ref = Ingest.readPoints(spark, store)
-      .filter(col("timestamp").between(baseMs, baseMs + hourMs))
-      .agg(count(lit(1)), min(col("value")), max(col("value"))).collect()(0)
-    assert(got.getLong(0) == ref.getLong(0) && got.get(1) == ref.get(1) &&
-      got.get(2) == ref.get(2))
+    val e = intercept[IllegalArgumentException](
+      Snapshot.rangeStats(spark, store, baseMs, baseMs + hourMs))
+    assert(e.getMessage.contains("Snapshot.commit"), e.getMessage)
+    Snapshot.commit(spark, store)
+    val (_, got) = statsOf(store, baseMs, baseMs + hourMs)
+    assert(got._1 == 100L && sameAnswer(got, scanRef(store, baseMs, baseMs + hourMs)))
   }
 
   test("rangeStats over a compacted + vacuumed store still matches the scan") {
@@ -218,17 +218,21 @@ class SnapshotRangeStatsSpec extends AnyFunSuite with SparkSpec {
     ranges.zip(byRoot).foreach { case ((lo, hi), want) =>
       assert(raw(Snapshot.rangeStats(opened, lo, hi).collect()(0)) == want, s"[$lo, $hi]")
     }
-    // a filtered frame and a manifest-free read aggregate what they hold
+    // a filtered frame aggregates what it holds
     val (lo, hi) = (baseMs, baseMs + hourMs)
     val kept = opened.filter(col("value") > 1.5)
     val filtered = Snapshot.rangeStats(kept, lo, hi)
     assert(filesScanned(filtered) > 0L)
     assert(raw(filtered.collect()(0)) == raw(kept.filter(col("timestamp").between(lo, hi))
       .agg(count(lit(1)), min(col("value")), max(col("value"))).collect()(0)))
+    // a directory with no manifest has no frame to aggregate: both the
+    // read that would open one and the root overload refuse it
     val plain = Files.createTempDirectory("graft_rs9_").toString
     Ingest.ingestBatch(slice(0L, 899999L, vOff = 2.5), plain)
-    val plainStats = Snapshot.rangeStats(Ingest.readPoints(spark, plain), lo, hi).collect()(0)
-    assert(raw(plainStats) ==
-      raw(Snapshot.rangeStats(spark, plain, lo, hi).collect()(0)))
+    Seq[() => Any](() => Snapshot.read(spark, plain),
+        () => Snapshot.rangeStats(spark, plain, lo, hi)).foreach { run =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("Snapshot.commit"), e.getMessage)
+    }
   }
 }

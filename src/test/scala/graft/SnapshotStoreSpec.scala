@@ -74,13 +74,14 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     assert(g2 >= 2)
   }
 
-  test("vacuum grace keeps young tombstones; manifest-free store falls " +
-      "back to a directory read") {
+  test("vacuum grace keeps young tombstones; a plain store's read is refused") {
     val store = Files.createTempDirectory("graft_snap3_").toString
     Ingest.ingestBatch(points(200, 0, "a"), store)
     Ingest.ingestBatch(points(200, 0, "b"), store)
-    assert(Snapshot.read(spark, store).count() == 400) // no manifest yet
+    val e = intercept[IllegalArgumentException](Snapshot.read(spark, store))
+    assert(e.getMessage.contains("Snapshot.commit"), e.getMessage) // no manifest yet
     Snapshot.commit(spark, store)
+    assert(Snapshot.read(spark, store).count() == 400)
     Snapshot.compactShard(spark, store, baseMs / hourMs)
     val (_, _, dead) = Snapshot.latest(spark, store)
     assert(dead.nonEmpty)
@@ -91,21 +92,21 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     assert(Snapshot.vacuum(spark, store, graceMs = 0L) == dead.size.toLong)
   }
 
-  test("the DEFAULT read path is manifest-aware: Ingest.readPoints and " +
+  test("the DEFAULT read path is manifest-aware: Snapshot.read and " +
       "queryRange stay exact through the compact-without-vacuum window") {
     val store = Files.createTempDirectory("graft_snap4_").toString
     (0 until 6).foreach(i => Ingest.ingestBatch(points(500, 0, s"m$i"), store))
     Ingest.ingestBatch(points(700, 1, "cpu"), store)
     Snapshot.commit(spark, store)
     val total = 6 * 500 + 700
-    assert(Ingest.readPoints(spark, store).count() == total)
+    assert(Snapshot.read(spark, store).count() == total)
     Snapshot.compactShard(spark, store, baseMs / hourMs)
     // old + compacted files coexist on disk NOW — the r10 trap window.
-    // A plain directory read would double-count hour 0; the Ingest entry
-    // points must not.
+    // A plain directory read would double-count hour 0; the store's read
+    // entry points must not.
     assert(spark.read.parquet(store).count() > total,
       "fixture failed to create the double-count window")
-    assert(Ingest.readPoints(spark, store).count() == total)
+    assert(Snapshot.read(spark, store).count() == total)
     val q = Ingest.queryRange(spark, store, baseMs, baseMs + hourMs - 1,
       cap = 10000)
     assert(q.count() == 3000) // exactly hour 0's rows, once each
@@ -113,13 +114,32 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     assert(q.groupBy("timestamp", "metric").count()
       .filter(col("count") > 1).count() == 0)
     Snapshot.vacuum(spark, store, graceMs = 0L)
-    assert(Ingest.readPoints(spark, store).count() == total)
+    assert(Snapshot.read(spark, store).count() == total)
   }
 
   test("lifecycle ops commit on a manifest store, refuse a plain one") {
     val store = Files.createTempDirectory("graft_snap5_").toString
     Ingest.ingestBatch(points(100, 0, "cpu"), store)
     val h0 = baseMs / hourMs
+    val (lo, hi) = (baseMs, baseMs + hourMs - 1)
+    // the read entry points, each counting the rows it sees
+    val reads = Seq[(String, () => Long)](
+      "read" -> (() => Snapshot.read(spark, store).count()),
+      "readWithGen" -> (() => Snapshot.readWithGen(spark, store)._2.count()),
+      "pin" -> { () =>
+        val (df, lease) = Snapshot.pin(spark, store)
+        try df.count() finally lease.close()
+      },
+      "queryRange" -> (() =>
+        Ingest.queryRange(spark, store, lo, hi, cap = Int.MaxValue).count()),
+      "rangeStats" -> (() =>
+        Snapshot.rangeStats(spark, store, lo, hi).collect()(0).getLong(0)))
+    reads.foreach { case (op, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains(store) && e.getMessage.contains("Snapshot.commit"),
+        s"$op: ${e.getMessage}")
+    }
+    assert(!Snapshot.hasManifest(spark, store), "a refused read created a manifest")
     val ops = Seq[(String, () => Any)](
       "compactShard" -> (() => Snapshot.compactShard(spark, store, h0)),
       "expireShards" -> (() => Snapshot.expireShards(spark, store, h0 - 1)),
@@ -133,9 +153,10 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     }
     assert(spark.read.parquet(store).count() == 100, "a refused op changed the store")
     Snapshot.commit(spark, store)
+    reads.foreach { case (op, run) => assert(run() == 100L, op) }
     ops.foreach { case (_, run) => run() }
     // the delete took ids 0..10; the upsert put id 0 back
-    assert(Ingest.readPoints(spark, store).count() == 100 - 11 + 1)
+    assert(Snapshot.read(spark, store).count() == 100 - 11 + 1)
   }
 
   test("vacuum grace runs from TOMBSTONE time, not file mtime: " +
@@ -216,7 +237,6 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     assert(Snapshot.read(spark, store).count() == 700)
     Snapshot.ingestCommitted(points(200, 0, "mem"), store)
     assert(Snapshot.read(spark, store).count() == 900)
-    assert(Ingest.readPoints(spark, store).count() == 900)
     // adopt-everything commit() is the explicit opt-in that takes it
     Snapshot.commit(spark, store)
     assert(Snapshot.read(spark, store).count() > 900)
@@ -510,7 +530,6 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     assert(!agedCompact.exists(), "aged compaction staging directory not swept")
     assert(fresh.exists(), "in-flight staging directory must not be taken")
     assert(Snapshot.read(spark, store).count() == 100)
-    assert(Ingest.readPoints(spark, store).count() == 100)
   }
 
   test("two sustained streaming writers (distinct appIds) interleave " +
@@ -553,7 +572,6 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     java.nio.file.Files.copy(donor.toPath, orphan.toPath)
     cm.ingest(points(300, 0, "mem"))
     assert(Snapshot.read(spark, store).count() == 700)
-    assert(Ingest.readPoints(spark, store).count() == 700)
     // a crashed attempt's leftover staging directory (its write finished,
     // the writer died before the move) is never adopted: not by a later
     // ingest, not by an ingestOnce retry of the same batch, and not by

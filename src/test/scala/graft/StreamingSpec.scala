@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.DataPoint
-import graft.operators.Ingest
+import graft.operators.Snapshot
 import graft.streaming.StreamingIngest
 
-/** Streaming parity: the checkpointed streaming ingest and the watermarked
+/** Streaming parity: the exactly-once snapshot sink and the watermarked
   * tumbling downsample must agree with their batch equivalents on the same
   * data (SURVEY.md §2.2 streaming row).
   */
@@ -19,29 +19,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   private val points =
     (0 until 5000).map(i => DataPoint(i * 3000L, 50.0 + 20.0 * math.sin(i / 100.0)))
 
-  test("streaming ingest lands the same rows as batch ingest, hour-partitioned") {
-    val src = Files.createTempDirectory("graft_stream_src_").toString
-    val store = Files.createTempDirectory("graft_stream_store_").toString
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt_").toString
-    points.toDS().toDF().write.mode("overwrite").parquet(src)
-    val schema = spark.read.parquet(src).schema
-
-    val q = StreamingIngest.ingestStream(spark, src, schema, store, ckpt)
-    q.awaitTermination(120000)
-
-    val got = spark.read.parquet(store)
-    assert(got.count() == points.size)
-    assert(got.select("shard_hour").distinct().count() ==
-      points.map(_.timestamp / 3600000L).distinct.size)
-    // restart with no new data: checkpoint prevents duplicate ingestion
-    val q2 = StreamingIngest.ingestStream(spark, src, schema, store, ckpt)
-    q2.awaitTermination(120000)
-    assert(spark.read.parquet(store).count() == points.size)
-  }
-
   test("streaming snapshot sink is exactly-once into the manifest store: " +
       "restart continues, checkpoint loss never duplicates") {
-    import graft.operators.Snapshot
     val src = Files.createTempDirectory("graft_snapsink_src_").toString
     val store = Files.createTempDirectory("graft_snapsink_store_").toString
     val ckpt = Files.createTempDirectory("graft_snapsink_ckpt_").toString
@@ -54,18 +33,21 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     q.awaitTermination(120000)
     // reads go through the MANIFEST (snapshot store, not a plain dir)
     assert(Snapshot.hasManifest(spark, store))
-    assert(Ingest.readPoints(spark, store).count() == half.size)
+    assert(Snapshot.read(spark, store).count() == half.size)
 
     // restart with more source data: the checkpoint resumes, the manifest
     // commits exactly the new batches
     points.drop(2500).toDS().toDF().write.mode("append").parquet(src)
     val q2 = StreamingIngest.snapshotSinkStream(stream(), store, ckpt.toString)
     q2.awaitTermination(120000)
-    assert(Ingest.readPoints(spark, store).count() == points.size)
+    assert(Snapshot.read(spark, store).count() == points.size)
     // no (timestamp, metric) pair landed twice
-    assert(Ingest.readPoints(spark, store)
+    assert(Snapshot.read(spark, store)
       .groupBy("timestamp", "metric").count()
       .filter(col("count") > 1).count() == 0)
+    // every point landed in its hour shard
+    assert(Snapshot.read(spark, store).select("shard_hour").distinct().count() ==
+      points.map(_.timestamp / 3600000L).distinct.size)
 
     // disaster case: the CHECKPOINT is lost but the store survives. A
     // fresh checkpoint re-delivers everything as new batch ids starting
@@ -74,7 +56,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val ckpt2 = Files.createTempDirectory("graft_snapsink_ckpt2_").toString
     val q3 = StreamingIngest.snapshotSinkStream(stream(), store, ckpt2.toString)
     q3.awaitTermination(120000)
-    assert(Ingest.readPoints(spark, store).count() == points.size)
+    assert(Snapshot.read(spark, store).count() == points.size)
   }
 
   test("watermarked streaming downsample equals the batch aggregation") {
