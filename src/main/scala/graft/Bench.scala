@@ -81,15 +81,6 @@ object Bench {
     // the full suite (~minutes apart) a throttle window can poison at most
     // one rep of any query, so the per-query min survives it.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // SPARK_GRAFT_BENCH_MODE=backtoback restores the pre-round-7 rep
-    // order (all reps of a query consecutively) for CALIBRATION runs
-    // only: back-to-back minima are systematically warmer than
-    // interleaved ones (shared scans still in page cache), so the two
-    // modes are different scales — one same-commit pair on a quiet host
-    // converts between them (PLANS.md round 8). Interleaved stays the
-    // default: a host throttle window can poison at most one rep/query.
-    val backToBack =
-      sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("backtoback")
     // 2 untimed warmup passes over the whole suite before any timed rep
     // (r11 judge + PLANS.md round 11 finding: the first execution of a plan
     // pays 15-40x in JIT/codegen/footer-cache costs, and the official
@@ -104,10 +95,7 @@ object Bench {
     val timed = scala.collection.mutable.Map.empty[String, List[(Double, Double)]]
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val repLoads = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val order =
-      if (backToBack)
-        for (name <- names; r <- -warmups until reps) yield (r, name)
-      else for (r <- -warmups until reps; name <- names) yield (r, name)
+    val order = for (r <- -warmups until reps; name <- names) yield (r, name)
 
     // One honest timed execution of a declared query; returns
     // (seconds, 1-min load at start) or None on failure.
@@ -160,15 +148,11 @@ object Bench {
     canaryOnce() // warm the canary's own codegen outside the series
     val canaries = scala.collection.mutable.ArrayBuffer.empty[Double]
 
-    var lastGroup: Any = null
+    var lastPass = Int.MinValue
     for ((r, name) <- order) {
-      // one load sample per interleaved PASS, or per QUERY GROUP in
-      // backtoback mode (pre-r13 backtoback emitted an empty array while
-      // bench_reps implied passes ran — a misleading telemetry gap); the
-      // *_kind marker below says which one the artifact carries
-      val group: Any = if (backToBack) name else r
-      if (group != lastGroup) {
-        lastGroup = group; repLoads += osBean.getSystemLoadAverage
+      // one load sample and one canary per PASS
+      if (r != lastPass) {
+        lastPass = r; repLoads += osBean.getSystemLoadAverage
         canaries += canaryOnce()
       }
       runOnce(name).foreach { case (dt, load) =>
@@ -294,16 +278,13 @@ object Bench {
     // canary floor sat in a throttled host window — its reps are suspect
     // even when loadavg looked clean. Purely diagnostic: the headline
     // stays the per-query min, which the OTHER (clean) passes defend.
-    // FIELD SEMANTICS (r14 verdict #8): in interleaved mode the first
-    // `bench_warmups` passes are UNTIMED warmup sweeps whose canaries
-    // routinely trip the band while the JVM warms — they are listed in
+    // FIELD SEMANTICS (r14 verdict #8): the first `bench_warmups`
+    // passes are UNTIMED warmup sweeps whose canaries routinely trip the
+    // band while the JVM warms — they are listed in
     // `canary_warmup_passes` and EXCLUDED from `canary_flagged_passes`,
-    // so a reader/driver can gate on the flag directly. In backtoback
-    // mode passes are query groups (warmup reps run inside each group),
-    // so `canary_warmup_passes` is empty there.
+    // so a reader/driver can gate on the flag directly.
     val canaryFloor = if (canaries.isEmpty) -1.0 else canaries.min
-    val canaryWarmupIdx: Set[Int] =
-      if (backToBack) Set.empty else (0 until warmups).toSet
+    val canaryWarmupIdx: Set[Int] = (0 until warmups).toSet
     val canaryFlagged = canaries.zipWithIndex
       .collect { case (c, i) if canaryFloor > 0 && c > 1.35 * canaryFloor &&
         !canaryWarmupIdx.contains(i) => i }
@@ -319,7 +300,7 @@ object Bench {
       s""""queries_load":$qsLoad,"bench_reps":$reps,"bench_warmups":$warmups,""" +
       s""""load_gate":${"%.2f".formatLocal(java.util.Locale.ROOT, loadGate)},""" +
       s""""retried":$retriedJson,""" +
-      s""""load_avg_per_pass_kind":"${if (backToBack) "query_group" else "pass"}",""" +
+      s""""load_avg_per_pass_kind":"pass",""" +
       s""""load_avg_per_pass":$repLoadsJson,""" +
       s""""canary_per_pass":$canaryJson,""" +
       s""""canary_floor":${fmt(canaryFloor)},""" +

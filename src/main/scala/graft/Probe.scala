@@ -12,9 +12,8 @@ object Probe {
     val Array(sfDir, repsS, names) = args
     val reps = repsS.toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // shuffle partitions = cores, the Bench convention
+    // shuffle partitions = cores (GraftSession), the Bench convention
     val spark = GraftSession.local(cpus.toInt, "graft-probe")
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
     try graft.sources.Tables.events(spark, sfDir).count()

@@ -23,7 +23,10 @@ import graft.model.{shardHourCol, DataPoint, ShardDurationMs}
   * consolidation. Reads prune partitions first, then parquet row-group
   * stats prune within the hour.
   *
-  * This object holds the store's file format and its range scan. The
+  * This object holds the store's one file writer ([[writeStore]]) and
+  * its range scan. Every store file — an append's or a rewrite's — is
+  * written by [[writeStore]] into a staging directory and moved into its
+  * hour by [[Snapshot.stage]]. The
   * store itself is a [[Snapshot]] manifest store: appends
   * ([[Snapshot.ingestCommitted]], [[Snapshot.Committer]]) and the
   * lifecycle ops — retention, compaction, point upsert, range delete and
@@ -33,24 +36,26 @@ import graft.model.{shardHourCol, DataPoint, ShardDurationMs}
 object Ingest {
 
   /** Write a typed set of points as hour-partitioned store files under
-    * `path`, uncommitted: [[Snapshot.stageBatch]] writes each append this
-    * way into its staging directory before it commits the moved files. */
+    * `path`, uncommitted (see [[writeStore]]). */
   private[graft] def ingestBatch(points: Dataset[DataPoint], path: String): Unit =
-    storeWriter(points.toDF()
-      .withColumn("shard_hour", shardHourCol(col("timestamp")))
-      // sort within partitions so parquet min/max stats are tight per file
-      .sortWithinPartitions(col("shard_hour"), col("timestamp")), SaveMode.Append)
-      .partitionBy("shard_hour").parquet(path)
+    writeStore(points.toDF(), path)
 
-  /** `df`'s writer in the store's file format, for every writer of store
-    * files (ingest and [[Snapshot]]'s rewrites): parquet v2 pages
-    * (DELTA_BINARY_PACKED on the 1s-spaced timestamps) + zstd BEATS the
-    * reference's Gorilla codec: measured 7.8 B/pt vs its ~8.2
-    * (README.md:99) on the same 1M-point workload. */
-  private[operators] def storeWriter(df: DataFrame, mode: SaveMode) =
-    df.write.mode(mode)
+  /** The one writer of store files: `rows` (the store columns
+    * `timestamp, value, metric`) are appended under `path` as
+    * `shard_hour=<hour>/` parquet files, uncommitted — [[Snapshot]]
+    * stages every append and rewrite through it. Rows are sorted within
+    * partitions by (hour, timestamp), so each file's min/max stats are
+    * tight. Parquet v2 pages (DELTA_BINARY_PACKED on the 1s-spaced
+    * timestamps) + zstd BEAT the reference's Gorilla codec: measured
+    * 7.8 B/pt vs its ~8.2 (README.md:99) on the same 1M-point workload. */
+  private[graft] def writeStore(rows: DataFrame, path: String): Unit =
+    rows.select(col("timestamp"), col("value"), col("metric"),
+        shardHourCol(col("timestamp")).as("shard_hour"))
+      .sortWithinPartitions(col("shard_hour"), col("timestamp"))
+      .write.mode(SaveMode.Append)
       .option("compression", "zstd")
       .option("parquet.writer.version", "v2")
+      .partitionBy("shard_hour").parquet(path)
 
   /** Bucketed write (hash-bucket co-location): both sides of a recurring
     * fact-fact join written with the SAME bucket count on the join key join

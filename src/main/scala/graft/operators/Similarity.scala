@@ -400,16 +400,6 @@ object Similarity {
           count(lit(1)).cast("double")).as("mean_norm"))
   }
 
-  /** [[labelCentroidRows]] reassembled to one centroid array per label —
-    * the library-surface form. */
-  def labelCentroids(embeddings: DataFrame, dims: Int = 64): DataFrame =
-    labelCentroidRows(embeddings, dims)
-      .groupBy(col("label"))
-      .agg(first(col("n")).as("n"),
-        transform(
-          sort_array(collect_list(struct(col("dim"), col("value")))),
-          p => p.getField("value")).as("centroid"))
-
   /** Product-quantization codebooks: `m` subspaces × `kCent` centroids,
     * the subvectors of the `kCent` smallest vec_ids (seed-medoid —
     * deterministic and SQL-reproducible, same convention as the IVF seed

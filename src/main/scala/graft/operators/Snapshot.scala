@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.DataPoint
@@ -56,14 +56,15 @@ import graft.sources.FileZoneStats
   *    the oldest pinned generation (the reader may still scan it);
   *    abandoned leases expire after `leaseTtlMs` so a crashed reader
   *    cannot block deletion forever.
-  *  - appends: [[ingestCommitted]] (and [[Committer.ingest]]) is ONE
-  *    Spark job per commit — the batch is written into a private
-  *    `.ingest_stage_<uuid>/` directory, its files are renamed into
-  *    their hours, and the commit adds EXACTLY the moved files. A torn
-  *    write from an earlier crashed job stays in its own staging
-  *    directory (swept by [[vacuum]]) and is never silently adopted as
-  *    live data. On S3A the rename is a copy: one extra copy per file,
-  *    the cost [[compactShard]] already pays. The adopt-everything
+  *  - every store file is written one way, [[stage]]: one write by
+  *    [[Ingest.writeStore]] into a private `.ingest_stage_<uuid>/`
+  *    directory, whose files are renamed into their hours under the
+  *    writer's own names; the commit then adds EXACTLY the moved files.
+  *    An append ([[ingestCommitted]], [[Committer.ingest]]) is ONE Spark
+  *    job per commit. A torn write from an earlier crashed job stays in
+  *    its own staging directory (swept by [[vacuum]]) and is never
+  *    silently adopted as live data. On S3A the rename is a copy: one
+  *    extra copy per file. The adopt-everything
   *    [[commit]] stays available for initial adoption of a pre-existing
   *    plain store, where directory contents ARE the truth by definition.
   *  - the lifecycle ops — [[compactShard]], [[expireShards]],
@@ -581,63 +582,49 @@ object Snapshot {
     commitLog(fs, root, st, added).gen
   }
 
-  /** Root-level staging directory prefixes: one directory per ingest
-    * batch, one per compaction. Nothing reads them — [[listDataFiles]]
-    * and the log name `shard_hour=*` paths only — so files a crashed
-    * writer leaves there are never adopted; [[vacuum]] deletes such a
-    * directory once it is older than its lease TTL. */
-  private[graft] val IngestStaging = ".ingest_stage_"
-  private val CompactStaging = ".compact_snap_"
+  /** Root-level staging directory prefix, one directory per staged
+    * write. Nothing reads them — [[listDataFiles]] and the log name
+    * `shard_hour=*` paths only — so files a crashed writer leaves there
+    * are never adopted; [[vacuum]] deletes such a directory once it is
+    * older than its lease TTL. */
+  private[graft] val Staging = ".ingest_stage_"
 
-  /** Move the parquet files of each `(dir, hour)` into
-    * `root/shard_hour=<hour>/` under `name(hour, fileName)`, delete
-    * `staging`, and return the moved files as `(relpath, bytes)`: exactly
-    * what the caller commits. One rename per file — a metadata operation
-    * on HDFS, ABFS and the local FS, a copy on S3A. */
-  private def moveStaged(fs: FileSystem, root: String, staging: Path,
-      dirs: Seq[(Path, Long)],
-      name: (Long, String) => String): Seq[(String, Long)] = {
-    val moved = dirs.flatMap { case (dir, hour) =>
-      val part = s"shard_hour=$hour"
-      val partDir = new Path(root, part)
-      fs.mkdirs(partDir)
-      fs.listStatus(dir).toSeq
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map { f =>
-          val n = name(hour, f.getPath.getName)
-          require(fs.rename(f.getPath, new Path(partDir, n)),
-            s"could not move ${f.getPath} into $partDir")
-          (s"$part/$n", f.getLen) // rename preserves length
-        }
-    }
+  /** Write `rows` (the store columns) with [[Ingest.writeStore]] into a
+    * fresh staging directory under `root` — one write, so the rows are
+    * evaluated exactly once — then rename each file into its hour under
+    * the writer's own (job-unique) name and delete the staging
+    * directory. Returns the moved files as `(relpath, bytes)`: exactly
+    * what the caller commits; nothing is committed here. Every write has
+    * its own output directory, so concurrent writers never share
+    * Hadoop's `_temporary` tree, and a write that dies before its move
+    * leaves nothing in any hour. One rename per file — a metadata
+    * operation on HDFS, ABFS and the local FS, a copy on S3A. */
+  private[graft] def stage(rows: DataFrame, root: String): Seq[(String, Long)] = {
+    val fs = fsFor(rows.sparkSession, root)
+    val staging = new Path(root, s"$Staging${java.util.UUID.randomUUID()}")
+    Ingest.writeStore(rows, staging.toString)
+    val moved = fs.listStatus(staging).toSeq
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("shard_hour="))
+      .flatMap { dir =>
+        val part = dir.getPath.getName
+        val partDir = new Path(root, part)
+        fs.mkdirs(partDir)
+        fs.listStatus(dir.getPath).toSeq
+          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+          .map { f =>
+            val n = f.getPath.getName
+            require(fs.rename(f.getPath, new Path(partDir, n)),
+              s"could not move ${f.getPath} into $partDir")
+            (s"$part/$n", f.getLen) // rename preserves length
+          }
+      }
     fs.delete(staging, true)
     moved
   }
 
-  /** Write `points` into a fresh staging directory under `root` — one
-    * Spark job, so the batch is evaluated exactly once — and move its
-    * files into their hours. Returns the moved files as
-    * `(relpath, bytes)`; nothing is committed. Every batch has its own
-    * output directory, so concurrent writers never share Hadoop's
-    * `_temporary` tree, and a write that dies before its move leaves
-    * nothing in any hour. */
-  private[graft] def stageBatch(points: Dataset[DataPoint],
-      root: String): Seq[(String, Long)] = {
-    val fs = fsFor(points.sparkSession, root)
-    val staging = new Path(root, s"$IngestStaging${java.util.UUID.randomUUID()}")
-    Ingest.ingestBatch(points, staging.toString)
-    val hours = fs.listStatus(staging).toSeq.flatMap { d =>
-      val n = d.getPath.getName
-      if (d.isDirectory && n.startsWith("shard_hour="))
-        Some((d.getPath, n.stripPrefix("shard_hour=").toLong))
-      else None
-    }
-    moveStaged(fs, root, staging, hours, (_, n) => n)
-  }
-
   /** Append `points` and commit EXACTLY the files that append produced:
     * one Spark job writes the batch into a private staging directory
-    * ([[stageBatch]]), its files move into their hours, and the commit
+    * ([[stage]]), its files move into their hours, and the commit
     * adds precisely the moved files. Nothing in the hour directories is
     * listed, so a torn earlier write's orphans are never adopted and the
     * append cost scales with the batch, not the store. On S3A each file
@@ -646,7 +633,7 @@ object Snapshot {
     * one-shot callers; sustained writers use [[Committer]]. */
   def ingestCommitted(points: Dataset[DataPoint], root: String): Long = {
     val fs = fsFor(points.sparkSession, root)
-    val added = stageBatch(points, root)
+    val added = stage(points.toDF(), root)
     commitLog(fs, root, loadState(fs, root), added).gen
   }
 
@@ -764,7 +751,7 @@ object Snapshot {
 
     private def ingestTagged(points: Dataset[DataPoint],
         txn: Option[(String, Long)]): Long =
-      commitSized(stageBatch(points, root), CheckpointEvery, retries = 2, txn)
+      commitSized(stage(points.toDF(), root), CheckpointEvery, retries = 2, txn)
   }
 
   /** Snapshot read of the latest committed generation. A directory with
@@ -801,8 +788,8 @@ object Snapshot {
       StructField("shard_hour", LongType, nullable = false)))
     val index = new graft.sources.ManifestFileIndex(
       new Path(root), files, partitionSchema, zmaps)
-    // store files hold exactly the DataPoint columns (ingestBatch writes
-    // them; rewriteHours drops the partition column before writing)
+    // store files hold exactly the DataPoint columns (Ingest.writeStore
+    // writes them; the hour is the directory)
     val rel = HadoopFsRelation(index, partitionSchema,
       graft.model.dataPointSchema, None, new ParquetFileFormat,
       Map.empty[String, String])(spark)
@@ -812,11 +799,14 @@ object Snapshot {
   /** Manifest-stats range aggregate (r14 verdict #1 — the Iceberg/Delta
     * metadata-only aggregate): `count(*) / min(value) / max(value)` over
     * the INCLUSIVE timestamp range `[startMs, endMs]` of the latest
-    * committed generation: the frame overload over [[read]]. Output: one row
+    * committed generation, planned from the log state with no frame
+    * over the store (see the frame overload). Output: one row
     * (n_points BIGINT, min_value DOUBLE, max_value DOUBLE). */
   def rangeStats(spark: SparkSession, root: String,
-      startMs: Long = Long.MinValue, endMs: Long = Long.MaxValue): DataFrame =
-    rangeStats(read(spark, root), startMs, endMs)
+      startMs: Long = Long.MinValue, endMs: Long = Long.MaxValue): DataFrame = {
+    val st = managedState(fsFor(spark, root), root, "read")
+    liveStats(spark, root, st.live.map(f => (f, st.sizes(f))), st.zmaps, startMs, endMs)
+  }
 
   /** [[rangeStats]] over a frame opened by [[read]] / [[readWithGen]],
     * answered from the manifest's per-file `zmap3` stats of the frame's
@@ -848,7 +838,8 @@ object Snapshot {
     points.queryExecution.analyzed match {
       case LogicalRelation(HadoopFsRelation(
           index: graft.sources.ManifestFileIndex, _, _, _, _, _), _, _, _, _) =>
-        liveStats(points.sparkSession, index, startMs, endMs)
+        liveStats(points.sparkSession, index.rootPaths.head.toString,
+          index.files, index.stats, startMs, endMs)
       case _ => scanStats(points, startMs, endMs)
     }
   }
@@ -868,16 +859,16 @@ object Snapshot {
         max(col("value")).as("max_value"))
   }
 
-  /** [[rangeStats]] over the files and zone maps of `index`. A scan side
+  /** [[rangeStats]] over the live `files` (store-relative path, bytes)
+    * of the store at `root` and their zone maps. A scan side
     * within [[graft.plans.CollectLocally.fits]] is aggregated in one
     * partition: its plan is then a single stage that collects on the
     * driver with no job. A larger one keeps the parallel partial/final
     * aggregate over an exchange. */
-  private def liveStats(spark: SparkSession,
-      index: graft.sources.ManifestFileIndex,
+  private def liveStats(spark: SparkSession, root: String,
+      files: Seq[(String, Long)], zmaps: Map[String, FileZoneStats],
       startMs: Long, endMs: Long): DataFrame = {
-    val zmaps = index.stats
-    val (metaFiles, rest) = index.files.partition { case (f, _) =>
+    val (metaFiles, rest) = files.partition { case (f, _) =>
       zmaps.get(f).exists(z =>
         z.tsMin >= startMs && z.tsMax <= endMs && z.rows.isDefined &&
           z.value.exists { case (mn, mx) => mn != 0.0 && mx != 0.0 })
@@ -908,8 +899,8 @@ object Snapshot {
     } else {
       val oneTask = graft.plans.CollectLocally.fits(
         scanFiles.size, scanFiles.map(_._2).sum, spark.sessionState.conf)
-      val s = scanStats(logFrame(spark, index.rootPaths.head.toString,
-        scanFiles, zmaps), startMs, endMs, oneTask)
+      val s = scanStats(logFrame(spark, root, scanFiles, zmaps),
+        startMs, endMs, oneTask)
       vMeta match {
         case None => s
         case Some((mn, mx)) => s.select(
@@ -953,38 +944,30 @@ object Snapshot {
   private def liveIn(st: LogState, hour: Long): Vector[String] =
     st.live.filter(_.startsWith(s"shard_hour=$hour/"))
 
-  /** Rewrite each hour of `hours`: `transform(hour, rows)` over the
-    * hour's live rows ([[logFrame]], without the partition column) is
-    * written as `targetFiles` timestamp-sorted files into one staging
-    * directory, and the files move into their hours ALONGSIDE the old
-    * ones. Returns
-    * (moved files, replaced files) for the caller's one commit, which
-    * tombstones the replaced files: readers planned before it keep
-    * reading them until [[vacuum]]. One Spark write per hour, and no
-    * other job: the read needs no schema inference or file listing. */
-  private def rewriteHours(spark: SparkSession, fs: FileSystem, root: String,
-      st: LogState, hours: Seq[Long], targetFiles: Int = 1)(
-      transform: (Long, DataFrame) => DataFrame): (Seq[(String, Long)], Seq[String]) = {
-    val staging = new Path(root, s"$CompactStaging${java.util.UUID.randomUUID()}")
-    val replaced = hours.map { h =>
+  /** Rewrite the hours `hours` in one staged write: `transform` over
+    * the live rows of all of them ([[logFrame]], without the partition
+    * column) is range-partitioned on timestamp into `targetFiles` slices
+    * per hour and [[stage]]d, so its files move into their hours
+    * ALONGSIDE the old ones. Returns (moved files, replaced files) for
+    * the caller's one commit, which tombstones the replaced files:
+    * readers planned before it keep reading them until [[vacuum]]. One
+    * Spark write whatever the hour count; the read needs no schema
+    * inference or file listing. */
+  private def rewriteHours(spark: SparkSession, root: String, st: LogState,
+      hours: Seq[Long], targetFiles: Int = 1)(
+      transform: DataFrame => DataFrame): (Seq[(String, Long)], Seq[String]) = {
+    val replaced = hours.flatMap { h =>
       val old = liveIn(st, h)
       require(old.nonEmpty, s"no live files for shard_hour=$h")
-      Ingest.storeWriter(transform(h,
-          logFrame(spark, root, old.map(f => (f, st.sizes(f))), st.zmaps)
-            .drop("shard_hour"))
-        .select(col("timestamp"), col("value"), col("metric"))
-        // range-partition on timestamp (ADVICE r13): each rewritten file
-        // owns a disjoint contiguous timestamp slice, sorted within, so
-        // its refreshed zone map still prunes WITHIN the hour
-        .repartitionByRange(targetFiles, col("timestamp"))
-        .sortWithinPartitions(col("timestamp")), SaveMode.Overwrite)
-        .parquet(new Path(staging, s"shard_hour=$h").toString)
       old
     }
-    val moved = moveStaged(fs, root, staging,
-      hours.map(h => (new Path(staging, s"shard_hour=$h"), h)),
-      (h, _) => s"compact-$h-${java.util.UUID.randomUUID()}.parquet")
-    (moved, replaced.flatten)
+    val rows = transform(logFrame(spark, root, replaced.map(f => (f, st.sizes(f))),
+      st.zmaps).drop("shard_hour"))
+      // range-partition on timestamp (ADVICE r13): each rewritten file
+      // owns a disjoint contiguous timestamp slice, sorted within, so
+      // its refreshed zone map still prunes WITHIN the hour
+      .repartitionByRange(math.max(1, targetFiles * hours.size), col("timestamp"))
+    (stage(rows, root), replaced)
   }
 
   /** Snapshot-safe shard compaction: rewrite the hour's live files into
@@ -996,7 +979,7 @@ object Snapshot {
     val fs = fsFor(spark, root)
     val st = managedState(fs, root, "compactShard")
     val (moved, replaced) =
-      rewriteHours(spark, fs, root, st, Seq(shardHour), targetFiles)((_, df) => df)
+      rewriteHours(spark, root, st, Seq(shardHour), targetFiles)(identity)
     commitLog(fs, root, st, moved, replaced).gen
   }
 
@@ -1026,17 +1009,20 @@ object Snapshot {
     val (covered, edges) = st.live.map(hourOf).distinct
       .filter(h => hi(h) >= startMs && lo(h) <= endMs)
       .partition(h => lo(h) >= startMs && hi(h) <= endMs)
-    val (moved, replaced) = rewriteHours(spark, fs, root, st, edges)(
-      (_, df) => df.filter(!col("timestamp").between(startMs, endMs)))
+    val (moved, replaced) =
+      if (edges.isEmpty) (Seq.empty, Seq.empty) // nothing to rewrite, no job
+      else rewriteHours(spark, root, st, edges)(
+        _.filter(!col("timestamp").between(startMs, endMs)))
     commitLog(fs, root, st, moved, covered.flatMap(liveIn(st, _)) ++ replaced).gen
   }
 
   /** Point upsert in one commit: update rows REPLACE stored rows at the
     * same (timestamp, metric) — per-series replacement, so other metrics
     * at that timestamp survive; among duplicate update keys the larger
-    * value wins (deterministic). Hours the store already holds are
-    * rewritten; updates into new hours are staged like an append
-    * ([[stageBatch]]). Returns the committed generation. */
+    * value wins (deterministic). The stored rows of the hours the
+    * updates touch, minus the updated keys, plus every update — in
+    * stored and new hours alike — are written in one staged write
+    * ([[rewriteHours]]). Returns the committed generation. */
   def upsertPoints(spark: SparkSession, root: String,
       updates: Dataset[DataPoint]): Long = {
     val fs = fsFor(spark, root)
@@ -1044,20 +1030,17 @@ object Snapshot {
     val upd = updates.toDF()
       .groupBy(col("timestamp"), col("metric"))
       .agg(max(col("value")).as("value"))
-      .withColumn("shard_hour", graft.model.shardHourCol(col("timestamp")))
+    val hours = upd.select(graft.model.shardHourCol(col("timestamp"))).distinct()
+      .collect().map(_.getLong(0)).toSeq
     val stored = st.live.map(hourOf).toSet
-    val (existing, fresh) = upd.select(col("shard_hour")).distinct()
-      .collect().map(_.getLong(0)).toSeq.partition(stored)
-    val (moved, replaced) = rewriteHours(spark, fs, root, st, existing) { (h, df) =>
-      val u = upd.filter(col("shard_hour") === h).drop("shard_hour")
-      df.join(u.select("timestamp", "metric"), Seq("timestamp", "metric"), "left_anti")
-        .unionByName(u)
-    }
-    val appended = if (fresh.isEmpty) Seq.empty else stageBatch(
-      upd.filter(col("shard_hour").isin(fresh: _*))
-        .select(col("timestamp"), col("value"), col("metric"))
-        .as[DataPoint](org.apache.spark.sql.Encoders.product[DataPoint]), root)
-    commitLog(fs, root, st, moved ++ appended, replaced).gen
+    // the hour is a function of the timestamp, so one anti-join over all
+    // touched hours replaces exactly the updated keys of each hour
+    val (moved, replaced) =
+      if (hours.isEmpty) (Seq.empty, Seq.empty) // no updates: nothing to write
+      else rewriteHours(spark, root, st, hours.filter(stored))(
+        _.join(upd.select("timestamp", "metric"), Seq("timestamp", "metric"), "left_anti")
+          .unionByName(upd))
+    commitLog(fs, root, st, moved, replaced).gen
   }
 
   /** Store report: one row per hour of the committed live set with its
@@ -1090,10 +1073,10 @@ object Snapshot {
     * crashed reader cannot block vacuum forever — size the TTL like the
     * old grace contract: longer than any legitimate query. The same TTL
     * ages the debris of crashed writers: stranded `.tmp-` log files and
-    * root-level staging directories of an ingest or compaction killed
-    * before its move, aged by directory mtime — on a store that reports
-    * none (S3A directories read as mtime 0), vacuum only while no write
-    * is in flight. Returns the number of data files deleted. */
+    * root-level staging directories of a write killed before its move,
+    * aged by directory mtime — on a store that reports none (S3A
+    * directories read as mtime 0), vacuum only while no write is in
+    * flight. Returns the number of data files deleted. */
   def vacuum(spark: SparkSession, root: String, graceMs: Long = 0L,
       keepManifests: Int = 3, leaseTtlMs: Long = 24L * 3600000L): Long = {
     val fs = fsFor(spark, root)
@@ -1131,8 +1114,9 @@ object Snapshot {
     // sweep what crashed writers strand, aged by the lease TTL so an
     // in-flight write's files are never taken: `.tmp-` log files
     // (writeLog cleans its own failures, but a writer killed mid-write
-    // cannot) and root-level staging directories (an ingest or a
-    // compaction killed between its write and its move)
+    // cannot) and root-level staging directories (a write killed before
+    // its move; `.compact_snap_` directories come from older versions,
+    // which staged rewrites under a prefix of their own)
     def aged(st: org.apache.hadoop.fs.FileStatus) =
       now - st.getModificationTime > leaseTtlMs
     fs.listStatus(new Path(root, ManifestDir)).toSeq
@@ -1140,7 +1124,7 @@ object Snapshot {
       .foreach(st => fs.delete(st.getPath, false))
     fs.listStatus(new Path(root)).toSeq
       .filter(st => st.isDirectory && aged(st) &&
-        Seq(IngestStaging, CompactStaging).exists(st.getPath.getName.startsWith))
+        Seq(Staging, ".compact_snap_").exists(st.getPath.getName.startsWith))
       .foreach(st => fs.delete(st.getPath, true))
     deleted
   }

@@ -2,14 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{GraftLocalTask, TaskContext}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -53,10 +51,6 @@ class LocalCollectSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
 
   private var plain: SparkSession = _
   private var root: String = _
-  private val jobs = new AtomicInteger(0)
-  private val counter = new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-  }
 
   override def beforeAll(): Unit = {
     super.beforeAll()
@@ -76,11 +70,9 @@ class LocalCollectSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
       committer.ingestOnce(ds(spark, from until from + batch), "spec", id.toLong)
     }
     committer.ingest(ds(spark, (9600 until 9610) ++ (9600 until 9605) ++ Seq(12000, 12000)))
-    spark.sparkContext.addSparkListener(counter)
   }
 
   override def afterAll(): Unit = {
-    spark.sparkContext.removeSparkListener(counter)
     if (root != null) org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(root).getParentFile)
     super.afterAll()
@@ -96,15 +88,6 @@ class LocalCollectSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
     case d: Double => ("double", java.lang.Double.doubleToRawLongBits(d))
     case v => v
   })
-
-  /** Jobs `body` started, counted once the listener bus is drained. */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    LocalTaskProbe.drainBus(spark.sparkContext)
-    jobs.set(0)
-    val r = body
-    LocalTaskProbe.drainBus(spark.sparkContext)
-    (r, jobs.get)
-  }
 
   private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
@@ -147,7 +130,7 @@ class LocalCollectSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
   test("hot, cold and stats reads are bit-identical to the job path and run no job") {
     for ((kind, lo, hi) <- windows) {
       val df = read(spark, root, kind, lo, hi)
-      val (got, n) = jobsOf(df.collect())
+      val (got, n) = SparkSpec.jobsDuring(df.collect())
       val job = read(plain, root, kind, lo, hi).collect()
       val twoStage = withConf(plain, TinyOpenCost)(read(plain, root, kind, lo, hi).collect())
       assert(bits(got) == bits(job), s"$kind [$lo, $hi] vs the job path")
@@ -184,7 +167,7 @@ class LocalCollectSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
     val (slo, shi) = (at(3000), at(3000) + 3 * hourMs - 1)
     def run(kind: String, l: Long, h: Long) = {
       val df = read(spark, root, kind, l, h)
-      val (rows, n) = jobsOf(df.collect())
+      val (rows, n) = SparkSpec.jobsDuring(df.collect())
       (bits(rows), n, isLocal(df))
     }
     val (hotRows, hotJobs, hotLocal) = run("hot", lo, hi)
@@ -219,7 +202,7 @@ class LocalCollectSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
       Files.delete(Paths.get(store, file))
       def failure(df: DataFrame): Throwable =
         intercept[Throwable](df.collect())
-      val (localErr, n) = jobsOf(failure(local))
+      val (localErr, n) = SparkSpec.jobsDuring(failure(local))
       val jobErr = failure(job)
       assert(n == 0 && isLocal(local), s"the local read started $n jobs")
       assert(localErr.getClass == jobErr.getClass,

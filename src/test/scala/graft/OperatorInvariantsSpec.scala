@@ -339,21 +339,9 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
       (0L until 3L).map(i => (i, 17L + i, i * 3)))
     val balanced = fx(for (u <- 0L until 4L; i <- 0L until 5L)
       yield (u, u * 5 + i, i * (gapT + 2)))
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
     TimeSeries.memoProbeClear()
-    spark.sparkContext.addSparkListener(counter)
     try {
-      def countJobs[A](body: => A): (A, Int) = {
-        Thread.sleep(1200); counter.n.set(0)
-        val r = body
-        Thread.sleep(1200); (r, counter.n.get)
-      }
+      def countJobs[A](body: => A): (A, Int) = SparkSpec.jobsDuring(body)
       val (d1, jobs1) = countJobs(
         TimeSeries.blockDispatch(skewed, "user_id", 2L, 1.0, 0.2))
       val (d2, jobs2) = countJobs(
@@ -390,10 +378,7 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
       val (dHot, jobsHot) = countJobs(
         TimeSeries.blockDispatch(skewed, "user_id", 2L, 1.0, 0.2))
       assert(dHot == d1 && jobsHot == 0, s"hot frame evicted ($jobsHot jobs)")
-    } finally {
-      spark.sparkContext.removeSparkListener(counter)
-      TimeSeries.memoProbeClear()
-    }
+    } finally TimeSeries.memoProbeClear()
   }
 
   test("the count-block session family (sessionizeBlockedRows / " +

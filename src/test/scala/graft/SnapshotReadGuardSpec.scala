@@ -6,24 +6,42 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Store files are read one way: [[graft.operators.Snapshot]] plans every
-  * read of a manifest store — serving reads, `rangeStats`' scan side and
-  * the rewrites of compaction, range delete and upsert — from the log,
-  * through a `ManifestFileIndex`. A `spark.read` there would bring back a
-  * second read path: a driver-side status of every file and a
-  * schema-inference job. A directory with no manifest is refused, not
-  * read. */
+/** Store files are read one way and written one way.
+  *
+  * Reads: [[graft.operators.Snapshot]] plans every read of a manifest
+  * store — serving reads, `rangeStats`' scan side and the rewrites of
+  * compaction, range delete and upsert — from the log, through a
+  * `ManifestFileIndex`. A `spark.read` there would bring back a second
+  * read path: a driver-side status of every file and a schema-inference
+  * job. A directory with no manifest is refused, not read.
+  *
+  * Writes: every store file — an append's or a rewrite's — is written by
+  * `Ingest.writeStore` through `Snapshot.stage`. A `.write.` or
+  * `.parquet(` in `Snapshot.scala` would bring back a second writer with
+  * its own file format and staging. */
 class SnapshotReadGuardSpec extends AnyFunSuite {
 
-  test("Snapshot.scala never calls spark.read: reads plan from the log") {
+  /** Code lines (comments stripped) of Snapshot.scala containing any of
+    * `needles`, as (line number, line). */
+  private def codeLinesWith(needles: String*): List[(Int, String)] = {
     val src = Paths.get("src/main/scala/graft/operators/Snapshot.scala")
     assert(Files.isRegularFile(src), s"run from the repository root: $src missing")
-    val reads = Files.readAllLines(src).asScala.zipWithIndex.collect {
-      case (line, i) if line.replaceAll("//.*", "")
-          .replaceAll("^\\s*(/?\\*).*", "").contains(".read.") =>
+    Files.readAllLines(src).asScala.zipWithIndex.collect {
+      case (line, i) if needles.exists(line.replaceAll("//.*", "")
+          .replaceAll("^\\s*(/?\\*).*", "").contains(_)) =>
         (i + 1, line.trim)
     }.toList
+  }
+
+  test("Snapshot.scala never calls spark.read: reads plan from the log") {
+    val reads = codeLinesWith(".read.")
     assert(reads.isEmpty,
       s"plan store reads through Snapshot.logFrame: ${reads.mkString(", ")}")
+  }
+
+  test("Snapshot.scala writes no file itself: Ingest.writeStore is the one writer") {
+    val writes = codeLinesWith(".write.", ".parquet(")
+    assert(writes.isEmpty,
+      s"stage store writes through Snapshot.stage: ${writes.mkString(", ")}")
   }
 }

@@ -520,9 +520,9 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
         new java.io.File(part, "part-staged.parquet").toPath)
       dir
     }
-    val agedIngest = staged(s"${Snapshot.IngestStaging}dead-writer")
+    val agedIngest = staged(s"${Snapshot.Staging}dead-writer")
     val agedCompact = staged(".compact_snap_0_dead-writer")
-    val fresh = staged(s"${Snapshot.IngestStaging}in-flight")
+    val fresh = staged(s"${Snapshot.Staging}in-flight")
     val old = System.currentTimeMillis() - 7200000L
     assert(agedIngest.setLastModified(old) && agedCompact.setLastModified(old))
     Snapshot.vacuum(spark, store, graceMs = 0L, leaseTtlMs = 3600000L)
@@ -577,7 +577,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     // ingest, not by an ingestOnce retry of the same batch, and not by
     // the adopt-everything commit()
     val stage = new java.io.File(store,
-      s"${Snapshot.IngestStaging}crashed/shard_hour=${baseMs / hourMs}")
+      s"${Snapshot.Staging}crashed/shard_hour=${baseMs / hourMs}")
     assert(stage.mkdirs())
     java.nio.file.Files.copy(donor.toPath,
       new java.io.File(stage, "part-staged-orphan.parquet").toPath)
@@ -632,47 +632,25 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("every ingest entry point starts exactly one Spark job, hinted or not") {
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      val store = Files.createTempDirectory("graft_snapjobs_").toString
-      val cm = Snapshot.committer(spark, store)
-      cm.ingest(points(100, 0, "w")) // warm: manifest creation, codegen
-      def countJobs(body: => Unit): Int = {
-        // drain stragglers from the previous block, then count
-        Thread.sleep(1500); counter.n.set(0)
-        body
-        Thread.sleep(1500); counter.n.get
-      }
-      val h0 = baseMs / hourMs
-      val jobs = Seq(
-        "Committer.ingest" -> countJobs { cm.ingest(points(100, 1, "x")); () },
-        "Committer.ingest(hours)" -> countJobs {
-          cm.ingest(points(100, 2, "y"), Seq(h0 + 2)); () },
-        "Committer.ingestOnce" -> countJobs {
-          cm.ingestOnce(points(100, 3, "z"), "appJ", 0L); () },
-        // one-shot commit last: it leaves the committer's cache stale
-        "Snapshot.ingestCommitted" -> countJobs {
-          Snapshot.ingestCommitted(points(100, 5, "v"), store); () })
-      jobs.foreach { case (call, n) => assert(n == 1, s"$call started $n jobs") }
-      assert(Snapshot.read(spark, store).count() == 500)
-    } finally spark.sparkContext.removeSparkListener(counter)
+    val store = Files.createTempDirectory("graft_snapjobs_").toString
+    val cm = Snapshot.committer(spark, store)
+    cm.ingest(points(100, 0, "w")) // warm: manifest creation, codegen
+    def countJobs(body: => Unit): Int = SparkSpec.jobsDuring(body)._2
+    val h0 = baseMs / hourMs
+    val jobs = Seq(
+      "Committer.ingest" -> countJobs { cm.ingest(points(100, 1, "x")); () },
+      "Committer.ingest(hours)" -> countJobs {
+        cm.ingest(points(100, 2, "y"), Seq(h0 + 2)); () },
+      "Committer.ingestOnce" -> countJobs {
+        cm.ingestOnce(points(100, 3, "z"), "appJ", 0L); () },
+      // one-shot commit last: it leaves the committer's cache stale
+      "Snapshot.ingestCommitted" -> countJobs {
+        Snapshot.ingestCommitted(points(100, 5, "v"), store); () })
+    jobs.foreach { case (call, n) => assert(n == 1, s"$call started $n jobs") }
+    assert(Snapshot.read(spark, store).count() == 500)
   }
 
   test("compactShard starts the same jobs on a 4-file and a 40-file hour") {
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
     val store = Files.createTempDirectory("graft_snapcompactjobs_").toString
     val cm = Snapshot.committer(spark, store)
     // one file per input partition per hour: 4 files in hour 0, 40 in hour 1
@@ -681,18 +659,36 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     def filesIn(h: Int) = Snapshot.latest(spark, store)._2
       .count(_.startsWith(s"shard_hour=${baseMs / hourMs + h}/"))
     assert(filesIn(0) == 4 && filesIn(1) == 40)
-    spark.sparkContext.addSparkListener(counter)
-    val jobs = try (0 to 1).map { h =>
-      // drain stragglers from the previous block, then count
-      Thread.sleep(1500); counter.n.set(0)
-      Snapshot.compactShard(spark, store, baseMs / hourMs + h)
-      Thread.sleep(1500); counter.n.get
-    } finally spark.sparkContext.removeSparkListener(counter)
+    val jobs = (0 to 1).map { h =>
+      SparkSpec.jobsDuring(Snapshot.compactShard(spark, store, baseMs / hourMs + h))._2
+    }
     // the read plans from the log: no schema-inference job, no parallel
     // listing job past the discovery threshold — only the write's jobs
     assert(jobs(0) == jobs(1) && jobs(0) <= 2, s"jobs per compaction: $jobs")
     assert(filesIn(0) == 1 && filesIn(1) == 1)
     assert(Snapshot.read(spark, store).count() == 4400)
+  }
+
+  test("upsertPoints starts the same jobs whatever the stored hours it " +
+      "rewrites: all touched hours are one staged write") {
+    // one update replacing a stored point in each stored hour, one in a
+    // new hour 9 — over 2 and over 3 stored hours
+    def upsertJobs(stored: Int): Int = {
+      val store = Files.createTempDirectory("graft_snapupsertjobs_").toString
+      (0 until stored).foreach(h => Ingest.ingestBatch(points(50, h, "cpu"), store))
+      Snapshot.commit(spark, store)
+      val updates = ((0 until stored) :+ 9).map(h =>
+        DataPoint(baseMs + h * hourMs + 5L, -1.0, "cpu"))
+      val n = SparkSpec.jobsDuring(
+        Snapshot.upsertPoints(spark, store, updates.toDS()))._2
+      val got = Snapshot.read(spark, store)
+      assert(got.count() == 50L * stored + 1)
+      assert(got.filter(col("value") === -1.0).count() == stored + 1)
+      n
+    }
+    upsertJobs(2) // warm: codegen
+    val (two, three) = (upsertJobs(2), upsertJobs(3))
+    assert(two == three, s"jobs per upsert: 2 hours $two, 3 hours $three")
   }
 
   test("two racing committers under LockLeaseGuard, a compaction and a " +
@@ -735,7 +731,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
         try {
           val cm = Snapshot.committer(spark, store)
           (0 until batches).foreach { i =>
-            val staged = Snapshot.stageBatch(points(100, firstHour + i, "w"), store)
+            val staged = Snapshot.stage(points(100, firstHour + i, "w").toDF(), store)
             gens.add(cm.commitAdded(staged.map(_._1), retries = 10))
             if (maintain && i == batches / 2) {
               gens.add(retrying(10)(Snapshot.compactShard(spark, store, hour0, 2)))
