@@ -26,7 +26,7 @@ import graft.operators.{Ingest, Materialize, Snapshot}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     // At sf0.1 a static shuffle.partitions = cores is the right knob; at
     // sf1+ it under-partitions the big shuffles. SPARK_GRAFT_INITIAL_PARTITIONS
     // (recommended for sf1+: 4-8x cores) raises the AQE *initial* partition
@@ -35,7 +35,7 @@ object Bench {
     // real parallelism. This mirrors the production-cluster setting where
     // initialPartitionNum is sized for the largest stage and AQE adapts.
     val initialParts = sys.env.get("SPARK_GRAFT_INITIAL_PARTITIONS")
-    val builder = GraftSession.localBuilder(cpus.toInt, "graft-bench")
+    val builder = GraftSession.localBuilder(cpus, "graft-bench")
     initialParts.foreach { n =>
       builder
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -13,8 +13,7 @@ object Explain {
       case Array(d, n)         => (d, n, false)
       case Array(d, n, "exec") => (d, n, true)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = GraftSession.local(cpus, "graft-explain")
+    val spark = GraftSession.local(GraftSession.cpus, "graft-explain")
     names.split(",").foreach { q =>
       println(s"==== $q ====")
       val df = SparkEntry.query(q.trim)(spark, dir)

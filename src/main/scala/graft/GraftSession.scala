@@ -48,6 +48,11 @@ object GraftSession {
       // partition onto one task is never the better trade.
       .config("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
 
+  /** Local core count for a main's session: `$SPARK_GRAFT_CPUS`, else
+    * the host's available processors. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   /** Builder for a local session at `local[cpus]` with the extensions
     * applied — for a harness that adds its own confs (a scheduler mode,
     * an AQE knob) before `getOrCreate()`. */

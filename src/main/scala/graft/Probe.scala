@@ -11,9 +11,8 @@ object Probe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, repsS, names) = args
     val reps = repsS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // shuffle partitions = cores (GraftSession), the Bench convention
-    val spark = GraftSession.local(cpus.toInt, "graft-probe")
+    val spark = GraftSession.local(GraftSession.cpus, "graft-probe")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
     try graft.sources.Tables.events(spark, sfDir).count()

@@ -50,8 +50,7 @@ object ScaleGen {
       case Array(a, b, c, m) => (a, b, c, m)
     }
     val copies = copiesS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local(cpus, "scalegen")
+    val spark = GraftSession.local(GraftSession.cpus, "scalegen")
     spark.sparkContext.setLogLevel("ERROR")
 
     val lower = "abcdefghijklmnopqrstuvwxyz"

@@ -37,6 +37,21 @@ object model {
     * floorDiv, matching the DataFrame paths' `floor()` on pre-1970 values. */
   def shardHourOf(tsMs: Long): Long = Math.floorDiv(tsMs, ShardDurationMs)
 
+  /** Inclusive epoch-ms span `[first, last]` of hour shard `hour` — the
+    * reference's end-inclusive shard range (insight.cpp:11). */
+  def hourSpan(hour: Long): (Long, Long) =
+    (hour * ShardDurationMs, hour * ShardDurationMs + ShardDurationMs - 1)
+
+  /** Hour of a store file relpath `shard_hour=H/<file>`. Loud on any other
+    * shape: relpaths come from the manifest log, and a corrupt or foreign
+    * line must fail the read rather than mis-parse. */
+  def relpathHour(rel: String): Long = {
+    val slash = rel.indexOf('/')
+    require(rel.startsWith("shard_hour=") && slash > 0,
+      s"manifest relpath '$rel' is not shard_hour=H/<file> — corrupt log?")
+    rel.substring(rel.indexOf('=') + 1, slash).toLong
+  }
+
   /** Column-level `Math.floorDiv(ts, w)` in EXACT integer arithmetic.
     * `floor(col / lit)` divides in double — near 2^53 (micro/nanosecond
     * epochs) a boundary value can round into the adjacent bucket, and even

@@ -786,7 +786,7 @@ object Graph {
     // node-sized label frame into the edge join under the count-gated
     // budget (the 10 MB estimator default flips this to a per-round
     // sort-merge over |E| a few million nodes too early), sort-merge
-    // beyond — same rule as kCore/pageRank
+    // beyond — as kCore/pageRank do
     val bcastLabels = nodes.count() <= BroadcastNodeBudget
     def maybeB(v: DataFrame): DataFrame =
       if (bcastLabels) v.hint("broadcast") else v

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.{shardHourCol, DataPoint, ShardDurationMs}
+import graft.model.{shardHourCol, shardHourOf}
 
 /** Ingest — SURVEY.md §2.1 O1 (point ingest) + O2 (shard routing),
   * re-expressed as hour-partitioned Parquet.
@@ -20,8 +20,10 @@ import graft.model.{shardHourCol, DataPoint, ShardDurationMs}
   *
   * Scale: the write is `partitionBy("shard_hour")` — each executor writes
   * its own hour files; no shuffle unless the caller asks for file
-  * consolidation. Reads prune partitions first, then parquet row-group
-  * stats prune within the hour.
+  * consolidation. A range read ([[inRange]]) prunes hours first, then the
+  * manifest's per-file zone maps skip files within the hour
+  * ([[graft.sources.ManifestFileIndex]]), then parquet row-group stats
+  * prune within each file.
   *
   * This object holds the store's one file writer ([[writeStore]]) and
   * its range scan. Every store file — an append's or a rewrite's — is
@@ -34,11 +36,6 @@ import graft.model.{shardHourCol, DataPoint, ShardDurationMs}
   * from the log, so readers never see a half-changed hour.
   */
 object Ingest {
-
-  /** Write a typed set of points as hour-partitioned store files under
-    * `path`, uncommitted (see [[writeStore]]). */
-  private[graft] def ingestBatch(points: Dataset[DataPoint], path: String): Unit =
-    writeStore(points.toDF(), path)
 
   /** The one writer of store files: `rows` (the store columns
     * `timestamp, value, metric`) are appended under `path` as
@@ -87,11 +84,19 @@ object Ingest {
     * equivalent of the reference keeping shard files open. */
   def queryRange(points: DataFrame,
       startMs: Long, endMs: Long, cap: Int): DataFrame =
-    points
-      .filter(col("shard_hour").between(
-        Math.floorDiv(startMs, ShardDurationMs), Math.floorDiv(endMs, ShardDurationMs)))
-      .filter(col("timestamp").between(startMs, endMs))
+    inRange(points, startMs, endMs)
       .select(col("timestamp"), col("value"), col("metric"))
       .orderBy(col("timestamp"), col("value"))
       .limit(cap)
+
+  /** The rows of a store read `points` in the inclusive range
+    * `[startMs, endMs]`: its hours `shardHourOf(startMs) …
+    * shardHourOf(endMs)` (partition pruning, the reference's shard loop,
+    * insight.cpp:26-38), then the timestamp bounds (zone-map file
+    * skipping, row filtering). Both stay `Long` literals, so
+    * [[graft.plans.StableCodegen]] keeps them out of generated code. */
+  private[graft] def inRange(points: DataFrame, startMs: Long, endMs: Long): DataFrame =
+    points
+      .filter(col("shard_hour").between(shardHourOf(startMs), shardHourOf(endMs)))
+      .filter(col("timestamp").between(startMs, endMs))
 }

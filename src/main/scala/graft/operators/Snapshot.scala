@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.DataPoint
+import graft.model.{hourSpan, relpathHour, shardHourOf, DataPoint}
 import graft.sources.FileZoneStats
 
 /** Snapshot isolation for the hour-partitioned store — the minimal
@@ -812,19 +812,10 @@ object Snapshot {
     * answered from the manifest's per-file `zmap3` stats of the frame's
     * own [[graft.sources.ManifestFileIndex]] wherever possible, scanning
     * ONLY the files the stats cannot answer — no log read. A live file is
-    * metadata-answerable when ALL of:
-    *  - its recorded ts range lies FULLY inside the query range (a
-    *    boundary file needs row-level filtering);
-    *  - it carries the full r14 stat set (row count + value range) —
-    *    legacy `zmap`/stat-less files always scan;
-    *  - neither value bound is ±0.0: parquet footers order doubles by
-    *    `Double.compare` where −0.0 < +0.0, while Spark's min/max
-    *    aggregate compares primitively (−0.0 == 0.0, first-seen wins) —
-    *    a zero bound from metadata could differ from the scan answer in
-    *    SIGN. Scanning those rare files keeps the two paths
-    *    bit-identical. (NaN-polluted footers are already rejected at
-    *    stat collection, so a NaN-carrying file scans too — and Spark's
-    *    max-returns-NaN semantics survive through the scan side.)
+    * metadata-answerable when its stats answer the range
+    * ([[graft.sources.FileZoneStats.answers]]: fully inside it, full r14
+    * stat set, no ±0.0 value bound); stat-less files always scan, so
+    * Spark's max-returns-NaN semantics survive through the scan side.
     * When EVERY overlapping file is metadata-answerable the result is a
     * LocalRelation — zero file scans, O(live files) driver arithmetic
     * (at 100 TB: an answer from the log instead of a full-store
@@ -849,10 +840,7 @@ object Snapshot {
     * partition, so the aggregate needs no exchange. */
   private def scanStats(df: DataFrame, startMs: Long, endMs: Long,
       oneTask: Boolean = false): DataFrame = {
-    import graft.model.shardHourOf
-    val pruned = df
-      .filter(col("shard_hour").between(shardHourOf(startMs), shardHourOf(endMs)))
-      .filter(col("timestamp").between(startMs, endMs))
+    val pruned = Ingest.inRange(df, startMs, endMs)
     (if (oneTask) pruned.coalesce(1) else pruned)
       .agg(count(lit(1)).as("n_points"),
         min(col("value")).as("min_value"),
@@ -869,15 +857,10 @@ object Snapshot {
       files: Seq[(String, Long)], zmaps: Map[String, FileZoneStats],
       startMs: Long, endMs: Long): DataFrame = {
     val (metaFiles, rest) = files.partition { case (f, _) =>
-      zmaps.get(f).exists(z =>
-        z.tsMin >= startMs && z.tsMax <= endMs && z.rows.isDefined &&
-          z.value.exists { case (mn, mx) => mn != 0.0 && mx != 0.0 })
-    }
-    // stat-less files are never skipped; stat-carrying ones drop out when
-    // their recorded range provably misses the query range (conservative,
-    // same rule as ManifestFileIndex)
-    val scanFiles = rest.filter { case (f, _) => zmaps.get(f)
-      .forall(z => z.tsMax >= startMs && z.tsMin <= endMs) }
+      zmaps.get(f).exists(_.answers(startMs, endMs)) }
+    // stat-less files are never skipped
+    val range = graft.sources.ZoneBounds(tsLo = startMs, tsHi = endMs)
+    val scanFiles = rest.filter { case (f, _) => zmaps.get(f).forall(_.mayOverlap(range)) }
     val nMeta = metaFiles.map(f => zmaps(f._1).rows.get).sum
     val vMeta: Option[(Double, Double)] =
       if (metaFiles.isEmpty) None
@@ -938,12 +921,6 @@ object Snapshot {
       }
   }
 
-  private def hourOf(rel: String): Long =
-    rel.stripPrefix("shard_hour=").takeWhile(_ != '/').toLong
-
-  private def liveIn(st: LogState, hour: Long): Vector[String] =
-    st.live.filter(_.startsWith(s"shard_hour=$hour/"))
-
   /** Rewrite the hours `hours` in one staged write: `transform` over
     * the live rows of all of them ([[logFrame]], without the partition
     * column) is range-partitioned on timestamp into `targetFiles` slices
@@ -956,8 +933,9 @@ object Snapshot {
   private def rewriteHours(spark: SparkSession, root: String, st: LogState,
       hours: Seq[Long], targetFiles: Int = 1)(
       transform: DataFrame => DataFrame): (Seq[(String, Long)], Seq[String]) = {
+    val live = st.live.groupBy(relpathHour)
     val replaced = hours.flatMap { h =>
-      val old = liveIn(st, h)
+      val old = live.getOrElse(h, Vector.empty)
       require(old.nonEmpty, s"no live files for shard_hour=$h")
       old
     }
@@ -989,9 +967,9 @@ object Snapshot {
   def expireShards(spark: SparkSession, root: String, cutoffHour: Long): Long = {
     val fs = fsFor(spark, root)
     val st = managedState(fs, root, "expireShards")
-    val expired = st.live.filter(hourOf(_) < cutoffHour)
+    val expired = st.live.filter(relpathHour(_) < cutoffHour)
     commitLog(fs, root, st, Seq.empty, expired)
-    expired.map(hourOf).distinct.size.toLong
+    expired.map(relpathHour).distinct.size.toLong
   }
 
   /** Range delete: remove every point with `timestamp ∈ [startMs, endMs]`
@@ -1004,16 +982,15 @@ object Snapshot {
     require(startMs <= endMs, s"empty range [$startMs, $endMs]")
     val fs = fsFor(spark, root)
     val st = managedState(fs, root, "deleteRange")
-    def lo(h: Long) = h * graft.model.ShardDurationMs
-    def hi(h: Long) = lo(h) + graft.model.ShardDurationMs - 1
-    val (covered, edges) = st.live.map(hourOf).distinct
-      .filter(h => hi(h) >= startMs && lo(h) <= endMs)
-      .partition(h => lo(h) >= startMs && hi(h) <= endMs)
+    val live = st.live.groupBy(relpathHour)
+    val (covered, edges) = st.live.map(relpathHour).distinct
+      .filter(h => h >= shardHourOf(startMs) && h <= shardHourOf(endMs))
+      .partition { h => val (lo, hi) = hourSpan(h); lo >= startMs && hi <= endMs }
     val (moved, replaced) =
       if (edges.isEmpty) (Seq.empty, Seq.empty) // nothing to rewrite, no job
       else rewriteHours(spark, root, st, edges)(
         _.filter(!col("timestamp").between(startMs, endMs)))
-    commitLog(fs, root, st, moved, covered.flatMap(liveIn(st, _)) ++ replaced).gen
+    commitLog(fs, root, st, moved, covered.flatMap(live) ++ replaced).gen
   }
 
   /** Point upsert in one commit: update rows REPLACE stored rows at the
@@ -1032,7 +1009,7 @@ object Snapshot {
       .agg(max(col("value")).as("value"))
     val hours = upd.select(graft.model.shardHourCol(col("timestamp"))).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val stored = st.live.map(hourOf).toSet
+    val stored = st.live.map(relpathHour).toSet
     // the hour is a function of the timestamp, so one anti-join over all
     // touched hours replaces exactly the updated keys of each hour
     val (moved, replaced) =
@@ -1050,7 +1027,7 @@ object Snapshot {
   def describeStore(spark: SparkSession, root: String): DataFrame = {
     val fs = fsFor(spark, root)
     val st = managedState(fs, root, "describeStore")
-    val meta = st.live.groupBy(hourOf).toSeq
+    val meta = st.live.groupBy(relpathHour).toSeq
       .map { case (h, files) => (h, files.size.toLong, files.map(st.sizes).sum) }
     val rows = logFrame(spark, root, st.live.map(f => (f, st.sizes(f))), st.zmaps)
       .groupBy(col("shard_hour").cast("long").as("shard_hour"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.{floorDivCol, shardHourCol, ShardDurationMs}
+import graft.model.shardHourCol
 
 /** Reference-fidelity time-series operators over an events table
   * (`event_id, ts: timestamp, user_id, event_type, value, props`).
@@ -867,36 +867,6 @@ object TimeSeries {
       .agg(sum(col("n_events")).as("n_events"),
         min(col("s_start")).as("session_start_us"),
         max(col("s_end")).as("session_end_us"))
-  }
-
-  /** Sampled hottest-key share — the dispatch signal for the adaptive
-    * session operators. One cheap probe job (sample → tiny map-side-
-    * combined count — the probe itself is skew-immune because hash
-    * aggregation partials combine hot keys per task), returning
-    * max-key-rows / sampled-rows, 0.0 on an empty sample. `fraction=1.0`
-    * makes the share exact (specs; small inputs). */
-  def sampledMaxKeyShare(df: DataFrame, key: String,
-      fraction: Double = 0.01, seed: Long = 42L): Double =
-    sampledKeyStats(df, key, fraction, seed)._1
-
-  /** Sampled (hottest-key share, ESTIMATED hottest-key row count) from
-    * the same single probe job as [[sampledMaxKeyShare]]. The row
-    * estimate (sampled max-key count ÷ fraction) is the r13 VOLUME axis
-    * of the adaptive dispatch: share alone says a key dominates, but a
-    * dominant key whose rows fit in ~one block gains nothing from a
-    * blocked decomposition — the dispatcher needs both signals, and a
-    * second job for the second signal would defeat the cheap-probe
-    * point. `fraction=1.0` makes both exact (specs; small inputs). */
-  def sampledKeyStats(df: DataFrame, key: String,
-      fraction: Double = 0.01, seed: Long = 42L): (Double, Double) = {
-    val r = df.select(col(key))
-      .sample(withReplacement = false, fraction, seed)
-      .groupBy(col(key)).agg(count(lit(1)).as("n"))
-      .agg(max(col("n")).as("mx"), sum(col("n")).as("tot"))
-      .collect()(0)
-    if (r.isNullAt(0) || r.isNullAt(1) || r.getLong(1) == 0L) (0.0, 0.0)
-    else (r.getLong(0).toDouble / r.getLong(1).toDouble,
-      r.getLong(0).toDouble / fraction)
   }
 
   /** Sampled (hottest-key share, ESTIMATED hottest-key rows, ESTIMATED

@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Bound
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructType}
 
+import graft.model.relpathHour
+
 /** Per-file zone-map stats carried by the snapshot manifest (r13 added
   * the timestamp range; r14 extends with the VALUE range and the row
   * count — the Delta data-skipping stat set). `value`/`rows` are None
@@ -25,6 +27,91 @@ final case class FileZoneStats(tsMin: Long, tsMax: Long,
   require(value.isEmpty || rows.isDefined,
     "FileZoneStats with a value range must carry a row count " +
       "(zmap3 serializes them together; see Snapshot.zmapLines)")
+
+  /** False only when the recorded ranges PROVE no row of this file lies in
+    * `b`: a file is skippable the moment ONE dimension misses. A file
+    * without a value range may hold any value. */
+  def mayOverlap(b: ZoneBounds): Boolean =
+    tsMax >= b.tsLo && tsMin <= b.tsHi &&
+      value.forall { case (mn, mx) => mx >= b.vLo && mn <= b.vHi }
+
+  /** True when this file's stats alone answer count/min/max(value) over
+    * the inclusive range `[startMs, endMs]`:
+    *  - its ts range lies FULLY inside the range (a boundary file needs
+    *    row-level filtering);
+    *  - it carries the full r14 stat set (row count + value range) —
+    *    legacy `zmap` files do not;
+    *  - neither value bound is ±0.0: parquet footers order doubles by
+    *    `Double.compare` where −0.0 < +0.0, while Spark's min/max
+    *    aggregate compares primitively (−0.0 == 0.0, first-seen wins) —
+    *    a zero bound from metadata could differ from the scan answer in
+    *    SIGN. (NaN-polluted footers are rejected at stat collection, so
+    *    a NaN-carrying file has no value range and scans.) */
+  def answers(startMs: Long, endMs: Long): Boolean =
+    tsMin >= startMs && tsMax <= endMs && rows.isDefined &&
+      value.exists { case (mn, mx) => mn != 0.0 && mx != 0.0 }
+}
+
+/** Closed bounds on the two zone-mapped columns: every row a filter can
+  * match has `timestamp ∈ [tsLo, tsHi]` and `value ∈ [vLo, vHi]`. The
+  * defaults bound nothing. */
+final case class ZoneBounds(
+    tsLo: Long = Long.MinValue, tsHi: Long = Long.MaxValue,
+    vLo: Double = Double.NegativeInfinity, vHi: Double = Double.PositiveInfinity) {
+  /** Both bounds hold (a conjunction). */
+  def &(o: ZoneBounds): ZoneBounds = ZoneBounds(tsLo.max(o.tsLo), tsHi.min(o.tsHi),
+    vLo.max(o.vLo), vHi.min(o.vHi))
+  /** Either bound holds (a disjunction). */
+  def |(o: ZoneBounds): ZoneBounds = ZoneBounds(tsLo.min(o.tsLo), tsHi.max(o.tsHi),
+    vLo.min(o.vLo), vHi.max(o.vHi))
+}
+
+object ZoneBounds {
+
+  /** Tightest closed bounds the pushed data-filter conjuncts put on the
+    * store's epoch-ms `timestamp` (LongType) and `value` (DoubleType)
+    * columns (model.dataPointSchema). `literal op column` is read as
+    * `column op' literal`; `IN` bounds by its smallest and largest
+    * literal. Strict timestamp bounds step by one and saturate at the
+    * Long extremes; strict value bounds stay closed (a file whose max is
+    * exactly the `>` literal survives — conservative, never wrong). A NaN
+    * literal bounds nothing: it compares false against every row, but
+    * proving that is the planner's job, not a file-skipping stat's. Any
+    * other predicate (`<=>` included) contributes nothing. */
+  def of(filters: Seq[Expression]): ZoneBounds =
+    filters.map(conjunct).foldLeft(ZoneBounds())(_ & _)
+
+  private def conjunct(e: Expression): ZoneBounds = e match {
+    case And(l, r) => conjunct(l) & conjunct(r)
+    case In(a: AttributeReference, vs) if vs.nonEmpty =>
+      vs.map(v => conjunct(EqualTo(a, v))).reduce(_ | _)
+    case EqualTo(l: Literal, a: AttributeReference) => conjunct(EqualTo(a, l))
+    case GreaterThan(l: Literal, a: AttributeReference) => conjunct(LessThan(a, l))
+    case GreaterThanOrEqual(l: Literal, a: AttributeReference) => conjunct(LessThanOrEqual(a, l))
+    case LessThan(l: Literal, a: AttributeReference) => conjunct(GreaterThan(a, l))
+    case LessThanOrEqual(l: Literal, a: AttributeReference) => conjunct(GreaterThanOrEqual(a, l))
+    case EqualTo(a: AttributeReference, l: Literal) =>
+      side(a, l, lower = true, strict = false) & side(a, l, lower = false, strict = false)
+    case GreaterThan(a: AttributeReference, l: Literal) => side(a, l, lower = true, strict = true)
+    case GreaterThanOrEqual(a: AttributeReference, l: Literal) => side(a, l, lower = true, strict = false)
+    case LessThan(a: AttributeReference, l: Literal) => side(a, l, lower = false, strict = true)
+    case LessThanOrEqual(a: AttributeReference, l: Literal) => side(a, l, lower = false, strict = false)
+    case _ => ZoneBounds()
+  }
+
+  /** The bound `a >= l` (`lower`) or `a <= l`, or `>` / `<` when `strict`. */
+  private def side(a: AttributeReference, l: Literal, lower: Boolean,
+      strict: Boolean): ZoneBounds = (a.name, l) match {
+    case ("timestamp", Literal(v: Long, LongType)) => tsSide(v, lower, strict)
+    case ("timestamp", Literal(v: Int, IntegerType)) => tsSide(v.toLong, lower, strict)
+    case ("value", Literal(v: Double, DoubleType)) if !v.isNaN =>
+      if (lower) ZoneBounds(vLo = v) else ZoneBounds(vHi = v)
+    case _ => ZoneBounds()
+  }
+
+  private def tsSide(v: Long, lower: Boolean, strict: Boolean): ZoneBounds =
+    if (lower) ZoneBounds(tsLo = if (strict && v != Long.MaxValue) v + 1 else v)
+    else ZoneBounds(tsHi = if (strict && v != Long.MinValue) v - 1 else v)
 }
 
 /** A [[FileIndex]] served ENTIRELY from the snapshot-manifest log — the
@@ -42,16 +129,17 @@ final case class FileZoneStats(tsMin: Long, tsMax: Long,
   *
   * Partition pruning happens here (`listFiles` evaluates the pushed
   * partition filters against each hour), and so does FILE skipping
-  * (r13): `tsRanges` carries the manifest's per-file timestamp zone
-  * maps, so a pushed `timestamp` predicate drops every file whose
-  * recorded [min, max] cannot overlap the predicate's bounds — the
-  * Delta data-skipping move. Without it, a 5-minute range scan over an
+  * (r13, r14): `stats` carries the manifest's per-file zone maps, so a
+  * pushed `timestamp` or `value` predicate drops every file whose
+  * recorded [min, max] cannot overlap the predicate's bounds
+  * ([[ZoneBounds.of]], [[FileZoneStats.mayOverlap]]) — the Delta
+  * data-skipping move. Without it, a 5-minute range scan over an
   * hour holding thousands of micro-batch files plans ALL of them and
   * leans on per-file parquet footer stats to skip — one footer IO per
   * file per query, which on an object store is the same O(files)
   * round-trip bill the manifest exists to avoid. Skipping is
   * conservative: only files whose recorded range PROVABLY misses every
-  * possibly-matching timestamp are dropped; files without a recorded
+  * possibly-matching row are dropped; files without a recorded
   * range are always kept. Fabricated `FileStatus` fields beyond
   * (path, length): block size feeds split arithmetic (128 MB, the
   * files' write-time row-group target) and mtime is 0 — neither
@@ -68,117 +156,15 @@ final class ManifestFileIndex(
   private val byHour: Seq[(Long, Array[(FileStatus, Option[FileZoneStats])])] =
     files
       .map { case (rel, sz) =>
-        // loud on a corrupt/foreign manifest line instead of a mis-parse:
-        // this index only knows the store's fixed `shard_hour=H/f.parquet`
-        // layout (r11 judge note)
-        require(rel.startsWith("shard_hour=") && rel.indexOf('/') > 0,
-          s"manifest relpath '$rel' is not shard_hour=H/<file> — corrupt log?")
-        val hour = rel.substring(rel.indexOf('=') + 1, rel.indexOf('/')).toLong
-        (hour, (new FileStatus(sz, false, 1, 128L * 1024 * 1024, 0L,
+        // relpathHour is loud on a corrupt/foreign manifest line instead
+        // of a mis-parse: this index only knows the store's fixed
+        // `shard_hour=H/f.parquet` layout (r11 judge note)
+        (relpathHour(rel), (new FileStatus(sz, false, 1, 128L * 1024 * 1024, 0L,
           new Path(root, rel)): FileStatus, stats.get(rel)))
       }
       .groupBy(_._1).toSeq
       .map { case (h, fs) => (h, fs.map(_._2).toArray) }
       .sortBy(_._1)
-
-  /** The data column the zone maps describe (the store's epoch-ms
-    * `timestamp`, LongType — model.dataPointSchema). */
-  private val TsCol = "timestamp"
-
-  private object TsAttr {
-    def unapply(e: Expression): Boolean = e match {
-      case a: AttributeReference => a.name == TsCol
-      case _ => false
-    }
-  }
-
-  private object TsLit {
-    def unapply(e: Expression): Option[Long] = e match {
-      case Literal(v: Long, LongType) => Some(v)
-      case Literal(v: Int, IntegerType) => Some(v.toLong)
-      case _ => None
-    }
-  }
-
-  /** Tightest CLOSED interval [lo, hi] of timestamps any matching row
-    * could carry, from the pushed data-filter conjuncts. Unrecognized
-    * predicates contribute nothing (stay conservative); strict bounds
-    * saturate rather than wrap at the Long extremes. */
-  private def tsBounds(filters: Seq[Expression]): (Long, Long) = {
-    var lo = Long.MinValue
-    var hi = Long.MaxValue
-    def inc(v: Long): Long = if (v == Long.MaxValue) v else v + 1
-    def dec(v: Long): Long = if (v == Long.MinValue) v else v - 1
-    def visit(e: Expression): Unit = e match {
-      case And(l, r) => visit(l); visit(r)
-      case GreaterThan(TsAttr(), TsLit(v)) => lo = lo.max(inc(v))
-      case GreaterThanOrEqual(TsAttr(), TsLit(v)) => lo = lo.max(v)
-      case LessThan(TsAttr(), TsLit(v)) => hi = hi.min(dec(v))
-      case LessThanOrEqual(TsAttr(), TsLit(v)) => hi = hi.min(v)
-      case EqualTo(TsAttr(), TsLit(v)) => lo = lo.max(v); hi = hi.min(v)
-      case EqualTo(TsLit(v), TsAttr()) => lo = lo.max(v); hi = hi.min(v)
-      case GreaterThan(TsLit(v), TsAttr()) => hi = hi.min(dec(v))
-      case GreaterThanOrEqual(TsLit(v), TsAttr()) => hi = hi.min(v)
-      case LessThan(TsLit(v), TsAttr()) => lo = lo.max(inc(v))
-      case LessThanOrEqual(TsLit(v), TsAttr()) => lo = lo.max(v)
-      case In(TsAttr(), vs) if vs.nonEmpty &&
-          vs.forall(TsLit.unapply(_).isDefined) =>
-        val longs = vs.map(TsLit.unapply(_).get)
-        lo = lo.max(longs.min); hi = hi.min(longs.max)
-      case _ => ()
-    }
-    filters.foreach(visit)
-    (lo, hi)
-  }
-
-  /** The value column the r14 value zone maps describe. */
-  private val VCol = "value"
-
-  private object VAttr {
-    def unapply(e: Expression): Boolean = e match {
-      case a: AttributeReference => a.name == VCol
-      case _ => false
-    }
-  }
-
-  private object VLit {
-    def unapply(e: Expression): Option[Double] = e match {
-      // NaN never bounds anything: a NaN literal compares false against
-      // every row, so the whole predicate matches nothing — but proving
-      // that is the planner's job, not a file-skipping stat's
-      case Literal(v: Double, DoubleType) if !v.isNaN => Some(v)
-      case _ => None
-    }
-  }
-
-  /** CLOSED conservative interval [lo, hi] of values any matching row
-    * could carry. Strict double bounds stay closed (a file whose max is
-    * exactly the `>` literal survives — conservative, never wrong);
-    * unrecognized predicates contribute nothing. */
-  private def vBounds(filters: Seq[Expression]): (Double, Double) = {
-    var lo = Double.NegativeInfinity
-    var hi = Double.PositiveInfinity
-    def visit(e: Expression): Unit = e match {
-      case And(l, r) => visit(l); visit(r)
-      case GreaterThan(VAttr(), VLit(v)) => lo = lo.max(v)
-      case GreaterThanOrEqual(VAttr(), VLit(v)) => lo = lo.max(v)
-      case LessThan(VAttr(), VLit(v)) => hi = hi.min(v)
-      case LessThanOrEqual(VAttr(), VLit(v)) => hi = hi.min(v)
-      case EqualTo(VAttr(), VLit(v)) => lo = lo.max(v); hi = hi.min(v)
-      case EqualTo(VLit(v), VAttr()) => lo = lo.max(v); hi = hi.min(v)
-      case GreaterThan(VLit(v), VAttr()) => hi = hi.min(v)
-      case GreaterThanOrEqual(VLit(v), VAttr()) => hi = hi.min(v)
-      case LessThan(VLit(v), VAttr()) => lo = lo.max(v)
-      case LessThanOrEqual(VLit(v), VAttr()) => lo = lo.max(v)
-      case In(VAttr(), vs) if vs.nonEmpty &&
-          vs.forall(VLit.unapply(_).isDefined) =>
-        val ds = vs.map(VLit.unapply(_).get)
-        lo = lo.max(ds.min); hi = hi.min(ds.max)
-      case _ => ()
-    }
-    filters.foreach(visit)
-    (lo, hi)
-  }
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
@@ -193,27 +179,13 @@ final class ManifestFileIndex(
         val pred = Predicate.createInterpreted(bound)
         byHour.filter { case (h, _) => pred.eval(InternalRow(h)) }
       }
-    val (lo, hi) = tsBounds(dataFilters)
-    val (vLo, vHi) = vBounds(dataFilters)
-    val tsBound = lo != Long.MinValue || hi != Long.MaxValue
-    val vBound = vLo != Double.NegativeInfinity || vHi != Double.PositiveInfinity
-    val skipped =
-      if (!tsBound && !vBound) // no usable bound on either stat column
-        pruned.map { case (h, fss) => (h, fss.map(_._1)) }
-      else pruned.map { case (h, fss) =>
-        (h, fss.collect {
-          // keep: no recorded stats (never prune blind), or the recorded
-          // ranges overlap EVERY bounded dimension (a file is skippable
-          // the moment ONE dimension provably misses)
-          case (st, None) => st
-          case (st, Some(z))
-              if (z.tsMax >= lo && z.tsMin <= hi) &&
-                z.value.forall { case (mn, mx) => mx >= vLo && mn <= vHi } =>
-            st
-        })
-      }
-    skipped.filter(_._2.nonEmpty)
-      .map { case (h, fss) => PartitionDirectory(InternalRow(h), fss) }
+    // keep a file without recorded stats (never prune blind) or whose
+    // recorded ranges may overlap the filters' bounds
+    val bounds = ZoneBounds.of(dataFilters)
+    pruned.flatMap { case (h, fss) =>
+      val kept = fss.collect { case (st, z) if z.forall(_.mayOverlap(bounds)) => st }
+      if (kept.isEmpty) None else Some(PartitionDirectory(InternalRow(h), kept))
+    }
   }
 
   override def inputFiles: Array[String] =

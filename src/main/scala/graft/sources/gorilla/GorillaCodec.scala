@@ -228,12 +228,11 @@ object GorillaShardWriter {
         it.foreach { case (ts, v, shard) =>
           if (shard != curShard || enc == null) {
             close()
-            val start = shard * graft.model.ShardDurationMs
+            val (start, end) = graft.model.hourSpan(shard)
             // end-INCLUSIVE filename, matching get_shard_path
             // (insight.cpp:11): the reference reconstructs exact paths in
             // query_range, so anything else is silently invisible to it
-            fin = java.nio.file.Paths.get(dir,
-              s"$start-${start + graft.model.ShardDurationMs - 1}.bin")
+            fin = java.nio.file.Paths.get(dir, s"$start-$end.bin")
             tmp = java.nio.file.Paths.get(dir, s".$taskTag-$start.tmp")
             out = new java.io.BufferedOutputStream(
               new java.io.FileOutputStream(tmp.toFile))

@@ -57,7 +57,7 @@ class BucketedJoinSpec extends AnyFunSuite with SparkSpec {
     // 48 hour-partitions of points
     val pts = (0 until 48 * 100).map(i =>
       DataPoint((i / 100) * 3600000L + (i % 100) * 1000L, i.toDouble))
-    Ingest.ingestBatch(pts.toDS(), store)
+    Ingest.writeStore(pts.toDF(), store)
     val fact = spark.read.parquet(store)
     // dim carrying a NON-partition attribute the query filters on; only 2
     // of 48 hours survive the filter, so DPP should skip 46 partitions

@@ -284,8 +284,8 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
     val skewed = fx((0L until 17L).map(i => (9L, i, i * (gapT + 2))) ++
       (0L until 3L).map(i => (i, 17L + i, i * 3)))
     // the dispatch signal itself, exact at fraction 1.0
-    val sBal = graft.operators.TimeSeries.sampledMaxKeyShare(balanced, "user_id", 1.0)
-    val sSkw = graft.operators.TimeSeries.sampledMaxKeyShare(skewed, "user_id", 1.0)
+    val (sBal, _, _) = graft.operators.TimeSeries.sampledKeyDensityStats(balanced, "user_id", 1.0)
+    val (sSkw, _, _) = graft.operators.TimeSeries.sampledKeyDensityStats(skewed, "user_id", 1.0)
     assert(math.abs(sBal - 0.25) < 1e-9 && math.abs(sSkw - 0.85) < 1e-9,
       s"shares: balanced=$sBal skewed=$sSkw")
     // zero caller hints: same call on both inputs, exact either way
@@ -521,7 +521,7 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
       .toDF("event_type", "event_id", "t_us", "value")
       .select(col("event_type"), col("event_id"), col("value"),
         timestamp_micros(col("t_us")).as("ts"))
-    val (share, hotRows) = TimeSeries.sampledKeyStats(fx, "event_type", 1.0)
+    val (share, hotRows, _) = TimeSeries.sampledKeyDensityStats(fx, "event_type", 1.0)
     assert(math.abs(share - 0.7) < 1e-9 && math.abs(hotRows - 7.0) < 1e-9,
       s"stats: share=$share hotRows=$hotRows")
     // the dispatch choice is OBSERVABLE in the plan: plain has no join;

@@ -160,7 +160,7 @@ class SnapshotRangeStatsSpec extends AnyFunSuite with SparkSpec {
 
   test("a manifest-free store is refused; once adopted, stats match the scan") {
     val store = Files.createTempDirectory("graft_rs6_").toString
-    Ingest.ingestBatch(slice(0L, 899999L, vOff = 2.5), store)
+    Ingest.writeStore(slice(0L, 899999L, vOff = 2.5).toDF(), store)
     val e = intercept[IllegalArgumentException](
       Snapshot.rangeStats(spark, store, baseMs, baseMs + hourMs))
     assert(e.getMessage.contains("Snapshot.commit"), e.getMessage)
@@ -228,7 +228,7 @@ class SnapshotRangeStatsSpec extends AnyFunSuite with SparkSpec {
     // a directory with no manifest has no frame to aggregate: both the
     // read that would open one and the root overload refuse it
     val plain = Files.createTempDirectory("graft_rs9_").toString
-    Ingest.ingestBatch(slice(0L, 899999L, vOff = 2.5), plain)
+    Ingest.writeStore(slice(0L, 899999L, vOff = 2.5).toDF(), plain)
     Seq[() => Any](() => Snapshot.read(spark, plain),
         () => Snapshot.rangeStats(spark, plain, lo, hi)).foreach { run =>
       val e = intercept[IllegalArgumentException](run())

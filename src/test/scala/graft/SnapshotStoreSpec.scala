@@ -25,11 +25,11 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
 
   test("commit folds appended files in; read sees exactly the committed rows") {
     val store = Files.createTempDirectory("graft_snap1_").toString
-    Ingest.ingestBatch(points(1000, 0, "cpu"), store)
+    Ingest.writeStore(points(1000, 0, "cpu").toDF(), store)
     val g0 = Snapshot.commit(spark, store)
     assert(g0 == 0 && Snapshot.read(spark, store).count() == 1000)
     // uncommitted append is INVISIBLE to snapshot readers
-    Ingest.ingestBatch(points(500, 1, "cpu"), store)
+    Ingest.writeStore(points(500, 1, "cpu").toDF(), store)
     assert(Snapshot.read(spark, store).count() == 1000)
     val g1 = Snapshot.commit(spark, store)
     assert(g1 == 1 && Snapshot.read(spark, store).count() == 1500)
@@ -41,8 +41,8 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
   test("compaction preserves rows exactly, tombstones old files, and " +
       "old files stay on disk until vacuum") {
     val store = Files.createTempDirectory("graft_snap2_").toString
-    (0 until 8).foreach(i => Ingest.ingestBatch(points(100, 0, s"m$i"), store))
-    Ingest.ingestBatch(points(300, 1, "cpu"), store)
+    (0 until 8).foreach(i => Ingest.writeStore(points(100, 0, s"m$i").toDF(), store))
+    Ingest.writeStore(points(300, 1, "cpu").toDF(), store)
     Snapshot.commit(spark, store)
     val before = Snapshot.read(spark, store)
       .groupBy("metric").count().collect()
@@ -76,8 +76,8 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
 
   test("vacuum grace keeps young tombstones; a plain store's read is refused") {
     val store = Files.createTempDirectory("graft_snap3_").toString
-    Ingest.ingestBatch(points(200, 0, "a"), store)
-    Ingest.ingestBatch(points(200, 0, "b"), store)
+    Ingest.writeStore(points(200, 0, "a").toDF(), store)
+    Ingest.writeStore(points(200, 0, "b").toDF(), store)
     val e = intercept[IllegalArgumentException](Snapshot.read(spark, store))
     assert(e.getMessage.contains("Snapshot.commit"), e.getMessage) // no manifest yet
     Snapshot.commit(spark, store)
@@ -95,8 +95,8 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
   test("the DEFAULT read path is manifest-aware: Snapshot.read and " +
       "queryRange stay exact through the compact-without-vacuum window") {
     val store = Files.createTempDirectory("graft_snap4_").toString
-    (0 until 6).foreach(i => Ingest.ingestBatch(points(500, 0, s"m$i"), store))
-    Ingest.ingestBatch(points(700, 1, "cpu"), store)
+    (0 until 6).foreach(i => Ingest.writeStore(points(500, 0, s"m$i").toDF(), store))
+    Ingest.writeStore(points(700, 1, "cpu").toDF(), store)
     Snapshot.commit(spark, store)
     val total = 6 * 500 + 700
     assert(Snapshot.read(spark, store).count() == total)
@@ -119,7 +119,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
 
   test("lifecycle ops commit on a manifest store, refuse a plain one") {
     val store = Files.createTempDirectory("graft_snap5_").toString
-    Ingest.ingestBatch(points(100, 0, "cpu"), store)
+    Ingest.writeStore(points(100, 0, "cpu").toDF(), store)
     val h0 = baseMs / hourMs
     val (lo, hi) = (baseMs, baseMs + hourMs - 1)
     // the read entry points, each counting the rows it sees
@@ -162,8 +162,8 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
   test("vacuum grace runs from TOMBSTONE time, not file mtime: " +
       "long-lived files compacted away survive the grace window") {
     val store = Files.createTempDirectory("graft_snap6_").toString
-    Ingest.ingestBatch(points(100, 0, "a"), store)
-    Ingest.ingestBatch(points(100, 0, "b"), store)
+    Ingest.writeStore(points(100, 0, "a").toDF(), store)
+    Ingest.writeStore(points(100, 0, "b").toDF(), store)
     Snapshot.commit(spark, store)
     // age the data files: written "100 days ago" as far as mtime shows
     val (_, live, _) = Snapshot.latest(spark, store)
@@ -184,7 +184,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
   test("a pinned reader holds its generation across vacuum; closing the " +
       "lease releases it") {
     val store = Files.createTempDirectory("graft_snap7_").toString
-    (0 until 4).foreach(i => Ingest.ingestBatch(points(250, 0, s"m$i"), store))
+    (0 until 4).foreach(i => Ingest.writeStore(points(250, 0, s"m$i").toDF(), store))
     Snapshot.commit(spark, store)
     val (pinnedDf, lease) = Snapshot.pin(spark, store)
     Snapshot.compactShard(spark, store, baseMs / hourMs)
@@ -201,8 +201,8 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
 
   test("expired leases stop blocking vacuum (crashed-reader TTL)") {
     val store = Files.createTempDirectory("graft_snap8_").toString
-    Ingest.ingestBatch(points(100, 0, "a"), store)
-    Ingest.ingestBatch(points(100, 0, "b"), store)
+    Ingest.writeStore(points(100, 0, "a").toDF(), store)
+    Ingest.writeStore(points(100, 0, "b").toDF(), store)
     Snapshot.commit(spark, store)
     val (_, lease) = Snapshot.pin(spark, store)
     Snapshot.compactShard(spark, store, baseMs / hourMs)
@@ -249,7 +249,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     // 7 ingests at checkpointEvery=3: m0 i1 i2 m3 i4 i5 m6
     (0 until 7).foreach { i =>
       // route through commitAdded to control the cadence
-      Ingest.ingestBatch(points(100, i, s"m$i"), store)
+      Ingest.writeStore(points(100, i, s"m$i").toDF(), store)
       val files = new java.io.File(s"$store/shard_hour=${baseMs / hourMs + i}")
         .listFiles().filter(_.getName.endsWith(".parquet"))
         .map(f => s"shard_hour=${baseMs / hourMs + i}/${f.getName}")
@@ -291,19 +291,19 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
       "(refused), and refresh() recovers it") {
     val store = Files.createTempDirectory("graft_snapv2b_").toString
     val cm1 = Snapshot.committer(spark, store)
-    Ingest.ingestBatch(points(100, 0, "a"), store)
+    Ingest.writeStore(points(100, 0, "a").toDF(), store)
     val files0 = new java.io.File(s"$store/shard_hour=${baseMs / hourMs}")
       .listFiles().filter(_.getName.endsWith(".parquet"))
       .map(f => s"shard_hour=${baseMs / hourMs}/${f.getName}").toSeq
     cm1.commitAdded(files0)
     val cm2 = Snapshot.committer(spark, store) // same gen as cm1 now
-    Ingest.ingestBatch(points(100, 1, "b"), store)
+    Ingest.writeStore(points(100, 1, "b").toDF(), store)
     val files1 = new java.io.File(s"$store/shard_hour=${baseMs / hourMs + 1}")
       .listFiles().filter(_.getName.endsWith(".parquet"))
       .map(f => s"shard_hour=${baseMs / hourMs + 1}/${f.getName}").toSeq
     cm1.commitAdded(files1)
     // cm2 is now stale: its next commit targets an existing generation
-    Ingest.ingestBatch(points(100, 2, "c"), store)
+    Ingest.writeStore(points(100, 2, "c").toDF(), store)
     val files2 = new java.io.File(s"$store/shard_hour=${baseMs / hourMs + 2}")
       .listFiles().filter(_.getName.endsWith(".parquet"))
       .map(f => s"shard_hour=${baseMs / hourMs + 2}/${f.getName}").toSeq
@@ -315,7 +315,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     cm2.commitAdded(files2)
     assert(Snapshot.read(spark, store).count() == 300)
     // cm1 is stale in turn now; its next append also self-recovers
-    Ingest.ingestBatch(points(50, 3, "d"), store)
+    Ingest.writeStore(points(50, 3, "d").toDF(), store)
     val files3 = new java.io.File(s"$store/shard_hour=${baseMs / hourMs + 3}")
       .listFiles().filter(_.getName.endsWith(".parquet"))
       .map(f => s"shard_hour=${baseMs / hourMs + 3}/${f.getName}").toSeq
@@ -327,7 +327,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
   // partitions, and a size-less legacy manifest plans from the log too
   test("manifest-planned reads, legacy size-less logs included") {
     val store = Files.createTempDirectory("graft_snapidx_").toString
-    (0 until 3).foreach(h => Ingest.ingestBatch(points(200, h, s"m$h"), store))
+    (0 until 3).foreach(h => Ingest.writeStore(points(200, h, s"m$h").toDF(), store))
     Snapshot.commit(spark, store)
     val df = Snapshot.read(spark, store)
     // the fast path plans via ManifestFileIndex
@@ -421,9 +421,9 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
       d.listFiles().filter(_.getName.endsWith(".parquet"))
         .map(f => s"shard_hour=${baseMs / hourMs + h}/${f.getName}").toSeq
     }
-    Ingest.ingestBatch(points(100, 0, "a"), store)
+    Ingest.writeStore(points(100, 0, "a").toDF(), store)
     cm.commitAdded(hourFiles(0)) // m0 (first commit checkpoints)
-    Ingest.ingestBatch(points(100, 1, "b"), store)
+    Ingest.writeStore(points(100, 1, "b").toDF(), store)
     cm.commitAdded(hourFiles(1)) // i1
     // maintenance commit the cached committer doesn't know about: vacuum
     // always writes a CHECKPOINT — m2, a different SPELLING than the i2
@@ -431,7 +431,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     // never fired here; both gen-2 files landed and a pre-append vacuum
     // checkpoint could silently drop the append (r11 advisor, high).
     Snapshot.vacuum(spark, store, graceMs = 0L) // m2
-    Ingest.ingestBatch(points(100, 2, "c"), store)
+    Ingest.writeStore(points(100, 2, "c").toDF(), store)
     intercept[IllegalStateException] {
       cm.commitAdded(hourFiles(2), retries = 0)
     }
@@ -462,10 +462,10 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
       "replays checkpoint first, increment after: the increment's adds " +
       "survive instead of being dropped by listing order") {
     val store = Files.createTempDirectory("graft_snaptie_").toString
-    Ingest.ingestBatch(points(100, 0, "a"), store)
+    Ingest.writeStore(points(100, 0, "a").toDF(), store)
     Snapshot.commit(spark, store) // m0
     // hour-1 data that gen 1 SHOULD carry
-    Ingest.ingestBatch(points(100, 1, "b"), store)
+    Ingest.writeStore(points(100, 1, "b").toDF(), store)
     val h1 = new java.io.File(s"$store/shard_hour=${baseMs / hourMs + 1}")
       .listFiles().filter(_.getName.endsWith(".parquet"))
       .map(f => (s"shard_hour=${baseMs / hourMs + 1}/${f.getName}", f.length))
@@ -489,7 +489,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
   test("vacuum sweeps stranded .tmp- commit files older than the lease " +
       "TTL; a fresh (possibly in-flight) tmp stays") {
     val store = Files.createTempDirectory("graft_snaptmp_").toString
-    Ingest.ingestBatch(points(100, 0, "a"), store)
+    Ingest.writeStore(points(100, 0, "a").toDF(), store)
     Snapshot.commit(spark, store)
     val mdir = new java.io.File(s"$store/${Snapshot.ManifestDir}")
     val stale = new java.io.File(mdir, ".tmp-dead-writer")
@@ -675,7 +675,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     // new hour 9 — over 2 and over 3 stored hours
     def upsertJobs(stored: Int): Int = {
       val store = Files.createTempDirectory("graft_snapupsertjobs_").toString
-      (0 until stored).foreach(h => Ingest.ingestBatch(points(50, h, "cpu"), store))
+      (0 until stored).foreach(h => Ingest.writeStore(points(50, h, "cpu").toDF(), store))
       Snapshot.commit(spark, store)
       val updates = ((0 until stored) :+ 9).map(h =>
         DataPoint(baseMs + h * hourMs + 5L, -1.0, "cpu"))
@@ -696,8 +696,8 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     import scala.jdk.CollectionConverters._
     val store = Files.createTempDirectory("graft_snapdual_").toString
     // hour 0 holds 8 append files, so the mid-run compaction has work
-    (0 until 8).foreach(i => Ingest.ingestBatch(points(100, 0, s"m$i"), store))
-    Ingest.ingestBatch(points(300, 1, "cpu"), store)
+    (0 until 8).foreach(i => Ingest.writeStore(points(100, 0, s"m$i").toDF(), store))
+    Ingest.writeStore(points(300, 1, "cpu").toDF(), store)
     Snapshot.commit(spark, store)
     val seeded = 1100L
     val hour0 = baseMs / hourMs

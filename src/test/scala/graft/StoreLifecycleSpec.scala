@@ -21,7 +21,7 @@ class StoreLifecycleSpec extends AnyFunSuite with SparkSpec {
   /** A manifest store adopting one append per batch. */
   private def store(tag: String, batches: Seq[DataPoint]*): String = {
     val root = Files.createTempDirectory(s"graft_${tag}_").toString
-    batches.foreach(b => Ingest.ingestBatch(b.toDS(), root))
+    batches.foreach(b => Ingest.writeStore(b.toDF(), root))
     Snapshot.commit(spark, root)
     root
   }

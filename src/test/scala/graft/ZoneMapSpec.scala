@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -201,6 +201,74 @@ class ZoneMapSpec extends AnyFunSuite with SparkSpec {
     val hi2 = Snapshot.read(spark, store).filter(v >= 300.0)
     assert(filesScanned(hi2) == 2 && hi2.count() == 200,
       "blind file must be scanned; value-banded file still pruned")
+  }
+
+  test("one extractor bounds both stat columns: literal-first comparisons, " +
+      "IN lists, strict bounds at the Long extremes and NaN literals plan " +
+      "like their normal forms; no file holding a matching row is skipped") {
+    val store = Files.createTempDirectory("graft_zmx_").toString
+    // four single-file commits: ts quarter q holds values [100q, 100q+99]
+    (0 until 4).foreach { q =>
+      Snapshot.ingestCommitted(
+        vslice(q * 900000L, q * 900000L + 899999L, q * 100.0), store)
+    }
+    def v = col("value")
+    def planned(c: Column) = filesScanned(Snapshot.read(spark, store).filter(c))
+    val t = baseMs + 900000L // quarter 1's min
+    // (filter, its normal form, files both plan)
+    val cases: Seq[(String, Column, Column, Long)] = Seq(
+      ("t = ts", lit(t) === ts, ts === t, 1L),
+      ("t < ts", lit(t) < ts, ts > t, 3L),
+      ("t <= ts", lit(t) <= ts, ts >= t, 3L),
+      ("t > ts", lit(t) > ts, ts < t, 1L),
+      ("t >= ts", lit(t) >= ts, ts <= t, 2L),
+      // strict value bounds stay closed: 199.0 is quarter 1's max
+      ("199 = v", lit(199.0) === v, v === 199.0, 1L),
+      ("199 < v", lit(199.0) < v, v > 199.0, 3L),
+      ("199 <= v", lit(199.0) <= v, v >= 199.0, 3L),
+      ("199 > v", lit(199.0) > v, v < 199.0, 2L),
+      ("199 >= v", lit(199.0) >= v, v <= 199.0, 2L),
+      ("ts IN", ts.isin(baseMs + 10L, baseMs + 1000000L, baseMs + 20L),
+        ts.between(baseMs + 10L, baseMs + 1000000L), 2L),
+      ("v IN", v.isin(250.0, 150.0), v.between(150.0, 250.0), 2L),
+      ("ts > MaxValue", ts > Long.MaxValue, ts >= Long.MaxValue, 0L),
+      ("ts < MinValue", ts < Long.MinValue, ts <= Long.MinValue, 0L),
+      ("ts > MinValue", ts > Long.MinValue, ts >= Long.MinValue + 1, 4L),
+      ("ts < MaxValue", ts < Long.MaxValue, ts <= Long.MaxValue - 1, 4L),
+      ("v < NaN", ts <= t && v < Double.NaN, ts <= t, 2L),
+      ("v > NaN", v > Double.NaN, lit(true), 4L),
+      ("v IN with NaN", v.isin(150.0, Double.NaN), lit(true), 4L))
+    for ((name, c, normal, files) <- cases) {
+      assert(planned(normal) == files, s"$name: normal form")
+      assert(planned(c) == files, s"$name: planned ${planned(c)} files, not $files")
+    }
+    // soundness: every row matching an inclusive range is returned, so
+    // every file holding one was planned — point ranges on each file's
+    // edges, then random ranges over both columns
+    val rows = Snapshot.read(spark, store)
+      .select(input_file_name(), ts, v).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+    val (noT, noV) = ((Long.MinValue, Long.MaxValue),
+      (Double.NegativeInfinity, Double.PositiveInfinity))
+    val tEdges = (0 until 4).flatMap(q => Seq(q * 900000L, q * 900000L + 899999L))
+      .map(baseMs + _)
+    val vEdges = (0 until 4).flatMap(q => Seq(q * 100.0, q * 100.0 + 99.0))
+    val rnd = new scala.util.Random(13L)
+    def pick[A](edges: Seq[A], any: => A): A =
+      if (rnd.nextBoolean()) edges(rnd.nextInt(edges.size)) else any
+    def sorted[A: Ordering](x: A, y: A) = if (Ordering[A].lteq(x, y)) (x, y) else (y, x)
+    val ranges = tEdges.map(e => ((e, e), noV)) ++ vEdges.map(x => (noT, (x, x))) ++
+      Seq.fill(24) {
+        def tAt = pick(tEdges, baseMs + rnd.nextLong(3600000L)) + rnd.between(-1L, 2L)
+        def vAt = pick(vEdges, rnd.nextDouble() * 400.0)
+        (sorted(tAt, tAt), if (rnd.nextBoolean()) noV else sorted(vAt, vAt))
+      }
+    for (((a, b), (lo, hi)) <- ranges) {
+      val hit = rows.filter { case (_, at, x) => at >= a && at <= b && x >= lo && x <= hi }
+      val q = Snapshot.read(spark, store).filter(ts.between(a, b) && v.between(lo, hi))
+      assert(q.count() == hit.length, s"ts [$a, $b] value [$lo, $hi]")
+      assert(filesScanned(q) >= hit.map(_._1).distinct.length)
+    }
   }
 
   test("Committer increments carry zone maps; a replayed reader prunes " +
