@@ -217,7 +217,8 @@ object SparkEntry {
     // skew-proof variant: (user, time-block) local windows + session-level
     // stitch — identical output, hot-user parallelism = block count
     "q_sessionize_blocked" -> ((s, dir) =>
-      TimeSeries.sessionizeBlocked(Tables.events(s, dir), 1800000000L)),
+      TimeSeries.sessionizeBlocked(Tables.events(s, dir), 1800000000L,
+        operators.Blocks.session(1800000000L))),
     // measured-skew dispatch (r11): plain vs blocked chosen from the
     // sampled hottest-user share, zero caller hints, bit-identical output
     "q_sessionize_adaptive" -> ((s, dir) =>
@@ -248,7 +249,7 @@ object SparkEntry {
     // skew-proof variant: block-local prefixes + session-level stitch
     "q_session_paths_blocked" -> ((s, dir) =>
       operators.Analytics.sessionPathsBlocked(Tables.events(s, dir),
-        1800000000L, depth = 3, topK = 20)),
+        1800000000L, depth = 3, topK = 20, operators.Blocks.session(1800000000L))),
     // measured-skew dispatch (r12, closing the adaptive family): plain vs
     // blocked from the sampled hottest-user share, zero caller hints
     "q_session_paths_adaptive" -> ((s, dir) =>

@@ -596,41 +596,22 @@ object Analytics {
   }
 
   /** Skew-proof [[transitionMatrix]]: identical output, bounded window
-    * partitions — the [[TimeSeries.sessionizeBlocked]] treatment applied
-    * to ADJACENCY. The plain build's lead() runs one partition per user,
-    * so a hot user holding 90 % of events serializes 90 % of the pass on
-    * one task. Here the timeline is cut into `blockUs` blocks and
-    * adjacency decomposes EXACTLY into (a) within-block pairs — lead over
-    * `(user, block)`, hot-user parallelism = block count — and (b)
+    * partitions — the [[Blocks]] treatment applied to ADJACENCY. The
+    * plain build's lead() runs one partition per user, so a hot user
+    * holding 90 % of events serializes 90 % of the pass on one task.
+    * Here adjacency decomposes EXACTLY into (a) within-block pairs — lead
+    * over `(user, blk)`, hot-user parallelism = block count — and (b)
     * cross-block pairs: each block's last event pairs with the user's
     * next non-empty block's first event, built from one (first, last)
     * summary row per (user, block) (the struct min/max carries the
     * (ts, event_id) total order), so the stitch window is over
-    * block-level rows, never events. Default block: 1 hour. */
+    * block-level rows, never events. The decomposition holds for either
+    * cut; the default is the hourly time cut. */
   def transitionMatrixBlocked(events: DataFrame,
-      blockUs: Long = 0L): DataFrame = {
-    val block = if (blockUs > 0L) blockUs else 3600000000L
-    transitionOnBlocks(events
+      blocks: Blocks = Blocks.hourly): DataFrame =
+    transitionOnBlocks(blocks.cut(events
       .select(col("user_id"), tsUs(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"))
-      .withColumn("blk", expr(s"ts_us div ${block}L")))
-  }
-
-  /** Density-proof [[transitionMatrixBlocked]]: COUNT blocks on the
-    * per-user [[distributedRank]] index — a hot user whose events all
-    * land in one hour still gets ceil(rows/blockRows)-way adjacency
-    * parallelism (time blocks re-serialize that burst). Identical
-    * decomposition downstream, bit-identical output. */
-  def transitionMatrixBlockedRows(events: DataFrame,
-      blockRows: Long = 0L): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else 262144L
-    transitionOnBlocks(distributedRank(
-        events.select(col("user_id"), tsUs(col("ts")).as("ts_us"),
-          col("event_id"), col("event_type")),
-        Seq("user_id"), Seq(col("ts_us"), col("event_id")))
-      .drop("off", "n")
-      .withColumn("blk", expr(s"(rn - 1) div ${bRows}L")))
-  }
+        col("event_id"), col("event_type")), "user_id"))
 
   /** Shared tail of the blocked transition builds: within-block
     * adjacency plus the block-summary boundary stitch. Requires `blk`
@@ -656,23 +637,14 @@ object Analytics {
     pairsToMatrix(localPairs.unionByName(boundaryPairs))
   }
 
-  /** Adaptive [[transitionMatrix]]: the r13 three-signal dispatch of
-    * [[TimeSeries.sessionizeAdaptive]] (see there for the rationale)
-    * on the user key — plain unless the hottest user is dominant and
-    * spans ≥ 2 count blocks; then the time-blocked adjacency (1 h
-    * blocks, so hours-per-block = 1) while the densest hour stays
-    * bounded, or the density-proof [[transitionMatrixBlockedRows]]
-    * past it. Bit-identical on every branch. */
-  def transitionMatrixAdaptive(events: DataFrame, blockRows: Long = 0L,
-      sampleFraction: Double = 0.01, skewThreshold: Double = 0.2): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else 262144L
-    TimeSeries.blockDispatch(events, "user_id", bRows, sampleFraction,
-        skewThreshold) match {
-      case TimeSeries.DispatchPlain => transitionMatrix(events)
-      case TimeSeries.DispatchTime => transitionMatrixBlocked(events)
-      case TimeSeries.DispatchCount => transitionMatrixBlockedRows(events, bRows)
-    }
-  }
+  /** Adaptive [[transitionMatrix]]: [[Blocks.adaptive]] on the user key
+    * — plain unless the hottest user is dominant and spans ≥ 2 count
+    * blocks; then the hourly time cut while its densest hour stays
+    * bounded, or the count cut past it. Bit-identical on every branch. */
+  def transitionMatrixAdaptive(events: DataFrame, blockRows: Long = Blocks.DefaultRows,
+      sampleFraction: Double = 0.01, skewThreshold: Double = 0.2): DataFrame =
+    Blocks.adaptive(events, "user_id", blockRows, sampleFraction,
+      skewThreshold)(transitionMatrix(events))(transitionMatrixBlocked(events, _))
 
   /** Top-k session-opening paths: the ordered sequence of the first
     * `depth` event types of every gap-delimited session (same gap rule
@@ -717,46 +689,28 @@ object Analytics {
 
   /** Skew-proof [[sessionPaths]] — identical output, bounded partitions.
     * Same block-split-then-stitch construction as
-    * [[TimeSeries.sessionizeBlocked]] (see there for the why): local
-    * sessions form inside `(user, blockUs-block)` windows, each keeps
-    * only its first `depth` events as a sorted struct array, and merged
-    * sessions assemble their opening path from the time-ordered concat
-    * of constituent prefixes, truncated to `depth`. The stitch window
-    * runs over SESSION-level rows carrying ≤ `depth`-element arrays —
-    * per-user volume is blocks × depth, never events. */
+    * [[TimeSeries.sessionizeBlocked]] (see there for the why, and for
+    * the cuts it takes): local sessions form inside `(user, blk)`
+    * windows, each keeps only its first `depth` events as a sorted
+    * struct array, and merged sessions assemble their opening path from
+    * the time-ordered concat of constituent prefixes, truncated to
+    * `depth`. The stitch window runs over SESSION-level rows carrying
+    * ≤ `depth`-element arrays — per-user volume is blocks × depth, never
+    * events. */
   def sessionPathsBlocked(events: DataFrame, gapUs: Long, depth: Int,
-      topK: Int, blockUs: Long = 0L): DataFrame = {
-    val block = if (blockUs > 0L) blockUs else 64L * gapUs
-    require(block > gapUs, s"blockUs=$block must exceed gapUs=$gapUs")
-    sessionPathsOnBlocks(events
+      topK: Int, blocks: Blocks): DataFrame = {
+    require(blocks.exceeds(gapUs), s"$blocks must exceed gapUs=$gapUs")
+    // a count cut's rank must not reach the tail, whose per-session `rn`
+    // it would shadow
+    sessionPathsOnBlocks(blocks.cut(events
       .select(col("user_id"), col("event_id"), col("event_type"),
-        TimeSeries.tsUs(col("ts")).as("ts_us"))
-      .withColumn("blk", expr(s"ts_us div ${block}L")), gapUs, depth, topK)
-  }
-
-  /** Density-proof [[sessionPathsBlocked]]: COUNT blocks on the
-    * per-user [[distributedRank]] index (see
-    * [[TimeSeries.sessionizeBlockedRows]] — same argument, and the
-    * stitch is block-scheme-agnostic). Bit-identical output; no
-    * `block > gap` precondition. */
-  def sessionPathsBlockedRows(events: DataFrame, gapUs: Long, depth: Int,
-      topK: Int, blockRows: Long = 0L): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else 262144L
-    sessionPathsOnBlocks(distributedRank(
-        events.select(col("user_id"), col("event_id"), col("event_type"),
-          TimeSeries.tsUs(col("ts")).as("ts_us")),
-        Seq("user_id"), Seq(col("ts_us"), col("event_id")))
-      .drop("off", "n")
-      .withColumnRenamed("rn", "grn")
-      .withColumn("blk", expr(s"(grn - 1) div ${bRows}L"))
-      .drop("grn"), gapUs, depth, topK)
+        TimeSeries.tsUs(col("ts")).as("ts_us")), "user_id").drop("rn"),
+      gapUs, depth, topK)
   }
 
   /** Shared tail of the blocked path miners (the local-session `rn`
-    * below is per-session, so the global rank column must not survive
-    * into it — the count variant renames and drops it first). Requires
-    * `blk` contiguous and ascending in the per-user (ts_us, event_id)
-    * order. */
+    * below is per-session). Requires `blk` contiguous and ascending in
+    * the per-user (ts_us, event_id) order. */
   private def sessionPathsOnBlocks(e: DataFrame, gapUs: Long, depth: Int,
       topK: Int): DataFrame = {
     val wLocal = Window.partitionBy(col("user_id"), col("blk"))
@@ -805,24 +759,17 @@ object Analytics {
       .limit(topK)
   }
 
-  /** Adaptive [[sessionPaths]]: the r13 three-signal dispatch of
-    * [[TimeSeries.sessionizeAdaptive]] (see there for the rationale) —
-    * plain, the time-blocked stitch (64×gap blocks, density-bounded),
-    * or the density-proof [[sessionPathsBlockedRows]]. Bit-identical
-    * on every branch. */
+  /** Adaptive [[sessionPaths]]: [[Blocks.adaptive]] on the user key, as
+    * [[TimeSeries.sessionizeAdaptive]] — plain, the 64×gap time cut
+    * (density-bounded), or the count cut. Bit-identical on every
+    * branch. */
   def sessionPathsAdaptive(events: DataFrame, gapUs: Long, depth: Int,
-      topK: Int, blockRows: Long = 0L, sampleFraction: Double = 0.01,
-      skewThreshold: Double = 0.2): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else 262144L
-    val hoursPerBlock = 64.0 * gapUs / 3600000000.0
-    TimeSeries.blockDispatch(events, "user_id", bRows, sampleFraction,
-        skewThreshold, hoursPerBlock) match {
-      case TimeSeries.DispatchPlain => sessionPaths(events, gapUs, depth, topK)
-      case TimeSeries.DispatchTime => sessionPathsBlocked(events, gapUs, depth, topK)
-      case TimeSeries.DispatchCount =>
-        sessionPathsBlockedRows(events, gapUs, depth, topK, bRows)
-    }
-  }
+      topK: Int, blockRows: Long = Blocks.DefaultRows, sampleFraction: Double = 0.01,
+      skewThreshold: Double = 0.2): DataFrame =
+    Blocks.adaptive(events, "user_id", blockRows, sampleFraction, skewThreshold,
+      Option.when(gapUs > 0L)(Blocks.session(gapUs)))(
+      sessionPaths(events, gapUs, depth, topK))(
+      sessionPathsBlocked(events, gapUs, depth, topK, _))
 
   /** Distributed global `row_number` within `partCols` over the strict
     * total order `orderCols`: range-repartition on (part, order), rank
@@ -834,8 +781,8 @@ object Analytics {
     * The [[Materialize]] cut PINS the pid assignment: both the ranked branch
     * and the offsets branch descend from the same materialized exchange
     * (`spark_partition_id` is documented non-deterministic otherwise).
-    * Shared by [[paretoCurve]], [[funnelLatency]], [[giniConcentration]]
-    * and [[rfmSegments]]. */
+    * Shared by [[paretoCurve]], [[funnelLatency]], [[giniConcentration]],
+    * [[rfmSegments]] and the count cut of [[Blocks]]. */
   private[graft] def distributedRank(df: DataFrame, partCols: Seq[String],
       orderCols: Seq[Column]): DataFrame = {
     val keyed = partCols :+ "pid"

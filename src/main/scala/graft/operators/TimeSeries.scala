@@ -784,54 +784,30 @@ object TimeSeries {
 
   /** Skew-proof [[sessionize]]: identical output, bounded partition size.
     *
-    * The plain sessionizer windows over `user_id` — correct, one shuffle,
-    * but ONE partition per user: a hot user holding 90 % of events (the
-    * r10 skew probe's shape) serializes 90 % of the window work onto one
-    * task, and AQE cannot split a window partition. Here the timeline is
-    * cut into `blockUs` blocks and the window partitions by
-    * `(user_id, block)` — hot-user parallelism = number of blocks —
-    * then local sessions are STITCHED: two adjacent local sessions merge
-    * iff the gap between them is ≤ `gapUs`, decided by the same
-    * lag/cumsum island pass running per user over SESSION-level rows
-    * (≤ one row per block per user in the worst continuous-activity
-    * case — thousands of rows where the event pass had millions, so the
-    * second window is never the bottleneck). Session ids are re-derived
-    * as the per-user rank of merged sessions by start time, which equals
-    * the running-break-sum numbering of [[sessionize]] — bit-identical
-    * output (spec-pinned on real and adversarial data, and probed at
-    * 10 M events / 99 % one user).
+    * The window partitions by `(user_id, blk)` on the [[Blocks]] cut —
+    * hot-user parallelism = number of blocks — then local sessions are
+    * STITCHED: two adjacent local sessions merge iff the gap between them
+    * is ≤ `gapUs`, decided by the same lag/cumsum island pass running per
+    * user over SESSION-level rows (≤ one row per block per user in the
+    * worst continuous-activity case — thousands of rows where the event
+    * pass had millions, so the second window is never the bottleneck).
+    * Session ids are re-derived as the per-user rank of merged sessions
+    * by start time, which equals the running-break-sum numbering of
+    * [[sessionize]] — bit-identical output (spec-pinned on real and
+    * adversarial data, and probed at 10 M events / 99 % one user).
     *
-    * `blockUs` trades hot-key parallelism (span/blockUs tasks) against
-    * stitch volume; it must exceed `gapUs` to be useful (blocks shorter
-    * than the gap make every local session a boundary session). Default
-    * 64× gap. */
+    * The stitch is cut-agnostic, so a count cut ([[Blocks.rows]]) gives
+    * the density-proof form: a burst that lands a hot user's whole
+    * timeline inside one time block still parallelizes as
+    * ceil(rows/blockRows). A time cut trades hot-user parallelism
+    * (span/blockUs tasks) against stitch volume and must exceed `gapUs`
+    * ([[Blocks.session]] is 64× gap). */
   def sessionizeBlocked(events: DataFrame, gapUs: Long,
-      blockUs: Long = 0L): DataFrame = {
-    val block = if (blockUs > 0L) blockUs else 64L * gapUs
-    require(block > gapUs, s"blockUs=$block must exceed gapUs=$gapUs")
-    sessionizeOnBlocks(events
-      .select(col("user_id"), col("event_id"), tsUs(col("ts")).as("ts_us"))
-      .withColumn("blk", expr(s"ts_us div ${block}L")), gapUs)
-  }
-
-  /** Density-proof [[sessionize]]: COUNT blocks on the per-user
-    * [[Analytics.distributedRank]] index instead of time blocks — a
-    * burst that lands a hot user's whole timeline inside one time block
-    * still parallelizes as ceil(rows/blockRows). The stitch is
-    * block-scheme-agnostic (it merges adjacent LOCAL sessions by the
-    * gap rule whatever cut them), so the output is bit-identical; count
-    * blocks also need no `block > gap` precondition — small blocks just
-    * mean more (session-level, bounded) stitch rows. */
-  def sessionizeBlockedRows(events: DataFrame, gapUs: Long,
-      blockRows: Long = 0L): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else DefaultSeriesBlockRows
-    sessionizeOnBlocks(
-      Analytics.distributedRank(
-          events.select(col("user_id"), col("event_id"),
-            tsUs(col("ts")).as("ts_us")),
-          Seq("user_id"), Seq(col("ts_us"), col("event_id")))
-        .drop("off", "n")
-        .withColumn("blk", expr(s"(rn - 1) div ${bRows}L")), gapUs)
+      blocks: Blocks): DataFrame = {
+    require(blocks.exceeds(gapUs), s"$blocks must exceed gapUs=$gapUs")
+    sessionizeOnBlocks(blocks.cut(events
+      .select(col("user_id"), col("event_id"), tsUs(col("ts")).as("ts_us")),
+      "user_id"), gapUs)
   }
 
   /** Shared tail of the blocked sessionizers: local sessions inside
@@ -869,93 +845,51 @@ object TimeSeries {
         max(col("s_end")).as("session_end_us"))
   }
 
-  /** Sampled (hottest-key share, ESTIMATED hottest-key rows, ESTIMATED
-    * hottest-key rows in its DENSEST HOUR) — the r13 three-signal
-    * dispatch probe, still ONE sampled job. The third signal is the
-    * DENSITY axis: TIME blocks are the cheapest skew fix (no rank
-    * pass — PLANS.md rounds 12–13 measured them 2.4–4.2× over plain at 99 %
-    * skew, vs 1.0–1.2× for count blocks whose distributedRank
-    * materialization eats most of the win), but their max task is the
-    * hot key's densest block, so they only apply when the densest hour
-    * is small; past that, count blocks are the density-proof fallback.
-    * Needs a `ts` column. `fraction=1.0` makes all three exact. */
-  def sampledKeyDensityStats(df: DataFrame, key: String,
-      fraction: Double = 0.01, seed: Long = 42L): (Double, Double, Double) = {
-    val g = df.select(col(key), tsUs(col("ts")).as("_us"))
-      .sample(withReplacement = false, fraction, seed)
-      .withColumn("_h", expr("_us div 3600000000L"))
-      .groupBy(col(key), col("_h")).agg(count(lit(1)).as("n"))
-      .groupBy(col(key))
-      .agg(sum(col("n")).as("tot"), max(col("n")).as("maxh"))
-    val r = g.agg(sum(col("tot")).as("grand"),
-      max_by(struct(col("tot"), col("maxh")), col("tot")).as("hot"))
-      .collect()(0)
-    if (r.isNullAt(0) || r.isNullAt(1)) (0.0, 0.0, 0.0)
-    else {
-      val grand = r.getLong(0)
-      val hot = r.getStruct(1)
-      if (grand == 0L) (0.0, 0.0, 0.0)
-      else (hot.getLong(0).toDouble / grand,
-        hot.getLong(0).toDouble / fraction,
-        hot.getLong(1).toDouble / fraction)
-    }
-  }
-
-  /** Adaptive sessionize — the r13 three-signal dispatch
-    * ([[blockDispatch]]) on the `user_id` key: [[sessionize]] (one
-    * shuffle, one window pass — fastest on balanced keys) unless the
-    * hottest user is dominant (share) AND large (volume: ≥ 2 count
-    * blocks — below it no blocked form can win, the same degrade-not-
-    * die pattern as the census gates); then the TIME-blocked stitch
-    * when the hot user's densest block stays bounded (cheapest fix —
-    * no rank pass), or the density-proof [[sessionizeBlockedRows]]
-    * when the timeline bursts. A window partition holding ≥
-    * `skewThreshold` of all rows caps the stage's speedup at
-    * 1/threshold regardless of cores (Amdahl on the serialized hot
-    * partition). Every branch is bit-identical (spec-pinned), so
-    * dispatch affects PERFORMANCE only, never results. */
+  /** Adaptive [[sessionize]] on the `user_id` key ([[Blocks.adaptive]]):
+    * plain on balanced or small-hot-user input, the 64×gap time cut when
+    * the hot user's densest block stays bounded, the count cut when the
+    * timeline bursts — or when a gap ≤ 0 admits no time cut. */
   def sessionizeAdaptive(events: DataFrame, gapUs: Long,
-      blockRows: Long = 0L, sampleFraction: Double = 0.01,
-      skewThreshold: Double = 0.2): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else DefaultSeriesBlockRows
-    val hoursPerBlock = 64.0 * gapUs / 3600000000.0
-    blockDispatch(events, "user_id", bRows, sampleFraction, skewThreshold,
-        hoursPerBlock) match {
-      case DispatchPlain => sessionize(events, gapUs)
-      case DispatchTime => sessionizeBlocked(events, gapUs)
-      case DispatchCount => sessionizeBlockedRows(events, gapUs, bRows)
-    }
-  }
+      blockRows: Long = Blocks.DefaultRows, sampleFraction: Double = 0.01,
+      skewThreshold: Double = 0.2): DataFrame =
+    Blocks.adaptive(events, "user_id", blockRows, sampleFraction, skewThreshold,
+      Option.when(gapUs > 0L)(Blocks.session(gapUs)))(sessionize(events, gapUs))(
+      sessionizeBlocked(events, gapUs, _))
 
   // ---------------------------------------------------------------------
-  // Blocked per-series window family (r12): the sessionizeBlocked
-  // treatment generalized to every raw-event series window. The plain
-  // forms partition by `event_type` — correct and one shuffle, but ONE
-  // window partition per series: a hot series holding 90 % of events
-  // serializes 90 % of the pass on one task (AQE cannot split a window
-  // partition). Each blocked form bounds partitions by (series, block)
-  // and repairs the boundary with block-SUMMARY rows (one per series per
-  // block), so hot-series parallelism = block count while outputs stay
-  // bit-identical (spec-pinned per op, corpus + adversarial fixtures).
+  // Blocked per-series window family: the [[Blocks]] treatment applied to
+  // every raw-event series window, keyed on `event_type`. Each blocked
+  // form takes one cut and repairs the block boundary by it, so outputs
+  // stay bit-identical to the plain forms (spec-pinned per op, corpus +
+  // adversarial fixtures).
   // ---------------------------------------------------------------------
 
   /** Adds `prev_<c>` (or `next_<c>`) = lag/lead(c, 1) over the per-series
     * (ts_us, event_id) total order, computed with BOUNDED partitions:
     * lag/lead within `(event_type, blk)` plus each block's edge row
-    * carried from the neighboring block via one summary row per
-    * (series, block) — the struct min/max carries the (ts_us, event_id)
-    * order, the block-level lag/lead window is over summary rows only,
-    * and the fix-up join is summary-sized (AQE broadcasts it). The edge
-    * row is identified by rank, not null-ness, so NULL data values carry
-    * correctly. Input must have `event_type`, `ts_us`, `event_id` and
-    * the `carry` columns. */
-  private def blockedNeighbor(e: DataFrame, carry: Seq[String], block: Long,
+    * carried from the neighboring block by the repair of `blocks`' cut.
+    * Input must have `event_type`, `ts_us`, `event_id` and the `carry`
+    * columns. */
+  private def blockedNeighbor(e: DataFrame, carry: Seq[String], blocks: Blocks,
+      useLead: Boolean): DataFrame = {
+    val b = blocks.cut(e, "event_type")
+    blocks match {
+      case _: Blocks.Time => neighborBySummary(b, carry, useLead)
+      case Blocks.Rows(n) => neighborByGhosts(b, carry, n, useLead)
+    }
+  }
+
+  /** Time-cut repair: one summary row per (series, block) — the struct
+    * min/max carries the (ts_us, event_id) order, the block-level
+    * lag/lead window is over summary rows only, and the fix-up join is
+    * summary-sized (AQE broadcasts it). The edge row is identified by
+    * rank, not null-ness, so NULL data values carry correctly. */
+  private def neighborBySummary(b: DataFrame, carry: Seq[String],
       useLead: Boolean): DataFrame = {
     val pre = if (useLead) "next_" else "prev_"
     val wLocal = Window.partitionBy(col("event_type"), col("blk"))
       .orderBy(col("ts_us"), col("event_id"))
     val wBlk = Window.partitionBy(col("event_type")).orderBy(col("blk"))
-    val b = e.withColumn("blk", expr(s"ts_us div ${block}L"))
     val withLocal = carry.foldLeft(b)((df, c) => df.withColumn(pre + c,
       (if (useLead) lead(col(c), 1) else lag(col(c), 1)).over(wLocal)))
       // the row whose neighbor lives in the adjacent block: the block's
@@ -980,37 +914,19 @@ object TimeSeries {
       when(col("_edge"), col(s"_carry_$c")).otherwise(col(pre + c))))
       .drop("_edge" +: carry.map(c => s"_carry_$c"): _*)
   }
-  private val DefaultSeriesBlockUs = 3600000000L // 1 h
-  private val DefaultSeriesBlockRows = 262144L
 
-  /** Count-block twin of [[blockedNeighbor]] (r13): blocks cut every
-    * `bRows` rows of the per-series (ts_us, event_id) total order — a
-    * dense index from [[Analytics.distributedRank]] (range-partitioned,
-    * itself skew-proof) — NOT every `blockUs` microseconds. Time blocks
-    * bound a hot series only when its rows SPREAD over time; a burst
-    * that lands 99 % of a series inside one block re-serializes the
-    * whole pass onto one task (the r12 density gap). Count blocks are
-    * density-blind by construction: hot-series parallelism =
-    * ceil(rows / bRows) whatever the timestamps do.
-    *
-    * The boundary repair is also simpler than the time form's: block
-    * edges are identified by INDEX ARITHMETIC (a block's first row has
-    * rn ≡ 1, its last rn ≡ 0 mod bRows), so the carried neighbor is one
-    * filtered ghost row per block joined summary-sized (AQE broadcasts
-    * it) — no struct min/max, no window over summary rows. NULL data
-    * values carry correctly for the same reason as the time form: the
-    * edge test never inspects the carried value. A series' final
-    * partial block needs no lead ghost (its last row's neighbor does
-    * not exist) and block 0 no lag ghost — both fall out of the
-    * arithmetic, spec-pinned on boundary fixtures. */
-  private def blockedNeighborByCount(e: DataFrame, carry: Seq[String],
+  /** Count-cut repair: block edges are identified by INDEX ARITHMETIC (a
+    * block's first row has rn ≡ 1, its last rn ≡ 0 mod bRows), so the
+    * carried neighbor is one filtered ghost row per block joined
+    * summary-sized (AQE broadcasts it) — no struct min/max, no window
+    * over summary rows. NULL data values carry correctly for the same
+    * reason as the time repair: the edge test never inspects the carried
+    * value. A series' final partial block needs no lead ghost (its last
+    * row's neighbor does not exist) and block 0 no lag ghost — both fall
+    * out of the arithmetic, spec-pinned on boundary fixtures. */
+  private def neighborByGhosts(ranked: DataFrame, carry: Seq[String],
       bRows: Long, useLead: Boolean): DataFrame = {
-    require(bRows > 0L, s"blockRows=$bRows must be positive")
     val pre = if (useLead) "next_" else "prev_"
-    val ranked = Analytics.distributedRank(e, Seq("event_type"),
-        Seq(col("ts_us"), col("event_id")))
-      .drop("off", "n")
-      .withColumn("blk", expr(s"(rn - 1) div ${bRows}L"))
     val wLocal = Window.partitionBy(col("event_type"), col("blk"))
       .orderBy(col("rn"))
     val withLocal = carry.foldLeft(ranked)((df, c) => df.withColumn(pre + c,
@@ -1085,124 +1001,46 @@ object TimeSeries {
     events.select(col("event_type"), col("event_id"),
       tsUs(col("ts")).as("ts_us"))
 
-  /** Skew-proof [[windowDelta]]: bit-identical, hot-series parallelism =
-    * block count (see the family note above). TIME blocks — cheap (no
-    * rank pass) when the caller knows the series spread over time; for
-    * the density-blind form see [[windowDeltaBlockedRows]]. */
-  def windowDeltaBlocked(events: DataFrame, blockUs: Long = 0L): DataFrame = {
-    val block = if (blockUs > 0L) blockUs else DefaultSeriesBlockUs
+  /** Skew-proof [[windowDelta]] on `blocks` (default: the hourly time
+    * cut); bit-identical (see the family note above). */
+  def windowDeltaBlocked(events: DataFrame,
+      blocks: Blocks = Blocks.hourly): DataFrame =
     finishDelta(blockedNeighbor(deltaInput(events),
-      Seq("ts_us", "value"), block, useLead = false))
-  }
-
-  /** Density-proof [[windowDelta]]: COUNT blocks via
-    * [[blockedNeighborByCount]] — bit-identical to the plain and
-    * time-blocked forms, hot-series parallelism = ceil(rows/blockRows)
-    * even when every hot row lands in one hour. The adaptive
-    * dispatcher's blocked target. */
-  def windowDeltaBlockedRows(events: DataFrame,
-      blockRows: Long = 0L): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else DefaultSeriesBlockRows
-    finishDelta(blockedNeighborByCount(deltaInput(events),
-      Seq("ts_us", "value"), bRows, useLead = false))
-  }
+      Seq("ts_us", "value"), blocks, useLead = false))
 
   /** Skew-proof [[counterRate]]: bit-identical (same reset rule, same
     * exact-decimal accumulation — the carry only changes WHERE the lag
-    * is computed, never its value). Time blocks; density-blind twin:
-    * [[counterRateBlockedRows]]. */
-  def counterRateBlocked(events: DataFrame, blockUs: Long = 0L): DataFrame = {
-    val block = if (blockUs > 0L) blockUs else DefaultSeriesBlockUs
+    * is computed, never its value). */
+  def counterRateBlocked(events: DataFrame,
+      blocks: Blocks = Blocks.hourly): DataFrame =
     finishCounterRate(blockedNeighbor(counterInput(events),
-      Seq("value"), block, useLead = false))
-  }
+      Seq("value"), blocks, useLead = false))
 
-  /** Density-proof [[counterRate]] on count blocks; bit-identical. */
-  def counterRateBlockedRows(events: DataFrame,
-      blockRows: Long = 0L): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else DefaultSeriesBlockRows
-    finishCounterRate(blockedNeighborByCount(counterInput(events),
-      Seq("value"), bRows, useLead = false))
-  }
-
-  /** Skew-proof [[timeWeightedAvg]]: the lead-shaped twin — each block's
+  /** Skew-proof [[timeWeightedAvg]]: the lead-shaped carry — each block's
     * last row takes its holding interval from the NEXT block's first
-    * sample. Integer numerator unchanged, so bit-identical. Time
-    * blocks; density-blind twin: [[timeWeightedAvgBlockedRows]]. */
-  def timeWeightedAvgBlocked(events: DataFrame, blockUs: Long = 0L): DataFrame = {
-    val block = if (blockUs > 0L) blockUs else DefaultSeriesBlockUs
+    * sample. Integer numerator unchanged, so bit-identical. */
+  def timeWeightedAvgBlocked(events: DataFrame,
+      blocks: Blocks = Blocks.hourly): DataFrame =
     finishTwa(blockedNeighbor(twaInput(events),
-      Seq("ts_us"), block, useLead = true))
-  }
-
-  /** Density-proof [[timeWeightedAvg]] on count blocks; bit-identical. */
-  def timeWeightedAvgBlockedRows(events: DataFrame,
-      blockRows: Long = 0L): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else DefaultSeriesBlockRows
-    finishTwa(blockedNeighborByCount(twaInput(events),
-      Seq("ts_us"), bRows, useLead = true))
-  }
+      Seq("ts_us"), blocks, useLead = true))
 
   /** Skew-proof [[availability]]: same lead-shaped carry as
-    * [[timeWeightedAvgBlocked]]; all-integer sums, bit-identical. Time
-    * blocks; density-blind twin: [[availabilityBlockedRows]]. */
+    * [[timeWeightedAvgBlocked]]; all-integer sums, bit-identical. */
   def availabilityBlocked(events: DataFrame, sloUs: Long,
-      blockUs: Long = 0L): DataFrame = {
-    val block = if (blockUs > 0L) blockUs else DefaultSeriesBlockUs
+      blocks: Blocks = Blocks.hourly): DataFrame =
     finishAvailability(blockedNeighbor(availInput(events),
-      Seq("ts_us"), block, useLead = true), sloUs)
-  }
-
-  /** Density-proof [[availability]] on count blocks; bit-identical. */
-  def availabilityBlockedRows(events: DataFrame, sloUs: Long,
-      blockRows: Long = 0L): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else DefaultSeriesBlockRows
-    finishAvailability(blockedNeighborByCount(availInput(events),
-      Seq("ts_us"), bRows, useLead = true), sloUs)
-  }
+      Seq("ts_us"), blocks, useLead = true), sloUs)
 
   /** Skew-proof [[cumSum]]: per-(series, block) local running DECIMAL
     * sums plus an exclusive per-series prefix of block totals (a window
     * over one summary row per block, joined back summary-sized). Decimal
     * addition is exact and associative, so the regrouping is
-    * bit-identical after the single double cast. */
-  def cumSumBlocked(events: DataFrame, blockUs: Long = 0L): DataFrame = {
-    val block = if (blockUs > 0L) blockUs else DefaultSeriesBlockUs
-    val e = events.select(col("event_id"), col("event_type"),
-      tsUs(col("ts")).as("ts_us"), col("value"))
-      .withColumn("blk", expr(s"ts_us div ${block}L"))
+    * bit-identical after the single double cast — on a count cut too, so
+    * a one-hour burst parallelizes exactly like a 30-day spread. */
+  def cumSumBlocked(events: DataFrame, blocks: Blocks = Blocks.hourly): DataFrame = {
+    val e = blocks.cut(deltaInput(events), "event_type")
     val wLocal = Window.partitionBy(col("event_type"), col("blk"))
-      .orderBy(col("ts_us"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wPrev = Window.partitionBy(col("event_type")).orderBy(col("blk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = e.groupBy(col("event_type"), col("blk"))
-      .agg(sum(col("value").cast("decimal(18,2)")).as("blk_sum"))
-      .withColumn("carry", sum(col("blk_sum")).over(wPrev))
-      .select(col("event_type"), col("blk"), col("carry"))
-    e.withColumn("local_sum",
-        sum(col("value").cast("decimal(18,2)")).over(wLocal))
-      .join(carry, Seq("event_type", "blk"), "left")
-      .select(col("event_id"), col("event_type"), col("ts_us"),
-        (col("local_sum") + coalesce(col("carry"),
-          lit(0).cast("decimal(18,2)"))).cast("double").as("running_sum"))
-  }
-
-  /** Density-proof [[cumSum]]: same block-prefix decomposition as
-    * [[cumSumBlocked]] but the blocks are COUNT blocks on the
-    * [[Analytics.distributedRank]] index, so a one-hour burst
-    * parallelizes exactly like a 30-day spread. Decimal addition is
-    * exact and associative; bit-identical after the single double
-    * cast. */
-  def cumSumBlockedRows(events: DataFrame, blockRows: Long = 0L): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else DefaultSeriesBlockRows
-    val e = Analytics.distributedRank(
-        deltaInput(events), Seq("event_type"),
-        Seq(col("ts_us"), col("event_id")))
-      .drop("off", "n")
-      .withColumn("blk", expr(s"(rn - 1) div ${bRows}L"))
-    val wLocal = Window.partitionBy(col("event_type"), col("blk"))
-      .orderBy(col("rn"))
+      .orderBy(blocks.order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wPrev = Window.partitionBy(col("event_type")).orderBy(col("blk"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -1219,24 +1057,18 @@ object TimeSeries {
   }
 
   /** Skew-proof [[movingAvg]]: a ROWS frame needs the previous `trailing`
-    * rows wherever they fall in time, so time blocks can't bound it.
-    * Instead rows get a dense per-series index from
-    * [[Analytics.distributedRank]] (range-repartition — itself
-    * skew-proof), blocks cut every `blockRows` indices, and each block's
-    * last `trailing` rows are GHOSTED into the next block: every real
-    * row's frame then sees exactly its true trailing predecessors (ghost
-    * duplication is `trailing` rows per block — bounded). Ghost rows
-    * feed frames but are never emitted. Bit-identical: same frame
-    * contents, same exact-decimal sum, same count. */
+    * rows wherever they fall in time, so it takes a count cut only, and
+    * each block's last `trailing` rows are GHOSTED into the next block:
+    * every real row's frame then sees exactly its true trailing
+    * predecessors (ghost duplication is `trailing` rows per block —
+    * bounded). Ghost rows feed frames but are never emitted.
+    * Bit-identical: same frame contents, same exact-decimal sum, same
+    * count. */
   def movingAvgBlocked(events: DataFrame, trailing: Int = 59,
-      blockRows: Long = 0L): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else 262144L
+      blocks: Blocks.Rows = Blocks.rows(Blocks.DefaultRows)): DataFrame = {
+    val bRows = blocks.n
     require(bRows > trailing, s"blockRows=$bRows must exceed trailing=$trailing")
-    val e = events.select(col("event_id"), col("event_type"),
-      tsUs(col("ts")).as("ts_us"), col("value"))
-    val ranked = Analytics.distributedRank(e, Seq("event_type"),
-      Seq(col("ts_us"), col("event_id")))
-      .withColumn("blk", expr(s"(rn - 1) div ${bRows}L"))
+    val ranked = blocks.cut(deltaInput(events), "event_type")
     val ghosts = ranked.filter(expr(s"(rn - 1) % ${bRows}L >= ${bRows - trailing}L"))
       .withColumn("blk", col("blk") + 1L).withColumn("_ghost", lit(1))
     val w = Window.partitionBy(col("event_type"), col("blk"))
@@ -1250,181 +1082,47 @@ object TimeSeries {
         col("moving_avg"))
   }
 
-  /** Three-way dispatch outcome for the blocked families (r13). */
-  private[graft] sealed trait BlockDispatch
-  private[graft] case object DispatchPlain extends BlockDispatch
-  private[graft] case object DispatchTime extends BlockDispatch
-  private[graft] case object DispatchCount extends BlockDispatch
+  /** The series family's adaptive entry points: [[Blocks.adaptive]] on
+    * the `event_type` key — plain on balanced or small-hot-series input,
+    * the hourly time cut when the hot series spreads over time, the
+    * count cut when it bursts. Bit-identical on every branch. */
+  def windowDeltaAdaptive(events: DataFrame, blockRows: Long = Blocks.DefaultRows,
+      sampleFraction: Double = 0.01, skewThreshold: Double = 0.2): DataFrame =
+    Blocks.adaptive(events, "event_type", blockRows, sampleFraction,
+      skewThreshold)(windowDelta(events))(windowDeltaBlocked(events, _))
 
-  /** r13 THREE-SIGNAL dispatch core (one sampled probe job,
-    * [[sampledKeyDensityStats]]):
-    *
-    *  1. SHARE — below `skewThreshold` the plain single-window pass is
-    *     already balanced: plain.
-    *  2. VOLUME — a dominant key whose rows fit in < 2 blocks gains
-    *     nothing from any blocked form (judge-measured 2.3× overhead
-    *     on the 5-type sf0.1 corpus where share ≥ 0.2 always but the
-    *     hot series is ~20 k rows): plain.
-    *  3. DENSITY — when the hot key's DENSEST HOUR fits in one block,
-    *     TIME blocks bound the max task at ~blockRows without the
-    *     count family's rank pass (PLANS.md rounds 12–13: time blocks 2.4–
-    *     4.2× over plain at 99 % spread skew, count blocks only
-    *     1.0–1.2× there — distributedRank's materialization eats the
-    *     win); past it — the burst shape that re-serializes time
-    *     blocks — COUNT blocks are the density-proof fallback.
-    *
-    * `hoursPerBlock` scales the density bound for families whose time
-    * blocks span more than one hour (sessionize's 64×gap blocks): the
-    * densest block is conservatively ≤ densest-hour × hours-per-block.
-    * All branches are bit-identical (spec-pinned per op), so dispatch
-    * affects performance only, never results.
-    *
-    * Costs, honestly: the probe is ONE job scanning two columns of a
-    * sample — ~0.25 s of scheduling floor on a small corpus, and a
-    * 2-column columnar scan at scale (cheap next to the operator's own
-    * full scan + shuffle). Frames whose PLAN-STATS size cannot even
-    * hold two blocks at 1 byte/row skip the probe entirely (zero extra
-    * jobs): total bytes < 2×blockRows ⇒ total rows < 2×blockRows ⇒ the
-    * volume gate would pick plain anyway — a pure statistics read, no
-    * action. */
-  /** Session-scoped memo of the three-signal probe STATS (r14, the r13
-    * verdict's top item: every adaptive dispatch paid the ~0.25 s probe
-    * job even when plain wins). Keyed on the CANONICALIZED logical plan
-    * of the probed frame plus the probe parameters, so a repeated
-    * dispatch over the same source (the dominant shape: a dashboard
-    * re-running the same adaptive query, or a bench rep) reads the
-    * memoized stats with ZERO jobs. Stats, not decisions, are memoized —
-    * thresholds still apply per call, so the same frame dispatches
-    * correctly under different skewThreshold/blockRows arguments (the
-    * invariant specs exercise exactly that). Staleness (data mutated
-    * under an identical plan, e.g. files rewritten at the same path) can
-    * only mis-DISPATCH, never mis-ANSWER: every branch is bit-identical
-    * (spec-pinned), so a stale entry costs performance, not correctness —
-    * the same contract plan-stats-driven optimizers (CBO, AQE estimates)
-    * already accept. Bounded at [[ProbeMemoMax]] entries: an overflow
-    * evicts the one least recently used entry, so a frame that keeps
-    * being dispatched stays memoized however many others pass through
-    * (entries are 3 doubles — the bound is defensive, not load-bearing). */
-  private[graft] val ProbeMemoMax = 512
-  /** Access-ordered, so the eldest entry is the least recently used;
-    * every access holds its lock (lookups and inserts only — never a
-    * probe job). */
-  private[graft] val probeStatsMemo =
-    new java.util.LinkedHashMap[(Int, String, String, Double, Long), (Double, Double, Double)](
-      16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[
-          (Int, String, String, Double, Long), (Double, Double, Double)]): Boolean =
-        size > ProbeMemoMax
-    }
+  def counterRateAdaptive(events: DataFrame, blockRows: Long = Blocks.DefaultRows,
+      sampleFraction: Double = 0.01, skewThreshold: Double = 0.2): DataFrame =
+    Blocks.adaptive(events, "event_type", blockRows, sampleFraction,
+      skewThreshold)(counterRate(events))(counterRateBlocked(events, _))
 
-  private[graft] def memoProbeSize: Int = probeStatsMemo.synchronized(probeStatsMemo.size)
-  private[graft] def memoProbeClear(): Unit = probeStatsMemo.synchronized(probeStatsMemo.clear())
+  def timeWeightedAvgAdaptive(events: DataFrame, blockRows: Long = Blocks.DefaultRows,
+      sampleFraction: Double = 0.01, skewThreshold: Double = 0.2): DataFrame =
+    Blocks.adaptive(events, "event_type", blockRows, sampleFraction,
+      skewThreshold)(timeWeightedAvg(events))(timeWeightedAvgBlocked(events, _))
 
-  private[graft] def memoizedKeyDensityStats(df: DataFrame, key: String,
-      fraction: Double, seed: Long = 42L): (Double, Double, Double) = {
-    val plan = df.queryExecution.optimizedPlan
-    // semanticHash + schema string: the int hash alone could collide two
-    // distinct plans (perf-only harm, but cheap to harden against)
-    val memoKey = (plan.semanticHash(), plan.schema.catalogString,
-      key, fraction, seed)
-    // ADVICE r14: never run the ~0.25 s probe JOB while holding the memo
-    // lock — that would serialize unrelated dispatches behind it. Locked
-    // get → run outside any lock → locked putIfAbsent: two racing
-    // dispatches of the SAME frame may both run the probe (stats are
-    // deterministic for a (plan, fraction, seed) key, so both compute the
-    // same triple and the first-put wins harmlessly), but no dispatch
-    // ever blocks behind another's Spark job.
-    val cached = probeStatsMemo.synchronized(probeStatsMemo.get(memoKey))
-    if (cached != null) return cached
-    val stats = sampledKeyDensityStats(df, key, fraction, seed)
-    probeStatsMemo.synchronized(probeStatsMemo.putIfAbsent(memoKey, stats))
-    stats
-  }
+  def availabilityAdaptive(events: DataFrame, sloUs: Long,
+      blockRows: Long = Blocks.DefaultRows, sampleFraction: Double = 0.01,
+      skewThreshold: Double = 0.2): DataFrame =
+    Blocks.adaptive(events, "event_type", blockRows, sampleFraction,
+      skewThreshold)(availability(events, sloUs))(availabilityBlocked(events, sloUs, _))
 
-  private[graft] def blockDispatch(events: DataFrame, key: String,
-      bRows: Long, sampleFraction: Double, skewThreshold: Double,
-      hoursPerBlock: Double = 1.0): BlockDispatch = {
-    // zero-job gate 1: plan-stats BYTES cannot even hold two blocks of
-    // ROWS at 1 byte/row (bytes ≥ rows always) ⇒ the volume gate would
-    // pick plain anyway — a pure statistics read, no probe
-    val bytes = events.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes < BigInt(2L) * BigInt(bRows)) return DispatchPlain
-    // zero-job gate 2 (r14): the probe stats memo — repeat dispatches
-    // over the same source skip the sampled job entirely
-    val (share, hotRows, hotHour) =
-      memoizedKeyDensityStats(events, key, sampleFraction)
-    if (share < skewThreshold || hotRows < 2.0 * bRows) DispatchPlain
-    else if (hotHour * math.max(1.0, hoursPerBlock) <= bRows) DispatchTime
-    else DispatchCount
-  }
+  def cumSumAdaptive(events: DataFrame, blockRows: Long = Blocks.DefaultRows,
+      sampleFraction: Double = 0.01, skewThreshold: Double = 0.2): DataFrame =
+    Blocks.adaptive(events, "event_type", blockRows, sampleFraction,
+      skewThreshold)(cumSum(events))(cumSumBlocked(events, _))
 
-  /** Measured-skew dispatch for the whole series family — the
-    * [[sessionizeAdaptive]] pattern on the `event_type` key with the
-    * r13 volume + density gates (see [[blockDispatch]]): plain on
-    * balanced or small-hot-series inputs, TIME blocks when the hot
-    * series spreads over time, COUNT blocks when it bursts.
-    * Bit-identical on every branch. */
-  def windowDeltaAdaptive(events: DataFrame, blockRows: Long = 0L,
-      sampleFraction: Double = 0.01, skewThreshold: Double = 0.2): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else DefaultSeriesBlockRows
-    blockDispatch(events, "event_type", bRows, sampleFraction, skewThreshold) match {
-      case DispatchPlain => windowDelta(events)
-      case DispatchTime => windowDeltaBlocked(events)
-      case DispatchCount => windowDeltaBlockedRows(events, bRows)
-    }
-  }
-
-  def counterRateAdaptive(events: DataFrame, blockRows: Long = 0L,
-      sampleFraction: Double = 0.01, skewThreshold: Double = 0.2): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else DefaultSeriesBlockRows
-    blockDispatch(events, "event_type", bRows, sampleFraction, skewThreshold) match {
-      case DispatchPlain => counterRate(events)
-      case DispatchTime => counterRateBlocked(events)
-      case DispatchCount => counterRateBlockedRows(events, bRows)
-    }
-  }
-
-  def timeWeightedAvgAdaptive(events: DataFrame, blockRows: Long = 0L,
-      sampleFraction: Double = 0.01, skewThreshold: Double = 0.2): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else DefaultSeriesBlockRows
-    blockDispatch(events, "event_type", bRows, sampleFraction, skewThreshold) match {
-      case DispatchPlain => timeWeightedAvg(events)
-      case DispatchTime => timeWeightedAvgBlocked(events)
-      case DispatchCount => timeWeightedAvgBlockedRows(events, bRows)
-    }
-  }
-
-  def availabilityAdaptive(events: DataFrame, sloUs: Long, blockRows: Long = 0L,
-      sampleFraction: Double = 0.01, skewThreshold: Double = 0.2): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else DefaultSeriesBlockRows
-    blockDispatch(events, "event_type", bRows, sampleFraction, skewThreshold) match {
-      case DispatchPlain => availability(events, sloUs)
-      case DispatchTime => availabilityBlocked(events, sloUs)
-      case DispatchCount => availabilityBlockedRows(events, sloUs, bRows)
-    }
-  }
-
-  def cumSumAdaptive(events: DataFrame, blockRows: Long = 0L,
-      sampleFraction: Double = 0.01, skewThreshold: Double = 0.2): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else DefaultSeriesBlockRows
-    blockDispatch(events, "event_type", bRows, sampleFraction, skewThreshold) match {
-      case DispatchPlain => cumSum(events)
-      case DispatchTime => cumSumBlocked(events)
-      case DispatchCount => cumSumBlockedRows(events, bRows)
-    }
-  }
-
-  /** [[movingAvg]]'s blocked form is ALREADY count-based (a ROWS frame
-    * cannot be time-cut), so its dispatch is two-way: the density
-    * signal is irrelevant. */
+  /** [[movingAvg]] has no time cut, so a skewed input always takes the
+    * count cut; and a count cut no wider than the frame cannot carry it,
+    * so `blockRows <= trailing` stays plain (with no probe job). */
   def movingAvgAdaptive(events: DataFrame, trailing: Int = 59,
-      blockRows: Long = 0L, sampleFraction: Double = 0.01,
+      blockRows: Long = Blocks.DefaultRows, sampleFraction: Double = 0.01,
       skewThreshold: Double = 0.2): DataFrame = {
-    val bRows = if (blockRows > 0L) blockRows else DefaultSeriesBlockRows
-    blockDispatch(events, "event_type", bRows, sampleFraction, skewThreshold) match {
-      case DispatchPlain => movingAvg(events, trailing)
-      case _ => movingAvgBlocked(events, trailing, bRows)
-    }
+    val blocks = Blocks.rows(blockRows)
+    if (blocks.n <= trailing) movingAvg(events, trailing)
+    else Blocks.adaptive(events, "event_type", blockRows, sampleFraction,
+      skewThreshold, time = None)(movingAvg(events, trailing))(
+      _ => movingAvgBlocked(events, trailing, blocks))
   }
 
   /** [[sessionize]] via Spark's NATIVE `session_window` operator — the

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.operators.Blocks
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Invariant checks for every declared query at sf0.001 (fast), plus
@@ -242,7 +243,7 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
     val ev = graft.sources.Tables.events(spark, sf0001)
     val gap = 1800000000L
     val plain = graft.operators.TimeSeries.sessionize(ev, gap)
-    val blocked = graft.operators.TimeSeries.sessionizeBlocked(ev, gap)
+    val blocked = graft.operators.TimeSeries.sessionizeBlocked(ev, gap, Blocks.session(gap))
     assert(plain.exceptAll(blocked).count() == 0 &&
       blocked.exceptAll(plain).count() == 0)
     // adversarial: gaps of exactly gapUs (merge) and gapUs+1 (split)
@@ -262,7 +263,7 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
       .select(col("user_id"), col("event_id"),
         timestamp_micros(col("t_us")).as("ts"))
     val p2 = graft.operators.TimeSeries.sessionize(fx, gapT)
-    val b2 = graft.operators.TimeSeries.sessionizeBlocked(fx, gapT, blockT)
+    val b2 = graft.operators.TimeSeries.sessionizeBlocked(fx, gapT, Blocks.time(blockT))
     assert(p2.exceptAll(b2).count() == 0 && b2.exceptAll(p2).count() == 0,
       s"plain=${p2.collect().mkString(";")} blocked=${b2.collect().mkString(";")}")
     // {0,10} {33,33} {55,65,75} {99} {110}
@@ -284,8 +285,8 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
     val skewed = fx((0L until 17L).map(i => (9L, i, i * (gapT + 2))) ++
       (0L until 3L).map(i => (i, 17L + i, i * 3)))
     // the dispatch signal itself, exact at fraction 1.0
-    val (sBal, _, _) = graft.operators.TimeSeries.sampledKeyDensityStats(balanced, "user_id", 1.0)
-    val (sSkw, _, _) = graft.operators.TimeSeries.sampledKeyDensityStats(skewed, "user_id", 1.0)
+    val (sBal, _, _) = Blocks.sampledKeyDensityStats(balanced, "user_id", 1.0)
+    val (sSkw, _, _) = Blocks.sampledKeyDensityStats(skewed, "user_id", 1.0)
     assert(math.abs(sBal - 0.25) < 1e-9 && math.abs(sSkw - 0.85) < 1e-9,
       s"shares: balanced=$sBal skewed=$sSkw")
     // zero caller hints: same call on both inputs, exact either way
@@ -311,7 +312,7 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
       balanced, gapT, blockRows = 2L, sampleFraction = 1.0,
       skewThreshold = 0.25).exceptAll(
       graft.operators.TimeSeries.sessionizeBlocked(
-        balanced, gapT, gapT + 1)).count() == 0)
+        balanced, gapT, Blocks.time(gapT + 1))).count() == 0)
     // the r13 volume gate holds a dominant-but-small user on the plain
     // plan (hot 17 rows < 2*blockRows): observable — the count-blocked
     // plan carries joins (distributedRank offsets + ghost), plain none
@@ -328,7 +329,6 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
   test("r14 probe-stats memo: a repeat blockDispatch over the same frame " +
       "runs ZERO jobs, serves the same decision, and still picks blocked " +
       "for the skewed frame; thresholds apply per call over memoized stats") {
-    import graft.operators.TimeSeries
     import spark.implicits._
     val gapT = 10L
     def fx(rows: Seq[(Long, Long, Long)]) = rows
@@ -339,46 +339,46 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
       (0L until 3L).map(i => (i, 17L + i, i * 3)))
     val balanced = fx(for (u <- 0L until 4L; i <- 0L until 5L)
       yield (u, u * 5 + i, i * (gapT + 2)))
-    TimeSeries.memoProbeClear()
+    Blocks.memoProbeClear()
     try {
       def countJobs[A](body: => A): (A, Int) = SparkSpec.jobsDuring(body)
       val (d1, jobs1) = countJobs(
-        TimeSeries.blockDispatch(skewed, "user_id", 2L, 1.0, 0.2))
+        Blocks.dispatch(skewed, "user_id", 2L, 1.0, 0.2))
       val (d2, jobs2) = countJobs(
-        TimeSeries.blockDispatch(skewed, "user_id", 2L, 1.0, 0.2))
+        Blocks.dispatch(skewed, "user_id", 2L, 1.0, 0.2))
       assert(jobs1 >= 1, "first dispatch must run the probe job")
       assert(jobs2 == 0, s"repeat dispatch ran $jobs2 jobs — memo miss")
-      assert(d1 == d2 && d1 != TimeSeries.DispatchPlain,
+      assert(d1 == d2 && d1 != None,
         s"skewed frame must stay blocked on the memoized path ($d1 vs $d2)")
       // thresholds are applied per call OVER the memoized stats: the same
       // frame flips to plain at a threshold above its 0.85 share, zero jobs
       val (dHigh, jobsHigh) = countJobs(
-        TimeSeries.blockDispatch(skewed, "user_id", 2L, 1.0, 0.9))
-      assert(dHigh == TimeSeries.DispatchPlain && jobsHigh == 0,
+        Blocks.dispatch(skewed, "user_id", 2L, 1.0, 0.9))
+      assert(dHigh == None && jobsHigh == 0,
         s"threshold must re-apply over memoized stats ($dHigh, $jobsHigh jobs)")
       // a different frame is a different memo entry — fresh probe
       // (balanced max share is 0.25, so 0.3 dispatches plain)
       val (dBal, jobsBal) = countJobs(
-        TimeSeries.blockDispatch(balanced, "user_id", 2L, 1.0, 0.3))
-      assert(dBal == TimeSeries.DispatchPlain && jobsBal >= 1,
+        Blocks.dispatch(balanced, "user_id", 2L, 1.0, 0.3))
+      assert(dBal == None && jobsBal >= 1,
         s"distinct frame must probe fresh ($dBal, $jobsBal jobs)")
-      assert(TimeSeries.memoProbeSize >= 2)
+      assert(Blocks.memoProbeSize >= 2)
       // overflow evicts one entry, never the whole memo: a frame that
       // keeps being dispatched stays a hit while the memo fills past
       // its bound twice over
-      val memo = TimeSeries.probeStatsMemo
-      (0 until 2 * TimeSeries.ProbeMemoMax).foreach { i =>
+      val memo = Blocks.probeStatsMemo
+      (0 until 2 * Blocks.ProbeMemoMax).foreach { i =>
         memo.synchronized(memo.put((i, "filler", "k", 0.0, 0L), (0.0, 0.0, 0.0)))
         if (i % 256 == 0) {
-          val (d, n) = countJobs(TimeSeries.blockDispatch(skewed, "user_id", 2L, 1.0, 0.2))
+          val (d, n) = countJobs(Blocks.dispatch(skewed, "user_id", 2L, 1.0, 0.2))
           assert(d == d1 && n == 0, s"hot frame missed the memo after $i fillers")
         }
       }
-      assert(TimeSeries.memoProbeSize == TimeSeries.ProbeMemoMax)
+      assert(Blocks.memoProbeSize == Blocks.ProbeMemoMax)
       val (dHot, jobsHot) = countJobs(
-        TimeSeries.blockDispatch(skewed, "user_id", 2L, 1.0, 0.2))
+        Blocks.dispatch(skewed, "user_id", 2L, 1.0, 0.2))
       assert(dHot == d1 && jobsHot == 0, s"hot frame evicted ($jobsHot jobs)")
-    } finally TimeSeries.memoProbeClear()
+    } finally Blocks.memoProbeClear()
   }
 
   test("the count-block session family (sessionizeBlockedRows / " +
@@ -393,13 +393,13 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
         s"$tag mismatch")
     val gap = 1800000000L
     eq(graft.operators.TimeSeries.sessionize(ev, gap),
-      graft.operators.TimeSeries.sessionizeBlockedRows(ev, gap, 16L),
+      graft.operators.TimeSeries.sessionizeBlocked(ev, gap, Blocks.rows(16L)),
       "corpus sessionizeRows")
     eq(graft.operators.Analytics.sessionPaths(ev, gap, 3, 20),
-      graft.operators.Analytics.sessionPathsBlockedRows(ev, gap, 3, 20, 16L),
+      graft.operators.Analytics.sessionPathsBlocked(ev, gap, 3, 20, Blocks.rows(16L)),
       "corpus sessionPathsRows")
     eq(graft.operators.Analytics.transitionMatrix(ev),
-      graft.operators.Analytics.transitionMatrixBlockedRows(ev, 16L),
+      graft.operators.Analytics.transitionMatrixBlocked(ev, Blocks.rows(16L)),
       "corpus transitionRows")
     // adversarial: the sessionize boundary fixture (exact-gap merges,
     // same-ts duplicates, multi-block chains) under blockRows=2 — every
@@ -412,16 +412,16 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
       .select(col("user_id"), col("event_id"),
         timestamp_micros(col("t_us")).as("ts"))
     val p2 = graft.operators.TimeSeries.sessionize(fx, gapT)
-    val b2 = graft.operators.TimeSeries.sessionizeBlockedRows(fx, gapT, 2L)
+    val b2 = graft.operators.TimeSeries.sessionizeBlocked(fx, gapT, Blocks.rows(2L))
     assert(p2.exceptAll(b2).count() == 0 && b2.exceptAll(p2).count() == 0,
       s"plain=${p2.collect().mkString(";")} rows=${b2.collect().mkString(";")}")
     assert(p2.count() == 5)
     val fxT = fx.withColumn("event_type", concat(lit("e"), col("event_id") % 3))
     eq(graft.operators.Analytics.sessionPaths(fxT, gapT, 3, 20),
-      graft.operators.Analytics.sessionPathsBlockedRows(fxT, gapT, 3, 20, 2L),
+      graft.operators.Analytics.sessionPathsBlocked(fxT, gapT, 3, 20, Blocks.rows(2L)),
       "fx sessionPathsRows")
     eq(graft.operators.Analytics.transitionMatrix(fxT),
-      graft.operators.Analytics.transitionMatrixBlockedRows(fxT, 2L),
+      graft.operators.Analytics.transitionMatrixBlocked(fxT, Blocks.rows(2L)),
       "fx transitionRows")
   }
 
@@ -454,37 +454,37 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
     for ((ev, blockUs, tag) <- Seq((fx, 100L, "fx"),
         (corpus, 3600000000L, "corpus"))) {
       eq(TimeSeries.windowDelta(ev),
-        TimeSeries.windowDeltaBlocked(ev, blockUs), s"$tag windowDelta")
+        TimeSeries.windowDeltaBlocked(ev, Blocks.time(blockUs)), s"$tag windowDelta")
       eq(TimeSeries.counterRate(ev),
-        TimeSeries.counterRateBlocked(ev, blockUs), s"$tag counterRate")
+        TimeSeries.counterRateBlocked(ev, Blocks.time(blockUs)), s"$tag counterRate")
       eq(TimeSeries.timeWeightedAvg(ev),
-        TimeSeries.timeWeightedAvgBlocked(ev, blockUs), s"$tag twa")
+        TimeSeries.timeWeightedAvgBlocked(ev, Blocks.time(blockUs)), s"$tag twa")
       eq(TimeSeries.availability(ev, 50L),
-        TimeSeries.availabilityBlocked(ev, 50L, blockUs), s"$tag availability")
+        TimeSeries.availabilityBlocked(ev, 50L, Blocks.time(blockUs)), s"$tag availability")
       eq(TimeSeries.cumSum(ev),
-        TimeSeries.cumSumBlocked(ev, blockUs), s"$tag cumSum")
+        TimeSeries.cumSumBlocked(ev, Blocks.time(blockUs)), s"$tag cumSum")
       // trailing=3 on the fixture exercises frames spanning >1 block
       // (and, with blockRows=4, a frame reaching only ghost rows)
       val trail = if (tag == "fx") 3 else 59
       val bRows = if (tag == "fx") 4L else 262144L
       eq(TimeSeries.movingAvg(ev, trail),
-        TimeSeries.movingAvgBlocked(ev, trail, bRows), s"$tag movingAvg")
+        TimeSeries.movingAvgBlocked(ev, trail, Blocks.rows(bRows)), s"$tag movingAvg")
       // r13 COUNT-block (density-proof) twins: bRows=2 on the fixture
       // forces a partial final block (A has 7 rows -> 3 full blocks +
       // 1), single-row series B (no ghosts at all), and every edge
       // kind; 64 on the 1000-row corpus gives several blocks/series
       val cRows = if (tag == "fx") 2L else 64L
       eq(TimeSeries.windowDelta(ev),
-        TimeSeries.windowDeltaBlockedRows(ev, cRows), s"$tag windowDeltaRows")
+        TimeSeries.windowDeltaBlocked(ev, Blocks.rows(cRows)), s"$tag windowDeltaRows")
       eq(TimeSeries.counterRate(ev),
-        TimeSeries.counterRateBlockedRows(ev, cRows), s"$tag counterRateRows")
+        TimeSeries.counterRateBlocked(ev, Blocks.rows(cRows)), s"$tag counterRateRows")
       eq(TimeSeries.timeWeightedAvg(ev),
-        TimeSeries.timeWeightedAvgBlockedRows(ev, cRows), s"$tag twaRows")
+        TimeSeries.timeWeightedAvgBlocked(ev, Blocks.rows(cRows)), s"$tag twaRows")
       eq(TimeSeries.availability(ev, 50L),
-        TimeSeries.availabilityBlockedRows(ev, 50L, cRows),
+        TimeSeries.availabilityBlocked(ev, 50L, Blocks.rows(cRows)),
         s"$tag availabilityRows")
       eq(TimeSeries.cumSum(ev),
-        TimeSeries.cumSumBlockedRows(ev, cRows), s"$tag cumSumRows")
+        TimeSeries.cumSumBlocked(ev, Blocks.rows(cRows)), s"$tag cumSumRows")
     }
     // adaptive: zero caller hints, bit-identical on BOTH dispatch sides —
     // fx is balanced-ish (A=70%); force both branches via threshold.
@@ -504,6 +504,11 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
       eq(TimeSeries.movingAvg(fx, 1), TimeSeries.movingAvgAdaptive(
         fx, 1, 2L, sampleFraction = 1.0, skewThreshold = thr), s"adaptive m $thr")
     }
+    // a block size must be positive: no silent fallback to a default
+    for (bad <- Seq(0L, -1L, Long.MinValue)) {
+      intercept[IllegalArgumentException](Blocks.time(bad))
+      intercept[IllegalArgumentException](Blocks.rows(bad))
+    }
   }
 
   test("the r13 adaptive volume gate: a dominant-but-small series stays " +
@@ -521,7 +526,7 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
       .toDF("event_type", "event_id", "t_us", "value")
       .select(col("event_type"), col("event_id"), col("value"),
         timestamp_micros(col("t_us")).as("ts"))
-    val (share, hotRows, _) = TimeSeries.sampledKeyDensityStats(fx, "event_type", 1.0)
+    val (share, hotRows, _) = Blocks.sampledKeyDensityStats(fx, "event_type", 1.0)
     assert(math.abs(share - 0.7) < 1e-9 && math.abs(hotRows - 7.0) < 1e-9,
       s"stats: share=$share hotRows=$hotRows")
     // the dispatch choice is OBSERVABLE in the plan: plain has no join;
@@ -559,11 +564,131 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
       "time branch")
     // and the dispatch signal itself, exact at fraction 1.0
     val (shS, rowsS, hourS) =
-      TimeSeries.sampledKeyDensityStats(spread, "event_type", 1.0)
+      Blocks.sampledKeyDensityStats(spread, "event_type", 1.0)
     assert(math.abs(shS - 0.7) < 1e-9 && math.abs(rowsS - 7.0) < 1e-9 &&
       math.abs(hourS - 1.0) < 1e-9, s"density stats: $shS $rowsS $hourS")
-    val (_, _, hourB) = TimeSeries.sampledKeyDensityStats(fx, "event_type", 1.0)
+    val (_, _, hourB) = Blocks.sampledKeyDensityStats(fx, "event_type", 1.0)
     assert(math.abs(hourB - 7.0) < 1e-9, s"burst densest hour: $hourB")
+  }
+
+  /** The branch an adaptive entry point took, read from its optimized
+    * plan: no `blk` attribute is plain; `blk` without the rank-offsets
+    * join (the one on `pid`) is a time cut; `blk` with it a count cut. */
+  private def branchOf(df: org.apache.spark.sql.DataFrame): String = {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val plan = df.queryExecution.optimizedPlan
+    val blk = plan.find(_.output.exists(_.name == "blk")).isDefined
+    val rank = plan.collect {
+      case j: Join if j.condition.exists(_.references.exists(_.name == "pid")) => j
+    }.nonEmpty
+    if (!blk) "plain" else if (rank) "count" else "time"
+  }
+
+  test("an adaptive entry point never picks a branch it cannot run: " +
+      "movingAvg with blockRows <= trailing stays plain, and a session " +
+      "family with gap 0 takes the count cut") {
+    import graft.operators.{Analytics, TimeSeries}
+    import spark.implicits._
+    def eq(a: org.apache.spark.sql.DataFrame,
+        b: org.apache.spark.sql.DataFrame, tag: String): Unit =
+      assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
+        s"$tag mismatch")
+    // series A holds 7 of 10 rows: share and volume gates open at
+    // blockRows = 2, but no 2-row block can carry a 3-row trailing frame
+    val fx = Seq(
+      ("A", 0L, 10L, 1.25), ("A", 1L, 95L, 50.0),
+      ("A", 2L, 105L, 2.0), ("A", 3L, 199L, 2.5),
+      ("A", 4L, 201L, 7.75), ("A", 5L, 250L, 3.0), ("A", 6L, 460L, 9.0),
+      ("B", 7L, 130L, 4.0),
+      ("C", 8L, 20L, 1.0), ("C", 9L, 30L, 0.5))
+      .toDF("event_type", "event_id", "t_us", "value")
+      .select(col("event_type"), col("event_id"), col("value"),
+        timestamp_micros(col("t_us")).as("ts"))
+    val ma = TimeSeries.movingAvgAdaptive(fx, 3, 2L, sampleFraction = 1.0,
+      skewThreshold = 0.05)
+    eq(TimeSeries.movingAvg(fx, 3), ma, "movingAvg trailing 3, blockRows 2")
+    assert(branchOf(ma) == "plain")
+    // user 9 holds 17 of 20 rows, at most 2 per hour (a same-ts pair in
+    // hour 0): the density gate would take a time cut, but with gap 0 no
+    // time cut can exceed the gap
+    val hour = 3600000000L
+    val spread = ((0L, 0L) +: (0L until 16L).map(i => (i + 1, i * hour)))
+      .map { case (id, t) => (9L, id, t) } ++
+      (0L until 3L).map(i => (i, 17L + i, i * hour))
+    val ev = spread.toDF("user_id", "event_id", "t_us")
+      .select(col("user_id"), col("event_id"),
+        concat(lit("e"), col("event_id") % 3).as("event_type"),
+        timestamp_micros(col("t_us")).as("ts"))
+    val s = TimeSeries.sessionizeAdaptive(ev, 0L, blockRows = 2L,
+      sampleFraction = 1.0)
+    eq(TimeSeries.sessionize(ev, 0L), s, "sessionize gap 0")
+    assert(branchOf(s) == "count")
+    val p = Analytics.sessionPathsAdaptive(ev, 0L, 3, 20, blockRows = 2L,
+      sampleFraction = 1.0)
+    eq(Analytics.sessionPaths(ev, 0L, 3, 20), p, "sessionPaths gap 0")
+    assert(branchOf(p) == "count")
+  }
+
+  test("every adaptive entry point is wired to its own branches: plain on " +
+      "a balanced input, the count cut on a burst, the time cut on a " +
+      "spread (movingAvg: count), each row-identical to the plain form") {
+    import graft.operators.{Analytics, TimeSeries}
+    import org.apache.spark.sql.DataFrame
+    import spark.implicits._
+    val hour = 3600000000L
+    // (key, t_us) per row; key 0 is the hot key of burst and spread
+    val balanced = for (k <- 0L until 6L; i <- 0L until 4L)
+      yield (k, (k * 4 + i) * hour / 3)
+    val others = (1L to 3L).map(k => (k, k * hour))
+    val burst = (0L until 17L).map(i =>
+      (0L, (i / 4) * 300000000L + (i % 4) * 30000000L)) ++ others
+    val spread = (0L until 17L).map(i => (0L, i * hour)) ++ others
+    // series families key on event_type, session families on user_id
+    def series(rows: Seq[(Long, Long)]): DataFrame = rows.zipWithIndex
+      .map { case ((k, t), i) => (s"s$k", i.toLong, t, (i % 7) * 1.25 + 0.5) }
+      .toDF("event_type", "event_id", "t_us", "value")
+      .select(col("event_type"), col("event_id"), col("value"),
+        timestamp_micros(col("t_us")).as("ts"))
+    def users(rows: Seq[(Long, Long)]): DataFrame = rows.zipWithIndex
+      .map { case ((k, t), i) => (k, i.toLong, t) }
+      .toDF("user_id", "event_id", "t_us")
+      .select(col("user_id"), col("event_id"),
+        concat(lit("e"), col("event_id") % 3).as("event_type"),
+        timestamp_micros(col("t_us")).as("ts"))
+    // a 1-min gap keeps the 64×gap time cut near one hour, so the spread
+    // hot user's densest block still fits one 2-row count block
+    val gap = 60000000L
+    val slo = 1800000000L
+    val entries: Seq[(String, Seq[(Long, Long)] => DataFrame, DataFrame => DataFrame,
+        DataFrame => DataFrame, Boolean)] = Seq(
+      ("windowDelta", series, TimeSeries.windowDelta(_),
+        TimeSeries.windowDeltaAdaptive(_, 2L, 1.0), true),
+      ("counterRate", series, TimeSeries.counterRate(_),
+        TimeSeries.counterRateAdaptive(_, 2L, 1.0), true),
+      ("timeWeightedAvg", series, TimeSeries.timeWeightedAvg(_),
+        TimeSeries.timeWeightedAvgAdaptive(_, 2L, 1.0), true),
+      ("availability", series, TimeSeries.availability(_, slo),
+        TimeSeries.availabilityAdaptive(_, slo, 2L, 1.0), true),
+      ("cumSum", series, TimeSeries.cumSum(_),
+        TimeSeries.cumSumAdaptive(_, 2L, 1.0), true),
+      ("movingAvg", series, TimeSeries.movingAvg(_, 1),
+        TimeSeries.movingAvgAdaptive(_, 1, 2L, 1.0), false),
+      ("sessionize", users, TimeSeries.sessionize(_, gap),
+        TimeSeries.sessionizeAdaptive(_, gap, 2L, 1.0), true),
+      ("sessionPaths", users, Analytics.sessionPaths(_, gap, 3, 20),
+        Analytics.sessionPathsAdaptive(_, gap, 3, 20, 2L, 1.0), true),
+      ("transitionMatrix", users, Analytics.transitionMatrix(_),
+        Analytics.transitionMatrixAdaptive(_, 2L, 1.0), true))
+    for ((name, frame, plain, adaptive, hasTime) <- entries;
+         (shape, rows, want) <- Seq(("balanced", balanced, "plain"),
+           ("burst", burst, "count"),
+           ("spread", spread, if (hasTime) "time" else "count"))) {
+      val ev = frame(rows)
+      val (p, a) = (plain(ev), adaptive(ev))
+      assert(branchOf(a) == want, s"$name on $shape took ${branchOf(a)}")
+      assert(p.exceptAll(a).count() == 0 && a.exceptAll(p).count() == 0,
+        s"$name on $shape: adaptive differs from plain")
+    }
   }
 
   test("transitionMatrixBlocked/Adaptive are row-identical to the plain " +
@@ -584,7 +709,7 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
       (2L, 7L, 50L, "z")))                      // single event: no pairs
     val plain = graft.operators.Analytics.transitionMatrix(straddle)
     val blocked = graft.operators.Analytics.transitionMatrixBlocked(
-      straddle, blockUs = 100L)
+      straddle, Blocks.time(100L))
     assert(plain.exceptAll(blocked).count() == 0 &&
       blocked.exceptAll(plain).count() == 0,
       s"plain=${plain.collect().mkString(";")} " +
@@ -616,7 +741,8 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val ev = graft.sources.Tables.events(spark, sf0001)
     val a = graft.operators.Analytics.sessionPaths(ev, 1800000000L, 3, 20)
-    val b = graft.operators.Analytics.sessionPathsBlocked(ev, 1800000000L, 3, 20)
+    val b = graft.operators.Analytics.sessionPathsBlocked(ev, 1800000000L, 3, 20,
+      Blocks.session(1800000000L))
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
       s"plain=${a.collect().mkString(";")} blocked=${b.collect().mkString(";")}")
     // a session whose 3-event prefix STRADDLES a block boundary: local
@@ -635,7 +761,7 @@ class OperatorInvariantsSpec extends AnyFunSuite with SparkSpec {
       .select(col("user_id"), col("event_id"), col("event_type"),
         timestamp_micros(col("t_us")).as("ts"))
     val p2 = graft.operators.Analytics.sessionPaths(fx, gapT, 3, 20)
-    val b2 = graft.operators.Analytics.sessionPathsBlocked(fx, gapT, 3, 20, blockT)
+    val b2 = graft.operators.Analytics.sessionPathsBlocked(fx, gapT, 3, 20, Blocks.time(blockT))
     assert(p2.exceptAll(b2).count() == 0 && b2.exceptAll(p2).count() == 0,
       s"plain=${p2.collect().mkString(";")} blocked=${b2.collect().mkString(";")}")
     val paths = p2.collect().map(_.getString(0)).toSet

@@ -1,9 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Store files are read one way and written one way.
@@ -23,15 +19,9 @@ class SnapshotReadGuardSpec extends AnyFunSuite {
 
   /** Code lines (comments stripped) of Snapshot.scala containing any of
     * `needles`, as (line number, line). */
-  private def codeLinesWith(needles: String*): List[(Int, String)] = {
-    val src = Paths.get("src/main/scala/graft/operators/Snapshot.scala")
-    assert(Files.isRegularFile(src), s"run from the repository root: $src missing")
-    Files.readAllLines(src).asScala.zipWithIndex.collect {
-      case (line, i) if needles.exists(line.replaceAll("//.*", "")
-          .replaceAll("^\\s*(/?\\*).*", "").contains(_)) =>
-        (i + 1, line.trim)
-    }.toList
-  }
+  private def codeLinesWith(needles: String*): List[(Int, String)] =
+    SourceLines.codeLinesWith(
+      SourceLines.mainRoot.resolve("graft/operators/Snapshot.scala"), needles: _*)
 
   test("Snapshot.scala never calls spark.read: reads plan from the log") {
     val reads = codeLinesWith(".read.")

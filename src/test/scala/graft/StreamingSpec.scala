@@ -173,7 +173,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       .queryName("funnel_out").start()
     try {
       q.processAllAvailable()
-      batch2.toDS().write.mode("append").parquet(src)
+      // one file, so the running stream cannot take part of batch2 in one
+      // micro-batch and the rest in the next (a multi-file append lands
+      // file by file)
+      batch2.toDS().coalesce(1).write.mode("append").parquet(src)
       q.processAllAvailable()
     } finally q.stop()
     val streamed = spark.table("funnel_out")
